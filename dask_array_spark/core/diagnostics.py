@@ -58,9 +58,18 @@ def _count_nodes(plan_str: str) -> int:
 
 
 def plan_census(df) -> dict:
-    """Operator census of the physical plan (metadata only)."""
-    qe = df._jdf.queryExecution()
-    phys = qe.executedPlan().toString()
+    """Operator census of the physical plan (metadata only).
+
+    Adaptive execution re-plans a query as it runs.  Once ``df`` has
+    executed (``collect``/``toPandas``), the census counts that final
+    plan, ``WholeStageCodegen`` stages included.  Before that only the
+    initial plan exists; it holds no codegen stages, so the
+    ``WholeStageCodegen`` key is omitted rather than reported as 0."""
+    plan = df._jdf.queryExecution().executedPlan()
+    phys = plan.toString()
+    final = not phys.startswith("AdaptiveSparkPlan")
+    if phys.startswith("AdaptiveSparkPlan isFinalPlan=true"):
+        final, phys = True, plan.executedPlan().toString()
     counts = Counter()
     for line in phys.splitlines():
         for op in _PHYS_OPS:
@@ -68,7 +77,8 @@ def plan_census(df) -> dict:
             if re.search(rf"(\+\-|\:\-|^)\s*\*?\(?\d*\)?\s*{re.escape(op)}", line):
                 counts[op] += 1
                 break
-    counts["WholeStageCodegen"] = len(set(re.findall(r"\*\((\d+)\)", phys)))
+    if final:
+        counts["WholeStageCodegen"] = len(set(re.findall(r"\*\((\d+)\)", phys)))
     return dict(counts)
 
 

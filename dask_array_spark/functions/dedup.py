@@ -363,7 +363,15 @@ def simhash_col(text_col: str = "text", bits: int = 16, toks=None):
     parse (sub-ms): identical Catalyst tree modulo lambda-variable
     names, values pinned equal by test_fuzz_dedup (corpus parity was
     proven on 3 SFs x bits in {8,16,32} + hostile edges, zero
-    mismatches; benched slot form 0.804 -> 0.555 min-of-6 ABAB)."""
+    mismatches; benched slot form 0.804 -> 0.555 min-of-6 ABAB).
+
+    Execution cost: the per-bit scans are the cost, and they already
+    run on every core (``simhash`` widens a small input first).  Two
+    cheaper-looking forms were measured on the sf0.1 documents slot
+    (4-core container) and rejected: packing the 16 vote lanes into
+    8 or 4 wider folds (bit-field counters in one long) went 0.906 ->
+    0.948 / 0.944 s, and a ``sequence``/``substr`` polyhash measured
+    0.591 s against this form's 0.579 s."""
     if (
         isinstance(text_col, str)
         and (toks is None or isinstance(toks, str))
@@ -453,8 +461,14 @@ def simhash(df: DataFrame, text_col: str = "text", bits: int = 16) -> DataFrame:
     """Per-document SimHash fingerprints (same bit values as the
     count-weighted explode/groupBy formulation the DuckDB oracle
     replays, but computed as the in-row fold above -- the explode form
-    was a corpus-sized shuffle; this is none)."""
-    return df.select("doc_id", simhash_col(text_col, bits).alias("simhash"))
+    was a corpus-sized shuffle; this is none).  The per-bit vote folds
+    are the expensive part, so the input is widened first
+    (``widen_partitions``): a small file would scan as one task."""
+    from ..sources.ingest import widen_partitions
+
+    return widen_partitions(df, "doc_id").select(
+        "doc_id", simhash_col(text_col, bits).alias("simhash")
+    )
 
 
 def kgram_positions(

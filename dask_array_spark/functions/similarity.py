@@ -27,6 +27,8 @@ rounding absorbs float-sum association differences.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1454,73 +1456,138 @@ def _argmin_dist_sql(p: str) -> str:
     )
 
 
+def _double_sql(v) -> str:
+    """One double as an exact SQL literal: ``repr`` is the shortest
+    string that round-trips, and the parser's correctly rounded
+    ``D`` literal reads it back to the same bits; NaN, +-Inf and NULL
+    have no literal spelling and are written as casts."""
+    if v is None:
+        return "CAST(NULL AS DOUBLE)"
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{v!r}D"
+
+
+def _cemb_sql(cemb) -> str:
+    """A centroid (list of doubles, or None) as an array<double> literal."""
+    if cemb is None:
+        return "CAST(NULL AS ARRAY<DOUBLE>)"
+    return f"CAST(array({', '.join(map(_double_sql, cemb))}) AS ARRAY<DOUBLE>)"
+
+
+def _codebook_frame(spark, cells: list) -> DataFrame:
+    """The driver-held codebook ``cells`` = [(cell, cemb)] as a local
+    (cell, cemb) relation: reading it back runs no Spark job."""
+    if not cells:
+        return spark.sql(
+            "SELECT CAST(NULL AS BIGINT) AS cell, "
+            "CAST(NULL AS ARRAY<DOUBLE>) AS cemb WHERE false"
+        )
+    rows = ", ".join(f"(CAST({c} AS BIGINT), {_cemb_sql(v)})" for c, v in cells)
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(cell, cemb)")
+
+
+def _nearest_cell(src: DataFrame, cells: list, keep: str) -> DataFrame:
+    """(keep, __p): each row's packed nearest-cell key against the
+    driver-held codebook ``cells`` (non-empty), computed in-row.  The
+    lower projection folds each cell's ``round(sqdist, 6) + 0.0``
+    exactly once, flat (one zip_with + aggregate per cell against a
+    literal centroid); the upper ``least`` over the packed keys is the
+    argmin with min()'s ties, NULL/NaN order and caps.  The optimizer
+    keeps the two projections apart because every distance is read
+    more than once by its packed key."""
+    folds = src.selectExpr(
+        keep,
+        *[
+            f"round({_sqdist_sql('embedding', _cemb_sql(v))}, 6) + 0.0D AS __d{i}"
+            for i, (_, v) in enumerate(cells)
+        ],
+    )
+    keys = [_argmin_packed_sql(str(int(c)), f"__d{i}") for i, (c, _) in enumerate(cells)]
+    best = keys[0] if len(keys) == 1 else f"least({', '.join(keys)})"
+    return folds.selectExpr(keep, f"{best} AS __p")
+
+
 def kmeans_assign(
     emb: DataFrame, cents: DataFrame, impl: str = "auto"
 ) -> DataFrame:
     """Assign each vector to its nearest centroid by squared L2
-    distance: (vec_id, cell, dist).  ``cents`` is (cell, cemb) with
-    cemb an array<double>.  Ties break to the smaller cell id.
+    distance: (vec_id, cell, dist), one row per input row.  ``cents``
+    is (cell, cemb) with cemb an array<double>.  Ties break to the
+    smaller cell id; a NULL distance (NULL or ragged embedding) sorts
+    first and a NaN one last.
 
-    ``impl``: ``"sql"`` is the relational crossJoin + min_by form
-    below (the oracled surface); ``"arrow"`` reuses the PQ encode
-    kernel with one subspace (k-means IS product quantization with
-    m=1) -- the relational fan-out is corpus x k rows, so at SemDeDup
-    cluster counts (k in the thousands) the same economics that moved
-    pq_encode to Arrow apply; ``"auto"`` (default) switches at the
-    shared >= 32-candidate threshold.  The cosine-ranked
-    ``ivf_assign`` deliberately has NO arrow form: its zero-norm rows
-    produce NULL cosines whose max_by semantics a NumPy kernel would
-    have to re-implement exactly -- the round-9 NULL-vs-NaN bug class
-    -- and nothing at the current scale needs it.
+    The codebook is model-sized, so it is collected once: that one
+    bounded collect both picks the leg and supplies the model (free
+    when ``cents`` is a ``kmeans_fit`` result, a local relation).
+    ``impl``: ``"sql"`` is the relational form below (the oracled
+    surface); ``"arrow"`` reuses the PQ encode kernel with one
+    subspace (k-means IS product quantization with m=1), which wins
+    once the per-row fold count is large; ``"auto"`` (default)
+    switches at the shared >= 32-candidate threshold.  The
+    cosine-ranked ``ivf_assign`` deliberately has NO arrow form: its
+    zero-norm rows produce NULL cosines whose argmax semantics a
+    NumPy kernel would have to re-implement exactly -- the round-9
+    NULL-vs-NaN bug class -- and nothing at the current scale needs
+    it.
 
-    Scale shape: the codebook is tiny and broadcast with WHOLE
-    centroid arrays; each distance folds IN-ROW (zip_with +
-    aggregate), so the corpus is never exploded and the nearest-cell
-    argmin is a partial-aggregated min_by -- the corpus is scanned
-    once and shuffled only by vec_id for the final min.  Distances
-    round to 6 decimals BEFORE the argmin so a DuckDB oracle (whose
-    sum order differs) replays assignment boundaries bit-for-bit.
+    Scale shape (``"sql"``): one narrow projection over the widened
+    corpus (``widen_partitions``: a small file scans as one task
+    otherwise).  The codebook enters as literal centroids, one flat
+    in-row distance fold per cell, and the argmin is a per-row
+    ``least`` over the packed keys -- no crossJoin fan-out, no
+    broadcast, no vec_id shuffle.  Distances round to 6 decimals
+    BEFORE the argmin so a DuckDB oracle (whose sum order differs)
+    replays assignment boundaries bit-for-bit.  Flat is the point: a
+    round-7 rewrite that nested the distance fold inside an
+    ``aggregate`` over a codebook ARRAY fell out of codegen and
+    measured ~7x slower than the then crossJoin form.
 
-    A round-7 rewrite tried collapsing the codebook to ONE broadcast
-    array-of-structs row with the whole argmin as a single in-row
-    higher-order fold (eliminating this min_by shuffle and the fit
-    round's corpus join); a controlled A/B at sf0.1 (min of 6 warm
-    runs) measured it ~7x SLOWER (11.6 s vs 1.6 s for the
-    kmeans_codebook slot): nesting F.aggregate over the codebook with
-    a zip_with distance fold per element falls out of whole-stage
-    codegen into interpreted evaluation per corpus row, while this
-    crossJoin + min_by form stays fully codegen'd and its k-per-vector
-    fan-out and argmin shuffle are cheap.  Keep the join form (as the
-    SQL tier; the Arrow kernel above beats both once k is large)."""
+    Measured on the sf0.1 embeddings (2,000 x 64, k=4, 4-core
+    container, warm median of 5): 0.59 s with the former crossJoin +
+    vec_id-shuffle argmin, 0.38 s in this form."""
     if impl not in ("auto", "arrow", "sql"):
         raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
+    cells = [(r["cell"], r["cemb"]) for r in cents.collect()]  # bounded-model-collect
     if impl == "auto":
-        impl = _resolve_train_impl("auto", cents.count())
+        impl = _resolve_train_impl("auto", len(cells))
     if impl == "arrow":
-        as_pq = cents.select(
-            F.lit(0).cast("long").alias("s"),
-            F.col("cell").cast("long").alias("code"),
-            "cemb",
+        as_pq = _codebook_frame(emb.sparkSession, cells).select(
+            F.lit(0).cast("long").alias("s"), F.col("cell").alias("code"), "cemb"
         )
         return _pq_assign_arrow(emb, as_pq, dim=None, m=1).select(
             "vec_id", F.col("code").alias("cell"), "dist"
         )
-    sq = _sqdist("embedding", "cemb")
-    scored = (
-        emb.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cents))
-        .select("vec_id", "cell", (F.round(sq, 6) + F.lit(0.0)).alias("dist"))
+    if not cells:
+        return emb.selectExpr(
+            "vec_id", "CAST(NULL AS BIGINT) AS cell", "CAST(NULL AS DOUBLE) AS dist"
+        ).limit(0)
+    from ..sources.ingest import widen_partitions
+
+    return _nearest_cell(widen_partitions(emb, "vec_id"), cells, "vec_id").selectExpr(
+        "vec_id",
+        f"{_argmin_cell_sql('__p')} AS cell",
+        f"{_argmin_dist_sql('__p')} AS dist",
     )
+
+
+def _lloyd_round(src: DataFrame, cells: list) -> DataFrame:
+    """One relational Lloyd round as one query: (cell, pos, c), the
+    6-decimal mean of coordinate ``pos`` over the rows whose nearest
+    cell is ``cell``.  Assignment is ``_nearest_cell``'s in-row
+    argmin; the members' embeddings posexplode in the same stage and
+    a partial-aggregated (cell, pos) avg crosses the round's only
+    exchange -- model-sized partials, never the corpus."""
     return (
-        scored.selectExpr(
-            "vec_id", f"{_argmin_packed_sql('cell', 'dist')} AS __pp"
-        )
-        .groupBy("vec_id")
-        .agg(F.expr("min(__pp) AS __p"))
+        _nearest_cell(src, cells, "embedding")
         .selectExpr(
-            "vec_id",
-            f"{_argmin_cell_sql('__p')} AS cell",
-            f"{_argmin_dist_sql('__p')} AS dist",
+            f"{_argmin_cell_sql('__p')} AS cell", "posexplode(embedding) AS (pos, e)"
+        )
+        .groupBy("cell", "pos")
+        .agg(
+            (F.round(F.avg(F.col("e").cast("double")), 6) + F.lit(0.0)).alias("c")
         )
     )
 
@@ -1537,40 +1604,46 @@ def kmeans_fit(
     cell that loses all members drops out (production pipelines
     re-seed; at k << n this never happens in practice).
 
-    Scale shape (the 100 TB story): NOTHING is collected -- each
-    round is ONE broadcast of the k x dim codebook (tiny) feeding a
-    fused assign+mean pass: the partial-aggregated argmin carries the
-    embedding through (F.first), so the round's single linear shuffle
-    moves each embedding array exactly once and the per-(cell, pos)
-    means posexplode AFTER assignment with map-side partial sums,
-    independent of k (round 13 removed the per-round corpus x dim
-    join the unfused form paid).  The new codebook reassembles with a
-    dim-bounded collect_list per cell and eagerly localCheckpoints:
-    each round's plan references the previous codebook more than
-    once, so persist (which caches data but keeps full lineage) would
-    let the LOGICAL plan grow exponentially with ``iters`` -- the
-    same driver-OOM mode duplicate_clusters hit; checkpointing
-    truncates it to O(1) per round.
+    Scale shape (``"sql"``): the driver holds the codebook -- at most
+    31 x dim doubles below the ``"auto"`` switch, the same bounded
+    model collect ``_train_round_arrow`` makes (and MLlib's KMeans
+    broadcasts every round).  Each round is then ONE query
+    (``_lloyd_round``): a single pass over the widened corpus
+    folds every distance in-row against the literal codebook, picks
+    the cell per row, posexplodes the members and partial-aggregates
+    the (cell, pos) means, so the round's one exchange carries
+    model-sized partials and a collect brings the new codebook back.
+    Nothing corpus-sized is joined, broadcast, checkpointed or
+    collected, and the plan of every round is O(k x dim) literals
+    regardless of ``iters``.  The result is a local relation, so a
+    following ``kmeans_assign`` reads it without a job.
+
+    Measured with the repository benchmark (``training_sf01``, 4-core
+    container, ten runs per side): the ``kmeans_codebook`` slot (k=4,
+    2 rounds + assign) went from a warm median of 2.34 s with the
+    former per-round broadcast + vec_id argmin shuffle +
+    ``collect_list`` reassembly + ``localCheckpoint`` to 1.73 s, and
+    the traced pass starts 7 Spark jobs while building its queries
+    instead of 13.  A fit that stays lazy (the former plan without
+    checkpoints) measured 1.55 s against 1.51 s for the collected
+    codebook.
 
     ``assign_impl="arrow"`` runs each Lloyd round through the shared
     batched-NumPy kernel (``_train_round_arrow`` with m=1 -- k-means
     IS product quantization with one subspace): assignment argmin AND
-    per-(cell, pos) partial sums in one corpus pass, so the round's
-    only shuffle carries model-sized partials.  Bit-identical to the
-    relational ``"sql"`` form (same round-6 HALF_UP pre-argmin, same
-    ties, fuzz-pinned); ``"auto"`` (default) picks by k -- see
-    ``_resolve_train_impl`` for the measured crossover."""
+    per-(cell, pos) partial sums in one corpus pass.  Bit-identical
+    to the relational ``"sql"`` form on finite data (same round-6
+    HALF_UP pre-argmin, same ties, fuzz-pinned); ``"auto"`` (default)
+    picks by k -- see ``_resolve_train_impl`` for the measured
+    crossover."""
     assign_impl = _resolve_train_impl(assign_impl, k)
-    cents = (
-        emb.filter(F.col("vec_id") < k)
-        .select(
-            F.col("vec_id").cast("long").alias("cell"),
-            F.transform("embedding", lambda x: x.cast("double")).alias("cemb"),
-        )
-        .localCheckpoint()
+    init = emb.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").cast("long").alias("cell"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("cemb"),
     )
-    for _ in range(iters):
-        if assign_impl == "arrow":
+    if assign_impl == "arrow":
+        cents = init.localCheckpoint()
+        for _ in range(iters):
             as_pq = cents.select(
                 F.lit(0).cast("long").alias("s"),
                 F.col("cell").cast("long").alias("code"),
@@ -1581,61 +1654,19 @@ def kmeans_fit(
                 .select(F.col("code").alias("cell"), "cemb")
                 .localCheckpoint()
             )
-            continue
-        # FUSED assign+mean round (optimization round 13): the round-12
-        # form ran kmeans_assign, then joined the assignment back onto
-        # the posexploded corpus -- a corpus x dim row shuffle PLUS a
-        # join, every Lloyd round, just to re-attach each vector to its
-        # own argmin.  Carrying the embedding THROUGH the argmin
-        # aggregate (F.first -- constant within the vec_id group)
-        # removes the join and the exploded shuffle outright: one
-        # partial-aggregated min_by shuffle per round carries each
-        # embedding exactly once, then the per-(cell, pos) means are
-        # map-side partial sums of the already-assigned arrays.  Same
-        # distances (shared _sqdist + round-6 pre-argmin), same
-        # tie-break, same multiset of coordinates into each avg --
-        # value-identical to the unfused form (oracle-verified).
-        sq = _sqdist("embedding", "cemb")
-        scored = (
-            emb.select("vec_id", "embedding")
-            .crossJoin(F.broadcast(cents))
-            .select(
-                "vec_id",
-                "embedding",
-                "cell",
-                (F.round(sq, 6) + F.lit(0.0)).alias("dist"),
-            )
-        )
-        best = (
-            scored.selectExpr(
-                "vec_id",
-                "embedding",
-                f"{_argmin_packed_sql('cell', 'dist')} AS __pp",
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.expr("min(__pp) AS __p"),
-                F.first("embedding").alias("embedding"),
-            )
-            .selectExpr(f"{_argmin_cell_sql('__p')} AS cell", "embedding")
-        )
-        newc = (
-            best.select("cell", F.posexplode("embedding").alias("pos", "e"))
-            .groupBy("cell", "pos")
-            .agg(
-                (F.round(F.avg(F.col("e").cast("double")), 6) + F.lit(0.0)).alias(
-                    "c"
-                )
-            )
-        )
-        arr = newc.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s["c"],
-            ).alias("cemb")
-        )
-        cents = arr.localCheckpoint()
-    return cents
+        return cents
+    from ..sources.ingest import widen_partitions
+
+    src = widen_partitions(emb, "vec_id")
+    cells = [(r["cell"], r["cemb"]) for r in init.collect()]  # bounded-model-collect
+    for _ in range(iters):
+        if not cells:
+            break
+        by_cell: dict = {}
+        for r in _lloyd_round(src, cells).collect():  # bounded-model-collect
+            by_cell.setdefault(r["cell"], []).append((r["pos"], r["c"]))
+        cells = [(c, [v for _, v in sorted(pv)]) for c, pv in sorted(by_cell.items())]
+    return _codebook_frame(emb.sparkSession, cells)
 
 
 # -- product quantization (Jegou, Douze, Schmid 2011: "Product
@@ -1678,22 +1709,23 @@ def _pq_subspaces(
     )
 
 
-def _sqdist(a_col: str, b_col: str):
-    """In-row squared L2 between two array columns: zip_with the
-    coordinate differences, fold the squares -- the single shared
-    definition behind every k-means/PQ distance (kmeans_assign,
-    _pq_assign, the ADC lookup table, the re-rank), so the cast/fold
-    contract cannot drift between them."""
-    return F.aggregate(
-        F.zip_with(
-            a_col,
-            b_col,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _sqdist_sql(a: str, b: str) -> str:
+    """SQL fragment: in-row squared L2 between two array expressions
+    -- zip_with the coordinate differences, fold the squares left to
+    right.  The single shared definition behind every k-means/PQ
+    distance (kmeans_assign/kmeans_fit, _pq_assign, the ADC lookup
+    table, the re-rank, stream_pq_encode), so the cast/fold contract
+    cannot drift between them."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
+        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 0.0D, (acc, x) -> acc + x)"
     )
+
+
+def _sqdist(a_col: str, b_col: str):
+    """``_sqdist_sql`` between two named array columns, as a Column."""
+    return F.expr(_sqdist_sql(a_col, b_col))
 
 
 def _pq_assign(sub: DataFrame, cents: DataFrame, id_col: str = "vec_id") -> DataFrame:
@@ -1875,13 +1907,18 @@ def _train_round_arrow(emb: DataFrame, cents: DataFrame, m: int) -> DataFrame:
 def _resolve_train_impl(assign_impl: str, n_candidates: int) -> str:
     """Pick the Lloyd-round implementation.  ``"auto"`` chooses the
     batched-NumPy Arrow kernel once the per-vector candidate count
-    (codes per subspace / cells) reaches 32: below that the codegen'd
+    (codes per subspace / cells) reaches 32: below that the
     relational form wins (its cost is n_rows x candidates interpreted
-    folds, the kernel's is a fixed Python-worker round-trip + a
-    per-round model collect -- measured crossover ~32 at both 2k and
-    20k vectors, with the kernel 12x ahead by 256 candidates).  The
-    two forms are bit-identical (fuzz-pinned), so this is purely a
-    cost choice; callers can force either."""
+    in-row folds, one query per round; the kernel's is a fixed
+    Python-worker round-trip + a per-round model collect -- measured
+    crossover ~32 at both 2k and 20k vectors against the former
+    crossJoin rounds, with the kernel 12x ahead by 256 candidates).
+    Re-measured for kmeans_fit + kmeans_assign with one-query rounds
+    (sf0.1, 2,000 x 64, 2 rounds, 4-core container, median of 6): k=4
+    sql 1.38 s vs arrow 2.18 s, k=16 2.21 vs 2.14 s, k=32 3.09 vs
+    2.09 s -- the crossover now sits between 16 and 32.  The two
+    forms are bit-identical on finite data (fuzz-pinned), so this is
+    purely a cost choice; callers can force either."""
     if assign_impl == "auto":
         return "arrow" if n_candidates >= 32 else "sql"
     if assign_impl not in ("arrow", "sql"):

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import math
 import os
+from collections import OrderedDict
 from typing import Iterable, Sequence
 
 import numpy as np
@@ -298,10 +299,32 @@ def _parse_fill(fill, kind: str):
 # (~80-105 ms of footer listing/reading); supplying the schema reads
 # in ~15 ms.  The memo holds SCHEMAS (plan metadata), never data or
 # results -- every execution still scans the parquet inputs.  Keyed by
-# (resolved path, dir mtime) so a rewritten table (different schema,
-# regenerated test fixture) re-infers instead of serving a stale
-# schema.
-_SCHEMA_MEMO: dict = {}
+# a fingerprint of the table's file set (every file's name, size and
+# mtime), so a rewritten table re-infers instead of serving a stale
+# schema -- including a part file rewritten in place, which leaves the
+# directory mtime alone.  Least-recently-used entries beyond
+# _SCHEMA_MEMO_MAX are dropped.
+_SCHEMA_MEMO: OrderedDict = OrderedDict()
+_SCHEMA_MEMO_MAX = 64
+
+
+def _file_set_fingerprint(path: str):
+    """(absolute path, sorted (relative name, size, mtime_ns) of every
+    file under ``path``, or of ``path`` itself); None if unreadable."""
+    root = os.path.abspath(path)
+    try:
+        if not os.path.isdir(root):
+            st = os.stat(root)
+            return root, (("", st.st_size, st.st_mtime_ns),)
+        files = []
+        for d, _, names in os.walk(root):
+            for n in names:
+                f = os.path.join(d, n)
+                st = os.stat(f)
+                files.append((os.path.relpath(f, root), st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return root, tuple(sorted(files))
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -321,17 +344,17 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         except Exception:
             pass
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        key = (os.path.abspath(path), os.stat(path).st_mtime_ns)
-    except OSError:
-        key = None
+    key = _file_set_fingerprint(path)
     schema = _SCHEMA_MEMO.get(key) if key is not None else None
     if schema is not None:
+        _SCHEMA_MEMO.move_to_end(key)
         df = spark.read.schema(schema).parquet(path)
     else:
         df = spark.read.parquet(path)
         if key is not None:
             _SCHEMA_MEMO[key] = df.schema
+            while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_MAX:
+                _SCHEMA_MEMO.popitem(last=False)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

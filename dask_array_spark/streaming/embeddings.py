@@ -63,36 +63,17 @@ def stream_codebook_assign(
     stream = _read_embeddings_stream(spark, emb_path)
     cb = codebook_row(cents)
 
-    dist_to = lambda cemb: F.round(
-        F.aggregate(
-            F.zip_with(
-                "embedding",
-                cemb,
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    ) + F.lit(0.0)
+    from ..functions.similarity import _sqdist_sql
 
-    init = F.struct(
-        F.lit(-1).cast("long").alias("cell"),
-        F.lit(float("inf")).alias("dist"),
+    cand = (
+        "named_struct('cell', CAST(c.cell AS BIGINT), 'dist', "
+        f"round({_sqdist_sql('embedding', 'c.cemb')}, 6) + 0.0D)"
     )
-
-    def step(acc, c):
-        # build the candidate struct once so the k x dim distance
-        # fold evaluates a single time per codebook entry (these
-        # higher-order lambdas are interpreted, not codegen'd, and
-        # the two when-branches would not share the subtree)
-        cand = F.struct(
-            c["cell"].cast("long").alias("cell"),
-            dist_to(c["cemb"]).alias("dist"),
-        )
-        return F.when(cand["dist"] < acc["dist"], cand).otherwise(acc)
-
-    best = F.aggregate(F.col("__cb"), init, step)
+    best = F.expr(
+        "aggregate(__cb, named_struct('cell', CAST(-1 AS BIGINT), "
+        "'dist', CAST('Infinity' AS DOUBLE)), "
+        f"(acc, c) -> CASE WHEN {cand}.dist < acc.dist THEN {cand} ELSE acc END)"
+    )
     return (
         stream.crossJoin(F.broadcast(cb))
         .withColumn("__best", best)
@@ -143,27 +124,23 @@ def stream_pq_encode(
     stream = _read_embeddings_stream(spark, emb_path)
     cb = pq_codebook_row(cents)
 
-    from ..functions.similarity import _sqdist
+    from ..functions.similarity import _sqdist_sql
 
-    def best_code(s: int):
-        sub = F.slice(F.col("embedding"), s * dsub + 1, dsub)
-        dist_to = lambda cemb: F.round(_sqdist(sub, cemb), 6) + F.lit(0.0)
-        init = F.struct(
-            F.lit(-1).cast("long").alias("code"),
-            F.lit(float("inf")).alias("dist"),
+    def best_code(s: int) -> str:
+        sub = f"slice(embedding, {s * dsub + 1}, {dsub})"
+        cand = (
+            "named_struct('code', CAST(c.code AS BIGINT), 'dist', "
+            f"round({_sqdist_sql(sub, 'c.cemb')}, 6) + 0.0D)"
+        )
+        return (
+            f"aggregate(filter(__pqcb, c -> c.s = {s}), "
+            "named_struct('code', CAST(-1 AS BIGINT), "
+            "'dist', CAST('Infinity' AS DOUBLE)), "
+            f"(acc, c) -> CASE WHEN {cand}.dist < acc.dist THEN {cand} "
+            "ELSE acc END).code"
         )
 
-        def step(acc, c):
-            cand = F.struct(
-                c["code"].cast("long").alias("code"),
-                dist_to(c["cemb"]).alias("dist"),
-            )
-            return F.when(cand["dist"] < acc["dist"], cand).otherwise(acc)
-
-        mine = F.filter(F.col("__pqcb"), lambda c: c["s"] == s)
-        return F.aggregate(mine, init, step)["code"]
-
-    codes = F.array(*[best_code(s) for s in range(m)])
+    codes = F.expr(f"array({', '.join(best_code(s) for s in range(m))})")
     return (
         stream.crossJoin(F.broadcast(cb))
         .select("vec_id", codes.alias("codes"))

@@ -18,7 +18,7 @@ PICKS = {
     "tpch_q3_shipping_priority": "3-table join with broadcast dimension + TakeOrderedAndProject for the global top-10.",
     "events_windows_suite": "Event-time windows: partial/final aggregates over window-start keys; sessionize is a per-user parallel window.",
     "window_1d_scalable": "10^7-element 1-D cumsum through the DISTRIBUTED two-pass scan: zero WindowExec, blockwise applyInPandas + tiny driver prefix.",
-    "similarity_suite": "ANN tier with INLINE F.aggregate norms: no corpus-sized broadcast anywhere; only query/centroid/probe/codebook sides carry hints; SemDeDup (kind 3) pairs only within IVF cells; k-means (kind 4) folds distances in-row against the broadcast codebook; kind 5 composes kmeans_fit -> semantic_dedup on the trained centroids (the production path, oracle-chained); kind 6 (ann_recall) reuses the kind 0/1 top-k frames, so its hit join adds only a query-bounded aggregate on top of subtrees the union already evaluates; kinds 7-9 (round 8, product quantization) train a per-subspace Lloyd codebook in the same bounded-broadcast shape and run the ADC top-k as ONE BroadcastHashJoin of the encoded corpus against the tiny per-query lookup table + a partial-aggregated (qid, vec_id) sum -- the raw embedding column never feeds the scan; kinds 10-11 (int8 scalar quantization) are pure in-row encode/dequantize projections feeding cosine_topk's broadcast-query search shape; kind 12 (round 9, the composed IVFADC+R serving path) chains probe selection (broadcast probes against the assignment index) into a qid-keyed ADC lookup join restricted to the probed cells' codes, then an exact re-rank of the k*r shortlist -- codebook TRAINING runs through the batched-Arrow Lloyd kernel (auto above 32 candidates/vector). ROUND 12: cosine/sq8 brute SERVING now routes impl='auto' on measured pair work (corpus size estimate x |query_ids| vs 8 MB-query, SCALE.md): at this suite's sf0.01 scale every subtree stays relational (what this snapshot shows -- the fully-lazy form), while past the threshold the same calls plan the batched mapInArrow scan shown in the next section.",
+    "similarity_suite": "ANN tier with INLINE F.aggregate norms: no corpus-sized broadcast anywhere; only query/centroid/probe/codebook sides carry hints; SemDeDup (kind 3) pairs only within IVF cells; k-means (kind 4) assigns in ONE projection: a flat in-row distance fold per cell against the driver-held literal codebook and a per-row least() argmin -- no join, no broadcast, no vec_id shuffle -- and its fit runs each Lloyd round as one query with one (cell, pos) aggregate exchange; kind 5 composes kmeans_fit -> semantic_dedup on the trained centroids (the production path, oracle-chained); kind 6 (ann_recall) reuses the kind 0/1 top-k frames, so its hit join adds only a query-bounded aggregate on top of subtrees the union already evaluates; kinds 7-9 (round 8, product quantization) train a per-subspace Lloyd codebook in a bounded-broadcast shape and run the ADC top-k as ONE BroadcastHashJoin of the encoded corpus against the tiny per-query lookup table + a partial-aggregated (qid, vec_id) sum -- the raw embedding column never feeds the scan; kinds 10-11 (int8 scalar quantization) are pure in-row encode/dequantize projections feeding cosine_topk's broadcast-query search shape; kind 12 (round 9, the composed IVFADC+R serving path) chains probe selection (broadcast probes against the assignment index) into a qid-keyed ADC lookup join restricted to the probed cells' codes, then an exact re-rank of the k*r shortlist -- codebook TRAINING runs through the batched-Arrow Lloyd kernel (auto above 32 candidates/vector). ROUND 12: cosine/sq8 brute SERVING now routes impl='auto' on measured pair work (corpus size estimate x |query_ids| vs 8 MB-query, SCALE.md): at this suite's sf0.01 scale every subtree stays relational (what this snapshot shows -- the fully-lazy form), while past the threshold the same calls plan the batched mapInArrow scan shown in the next section.",
     "dedup_lsh_pairs_verify": "Fuzzy-dedup chain: projection band hash (no ObjectHashAggregate at rows_per_band=1); the hot-bucket cap is a broadcast LEFT-ANTI join of the bounded hot list (round 6 -- no WindowExec, no extra shuffle of the band rows) feeding the partition-parallel pair SELF-JOIN on (band, bh); round 8 persists the CAPPED band table too, so the self-join's two branches read one InMemoryRelation instead of each re-planning the cap subtree (A/B: 1.37s -> 0.58s at sf0.1); kind 1 adds connected-components clustering over the verified pairs. Plan-pinned in tests/test_plans.py.",
     "dedup_substring_spans": "ExactSubstr: k-gram hash equi-join seeds + per-(pair, diagonal) islands-merge window; the hot-gram cap anti-join bounds seed multiplicity.",
     "text_suite": "22-column document governance tier as ONE projection (token stats, quality, lang-ID, fingerprint, in-row SimHash, repetition, split, BPE count) + strata rank window + one broadcast-bench decontamination join + BROADCAST vocab-sized bigram-LM model joins (lm_bits, round 6: BroadcastHashJoin under the 2M gate, zero SortMergeJoin -- the corpus is never shuffled for scoring). Plan-pinned in tests/test_plans.py.",

@@ -89,3 +89,27 @@ def test_expr_flow_and_table(spark):
     assert "Project" in flow or "LocalRelation" in flow
     table = da.expr_table(x + 1)
     assert "(1) " in table  # numbered operator listing
+
+
+def test_plan_census_counts_final_plan(spark):
+    """Before execution only the initial adaptive plan exists and the
+    codegen count is omitted; after ``collect`` the census reads the
+    final plan, whose two aggregation levels run as codegen stages."""
+    from dask_array_spark import plan_census
+
+    df = (
+        spark.range(1000)
+        .selectExpr("id % 10 AS a", "id")
+        .groupBy("a")
+        .sum("id")
+        .groupBy()
+        .count()
+    )
+    before = plan_census(df)
+    assert before["HashAggregate"] == 4
+    assert "WholeStageCodegen" not in before
+    df.collect()
+    after = plan_census(df)
+    assert after["HashAggregate"] == 4
+    assert after["Exchange"] == 2
+    assert after["WholeStageCodegen"] >= 2

@@ -370,26 +370,39 @@ def test_lsh_hot_bucket_cap_is_broadcast_anti_join(spark, sf_dir):
     assert "Window" not in plan
 
 
-def test_kmeans_inrow_distance_bounded_broadcast(spark, sf_dir):
-    """kmeans_assign folds every distance IN-ROW (zip_with +
-    aggregate lambda) against a broadcast codebook: the corpus side
-    must never explode or shuffle per (vector, cell), and the only
-    forced broadcast is the k-row codebook itself."""
+def test_kmeans_assign_join_free_and_fit_round_one_exchange(spark, sf_dir):
+    """kmeans_assign's relational leg folds every distance IN-ROW
+    (zip_with + aggregate lambda) against the literal codebook and
+    takes the argmin per row: no Join (no crossJoin fan-out, no
+    broadcast) and no aggregate on vec_id.  Each kmeans_fit round is
+    one query whose only aggregate exchange is the partial-aggregated
+    (cell, pos) mean's -- no codebook broadcast, no argmin shuffle."""
     from dask_array_spark.functions import similarity as SIM
     from dask_array_spark.sources import read_table
+    from dask_array_spark.sources.ingest import widen_partitions
 
     emb = read_table(spark, sf_dir, "embeddings")
-    df = SIM.kmeans_assign(emb, SIM.kmeans_fit(emb, k=4, iters=1))
-    opt = _optimized(df)
+    cents = SIM.kmeans_fit(emb, k=4, iters=1)
+    df = SIM.kmeans_assign(emb, cents, impl="sql")
+    opt, plan = _optimized(df), _plan(df)
     assert "lambdafunction" in opt.lower()  # in-row distance fold
-    # no posexplode of the corpus feeds the scoring join (the mean
-    # recomputation inside fit explodes linearly, but the assignment
-    # path itself must not)
-    analyzed = df._jdf.queryExecution().analyzed().toString()
-    # one hint per codebook broadcast in the lineage: the final
-    # assignment plus the fit round's internal assignment -- both
-    # k-row sides, never the corpus
-    assert 1 <= analyzed.count("ResolvedHint") <= 2
+    for p in (opt, plan):
+        assert "Join" not in p and "Aggregate" not in p
+    assert "BroadcastExchange" not in plan
+
+    cells = [(r["cell"], r["cemb"]) for r in cents.collect()]
+    rnd = _plan(SIM._lloyd_round(widen_partitions(emb, "vec_id"), cells))
+    assert "Join" not in rnd and "BroadcastExchange" not in rnd
+    agg_exchanges = [
+        l for l in rnd.splitlines()
+        if "Exchange hashpartitioning(cell#" in l
+    ]
+    assert len(agg_exchanges) == 1
+    assert "partial_avg" in rnd
+    assert all(
+        "Exchange" not in l or "hashpartitioning(vec_id#" in l
+        for l in rnd.splitlines() if l not in agg_exchanges
+    )
 
 
 def test_pq_adc_scan_shape(spark, sf_dir):
