@@ -175,8 +175,11 @@ def _bench_session():
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # JVM + reader + Python-worker warmup so the first measured query
-    # isn't paying session/daemon startup (workers are reused after)
+    # JVM + reader + Python-worker warm-up, so the first measured query
+    # does not pay session start, the worker daemon's start or a fresh
+    # worker's first imports.  Workers are reused after it; each later
+    # task pays only the per-task set-up, which re-reads no zip archive
+    # directory (get_spark's worker daemon imports the installed pyspark)
     read_table(spark, os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
                "lineitem").count()
 

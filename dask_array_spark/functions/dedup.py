@@ -372,16 +372,7 @@ def simhash_col(text_col: str = "text", bits: int = 16, toks=None):
     8 or 4 wider folds (bit-field counters in one long) went 0.906 ->
     0.948 / 0.944 s, and a ``sequence``/``substr`` polyhash measured
     0.591 s against this form's 0.579 s."""
-    if (
-        isinstance(text_col, str)
-        and (toks is None or isinstance(toks, str))
-        # dotted names resolve as MULTIPART struct-field references
-        # through F.col but as a single quoted identifier through the
-        # expr fast path (round-13 ADVICE): route them to the legacy
-        # Column branch so both spellings keep F.col semantics
-        and "." not in text_col
-        and (toks is None or "." not in toks)
-    ):
+    if isinstance(text_col, str) and (toks is None or isinstance(toks, str)):
         return _simhash_expr(text_col, bits, toks)
     th = F.transform(
         tokens_col(text_col) if toks is None else toks,
@@ -420,13 +411,6 @@ def simhash_col(text_col: str = "text", bits: int = 16, toks=None):
     return F.transform(F.array(th), body)[0]
 
 
-def _ident(name: str) -> str:
-    """Backtick-quote a column name for embedding in an expr string."""
-    from .text import sql_ident
-
-    return sql_ident(name)
-
-
 def _simhash_expr(text_col: str, bits: int, toks: str | None):
     """simhash_col's expression built as ONE SQL parse.  The string
     spells out EXACTLY the tree the Column-API branch constructs --
@@ -437,9 +421,9 @@ def _simhash_expr(text_col: str, bits: int, toks: str | None):
     functions/text.py (tokens_sql / polyhash_sql), the SAME source the
     Column forms document as their twins -- one definition pair, no
     string drift (round-13 ADVICE)."""
-    from .text import polyhash_sql, tokens_sql
+    from .text import polyhash_sql, sql_ident, tokens_sql
 
-    toks_sql = tokens_sql(_ident(text_col)) if toks is None else _ident(toks)
+    toks_sql = tokens_sql(sql_ident(text_col)) if toks is None else sql_ident(toks)
     poly = polyhash_sql("t")
     th = f"transform({toks_sql}, t -> {poly})"
     out = "CAST(0 AS BIGINT)"
@@ -800,7 +784,9 @@ def clip_duplicated_spans(
         .selectExpr("doc_id", "__toks", f"{kept} AS __k")
         .selectExpr(
             "doc_id",
-            f"concat_ws(' ', __k) AS {tc}",
+            # a struct-field text column comes back under its field
+            # name, as F.col("s.text") would name it
+            f"concat_ws(' ', __k) AS {sql_ident(text_col.split('.')[-1])}",
             "CAST(size(__k) AS BIGINT) AS n_tokens_kept",
             "CAST(CAST(size(__toks) AS BIGINT) - size(__k) AS BIGINT)"
             " AS n_tokens_removed",

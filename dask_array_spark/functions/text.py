@@ -61,12 +61,11 @@ def tokens_col(text: Column | str) -> Column:
 
 
 def sql_ident(name: str) -> str:
-    """Backtick-quote a TOP-LEVEL column name for embedding in an
-    ``F.expr`` string.  Single-part identifier semantics: a dotted
-    name stays one column (matching ``F.col`` would instead resolve
-    multipart struct fields -- callers passing such names must use the
-    Column-API paths)."""
-    return "`" + name.replace("`", "``") + "`"
+    """Backtick-quote a column name for embedding in an ``F.expr``
+    string, one quoted part per dot-separated part: ``"s.text"``
+    becomes ``` `s`.`text` ```, the struct field ``F.col("s.text")``
+    resolves to."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in name.split("."))
 
 
 def tokens_sql(text_expr: str) -> str:
@@ -285,16 +284,7 @@ def lang_id_col(
     ~70 py4j round-trips of driver time per construction) -- pass the
     column NAME to keep the fast path; a Column is still accepted
     (legacy constructor below, same values, pinned by test)."""
-    if (
-        isinstance(text_col, str)
-        and (toks is None or isinstance(toks, str))
-        # dotted names resolve as MULTIPART struct-field references
-        # through F.col but as a single quoted identifier through the
-        # expr fast path (round-13 ADVICE): route them to the legacy
-        # Column branch so both spellings keep F.col semantics
-        and "." not in text_col
-        and (toks is None or "." not in toks)
-    ):
+    if isinstance(text_col, str) and (toks is None or isinstance(toks, str)):
         return _lang_id_expr(text_col, toks)
     toks = _toks_or(text_col, toks)
 

@@ -172,3 +172,46 @@ def test_clip_empty_and_whitespace_docs(spark):
         assert (out[d]["n_tokens_kept"], out[d]["n_tokens_removed"]) == (0, 0)
         assert out[d]["text"] == ""
     assert out[3]["text"] == "a b"
+
+
+def test_builders_read_a_struct_field_text_column(spark):
+    """A dotted ``text_col`` names a struct field, as ``F.col`` reads
+    it: every single-parse text builder gives the top-level result."""
+    from dask_array_spark.functions.dedup import (
+        clip_duplicated_spans,
+        kgram_positions,
+        shingle_hashes,
+        simhash_col,
+    )
+    from dask_array_spark.functions.text import lang_id_col
+
+    flat = spark.createDataFrame(
+        [
+            (1, "x1 x2 a b c d e f g h x3"),
+            (2, "y1 a b c d e f g h y2 y3 the and"),
+            (3, ""),
+        ],
+        "doc_id long, text string",
+    )
+    nested = flat.select("doc_id", F.struct("text").alias("s"))
+    spans = spark.createDataFrame(
+        [(1, 2, 2, 1, 8)],
+        "doc_a long, doc_b long, a_start long, b_start long, length long",
+    )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    for build in (
+        lambda d, c: shingle_hashes(d, c, n=3),
+        lambda d, c: kgram_positions(d, c, k=4),
+        lambda d, c: clip_duplicated_spans(d, spans, c),
+        lambda d, c: d.select(
+            "doc_id", simhash_col(c).alias("h"), lang_id_col(c).alias("lang")
+        ),
+    ):
+        want, got = build(flat, "text"), build(nested, "s.text")
+        assert got.columns == want.columns
+        assert rows(got) == rows(want)
+    clipped = clip_duplicated_spans(nested, spans, "s.text").collect()
+    assert {r["doc_id"]: r["text"] for r in clipped}[2] == "y1 y2 y3 the and"
