@@ -21,7 +21,15 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .text import P, polyhash_col, tokens_col
+from .text import (
+    M_COMB,
+    P,
+    kgram_combine_sql,
+    sql_ident,
+    token_hashes_sql,
+    tokens_col,
+    tokens_sql,
+)
 
 __all__ = [
     "exact_groups",
@@ -109,29 +117,6 @@ def exact_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-M_COMB = 1_000_003
-
-
-def _kgram_combine_sql(n: int) -> str:
-    """SQL fragment: the rolling combine of ``n`` consecutive token
-    hashes starting at 1-based position ``i`` of ``__th`` -- the same
-    tree the historical Column-API loop built (int literals for
-    M_COMB/P, long arithmetic via the element type)."""
-    h = "element_at(__th, i)"
-    for k in range(1, n):
-        h = f"({h} * {M_COMB} + element_at(__th, i + {k})) % {P}"
-    return h
-
-
-def _token_hashes_sql(text_col: str) -> str:
-    """SQL fragment: per-token polyhash array over the whitespace
-    tokens of ``text_col`` (fragments from functions/text.py -- the
-    single definition pair shared with the Column forms)."""
-    from .text import polyhash_sql, sql_ident, tokens_sql
-
-    return f"transform({tokens_sql(sql_ident(text_col))}, t -> {polyhash_sql('t')})"
-
-
 def shingle_hashes(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Distinct hashed token n-gram shingles per document: (doc_id,
     sh).  Each TOKEN is polyhashed once (char-level work is linear in
@@ -139,15 +124,14 @@ def shingle_hashes(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFra
     hashes -- ~n x cheaper than hashing every shingle string, and the
     combine products stay < 2^63 (th < 1e9+7, multiplier 1e6+3).
 
-    Constructed as TWO ``F.expr`` parses (optimization round 14, guide
-    §7.3/§5): the per-token hash transform plus the shingle fold were
-    ~100 ms of py4j round-trips of driver time per build; the SQL
-    strings spell out the identical Catalyst tree (values pinned equal
-    by the expr-vs-Column parity test)."""
+    Constructed as TWO ``F.expr`` parses of the functions/text.py
+    fragments (optimization round 14, guide §7.3/§5): a Column-API
+    build of the per-token hash transform plus the shingle fold was
+    ~100 ms of py4j round-trips of driver time."""
     from ..sources.ingest import widen_partitions
 
     d = widen_partitions(df, "doc_id").selectExpr(
-        "doc_id", f"{_token_hashes_sql(text_col)} AS __th"
+        "doc_id", f"{token_hashes_sql(text_col)} AS __th"
     ).filter(F.size("__th") >= n)
     # array_distinct already dedups within the row and doc_id makes
     # rows unique across documents, so no post-explode distinct (a
@@ -156,7 +140,7 @@ def shingle_hashes(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFra
     return d.selectExpr(
         "doc_id",
         "explode(array_distinct(transform("
-        f"sequence(1, size(__th) - {n - 1}), i -> {_kgram_combine_sql(n)}"
+        f"sequence(1, size(__th) - {n - 1}), i -> {kgram_combine_sql(n)}"
         "))) AS sh",
     )
 
@@ -343,27 +327,26 @@ def jaccard_on_pairs(shingles: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_col(text_col: str = "text", bits: int = 16, toks=None):
+def simhash_col(text_col: str = "text", bits: int = 16, toks: str | None = None):
     """SimHash of the whitespace tokens as ONE in-row Column: token
     polyhashes compute once into an array, each hash votes +-1 per bit
     (duplicate tokens vote once per occurrence == the count-weighted
     definition), and the sign of each vote total sets the output bit.
     Pure JVM fold -- zero shuffles, composes with streams; ``bits``
-    stays within the uniform low bits of the mod-P hash.  ``toks``: a
-    pre-materialized token array (text.with_tokens) so suites that
-    compose many token signals tokenize once per document -- pass the
-    COLUMN NAME (str) to keep the single-parse fast path below; a
-    Column is also accepted (legacy constructor path, same values).
+    stays within the uniform low bits of the mod-P hash.  ``toks``: the
+    name of a pre-materialized token array (text.with_tokens) so suites
+    that compose many token signals tokenize once per document.
 
-    Construction cost (optimization round 13): the Column-API form of
-    this expression is ~250 py4j round-trips (the per-bit loop), a
-    measured 0.41 s of DRIVER time per construction -- comparable to
-    executing the query at sf0.1.  When ``text_col``/``toks`` are
-    names, the same expression tree now builds as ONE ``F.expr`` SQL
-    parse (sub-ms): identical Catalyst tree modulo lambda-variable
-    names, values pinned equal by test_fuzz_dedup (corpus parity was
-    proven on 3 SFs x bits in {8,16,32} + hostile edges, zero
-    mismatches; benched slot form 0.804 -> 0.555 min-of-6 ABAB).
+    Per-bit majority counts over the BOUND hash array (optimization
+    round 13): votes_i = ones_i - (n - ones_i), so the sign test
+    votes_i > 0 is exactly ones_i * 2 > n, counted by an allocation-
+    free filter scan per bit -- 1.63x faster than a fold that kept a
+    bits-wide vote vector.  NULL contract: a NULL token array yields
+    NULL, and ANY NULL token hash yields 0.
+
+    Construction cost (optimization round 13): one ``F.expr`` parse
+    (sub-ms); the Column-API form of the per-bit loop was ~250 py4j
+    round-trips, 0.41 s of DRIVER time per construction.
 
     Execution cost: the per-bit scans are the cost, and they already
     run on every core (``simhash`` widens a small input first).  Two
@@ -372,60 +355,7 @@ def simhash_col(text_col: str = "text", bits: int = 16, toks=None):
     8 or 4 wider folds (bit-field counters in one long) went 0.906 ->
     0.948 / 0.944 s, and a ``sequence``/``substr`` polyhash measured
     0.591 s against this form's 0.579 s."""
-    if isinstance(text_col, str) and (toks is None or isinstance(toks, str)):
-        return _simhash_expr(text_col, bits, toks)
-    th = F.transform(
-        tokens_col(text_col) if toks is None else toks,
-        lambda t: polyhash_col(t),
-    )
-
-    # per-bit majority counts over the BOUND hash array (optimization
-    # round 13): the former fold kept a bits-wide vote vector and
-    # allocated two fresh arrays PER TOKEN (an inner transform over
-    # the powers plus the zip_with result) -- measured 1.63x slower
-    # than scanning the hash array once per bit with an allocation-
-    # free filter count.  Voting algebra: votes_i = ones_i - (n -
-    # ones_i), so the sign test votes_i > 0 is exactly ones_i * 2 > n.
-    # shiftright(h, i) % 2 == the old (h / 2^i)::long % 2 for every
-    # reachable hash (h in [0, P), non-negative, < 2^53 so the double
-    # division was exact).  NULL contract preserved bit-for-bit: a
-    # NULL token array yields NULL (the old outer fold of a NULL th),
-    # and ANY NULL token hash yields 0 (the old vote vector went NULL
-    # per lane and when(NULL > 0) set every bit to 0).
-    def body(h_arr):
-        n = F.size(h_arr)
-        out = F.lit(0).cast("long")
-        for i in range(bits):
-            ones = F.size(
-                F.filter(h_arr, lambda h: (F.shiftright(h, i) % 2) == 1)
-            )
-            out = out + F.when(
-                ones * 2 > n, F.lit(1 << i).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        return (
-            F.when(h_arr.isNull(), F.lit(None).cast("long"))
-            .when(F.exists(h_arr, lambda h: h.isNull()), F.lit(0).cast("long"))
-            .otherwise(out)
-        )
-
-    return F.transform(F.array(th), body)[0]
-
-
-def _simhash_expr(text_col: str, bits: int, toks: str | None):
-    """simhash_col's expression built as ONE SQL parse.  The string
-    spells out EXACTLY the tree the Column-API branch constructs --
-    same casts, same literal types (SEED/0/2^i as BIGINT casts, 31/P
-    as INT literals), same CASE structure, same fold shapes -- so the
-    two branches are the same Catalyst expression up to lambda-
-    variable naming.  The tokenize/hash fragments come from
-    functions/text.py (tokens_sql / polyhash_sql), the SAME source the
-    Column forms document as their twins -- one definition pair, no
-    string drift (round-13 ADVICE)."""
-    from .text import polyhash_sql, sql_ident, tokens_sql
-
-    toks_sql = tokens_sql(sql_ident(text_col)) if toks is None else sql_ident(toks)
-    poly = polyhash_sql("t")
-    th = f"transform({toks_sql}, t -> {poly})"
+    th = token_hashes_sql(text_col, toks)
     out = "CAST(0 AS BIGINT)"
     for i in range(bits):
         ones = f"size(filter(h_arr, h -> (shiftright(h, {i}) % 2) = 1))"
@@ -461,17 +391,17 @@ def kgram_positions(
     """(doc_id, p, h): hash of the k-token gram starting at 0-based
     token position p -- the positional (non-distinct) variant of
     shingle_hashes that substring matching needs.  Single-parse
-    construction (optimization round 14), same device and same shared
-    SQL fragments as shingle_hashes."""
+    construction (optimization round 14), same SQL fragments as
+    shingle_hashes."""
     from ..sources.ingest import widen_partitions
 
     d = widen_partitions(df, "doc_id").selectExpr(
-        "doc_id", f"{_token_hashes_sql(text_col)} AS __th"
+        "doc_id", f"{token_hashes_sql(text_col)} AS __th"
     ).filter(F.size("__th") >= k)
     return d.selectExpr(
         "doc_id",
         "posexplode(transform("
-        f"sequence(1, size(__th) - {k - 1}), i -> {_kgram_combine_sql(k)}"
+        f"sequence(1, size(__th) - {k - 1}), i -> {kgram_combine_sql(k)}"
         ")) AS (p, h)",
     )
 
@@ -748,8 +678,6 @@ def clip_duplicated_spans(
     grouped = mg.groupBy("doc_id").agg(
         F.expr("array_sort(collect_list(struct(s, e))) AS __mg")
     )
-    from .text import sql_ident, tokens_sql
-
     tc = sql_ident(text_col)
     # keep token i (0-based) unless a merged interval covers it; the
     # two-arg filter lambda binds (element, index) -- no index array

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import shingle_hashes
-from .text import polyhash_col
+from .text import mixed_hash_col, polyhash_col, salted_id_sql
 
 __all__ = [
     "contamination_counts",
@@ -109,19 +109,12 @@ def split_col(
     # the bucket expression, embedding the whole per-char polyhash
     # fold TWICE per document in the interpreted projection.  The
     # finish step sees the final accumulator once; bucket arithmetic
-    # on the bound value is O(1).  Same hash, same boundaries, same
-    # assignment.
-    def pick(h: Column) -> Column:
-        b = h % F.lit(100)
-        return (
-            F.when(b < t_end, F.lit("train"))
-            .when(b < v_end, F.lit("valid"))
-            .otherwise(F.lit("test"))
-        )
-
-    return polyhash_col(
-        F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")), finish=pick
+    # on the bound value is O(1).
+    pick = (
+        f"h -> CASE WHEN h % 100 < {t_end} THEN 'train' "
+        f"WHEN h % 100 < {v_end} THEN 'valid' ELSE 'test' END"
     )
+    return polyhash_col(salted_id_sql(salt, id_col), finish=pick)
 
 
 def assign_split(
@@ -162,7 +155,7 @@ def stratified_sample_flag(
     column; the hash ranking makes the sample reproducible and
     insensitive to input ordering, which ``TABLESAMPLE`` is not.
     """
-    h = polyhash_col(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
+    h = polyhash_col(salted_id_sql(salt, id_col))
     rn = F.row_number().over(
         Window.partitionBy(stratum_col).orderBy(h.asc(), F.col(id_col).asc())
     )
@@ -205,9 +198,7 @@ def mixture_sample_flag(
             f"{stratum_col} string, __rate double",
         )
     )
-    from .text import mixed_hash_col
-
-    h = mixed_hash_col(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
+    h = mixed_hash_col(salted_id_sql(salt, id_col))
     rate = F.coalesce(F.col("__rate"), F.lit(float(default)))
     return (
         df.join(wt, on=stratum_col, how="left")

@@ -49,17 +49,6 @@ LANG_MARKERS = {
 STOPWORDS = ["a", "the", "and", "of"]
 
 
-def tokens_col(text: Column | str) -> Column:
-    """Whitespace tokenization (single-space corpus).
-
-    SQL-fragment twin: ``tokens_sql`` below -- any semantic edit here
-    MUST be mirrored there (one test-pinned definition pair; the
-    fast-path constructors in functions/dedup.py build from the SQL
-    fragments)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(c, " "), lambda x: x != "")
-
-
 def sql_ident(name: str) -> str:
     """Backtick-quote a column name for embedding in an ``F.expr``
     string, one quoted part per dot-separated part: ``"s.text"``
@@ -68,24 +57,83 @@ def sql_ident(name: str) -> str:
     return ".".join("`" + p.replace("`", "``") + "`" for p in name.split("."))
 
 
+def sql_string(s: str) -> str:
+    """``s`` as a SQL string literal (backslash and quote escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# The SQL fragments below are the one definition of tokenization and
+# of the polynomial hashes; every builder parses them with ``F.expr``
+# or ``selectExpr``.  A Column-API build of these folds costs hundreds
+# of py4j round-trips of driver time per query construction; one parse
+# is sub-ms (tests/test_construction_cost.py bounds the calls).
+
+
 def tokens_sql(text_expr: str) -> str:
-    """``tokens_col`` as a SQL fragment (``text_expr`` is an already-
-    quoted identifier or a SQL expression).  Same Catalyst tree as the
-    Column form modulo lambda-variable naming -- the single-parse
-    constructor device of optimization rounds 13/14 (a Column-API
-    build of these folds costs hundreds of py4j round-trips of DRIVER
-    time per query construction; one ``F.expr`` parse is sub-ms)."""
+    """Whitespace tokenization (single-space corpus) of the string-
+    valued SQL expression ``text_expr`` (a ``sql_ident``-quoted name or
+    any SQL expression)."""
     return f"filter(split({text_expr}, ' '), x -> x != '')"
 
 
-def polyhash_sql(s_expr: str) -> str:
-    """``polyhash_col`` (no ``finish``) as a SQL fragment over the
-    string-valued SQL expression ``s_expr``.  Mirrors the Column form
-    EXACTLY: same SEED/31/P literals and cast placement."""
+def toks_sql(text_col: str, toks: str | None) -> str:
+    """The token array of a builder: the materialized column ``toks``
+    (see ``with_tokens``) or, without one, ``text_col`` tokenized."""
+    return tokens_sql(sql_ident(text_col)) if toks is None else sql_ident(toks)
+
+
+def polyhash_sql(s_expr: str, finish: str | None = None) -> str:
+    """Deterministic polynomial rolling hash over the characters of the
+    string-valued SQL expression ``s_expr`` (document fingerprinting;
+    cross-engine reproducible).
+
+    ``finish``: optional SQL lambda applied to the final accumulator
+    INSIDE the aggregate (optimization round 13).  A caller that
+    branches on the hash (e.g. ``split_col``'s CASE over the bucket)
+    would otherwise embed the whole per-char fold once per branch --
+    the interpreted projection does not share repeated higher-order
+    subtrees -- so the decision folds into the aggregate's finish step
+    and the string hashes exactly once."""
+    fin = "" if finish is None else f", {finish}"
     return (
         f"aggregate(filter(split({s_expr}, ''), x -> x != ''), "
-        f"CAST({SEED} AS BIGINT), (acc, x) -> (acc * 31 + ascii(x)) % {P})"
+        f"CAST({SEED} AS BIGINT), (acc, x) -> (acc * 31 + ascii(x)) % {P}{fin})"
     )
+
+
+def token_hashes_sql(text_col: str, toks: str | None = None) -> str:
+    """The per-token polyhash array over the token array of
+    ``toks_sql(text_col, toks)``."""
+    return f"transform({toks_sql(text_col, toks)}, t -> {polyhash_sql('t')})"
+
+
+M_COMB = 1_000_003  # k-gram combine multiplier
+
+
+def kgram_combine_sql(n: int, th: str = "__th") -> str:
+    """The rolling combine of ``n`` consecutive token hashes starting
+    at 1-based position ``i`` of the hash array ``th``; products stay
+    < 2^63 (hashes < P, multiplier ~1e6)."""
+    h = f"element_at({th}, i)"
+    for k in range(1, n):
+        h = f"({h} * {M_COMB} + element_at({th}, i + {k})) % {P}"
+    return h
+
+
+def salted_id_sql(salt: str, id_col: str) -> str:
+    """``salt || ':' || id`` -- the string the salted-id hashes
+    (splits, samples, shards) hash."""
+    return f"concat({sql_string(salt + ':')}, CAST({sql_ident(id_col)} AS STRING))"
+
+
+def tokens_col(text_col: str) -> Column:
+    """``tokens_sql`` over the column ``text_col``."""
+    return F.expr(tokens_sql(sql_ident(text_col)))
+
+
+def polyhash_col(s_expr: str, finish: str | None = None) -> Column:
+    """``polyhash_sql`` over the SQL expression ``s_expr``."""
+    return F.expr(polyhash_sql(s_expr, finish))
 
 
 TOKS = "__toks"
@@ -103,36 +151,9 @@ def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     non-cheap and multiply referenced, so each document tokenizes once
     regardless of how many signals a suite composes.  Consumers that
     reference the array only once collapse back to a single projection
-    -- identical to the historical plan."""
+    -- identical to the historical plan.  Builders take the column
+    NAME (``toks=TOKS``)."""
     return df.withColumn(TOKS, tokens_col(text_col))
-
-
-def _toks_or(text_col: str, toks: Column | None) -> Column:
-    return tokens_col(text_col) if toks is None else toks
-
-
-def polyhash_col(s: Column, finish=None) -> Column:
-    """Deterministic polynomial rolling hash over characters
-    (document fingerprinting; cross-engine reproducible).
-
-    SQL-fragment twin: ``polyhash_sql`` above -- any semantic edit
-    here MUST be mirrored there (the single-parse fast paths in
-    functions/dedup.py build from that fragment; parity is pinned by
-    the expr-vs-Column tests).
-
-    ``finish``: optional lambda applied to the final accumulator
-    INSIDE the aggregate (optimization round 13).  A caller that
-    branches on the hash (e.g. ``split_col``'s CaseWhen over the
-    bucket) would otherwise embed the whole per-char fold once per
-    branch -- the interpreted projection does not share repeated
-    higher-order subtrees -- so the decision folds into the
-    aggregate's finish step and the string hashes exactly once."""
-    chars = F.filter(F.split(s, ""), lambda x: x != "")
-    init = F.lit(SEED).cast("long")
-    merge = lambda acc, x: (acc * 31 + F.ascii(x)) % F.lit(P)  # noqa: E731
-    if finish is None:
-        return F.aggregate(chars, init, merge)
-    return F.aggregate(chars, init, merge, finish)
 
 
 def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -142,15 +163,15 @@ def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def token_stats_cols(
-    text_col: str = "text", toks: Column | None = None
+    text_col: str = "text", toks: str | None = None
 ) -> list[Column]:
     """Token statistics as standalone aliased Columns (single-
-    projection suites and streams compose them join-free).  Pass a
-    materialized ``toks`` column (see ``with_tokens``) so the token
-    array is computed once per document instead of once per reference
-    -- the interpreted projection does not share the repeated
+    projection suites and streams compose them join-free).  Pass the
+    name of a materialized ``toks`` column (see ``with_tokens``) so the
+    token array is computed once per document instead of once per
+    reference -- the interpreted projection does not share the repeated
     higher-order subtrees."""
-    toks = _toks_or(text_col, toks)
+    toks = F.expr(toks_sql(text_col, toks))
     n = F.size(toks).cast("double")
     total_len = F.aggregate(
         F.transform(toks, lambda t: F.length(t).cast("long")),
@@ -180,18 +201,17 @@ def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document token statistics: counts, mean token length,
     distinct-token ratio, stopword ratio.  Tokenizes once per document
     (``with_tokens``)."""
-    base = with_tokens(df.select("doc_id", text_col), text_col)
-    return base.select(
-        "doc_id", *token_stats_cols(text_col, toks=F.col(TOKS))
+    return with_tokens(df, text_col).select(
+        "doc_id", *token_stats_cols(text_col, toks=TOKS)
     )
 
 
-def quality_col(text_col: str = "text", toks: Column | None = None) -> Column:
+def quality_col(text_col: str = "text", toks: str | None = None) -> Column:
     """The quality score as a standalone Column expression (streaming
-    pipelines compose it into one join-free projection).  Pass a
-    materialized ``toks`` column (``with_tokens``) to tokenize once
-    per document -- measured ~3x on this projection alone."""
-    toks = _toks_or(text_col, toks)
+    pipelines compose it into one join-free projection).  Pass the name
+    of a materialized ``toks`` column (``with_tokens``) to tokenize
+    once per document -- measured ~3x on this projection alone."""
+    toks = F.expr(toks_sql(text_col, toks))
 
     # bind the token array ONCE via a higher-order lambda (optimization
     # round 13): the score references the array 6x, and when Catalyst
@@ -235,24 +255,30 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     Computed from RAW ratios (not the 6-decimal-rounded stats) so the
     only rounding step is the final one.  Tokenizes once per document
     (``with_tokens`` -- measured ~3x on this projection)."""
-    base = with_tokens(df.select("doc_id", text_col), text_col)
-    return base.select(
-        "doc_id", quality_col(text_col, toks=F.col(TOKS)).alias("quality")
+    return with_tokens(df, text_col).select(
+        "doc_id", quality_col(text_col, toks=TOKS).alias("quality")
     )
 
 
-def _lang_id_expr(text_col: str, toks: str | None) -> Column:
-    """lang_id_col's expression as ONE SQL parse (optimization round
-    14, same single-parse device as functions/dedup._simhash_expr):
-    the string spells exactly the Column branch's tree -- same struct
-    shapes, same -2 init, same strict-> fold and ==0 'und' finish --
-    from the shared tokens_sql fragment."""
-    toks_sql_ = tokens_sql(sql_ident(text_col)) if toks is None else sql_ident(toks)
+def lang_id_col(text_col: str = "text", toks: str | None = None) -> Column:
+    """Predicted language as a standalone Column (marker-token scores
+    with deterministic alphabetical tie-break).  ``toks``: see
+    ``with_tokens`` -- each language's marker scan runs once per
+    document: the scores evaluate ONCE into an in-row (score, lang)
+    struct array and a fold picks the argmax (optimization round 13:
+    the former greatest(*scores) + per-language CaseWhen chain
+    re-embedded every filter scan, so the interpreted projection --
+    higher-order functions fall out of codegen and repeated subtrees
+    are not shared -- evaluated the 5 marker scans ~3-6x per document).
+    Tie-break: strict > keeps the FIRST struct, and the array is built
+    in sorted(lang) order, so the alphabetically smallest max-score
+    language wins; a 0 best score is 'und'.  The -2 init sits below
+    every score: size() of a NULL token array is -1 (legacy
+    sizeOfNull), so NULL text gets the first language, not 'und'."""
+    t = toks_sql(text_col, toks)
     entries = ", ".join(
         "struct(size(filter({t}, t -> t IN ({m}))) AS s, '{lang}' AS l)".format(
-            t=toks_sql_,
-            m=", ".join("'" + w.replace("'", "''") + "'" for w in markers),
-            lang=lang,
+            t=t, m=", ".join(sql_string(w) for w in markers), lang=lang
         )
         for lang, markers in sorted(LANG_MARKERS.items())
     )
@@ -263,73 +289,18 @@ def _lang_id_expr(text_col: str, toks: str | None) -> Column:
     )
 
 
-def lang_id_col(
-    text_col: str = "text", toks: "Column | str | None" = None
-) -> Column:
-    """Predicted language as a standalone Column (marker-token scores
-    with deterministic alphabetical tie-break).  ``toks``: see
-    ``with_tokens`` -- each language's marker scan runs once per
-    document: the scores evaluate ONCE into an in-row (score, lang)
-    struct array and a fold picks the argmax (optimization round 13:
-    the former greatest(*scores) + per-language CaseWhen chain
-    re-embedded every filter scan, so the interpreted projection --
-    higher-order functions fall out of codegen and repeated subtrees
-    are not shared -- evaluated the 5 marker scans ~3-6x per document).
-    Tie-break is identical: strict > keeps the FIRST struct, and the
-    array is built in sorted(lang) order, so the alphabetically
-    smallest max-score language wins; a 0 best score stays 'und'.
-
-    When ``text_col``/``toks`` are NAMES the identical tree builds as
-    ONE F.expr parse (optimization round 14; the Column-API loop was
-    ~70 py4j round-trips of driver time per construction) -- pass the
-    column NAME to keep the fast path; a Column is still accepted
-    (legacy constructor below, same values, pinned by test)."""
-    if isinstance(text_col, str) and (toks is None or isinstance(toks, str)):
-        return _lang_id_expr(text_col, toks)
-    toks = _toks_or(text_col, toks)
-
-    def marker_filter(m):
-        # single-parameter closure: a 2-arg lambda would be treated by
-        # F.filter as the (element, index) form and shadow the binding
-        return lambda t: t.isin(m)
-
-    entries = F.array(
-        *[
-            F.struct(
-                F.size(F.filter(toks, marker_filter(m))).alias("s"),
-                F.lit(lang).alias("l"),
-            )
-            for lang, m in sorted(LANG_MARKERS.items())
-        ]
-    )
-    return F.aggregate(
-        entries,
-        # init below every possible score: size() of a NULL token
-        # array is -1 (legacy sizeOfNull), so -2 makes the first
-        # (alphabetically smallest) language win the fold exactly like
-        # the old outermost CaseWhen branch did -- including the NULL-
-        # text case, where the old chain returned the first language
-        # because best==-1 fails the ==0 'und' gate
-        F.struct(F.lit(-2).alias("s"), F.lit("und").alias("l")),
-        lambda acc, x: F.when(x["s"] > acc["s"], x).otherwise(acc),
-        # 'und' iff the best score is exactly 0 -- the old chain's rule
-        lambda acc: F.when(acc["s"] == 0, F.lit("und")).otherwise(acc["l"]),
-    )
-
-
 def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Marker-token language scoring with deterministic alphabetical
     tie-break -- n-gram/function-word heuristic shaped like a real
     langid pass (per-row, no shuffle).  Tokenizes once per document
     (``with_tokens``)."""
-    base = with_tokens(df.select("doc_id", text_col), text_col)
-    return base.select(
+    return with_tokens(df, text_col).select(
         "doc_id", lang_id_col(text_col, toks=TOKS).alias("pred_lang")
     )
 
 
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.select("doc_id", polyhash_col(F.col(text_col)).alias("fp"))
+    return df.select("doc_id", polyhash_col(sql_ident(text_col)).alias("fp"))
 
 
 def _ngram_strings(toks: Column, n: int) -> Column:
@@ -373,24 +344,24 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     signal references the trigram array three times and the
     interpreted projection does not share repeated higher-order
     subtrees (optimization round 13)."""
-    base = with_tokens(df.select("doc_id", text_col), text_col)
+    base = with_tokens(df, text_col)
     base = base.withColumn("__tg3", _ngram_strings(F.col(TOKS), 3))
     return base.select(
-        "doc_id",
-        *repetition_cols(text_col, toks=F.col(TOKS), tg3=F.col("__tg3")),
+        "doc_id", *repetition_cols(text_col, toks=TOKS, tg3="__tg3")
     )
 
 
 def repetition_cols(
     text_col: str = "text",
-    toks: Column | None = None,
-    tg3: Column | None = None,
+    toks: str | None = None,
+    tg3: str | None = None,
 ) -> list[Column]:
     """The repetition signals as standalone aliased Columns (single-
     projection suites compose them join-free).  ``toks``/``tg3``: see
-    ``with_tokens`` / ``repetition_stats`` -- pass materialized token
-    and trigram arrays so neither is rebuilt per reference."""
-    toks = _toks_or(text_col, toks)
+    ``with_tokens`` / ``repetition_stats`` -- pass the names of
+    materialized token and trigram arrays so neither is rebuilt per
+    reference."""
+    toks = F.expr(toks_sql(text_col, toks))
     nc = F.length(text_col).cast("double")
     # most-frequent bigram: sort the in-row bigram array, then a fold
     # tracks the current and best run (strict > keeps the first = the
@@ -430,7 +401,7 @@ def repetition_cols(
         F.round(top_chars / nc, 6),
     ).otherwise(F.lit(0.0))
 
-    tg = _ngram_strings(toks, 3) if tg3 is None else tg3
+    tg = _ngram_strings(toks, 3) if tg3 is None else F.col(tg3)
     m = F.size(tg).cast("double")
     dup3 = F.when(
         m > 0, F.round((m - F.size(F.array_distinct(tg)).cast("double")) / m, 6)
@@ -457,15 +428,12 @@ def repetition_cols(
     ]
 
 
-M_BI = 1_000_003  # bigram combine multiplier (same as dedup.M_COMB)
-
-
 def bigram_lm_scores(
     df: DataFrame,
     ref: DataFrame | None = None,
     min_count: int = 2,
     text_col: str = "text",
-    broadcast_rows: int | None = 2_000_000,
+    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """CCNet-style n-gram language-model quality score: mean
     bits-per-bigram -log2 P(w_i | w_{i-1}) under an add-one-smoothed
@@ -484,8 +452,8 @@ def bigram_lm_scores(
 
     Scale shape (the 100 TB story): the model side (unigram + pruned
     bigram counts) is VOCAB-sized, not corpus-sized, built with two
-    partial-aggregated explode+groupBy passes over the reference.  By
-    default the model tables are persisted and counted (two
+    partial-aggregated explode+groupBy passes over the reference.  The
+    model tables are persisted and counted (two
     vocab-sized scalar actions) and, when under ``broadcast_rows``,
     BROADCAST into the scoring joins -- each document's grams then
     probe a hash map map-side, so the corpus is never shuffled and the
@@ -494,39 +462,23 @@ def bigram_lm_scores(
     corpus is computed ONCE (persisted at its fan-out into unigram /
     bigram counts and the scoring side); the returned plan pins that
     cache entry and the two model tables (see the functions-tier
-    persist policy note in functions/__init__.py).  Above the gate, or
-    with ``broadcast_rows=None``, the joins fall back to the fully
-    lazy shuffle form (no persists, no driver actions) -- the vocab
-    size then rides along as a one-row crossJoin instead of a
-    literal."""
+    persist policy note in functions/__init__.py).  A model table
+    above the gate joins as a sort-merge join instead."""
     if ref is None:
         ref = df
     self_ref = ref is df
-    P_ = F.lit(P)
 
     def th_col(d):
-        return d.select(
-            "doc_id",
-            F.transform(tokens_col(text_col), lambda t: polyhash_col(t)).alias(
-                "__th"
-            ),
+        return d.selectExpr(
+            "doc_id", f"{token_hashes_sql(text_col)} AS __th"
         )
 
     def bigrams_of(th):
-        dd = th.filter(F.size("__th") >= 2)
-        idx = F.sequence(F.lit(1), F.size("__th") - 1)
-        pair = F.transform(
-            idx,
-            lambda i: F.struct(
-                F.element_at(F.col("__th"), i).alias("ph"),
-                (
-                    (F.element_at(F.col("__th"), i) * M_BI
-                     + F.element_at(F.col("__th"), i + F.lit(1))) % P_
-                ).alias("bh"),
-            ),
-        )
-        return dd.select("doc_id", F.explode(pair).alias("s")).select(
-            "doc_id", F.col("s.ph").alias("ph"), F.col("s.bh").alias("bh")
+        # (previous token hash, bigram hash) per adjacent token pair
+        return th.filter(F.size("__th") >= 2).selectExpr(
+            "doc_id",
+            "inline(transform(sequence(1, size(__th) - 1), i -> struct("
+            f"element_at(__th, i) AS ph, {kgram_combine_sql(2)} AS bh)))",
         )
 
     def model_tables(th_ref):
@@ -543,36 +495,25 @@ def bigram_lm_scores(
         )
         return runi, rbi
 
-    def score(grams, runi, rbi, v_col):
-        bits = -F.log2(
-            (F.coalesce(F.col("cb"), F.lit(0)) + F.lit(1)).cast("double")
-            / (F.coalesce(F.col("cu"), F.lit(0)) + v_col).cast("double")
-        )
-        return grams.join(runi, on="ph", how="left").join(
-            rbi, on="bh", how="left"
-        ), bits
-
-    if broadcast_rows is None:
-        # fully lazy legacy shape: sort-merge model joins, vocab size
-        # as a one-row crossJoin
-        runi, rbi = model_tables(th_col(ref))
-        vocab = runi.agg(F.count(F.lit(1)).alias("__v"))
-        joined, bits = score(bigrams_of(th_col(df)), runi, rbi, F.col("__v"))
-        joined = joined.crossJoin(F.broadcast(vocab))
-    else:
-        th_ref = th_col(ref).persist()
-        runi, rbi = model_tables(th_ref)
-        runi, rbi = runi.persist(), rbi.persist()
-        nv, nb = runi.count(), rbi.count()
-        if not self_ref:
-            # both consumers (the model counts) are materialized; the
-            # scoring side re-derives from df, so the ref projection
-            # cache is dead weight past this point
-            th_ref.unpersist()
-        runi_j = F.broadcast(runi) if nv <= broadcast_rows else runi
-        rbi_j = F.broadcast(rbi) if nb <= broadcast_rows else rbi
-        grams = bigrams_of(th_ref if self_ref else th_col(df))
-        joined, bits = score(grams, runi_j, rbi_j, F.lit(nv))
+    th_ref = th_col(ref).persist()
+    runi, rbi = model_tables(th_ref)
+    runi, rbi = runi.persist(), rbi.persist()
+    nv, nb = runi.count(), rbi.count()
+    if not self_ref:
+        # both consumers (the model counts) are materialized; the
+        # scoring side re-derives from df, so the ref projection
+        # cache is dead weight past this point
+        th_ref.unpersist()
+    runi_j = F.broadcast(runi) if nv <= broadcast_rows else runi
+    rbi_j = F.broadcast(rbi) if nb <= broadcast_rows else rbi
+    grams = bigrams_of(th_ref if self_ref else th_col(df))
+    joined = grams.join(runi_j, on="ph", how="left").join(
+        rbi_j, on="bh", how="left"
+    )
+    bits = -F.log2(
+        (F.coalesce(F.col("cb"), F.lit(0)) + F.lit(1)).cast("double")
+        / (F.coalesce(F.col("cu"), F.lit(0)) + F.lit(nv)).cast("double")
+    )
     return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_lm_bigrams"),
         (F.round(F.avg(bits), 6) + F.lit(0.0)).alias("lm_bits"),
@@ -589,11 +530,12 @@ def bigram_lm_scores(
 A_MIX = 2_654_435_761
 
 
-def mixed_hash_col(s: Column) -> Column:
-    """polyhash followed by the affine mixing step -- use this (never
-    raw polyhash_col) whenever low-order residues of the hash drive a
-    decision: shard assignment, rate gates, reservoir positions."""
-    return (polyhash_col(s) * F.lit(A_MIX).cast("long")) % F.lit(P)
+def mixed_hash_col(s_expr: str) -> Column:
+    """polyhash of the SQL expression ``s_expr`` followed by the affine
+    mixing step -- use this (never raw polyhash_col) whenever low-order
+    residues of the hash drive a decision: shard assignment, rate
+    gates, reservoir positions."""
+    return F.expr(f"({polyhash_sql(s_expr)} * CAST({A_MIX} AS BIGINT)) % {P}")
 
 
 def perplexity_buckets(

@@ -219,11 +219,9 @@ def shuffle_shards(
     stage touches the document payload until the final write join."""
     from pyspark.sql.window import Window
 
-    from .text import mixed_hash_col
+    from .text import mixed_hash_col, salted_id_sql
 
-    h = mixed_hash_col(
-        F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
-    )
+    h = mixed_hash_col(salted_id_sql(seed, id_col))
     w = Window.partitionBy("shard").orderBy(F.col("__h").asc(), F.col(id_col).asc())
     return (
         df.select(id_col, h.alias("__h"))

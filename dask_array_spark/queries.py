@@ -1947,9 +1947,8 @@ def q_dedup_substring_spans(spark, sf):
 
     docs = _docs(spark, sf)
     spans = D.duplicated_spans(docs, k=8).persist()
-    # single-parse projections (optimization round 14): same trees as
-    # the historical Column-API selects; the fingerprint fragment is
-    # text.polyhash_sql, the pinned twin of polyhash_col
+    # single-parse projections (optimization round 14); the
+    # fingerprint is the text.polyhash_sql fragment
     k0 = spans.selectExpr(
         "CAST(0 AS BIGINT) AS kind", "doc_a AS a", "doc_b AS b",
         "a_start AS c", "b_start AS d", "length AS e",
@@ -2806,7 +2805,7 @@ def q_pipeline_clean(spark, sf):
     base = T.with_tokens(docs.select("doc_id", "lang", "text")).select(
         "doc_id",
         "lang",
-        T.quality_col("text", toks=F.col(T.TOKS)).alias("quality"),
+        T.quality_col("text", toks=T.TOKS).alias("quality"),
         F.size(F.col(T.TOKS)).cast("long").alias("n_tokens"),
         G.split_col("doc_id").alias("split"),
     )
@@ -4226,9 +4225,7 @@ def q_text_suite(spark, sf):
     # whole suite is ONE projection (plus the strata rank window) and
     # one left join against the sparse contamination hits -- the
     # earlier form was a 10-way doc_id self-join
-    strat_hash = T.polyhash_col(
-        F.concat(F.lit("st:"), F.col("doc_id").cast("string"))
-    )
+    strat_hash = T.polyhash_col(T.salted_id_sql("st", "doc_id"))
     in_sample = (
         F.row_number().over(
             Window.partitionBy("lang").orderBy(strat_hash.asc(), F.col("doc_id").asc())
@@ -4242,18 +4239,15 @@ def q_text_suite(spark, sf):
     db = T.with_tokens(docs).withColumn(
         "__tg3", T._ngram_strings(F.col(T.TOKS), 3)
     )
-    tk = F.col(T.TOKS)
+    tk = T.TOKS
     base = db.select(
         "doc_id",
         *T.token_stats_cols("text", toks=tk),
         T.quality_col("text", toks=tk).alias("quality"),
-        # NAME, not Column: lang_id_col's single-parse expr path
-        T.lang_id_col("text", toks=T.TOKS).alias("pred_lang"),
-        T.polyhash_col(F.col("text")).alias("fp"),
-        # pass the NAME, not the Column: simhash_col's single-parse
-        # expr path skips the 0.4 s per-build py4j constructor loop
-        D.simhash_col("text", 16, toks=T.TOKS).alias("simhash"),
-        *T.repetition_cols("text", toks=tk, tg3=F.col("__tg3")),
+        T.lang_id_col("text", toks=tk).alias("pred_lang"),
+        T.polyhash_col(T.sql_ident("text")).alias("fp"),
+        D.simhash_col("text", 16, toks=tk).alias("simhash"),
+        *T.repetition_cols("text", toks=tk, tg3="__tg3"),
         G.split_col("doc_id").alias("split"),
         in_sample.alias("in_sample"),
         TK.bpe_count_col("text").alias("n_bpe_tokens"),

@@ -34,31 +34,35 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.governance import split_col
-from ..functions.text import P, TOKS, polyhash_col, quality_col, tokens_col, with_tokens
+from ..functions.text import (
+    TOKS,
+    kgram_combine_sql,
+    quality_col,
+    token_hashes_sql,
+    with_tokens,
+)
 from .dedup import _read_docs_stream
 
 __all__ = ["ngram_hash_array", "stream_decontaminate", "stream_clean_corpus"]
-
-_M = 1_000_003  # combine multiplier, same as functions.dedup.shingle_hashes
 
 
 def ngram_hash_array(text_col: str = "text", n: int = 8) -> Column:
     """Distinct hashed word n-grams as an IN-ROW array (the
     explode-free form of functions.dedup.shingle_hashes -- identical
-    hash values, no row fan-out, so it composes with streaming)."""
-    th = F.transform(tokens_col(text_col), lambda t: polyhash_col(t))
-    size = F.size(th)
-    idx = F.when(size >= n, F.sequence(F.lit(1), size - (n - 1))).otherwise(
-        F.array().cast("array<int>")
+    hash values, no row fan-out, so it composes with streaming).  Below
+    ``n`` tokens the gram array is empty.
+
+    The token hash array is spelled inline at each use, not bound to a
+    lambda variable: a Python UDF over an argument whose inner lambda
+    reads an outer lambda variable twice is not extracted to an
+    ArrowEvalPython node on Spark 4.1 and fails with "Cannot evaluate
+    expression" (``stream_decontaminate`` feeds this array to one)."""
+    th = token_hashes_sql(text_col)
+    return F.expr(
+        f"array_distinct(transform(CASE WHEN size({th}) >= {n} "
+        f"THEN sequence(1, size({th}) - {n - 1}) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END, i -> {kgram_combine_sql(n, th)}))"
     )
-
-    def combine(i):
-        h = F.element_at(th, i)
-        for k in range(1, n):
-            h = (h * _M + F.element_at(th, i + F.lit(k))) % F.lit(P)
-        return h
-
-    return F.array_distinct(F.transform(idx, combine))
 
 
 def _bench_hash_set(spark: SparkSession, bench_path: str, n: int):
@@ -146,7 +150,7 @@ def stream_clean_corpus(
     # join-free projection over the stream -- no state, no watermark
     enriched = with_tokens(stream).select(
         "doc_id",
-        quality_col("text", toks=F.col(TOKS)).alias("quality"),
+        quality_col("text", toks=TOKS).alias("quality"),
         n_hits(ngram_hash_array("text", n)).alias("n_contam"),
         split_col("doc_id").alias("split"),
     )

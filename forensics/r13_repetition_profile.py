@@ -63,7 +63,7 @@ probes = [
     ("bigram_sort", base.select("doc_id", F.size(F.array_sort(bg)).alias("n"))),
     (
         "full_top2gram",
-        base3.select("doc_id", T.repetition_cols("text", toks=toks, tg3=tg3)[0]),
+        base3.select("doc_id", T.repetition_cols("text", toks=T.TOKS, tg3="__tg3")[0]),
     ),
     ("trigram_build", base.select("doc_id", F.size(tg).alias("n"))),
     (
@@ -72,15 +72,15 @@ probes = [
     ),
     (
         "full_dup3",
-        base3.select("doc_id", T.repetition_cols("text", toks=toks, tg3=tg3)[1]),
+        base3.select("doc_id", T.repetition_cols("text", toks=T.TOKS, tg3="__tg3")[1]),
     ),
     (
         "full_maxrun",
-        base3.select("doc_id", T.repetition_cols("text", toks=toks, tg3=tg3)[2]),
+        base3.select("doc_id", T.repetition_cols("text", toks=T.TOKS, tg3="__tg3")[2]),
     ),
     (
         "full_repetition_stats",
-        base3.select("doc_id", *T.repetition_cols("text", toks=toks, tg3=tg3)),
+        base3.select("doc_id", *T.repetition_cols("text", toks=T.TOKS, tg3="__tg3")),
     ),
     ("tokenize_only_again", base.select("doc_id", F.size(toks).alias("n"))),
 ]

@@ -1,0 +1,53 @@
+"""Driver-side construction cost of the text hash builders: each one
+parses its SQL fragments once (functions/text.py), so building it
+takes a handful of py4j calls.  A Column-API fold of the same
+expression takes tens to hundreds (the per-bit simhash loop about
+250), so a bound of a few calls catches one coming back."""
+
+import threading
+
+import pytest
+
+from dask_array_spark.functions import dedup as D
+from dask_array_spark.functions import governance as G
+from dask_array_spark.functions import text as T
+from dask_array_spark.streaming.governance import ngram_hash_array
+
+MAX_CALLS = 5
+
+BUILDERS = {
+    "simhash_col": lambda: D.simhash_col("text", 32),
+    "lang_id_col": lambda: T.lang_id_col("text"),
+    "tokens_col": lambda: T.tokens_col("text"),
+    "ngram_hash_array": lambda: ngram_hash_array("text", 8),
+    "split_col": lambda: G.split_col("doc_id"),
+}
+
+
+@pytest.fixture
+def py4j_calls(spark):
+    """Counts the py4j commands the test's thread sends, by wrapping
+    the gateway client's ``send_command``."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    count = [0]
+    me = threading.get_ident()
+
+    def counting_send(*args, **kwargs):
+        if threading.get_ident() == me:
+            count[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting_send
+    try:
+        yield count
+    finally:
+        client.send_command = send
+
+
+@pytest.mark.parametrize("name", list(BUILDERS))
+def test_builder_is_one_parse(spark, py4j_calls, name):
+    BUILDERS[name]()  # the first call may resolve JVM classes
+    py4j_calls[0] = 0
+    BUILDERS[name]()
+    assert py4j_calls[0] <= MAX_CALLS, (name, py4j_calls[0])

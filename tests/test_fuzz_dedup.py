@@ -272,16 +272,29 @@ def test_crc32c_strict_modes(monkeypatch):
         I._crc32c_check(body, good, "test chunk")
 
 
+def simhash_ref(tokens, bits=16):
+    """The SimHash definition: token polyhashes vote +-1 per bit,
+    count-weighted; a positive total sets the bit.  NULL array ->
+    None, any NULL token -> 0 (the engine's NULL contract)."""
+    if tokens is None:
+        return None
+    if any(t is None for t in tokens):
+        return 0
+    votes = [0] * bits
+    for t in tokens:
+        h = py_polyhash(t)
+        for i in range(bits):
+            votes[i] += 1 if (h >> i) & 1 else -1
+    return sum(1 << i for i in range(bits) if votes[i] > 0)
+
+
 def test_simhash_null_contract_and_reference_fold(spark):
     """Round-13 pin for the per-bit-majority simhash: (a) NULL token
     array -> NULL, any NULL token hash -> 0 (the r12 vote fold's
     poisoning, replicated as explicit guards); (b) values equal an
     independent per-doc Python replay of the definition (token
     polyhashes vote +-1 per bit, count-weighted, sign sets the bit)."""
-    from pyspark.sql import functions as F
-
     from dask_array_spark.functions.dedup import simhash_col
-    from dask_array_spark.functions.text import P, SEED
 
     raw = spark.createDataFrame(
         [
@@ -297,76 +310,47 @@ def test_simhash_null_contract_and_reference_fold(spark):
     got = {
         int(r["doc_id"]): r["sh"]
         for r in raw.select(
-            "doc_id", simhash_col("x", 16, toks=F.col("tk")).alias("sh")
+            "doc_id", simhash_col("x", 16, toks="tk").alias("sh")
         ).collect()
     }
     assert got[1] is None
     assert got[2] == 0
     assert got[3] == 0
-
-    def polyhash(s):
-        h = SEED
-        for c in s:
-            h = (h * 31 + ord(c)) % P
-        return h
-
-    def simhash_ref(tokens, bits=16):
-        votes = [0] * bits
-        for t in tokens:
-            h = polyhash(t)
-            for i in range(bits):
-                votes[i] += 1 if (h >> i) & 1 else -1
-        return sum(1 << i for i in range(bits) if votes[i] > 0)
-
     for doc_id, toks in ((4, ["the", "the", "of"]), (5, ["x"]),
                          (6, ["alpha", "beta", "gamma", "alpha"])):
         assert got[doc_id] == simhash_ref(toks), doc_id
 
 
-def test_simhash_expr_and_column_paths_identical(spark):
-    """Round-13 construction-cost pin: simhash_col builds via ONE
-    F.expr parse when text_col/toks are names (the Column-API loop is
-    ~250 py4j round-trips = 0.41 s of driver time per build), and via
-    the legacy Column constructors when toks is a Column.  The two
-    branches must stay value-identical -- including the NULL contract
-    -- on hostile token arrays, and the str-toks form must equal the
-    Column-toks form."""
-    from pyspark.sql import functions as F
-
+def test_simhash_col_matches_python_reference(spark):
+    """simhash_col over a token-array column and over raw text equals
+    ``simhash_ref`` at bits 8, 16 and 32 on hostile token arrays: NULL
+    array, NULL token, empty, duplicates, non-ASCII, 33 repeats."""
     from dask_array_spark.functions.dedup import simhash_col
 
+    arrays = [
+        None,
+        [],
+        ["ab", None, "cd"],
+        ["the", "the", "of"],
+        ["x"],
+        ["alpha", "beta", "gamma", "alpha"],
+        ["émoji", "😀", "日本語"],
+        ["same"] * 33,
+    ]
     raw = spark.createDataFrame(
-        [
-            (1, None),
-            (2, []),
-            (3, ["ab", None, "cd"]),
-            (4, ["the", "the", "of"]),
-            (5, ["x"]),
-            (6, ["alpha", "beta", "gamma", "alpha"]),
-            (7, ["émoji", "😀", "日本語"]),
-            (8, ["same"] * 33),
-        ],
-        "doc_id long, tk array<string>",
+        list(enumerate(arrays)), "doc_id long, tk array<string>"
     )
     for bits in (8, 16, 32):
-        rows = raw.select(
-            "doc_id",
-            simhash_col("x", bits, toks="tk").alias("fast"),
-            simhash_col("x", bits, toks=F.col("tk")).alias("legacy"),
-        ).collect()
-        for r in rows:
-            assert r["fast"] == r["legacy"], (bits, r["doc_id"])
-    # text_col-only form: both branches over raw text
+        got = dict(
+            raw.select("doc_id", simhash_col("x", bits, toks="tk")).collect()
+        )
+        for i, toks in enumerate(arrays):
+            assert got[i] == simhash_ref(toks, bits), (bits, i)
+    texts = [None, "", "a b a", "émoji 😀 mixed"]
     txt = spark.createDataFrame(
-        [(1, None), (2, ""), (3, "a b a"), (4, "émoji 😀 mixed")],
-        "doc_id long, text string",
+        list(enumerate(texts)), "doc_id long, text string"
     )
-    from dask_array_spark.functions.text import tokens_col
-
-    rows = txt.select(
-        "doc_id",
-        simhash_col("text", 16).alias("fast"),
-        simhash_col("text", 16, toks=tokens_col("text")).alias("legacy"),
-    ).collect()
-    for r in rows:
-        assert r["fast"] == r["legacy"], r["doc_id"]
+    got = dict(txt.select("doc_id", simhash_col("text", 16)).collect())
+    for i, t in enumerate(texts):
+        want = None if t is None else simhash_ref([w for w in t.split(" ") if w])
+        assert got[i] == want, i

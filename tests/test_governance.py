@@ -227,3 +227,51 @@ def test_mixture_sample_flag_rates_and_determinism(spark):
     # unknown stratum falls back to default
     docs2 = spark.createDataFrame([(1, "xx")], "doc_id long, lang string")
     assert mixture_sample_flag(docs2, {}, default=1.0).collect()[0]["mix_keep"]
+
+
+def test_salted_hashes_take_quote_and_backslash_salts(spark):
+    """The salt becomes an SQL string literal inside the hash fragment:
+    a salt holding quotes and backslashes must still hash as the plain
+    string salt || ':' || id, for every salted-id hash."""
+    from dask_array_spark.functions import governance as G
+    from dask_array_spark.functions.text import A_MIX, P, SEED
+    from dask_array_spark.functions.tokenize import shuffle_shards
+
+    salt = "it's \\'a\\\\ \\n trap'"
+
+    def poly(s):
+        h = SEED
+        for c in s:
+            h = (h * 31 + ord(c)) % P
+        return h
+
+    def mixed(s):
+        return poly(s) * A_MIX % P
+
+    ids = list(range(60))
+    docs = spark.createDataFrame(
+        [(i, "en" if i % 3 else "fr") for i in ids], "doc_id long, lang string"
+    )
+    h = {i: poly(f"{salt}:{i}") for i in ids}
+    split = dict(map(tuple, G.assign_split(docs, salt=salt).collect()))
+    assert split == {
+        i: "train" if h[i] % 100 < 80 else "valid" if h[i] % 100 < 90 else "test"
+        for i in ids
+    }
+    sample = dict(
+        map(tuple, G.stratified_sample_flag(docs, "lang", k=4, salt=salt).collect())
+    )
+    for lang in ("en", "fr"):
+        members = sorted((h[i], i) for i in ids if (i % 3 > 0) == (lang == "en"))
+        assert {i for i in ids if sample[i]} >= {i for _, i in members[:4]}
+    assert sum(sample.values()) == 8
+    keep = dict(
+        map(tuple, G.mixture_sample_flag(docs, {"en": 0.5}, salt=salt, default=0.3)
+            .collect())
+    )
+    assert keep == {
+        i: mixed(f"{salt}:{i}") % 1_000_000 < (0.5 if i % 3 else 0.3) * 1e6
+        for i in ids
+    }
+    shards = {r["doc_id"]: r["shard"] for r in shuffle_shards(docs, 4, seed=salt).collect()}
+    assert shards == {i: mixed(f"{salt}:{i}") % 4 for i in ids}

@@ -496,7 +496,7 @@ def test_quality_filter_pushdown_tokenizes_once(spark, sf_dir):
     docs = read_table(spark, sf_dir, "documents")
     db = T.with_tokens(docs.select("doc_id", "text"))
     df = db.select(
-        "doc_id", T.quality_col("text", toks=F.col(T.TOKS)).alias("quality")
+        "doc_id", T.quality_col("text", toks=T.TOKS).alias("quality")
     ).filter(F.col("quality") >= 0.5)
     plan = _plan(df)
     # every physical operator (one per rendered line) may tokenize at

@@ -82,9 +82,10 @@ def test_verify_rejects_hash_collision_spans(spark, monkeypatch):
     patched to 0 every k-gram hashes to its LAST token's hash, making
     'a b' and 'c b' collide while their text differs."""
     from dask_array_spark.functions import dedup as D
+    from dask_array_spark.functions import text as T
 
     docs = _docs(spark, ["a b q w e r t y", "c b z x v n m k"])
-    monkeypatch.setattr(D, "M_COMB", 0)
+    monkeypatch.setattr(T, "M_COMB", 0)
     collided = D.duplicated_spans(docs, k=2)
     assert collided.count() == 1  # the false 'a b' ~ 'c b' match
     assert D.duplicated_spans(docs, k=2, verify=True).count() == 0
@@ -176,20 +177,25 @@ def test_clip_empty_and_whitespace_docs(spark):
 
 def test_builders_read_a_struct_field_text_column(spark):
     """A dotted ``text_col`` names a struct field, as ``F.col`` reads
-    it: every single-parse text builder gives the top-level result."""
+    it: every text and dedup builder that takes ``text_col`` gives the
+    top-level result."""
+    from dask_array_spark.functions import text as T
     from dask_array_spark.functions.dedup import (
         clip_duplicated_spans,
+        duplicated_spans,
+        exact_groups,
         kgram_positions,
         shingle_hashes,
+        simhash,
         simhash_col,
     )
-    from dask_array_spark.functions.text import lang_id_col
 
     flat = spark.createDataFrame(
         [
             (1, "x1 x2 a b c d e f g h x3"),
             (2, "y1 a b c d e f g h y2 y3 the and"),
             (3, ""),
+            (4, "x1 x2 a b c d e f g h x3"),
         ],
         "doc_id long, text string",
     )
@@ -200,15 +206,30 @@ def test_builders_read_a_struct_field_text_column(spark):
     )
 
     def rows(df):
-        return sorted(map(tuple, df.collect()))
+        return sorted(map(tuple, df.collect()), key=repr)
 
     for build in (
+        lambda d, c: T.with_tokens(d, c).select("doc_id", T.TOKS),
+        lambda d, c: d.select("doc_id", T.tokens_col(c).alias("t")),
+        lambda d, c: T.token_count(d, c),
+        lambda d, c: T.token_stats(d, c),
+        lambda d, c: d.select("doc_id", *T.token_stats_cols(c)),
+        lambda d, c: T.quality_score(d, c),
+        lambda d, c: d.select("doc_id", T.quality_col(c).alias("q")),
+        lambda d, c: T.lang_id(d, c),
+        lambda d, c: d.select("doc_id", T.lang_id_col(c).alias("lang")),
+        lambda d, c: T.fingerprint(d, c),
+        lambda d, c: T.repetition_stats(d, c),
+        lambda d, c: d.select("doc_id", *T.repetition_cols(c)),
+        lambda d, c: T.bigram_lm_scores(d, text_col=c, min_count=1),
+        lambda d, c: T.tfidf_keywords(d, text_col=c),
+        lambda d, c: exact_groups(d, c),
         lambda d, c: shingle_hashes(d, c, n=3),
         lambda d, c: kgram_positions(d, c, k=4),
+        lambda d, c: simhash(d, c, bits=16),
+        lambda d, c: d.select("doc_id", simhash_col(c).alias("h")),
+        lambda d, c: duplicated_spans(d, c, k=4, verify=True, persist=False),
         lambda d, c: clip_duplicated_spans(d, spans, c),
-        lambda d, c: d.select(
-            "doc_id", simhash_col(c).alias("h"), lang_id_col(c).alias("lang")
-        ),
     ):
         want, got = build(flat, "text"), build(nested, "s.text")
         assert got.columns == want.columns
