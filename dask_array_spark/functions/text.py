@@ -62,6 +62,11 @@ def sql_string(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def _is_stopword(w: str) -> str:
+    """SQL: the string-valued expression ``w`` is one of ``STOPWORDS``."""
+    return f"{w} IN ({', '.join(sql_string(s) for s in STOPWORDS)})"
+
+
 # The SQL fragments below are the one definition of tokenization and
 # of the polynomial hashes; every builder parses them with ``F.expr``
 # or ``selectExpr``.  A Column-API build of these folds costs hundreds
@@ -171,29 +176,31 @@ def token_stats_cols(
     token array is computed once per document instead of once per
     reference -- the interpreted projection does not share the repeated
     higher-order subtrees."""
-    toks = F.expr(toks_sql(text_col, toks))
-    n = F.size(toks).cast("double")
-    total_len = F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("long")),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    distinct_n = F.size(F.array_distinct(toks)).cast("double")
-    stop_n = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS))).cast("double")
+    t = toks_sql(text_col, toks)
+    n = f"CAST(size({t}) AS DOUBLE)"
 
-    def ratio(x):
+    def ratio(x: str, name: str) -> Column:
         # explicit zero-token contract: every ratio is 0.0 (not the
         # engine-specific NULL/NaN a 0/0 division would give -- Spark
         # non-ANSI yields NULL where DuckDB yields NaN, an oracle
         # divergence the adversarial-corpus gate caught)
-        return F.when(n > 0, F.round(x / n, 6)).otherwise(F.lit(0.0))
+        return F.expr(
+            f"CASE WHEN {n} > 0 THEN round({x} / {n}, 6) ELSE 0.0D END AS {name}"
+        )
 
     return [
-        F.length(text_col).cast("long").alias("n_chars"),
-        F.size(toks).cast("long").alias("n_tokens"),
-        ratio(total_len).alias("avg_token_len"),
-        ratio(distinct_n).alias("distinct_ratio"),
-        ratio(stop_n).alias("stopword_ratio"),
+        F.expr(f"CAST(length({sql_ident(text_col)}) AS BIGINT) AS n_chars"),
+        F.expr(f"CAST(size({t}) AS BIGINT) AS n_tokens"),
+        ratio(
+            f"aggregate(transform({t}, w -> CAST(length(w) AS BIGINT)), "
+            "CAST(0 AS BIGINT), (acc, x) -> acc + x)",
+            "avg_token_len",
+        ),
+        ratio(f"CAST(size(array_distinct({t})) AS DOUBLE)", "distinct_ratio"),
+        ratio(
+            f"CAST(size(filter({t}, w -> {_is_stopword('w')})) AS DOUBLE)",
+            "stopword_ratio",
+        ),
     ]
 
 
@@ -210,42 +217,27 @@ def quality_col(text_col: str = "text", toks: str | None = None) -> Column:
     """The quality score as a standalone Column expression (streaming
     pipelines compose it into one join-free projection).  Pass the name
     of a materialized ``toks`` column (``with_tokens``) to tokenize
-    once per document -- measured ~3x on this projection alone."""
-    toks = F.expr(toks_sql(text_col, toks))
+    once per document -- measured ~3x on this projection alone.
 
-    # bind the token array ONCE via a higher-order lambda (optimization
-    # round 13): the score references the array 6x, and when Catalyst
-    # pushes a filter on the quality column below the tokenize-once
-    # projection it INLINES the alias into every reference -- the
-    # pipeline_clean_corpus quality gate was re-tokenizing every
-    # document 6x inside the pushed Filter.  With the array bound to a
-    # lambda variable, any inlining carries exactly one tokenization;
-    # lambda-variable references are reads of the already-evaluated
-    # value.  Values are identical (same expression over the same
-    # array; a NULL token array still yields 0.0 through the n>0 gate).
-    def q(t: Column) -> Column:
-        n = F.size(t).cast("double")
-        length_term = F.least(F.size(t).cast("double") / F.lit(100.0), F.lit(1.0))
-        diversity = F.size(F.array_distinct(t)).cast("double") / n
-        stop_pen = (
-            F.size(F.filter(t, lambda w: w.isin(STOPWORDS))).cast("double")
-            / n
-            * 0.5
-        )
-        return F.when(
-            n > 0,
-            F.round(
-                F.greatest(
-                    F.lit(0.0),
-                    F.least(
-                        F.lit(1.0), length_term * 0.4 + diversity * 0.6 - stop_pen
-                    ),
-                ),
-                6,
-            ),
-        ).otherwise(F.lit(0.0))
-
-    return F.transform(F.array(toks), q)[0]
+    The token array is bound ONCE to the lambda variable ``t``
+    (``transform(array(toks), t -> ...)[0]``): the score references the
+    array 6x, and when Catalyst pushes a filter on the quality column
+    below the tokenize-once projection it INLINES the alias into every
+    reference -- the pipeline_clean_corpus quality gate re-tokenized
+    every document 6x inside the pushed Filter.  With the array bound
+    to a lambda variable, any inlining carries exactly one
+    tokenization.  A NULL token array still yields 0.0 through the
+    n > 0 gate."""
+    n = "CAST(size(t) AS DOUBLE)"
+    score = (
+        f"least({n} / 100.0D, 1.0D) * 0.4D"
+        f" + CAST(size(array_distinct(t)) AS DOUBLE) / {n} * 0.6D"
+        f" - CAST(size(filter(t, w -> {_is_stopword('w')})) AS DOUBLE) / {n} * 0.5D"
+    )
+    return F.expr(
+        f"transform(array({toks_sql(text_col, toks)}), t -> CASE WHEN {n} > 0 "
+        f"THEN round(greatest(0.0D, least(1.0D, {score})), 6) ELSE 0.0D END)[0]"
+    )
 
 
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -303,18 +295,14 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select("doc_id", polyhash_col(sql_ident(text_col)).alias("fp"))
 
 
-def _ngram_strings(toks: Column, n: int) -> Column:
-    """Word n-grams as space-joined strings; empty array below n
-    tokens (guarded -- Spark's sequence(1, 0) would count DOWN)."""
-    size = F.size(toks)
-    idx = F.when(size >= n, F.sequence(F.lit(1), size - (n - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + F.lit(k)) for k in range(n)]
-        ),
+def _ngram_strings(t: str, n: int) -> str:
+    """Word n-grams of the token-array SQL expression ``t`` as
+    space-joined strings; empty array below n tokens (guarded --
+    Spark's sequence(1, 0) would count DOWN)."""
+    grams = ", ".join(f"element_at({t}, i + {k})" for k in range(n))
+    return (
+        f"transform(CASE WHEN size({t}) >= {n} THEN sequence(1, size({t}) - {n - 1}) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END, i -> concat_ws(' ', {grams}))"
     )
 
 
@@ -345,7 +333,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     interpreted projection does not share repeated higher-order
     subtrees (optimization round 13)."""
     base = with_tokens(df, text_col)
-    base = base.withColumn("__tg3", _ngram_strings(F.col(TOKS), 3))
+    base = base.withColumn("__tg3", F.expr(_ngram_strings(sql_ident(TOKS), 3)))
     return base.select(
         "doc_id", *repetition_cols(text_col, toks=TOKS, tg3="__tg3")
     )
@@ -361,70 +349,46 @@ def repetition_cols(
     ``with_tokens`` / ``repetition_stats`` -- pass the names of
     materialized token and trigram arrays so neither is rebuilt per
     reference."""
-    toks = F.expr(toks_sql(text_col, toks))
-    nc = F.length(text_col).cast("double")
+    t = toks_sql(text_col, toks)
+    nc = f"CAST(length({sql_ident(text_col)}) AS DOUBLE)"
+    # run length of token x after the fold state acc
+    run = "CASE WHEN x = acc.prev THEN acc.run + 1 ELSE CAST(1 AS BIGINT) END"
+    zero = "CAST(0 AS BIGINT)"
     # most-frequent bigram: sort the in-row bigram array, then a fold
     # tracks the current and best run (strict > keeps the first = the
-    # lexicographically smallest max-count bigram)
-    sorted_bg = F.array_sort(_ngram_strings(toks, 2))
-    zero = F.lit(0).cast("long")
-    init = F.struct(
-        F.lit("").alias("prev"), zero.alias("run"),
-        zero.alias("best"), F.lit("").alias("bestg"),
+    # lexicographically smallest max-count bigram).  The finish lambda
+    # collapses the fold to its final scalar so the aggregate is
+    # REFERENCED once -- a field access per result would embed the
+    # whole fold once per field.
+    top_chars = (
+        f"aggregate(array_sort({_ngram_strings(t, 2)}), "
+        f"struct('' AS prev, {zero} AS run, {zero} AS best, '' AS bestg), "
+        f"(acc, x) -> struct(x AS prev, {run} AS run, "
+        f"CASE WHEN {run} > acc.best THEN {run} ELSE acc.best END AS best, "
+        f"CASE WHEN {run} > acc.best THEN x ELSE acc.bestg END AS bestg), "
+        "acc -> CAST(acc.best AS DOUBLE) * length(acc.bestg))"
     )
-
-    def step(acc, x):
-        newrun = F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-            F.lit(1).cast("long")
-        )
-        return F.struct(
-            x.alias("prev"),
-            newrun.alias("run"),
-            F.when(newrun > acc["best"], newrun).otherwise(acc["best"]).alias("best"),
-            F.when(newrun > acc["best"], x).otherwise(acc["bestg"]).alias("bestg"),
-        )
-
-    # the finish lambda collapses the fold to its final scalar so the
-    # aggregate is REFERENCED once -- the former top["best"] /
-    # top["bestg"] pair duplicated the entire fold expression per
-    # field access (optimization round 13; same chars-covered value)
-    top_chars = F.aggregate(
-        sorted_bg,
-        init,
-        step,
-        lambda acc: acc["best"].cast("double") * F.length(acc["bestg"]),
+    tg = _ngram_strings(t, 3) if tg3 is None else sql_ident(tg3)
+    m = f"CAST(size({tg}) AS DOUBLE)"
+    max_run = (
+        f"aggregate({t}, struct('' AS prev, {zero} AS run, {zero} AS best), "
+        f"(acc, x) -> struct(x AS prev, {run} AS run, "
+        f"greatest({run}, acc.best) AS best)).best"
     )
-    # empty-text guard: Spark's non-ANSI x/0 yields NULL while DuckDB's
-    # IEEE division yields NaN -- pin 0.0 like dup3gram_frac does
-    top_frac = F.when(
-        nc > 0,
-        F.round(top_chars / nc, 6),
-    ).otherwise(F.lit(0.0))
-
-    tg = _ngram_strings(toks, 3) if tg3 is None else F.col(tg3)
-    m = F.size(tg).cast("double")
-    dup3 = F.when(
-        m > 0, F.round((m - F.size(F.array_distinct(tg)).cast("double")) / m, 6)
-    ).otherwise(F.lit(0.0))
-
-    run_init = F.struct(F.lit("").alias("prev"), zero.alias("run"), zero.alias("best"))
-
-    def run_step(acc, x):
-        newrun = F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-            F.lit(1).cast("long")
-        )
-        return F.struct(
-            x.alias("prev"),
-            newrun.alias("run"),
-            F.greatest(newrun, acc["best"]).alias("best"),
-        )
-
-    max_run = F.aggregate(toks, run_init, run_step)["best"]
-
     return [
-        top_frac.alias("top2gram_char_frac"),
-        dup3.alias("dup3gram_frac"),
-        max_run.cast("long").alias("max_token_run"),
+        # empty-text guard: Spark's non-ANSI x/0 yields NULL while
+        # DuckDB's IEEE division yields NaN -- pin 0.0 like
+        # dup3gram_frac does
+        F.expr(
+            f"CASE WHEN {nc} > 0 THEN round({top_chars} / {nc}, 6) ELSE 0.0D END "
+            "AS top2gram_char_frac"
+        ),
+        F.expr(
+            f"CASE WHEN {m} > 0 THEN round(({m} - "
+            f"CAST(size(array_distinct({tg})) AS DOUBLE)) / {m}, 6) ELSE 0.0D END "
+            "AS dup3gram_frac"
+        ),
+        F.expr(f"CAST({max_run} AS BIGINT) AS max_token_run"),
     ]
 
 

@@ -15,12 +15,16 @@ axes -- for >=2-d data that is a parallel window.  A window over a pure
 AUTOMATICALLY to a distributed decomposition above
 ``SCALABLE_1D_THRESHOLD`` elements (override with ``scalable=``):
 
-- scans (cumsum/cumprod/push): the classic two-pass prefix, PURE JVM
-  -- index blocks aggregate tiny per-block partials, a window over
-  the metadata-sized partials frame yields exclusive block prefixes,
-  and a block-PARTITIONED window folds them in -- the reference's
-  Blelloch decomposition (reductions/_cumulative.py:451) with correct
-  NaN propagation across blocks and zero Python in the data path;
+- scans (cumsum/nancumsum/cumprod/nancumprod/push): ONE two-pass
+  block-scan skeleton (``_block_scan``), PURE JVM -- index blocks
+  aggregate tiny per-block partials, ``_exclusive_prefix`` (a window
+  over the metadata-sized partials frame, recursing into super-blocks
+  when that frame is large) yields exclusive block prefixes, and a
+  block-PARTITIONED window folds them in -- the reference's Blelloch
+  decomposition (reductions/_cumulative.py:451).  Each scan supplies
+  only its partials, their monoids (sum, any, last-non-null) and a
+  finalize; NaN propagates across blocks and no Python runs in the
+  data path;
 - bounded-depth windows (diff/gradient/sliding/moving): index-math
   halo blocks, PURE JVM -- edge rows union-ship to the neighboring
   block key and an ordinary block-partitioned WindowExec evaluates
@@ -32,9 +36,9 @@ AUTOMATICALLY to a distributed decomposition above
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Window
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..core.array import VALUE_COL, Array
@@ -59,8 +63,8 @@ __all__ = [
 # two-pass / halo-block decomposition instead of one WindowExec
 SCALABLE_1D_THRESHOLD = 1 << 20
 _BLOCK_1D = 1 << 18
-# above this many block partials, the partials prefix itself recurses
-# into a second (super-block) level instead of one unpartitioned window
+# above this many partials, the partials prefix itself recurses into
+# super-block levels instead of one unpartitioned window
 _PARTIALS_WINDOW_LIMIT = 1 << 17
 
 
@@ -92,233 +96,187 @@ def _route_1d(a: Array, axis: int, scalable: bool | None) -> bool:
     return n is not None and n >= SCALABLE_1D_THRESHOLD
 
 
-def _scan_1d(a: Array, kind: str, block: int = _BLOCK_1D) -> Array:
-    """Two-pass distributed prefix scan over a 1-D axis (works for
-    sparse or dense cells; ROWS semantics over present rows ordered by
-    index).  kind in {cumsum, nancumsum, cumprod, nancumprod}.
+class _Monoid(NamedTuple):
+    """How one per-block partial combines across blocks: ``reduce``
+    aggregates partials into a coarser level's partial (given the
+    level's key column), ``window`` is the same fold as a window
+    aggregate, ``identity`` (a Python literal) stands in for an empty
+    prefix, and ``combine(outer, inner)`` folds an outer level's prefix
+    with the prefix inside it."""
 
-    PURE JVM, no Python anywhere: pass 1 reduces each index block
-    ``i0 DIV block`` to a tiny partial (sum / log-magnitude / negative
-    count / zero / null flags); a window over the P-row partials frame
-    turns them into exclusive block prefixes (P ~ n/2^20, so this
-    single-partition window is metadata-sized); pass 2 is a
-    block-PARTITIONED window (fully parallel) folding the prefix in.
-    When P itself exceeds _PARTIALS_WINDOW_LIMIT (axes beyond ~3e10
-    elements at the default block) the partials prefix RECURSES one
-    level: super-block partials, a tiny super-prefix window, and a
-    super-PARTITIONED window over the block partials -- no
-    single-partition window ever sees more than the limit.
-    NaN propagation matches the plain scans: a NaN cell poisons every
-    later position, across block boundaries too."""
-    # the cached frame is RANGE-partitioned on the block key and
-    # sorted by (block, position) BEFORE the persist (optimization
-    # round 14, guide §2.4 -- two operations keyed the same way share
-    # one exchange): RangePartitioning(__blk) satisfies the clustering
-    # the pass-1 aggregate and the pass-2 window both require, and the
-    # stored sort order satisfies the window's (__blk, i0) ordering,
-    # so the per-execution hash Exchange AND the full-width Sort of
-    # the old plan disappear -- the one shuffle happens at cache build
-    # and every consumer reads pre-clustered, pre-sorted partitions.
-    # Block keys are equal-sized by construction, so range partitions
-    # are balanced at any scale.
+    reduce: Callable[[Column, Column], Column]
+    window: Callable[[Column], Column]
+    identity: object
+    combine: Callable[[Column, Column], Column]
+
+
+_SUM = _Monoid(lambda c, k: F.sum(c), F.sum, 0, lambda o, i: o + i)
+_ANY = _Monoid(lambda c, k: F.max(c), F.max, False, lambda o, i: o | i)
+# last non-null in key order; max_by skips NULL orderings, so a level
+# whose partials are all NULL reduces to NULL
+_LAST = _Monoid(
+    lambda c, k: F.max_by(c, F.when(c.isNotNull(), k)),
+    lambda c: F.last(c, ignorenulls=True),
+    None,
+    lambda o, i: F.coalesce(i, o),
+)
+
+
+def _exclusive_prefix(
+    p: DataFrame, key: str, monoids: dict[str, _Monoid], nkeys: int | None
+) -> DataFrame:
+    """Replace each ``monoids`` column of the partials frame ``p`` (one
+    row per ``key``) by its exclusive prefix: the fold of the partials
+    at smaller keys, ``identity`` for the first.  Other columns pass
+    through.  Up to ``_PARTIALS_WINDOW_LIMIT`` keys this is one
+    unpartitioned window, metadata-sized.  Above it the frame groups
+    into super-keys of ``_PARTIALS_WINDOW_LIMIT`` keys, their partials
+    get their own exclusive prefix (recursively, so no unpartitioned
+    window ever sees more than the limit), and a window PARTITIONED by
+    super-key combines that outer prefix with the one inside it."""
+    outer = None
+    w = Window.orderBy(key)
+    if nkeys is not None and nkeys > _PARTIALS_WINDOW_LIMIT:
+        sup = "__sb" if key == "__blk" else key + "b"
+        p = p.withColumn(
+            sup, F.floor(F.col(key) / F.lit(_PARTIALS_WINDOW_LIMIT)).cast("long")
+        )
+        sp = p.groupBy(sup).agg(
+            *[m.reduce(F.col(c), F.col(key)).alias(c) for c, m in monoids.items()]
+        )
+        nsup = (nkeys + _PARTIALS_WINDOW_LIMIT - 1) // _PARTIALS_WINDOW_LIMIT
+        sprefix = _exclusive_prefix(sp, sup, monoids, nsup)
+        p = p.join(
+            sprefix.select(sup, *[F.col(c).alias(c + "_o") for c in monoids]), on=sup
+        )
+        outer = {c: F.col(c + "_o") for c in monoids}
+        w = Window.partitionBy(sup).orderBy(key)
+    w = w.rowsBetween(Window.unboundedPreceding, -1)
+    cols = {}
+    for c, m in monoids.items():
+        inner = F.coalesce(m.window(F.col(c)).over(w), F.lit(m.identity))
+        cols[c] = inner if outer is None else m.combine(outer[c], inner)
+    return p.withColumns(cols)
+
+
+def _block_scan(
+    a: Array,
+    partials: dict[str, Column],
+    monoids: dict[str, _Monoid],
+    finalize: Callable[[WindowSpec], Column],
+    block: int,
+) -> Array:
+    """The two-pass distributed scan over a 1-D axis, PURE JVM (the
+    reference's Blelloch ``CumReduction``,
+    reductions/_cumulative.py:451).  Works for sparse or dense cells:
+    ROWS semantics over the present rows ordered by index.
+
+    Pass 1 reduces each index block ``i0 DIV block`` to the
+    ``partials`` aggregates; ``_exclusive_prefix`` turns the
+    ``monoids`` among them into exclusive block prefixes (the rest are
+    per-block scalars passed through unprefixed); pass 2 is a
+    block-PARTITIONED window ``w`` (fully parallel) in which
+    ``finalize(w)`` folds the prefix into the block-local running
+    value."""
+    # The frame is RANGE-partitioned on the block key and sorted by
+    # (block, position) before the persist: RangePartitioning(__blk)
+    # satisfies the clustering that the pass-1 aggregate and the pass-2
+    # window both require, and the stored order satisfies the window's
+    # (__blk, i0) ordering, so the one shuffle happens at cache build
+    # and neither consumer exchanges or sorts.  Block keys are
+    # equal-sized by construction, so range partitions are balanced.
     d = (
         a.df.withColumn("__blk", F.floor(F.col("i0") / F.lit(block)).cast("long"))
         .repartitionByRange("__blk")
         .sortWithinPartitions("__blk", "i0")
         .persist()
     )
-    v = F.col(VALUE_COL)
-    # per-block FIRST-NULL / FIRST-ZERO POSITIONS instead of boolean
-    # flags (optimization round 14): the old pass 2 tracked "any null
-    # so far" / "any zero so far" with a per-row running max window --
-    # a second (and third) running aggregate over every row.  "Any
-    # null at j <= i within the block" is exactly i >= min(null
-    # position), so a per-block scalar comparison replaces the running
-    # aggregate; the cross-block part stays in the tiny prefix frame.
-    partials = d.groupBy("__blk").agg(
-        F.sum(v).alias("__s"),
-        F.sum(F.when(v != 0, F.log(F.abs(v)))).alias("__lg"),
-        F.sum((v.isNotNull() & (v < 0)).cast("long")).alias("__neg"),
-        F.min(F.when(v == 0, F.col("i0"))).alias("__zp"),
-        F.min(F.when(v.isNull(), F.col("i0"))).alias("__np"),
-    )
+    p = d.groupBy("__blk").agg(*[e.alias(c) for c, e in partials.items()])
     n = a.shape[0]
     nblocks = None if n is None else (n + block - 1) // block
-    if nblocks is not None and nblocks > _PARTIALS_WINDOW_LIMIT:
-        sub = _PARTIALS_WINDOW_LIMIT
-        partials = partials.withColumn(
-            "__sb", F.floor(F.col("__blk") / F.lit(sub)).cast("long")
-        )
-        sp = partials.groupBy("__sb").agg(
-            F.sum("__s").alias("__ss"),
-            F.sum("__lg").alias("__slg"),
-            F.sum("__neg").alias("__sneg"),
-            F.max(F.col("__zp").isNotNull().cast("int")).alias("__szero"),
-            F.max(F.col("__np").isNotNull().cast("int")).alias("__snull"),
-        )
-        wsp = Window.orderBy("__sb").rowsBetween(Window.unboundedPreceding, -1)
-        sprefix = sp.select(
-            "__sb",
-            F.coalesce(F.sum("__ss").over(wsp), F.lit(0.0)).alias("__sps"),
-            F.coalesce(F.sum("__slg").over(wsp), F.lit(0.0)).alias("__splg"),
-            F.coalesce(F.sum("__sneg").over(wsp), F.lit(0).cast("long")).alias("__spneg"),
-            F.coalesce(F.max("__szero").over(wsp), F.lit(0)).alias("__spzero"),
-            F.coalesce(F.max("__snull").over(wsp), F.lit(0)).alias("__spnull"),
-        )
-        wp2 = Window.partitionBy("__sb").orderBy("__blk").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        prefix = partials.join(sprefix, on="__sb").select(
-            "__blk",
-            "__zp",
-            "__np",
-            (F.coalesce(F.sum("__s").over(wp2), F.lit(0.0)) + F.col("__sps")).alias("__ps"),
-            (F.coalesce(F.sum("__lg").over(wp2), F.lit(0.0)) + F.col("__splg")).alias("__plg"),
-            (
-                F.coalesce(F.sum("__neg").over(wp2), F.lit(0).cast("long"))
-                + F.col("__spneg")
-            ).alias("__pneg"),
-            F.greatest(
-                F.coalesce(
-                    F.max(F.col("__zp").isNotNull().cast("int")).over(wp2), F.lit(0)
-                ),
-                F.col("__spzero"),
-            ).alias("__pzero"),
-            F.greatest(
-                F.coalesce(
-                    F.max(F.col("__np").isNotNull().cast("int")).over(wp2), F.lit(0)
-                ),
-                F.col("__spnull"),
-            ).alias("__pnull"),
-        )
-    else:
-        wp = Window.orderBy("__blk").rowsBetween(Window.unboundedPreceding, -1)
-        prefix = partials.select(
-            "__blk",
-            "__zp",
-            "__np",
-            F.coalesce(F.sum("__s").over(wp), F.lit(0.0)).alias("__ps"),
-            F.coalesce(F.sum("__lg").over(wp), F.lit(0.0)).alias("__plg"),
-            F.coalesce(F.sum("__neg").over(wp), F.lit(0).cast("long")).alias("__pneg"),
-            F.coalesce(
-                F.max(F.col("__zp").isNotNull().cast("int")).over(wp), F.lit(0)
-            ).alias("__pzero"),
-            F.coalesce(
-                F.max(F.col("__np").isNotNull().cast("int")).over(wp), F.lit(0)
-            ).alias("__pnull"),
-        )
-    # EXPLICIT broadcast when the prefix frame is provably bounded
-    # (nblocks <= the partials window limit, ~6 MB of rows): a plain
-    # join plans as SortMergeJoin and EnsureRequirements re-exchanges
-    # AND re-sorts the corpus side, throwing away the cached range
-    # partitioning -- the static BroadcastHashJoin preserves the
-    # streamed side's partitioning and ordering, so the pass-2 window
-    # runs with NO Exchange and NO Sort.  Unknown or huge block counts
+    prefix = _exclusive_prefix(p, "__blk", monoids, nblocks)
+    # EXPLICIT broadcast when the prefix frame is provably bounded: a
+    # plain join plans as SortMergeJoin, which re-exchanges and
+    # re-sorts the cached side; a BroadcastHashJoin keeps the streamed
+    # side's partitioning and ordering.  Unknown or huge block counts
     # keep the planner's choice (AQE broadcasts when small).
     if nblocks is not None and nblocks <= _PARTIALS_WINDOW_LIMIT:
-        j = d.join(F.broadcast(prefix), on="__blk")
-    else:
-        j = d.join(prefix, on="__blk")  # P rows: AQE broadcasts
-    w = Window.partitionBy("__blk").orderBy("i0").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    # block-local "seen a null/zero at j <= i": position compare
-    # against the per-block first-occurrence scalar (exact -- see the
-    # partials comment), not a running max window
-    blk_null = F.col("__np").isNotNull() & (F.col("i0") >= F.col("__np"))
-    blk_zero = F.col("__zp").isNotNull() & (F.col("i0") >= F.col("__zp"))
-    if kind in ("cumsum", "nancumsum"):
-        run = F.coalesce(F.sum(v).over(w), F.lit(0.0)) + F.col("__ps")
-        if kind == "cumsum":
-            seen_null = (F.col("__pnull") == 1) | blk_null
-            c = F.when(seen_null, F.lit(None)).otherwise(run)
-        else:
-            c = run
-    else:  # cumprod / nancumprod
-        zeros = F.when((F.col("__pzero") == 1) | blk_zero, F.lit(1)).otherwise(
-            F.lit(0)
-        )
-        negs = (
-            F.coalesce(
-                F.sum((v.isNotNull() & (v < 0)).cast("long")).over(w),
-                F.lit(0).cast("long"),
-            )
-            + F.col("__pneg")
-        )
-        mag = F.exp(
-            F.coalesce(F.sum(F.log(F.when(v != 0, F.abs(v)))).over(w), F.lit(0.0))
-            + F.col("__plg")
-        )
-        sign = F.when(negs % 2 == 1, F.lit(-1.0)).otherwise(F.lit(1.0))
-        c = F.when(zeros == 1, F.lit(0.0)).otherwise(sign * mag)
-        if kind == "cumprod":
-            seen_null = (F.col("__pnull") == 1) | blk_null
-            c = F.when(seen_null, F.lit(None)).otherwise(c)
-    return Array(j.select("i0", c.cast("double").alias(VALUE_COL)), a.shape)
-
-
-def _push_1d(a: Array, block: int = _BLOCK_1D) -> Array:
-    """Two-pass distributed forward-fill (unbounded limit), pure JVM:
-    per-block last-non-null partials over the full block spine, an
-    ignore-nulls prefix window over the tiny partials frame, then a
-    block-partitioned ffill window with the carry as fallback."""
-    d = a.df.withColumn(
-        "__blk", F.floor(F.col("i0") / F.lit(block)).cast("long")
-    ).persist()
-    v = F.col(VALUE_COL)
-    spine = d.select("__blk").distinct()
-    lasts = (
-        d.filter(v.isNotNull())
-        .groupBy("__blk")
-        .agg(F.max_by(v, F.col("i0")).alias("__last"))
-    )
-    n = a.shape[0]
-    nblocks = None if n is None else (n + block - 1) // block
-    if nblocks is not None and nblocks > _PARTIALS_WINDOW_LIMIT:
-        # recursive level, same shape as _scan_1d: carry = last
-        # non-null within the super block, else the super carry
-        sub = _PARTIALS_WINDOW_LIMIT
-        sb = F.floor(F.col("__blk") / F.lit(sub)).cast("long")
-        spine2 = spine.withColumn("__sb", sb)
-        super_lasts = (
-            lasts.withColumn("__sb", sb)
-            .groupBy("__sb")
-            .agg(F.max_by("__last", F.col("__blk")).alias("__slast"))
-        )
-        wsp = Window.orderBy("__sb").rowsBetween(Window.unboundedPreceding, -1)
-        sprefix = (
-            spine2.select("__sb")
-            .distinct()
-            .join(super_lasts, on="__sb", how="left")
-            .select(
-                "__sb",
-                F.last("__slast", ignorenulls=True).over(wsp).alias("__scarry"),
-            )
-        )
-        wp2 = Window.partitionBy("__sb").orderBy("__blk").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        prefix = (
-            spine2.join(lasts, on="__blk", how="left")
-            .join(sprefix, on="__sb")
-            .select(
-                "__blk",
-                F.coalesce(
-                    F.last("__last", ignorenulls=True).over(wp2), F.col("__scarry")
-                ).alias("__carry"),
-            )
-        )
-    else:
-        wp = Window.orderBy("__blk").rowsBetween(Window.unboundedPreceding, -1)
-        prefix = spine.join(lasts, on="__blk", how="left").select(
-            "__blk", F.last("__last", ignorenulls=True).over(wp).alias("__carry")
-        )
+        prefix = F.broadcast(prefix)
     j = d.join(prefix, on="__blk")
     w = Window.partitionBy("__blk").orderBy("i0").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    c = F.coalesce(F.last(v, ignorenulls=True).over(w), F.col("__carry"))
-    return Array(j.select("i0", c.cast("double").alias(VALUE_COL)), a.shape)
+    return Array(
+        j.select("i0", finalize(w).cast("double").alias(VALUE_COL)), a.shape
+    )
+
+
+def _scan_1d(a: Array, kind: str, block: int = _BLOCK_1D) -> Array:
+    """cumsum / nancumsum / cumprod / nancumprod over a 1-D axis as a
+    ``_block_scan``.  Sums carry ``__s``; products carry the
+    log-magnitude ``__lg`` and negative count ``__neg``, plus whether a
+    zero was seen.  NaN propagation matches the plain scans: a NaN cell
+    poisons every later position, across block boundaries too.
+
+    "Seen a NULL (zero) at or before i" splits into the prefixed
+    any-flag of the earlier blocks and, inside the block, ``i >=`` the
+    block's first NULL (zero) position ``__np`` (``__zp``): a per-block
+    scalar compare instead of a running max window over every row."""
+    v = F.col(VALUE_COL)
+    i = F.col("i0")
+    first_null = F.min(F.when(v.isNull(), i))
+    first_zero = F.min(F.when(v == 0, i))
+    if kind in ("cumsum", "nancumsum"):
+        partials = {"__s": F.sum(v)}
+        monoids = {"__s": _SUM}
+    else:
+        partials = {
+            "__lg": F.sum(F.when(v != 0, F.log(F.abs(v)))),
+            "__neg": F.sum((v.isNotNull() & (v < 0)).cast("long")),
+            "__zp": first_zero,
+            "__zero": first_zero.isNotNull(),
+        }
+        monoids = {"__lg": _SUM, "__neg": _SUM, "__zero": _ANY}
+    if not kind.startswith("nan"):
+        partials.update(__np=first_null, __null=first_null.isNotNull())
+        monoids["__null"] = _ANY
+
+    def seen(flag: str, pos: str) -> Column:
+        return F.col(flag) | (F.col(pos).isNotNull() & (i >= F.col(pos)))
+
+    def finalize(w: WindowSpec) -> Column:
+        if kind in ("cumsum", "nancumsum"):
+            c = F.coalesce(F.sum(v).over(w), F.lit(0.0)) + F.col("__s")
+        else:
+            negs = F.coalesce(
+                F.sum((v.isNotNull() & (v < 0)).cast("long")).over(w), F.lit(0)
+            ) + F.col("__neg")
+            mag = F.exp(
+                F.coalesce(F.sum(F.log(F.when(v != 0, F.abs(v)))).over(w), F.lit(0.0))
+                + F.col("__lg")
+            )
+            sign = F.when(negs % 2 == 1, F.lit(-1.0)).otherwise(F.lit(1.0))
+            c = F.when(seen("__zero", "__zp"), F.lit(0.0)).otherwise(sign * mag)
+        if not kind.startswith("nan"):
+            c = F.when(seen("__null", "__np"), F.lit(None)).otherwise(c)
+        return c
+
+    return _block_scan(a, partials, monoids, finalize, block)
+
+
+def _push_1d(a: Array, block: int = _BLOCK_1D) -> Array:
+    """Forward fill (unbounded limit) over a 1-D axis as a
+    ``_block_scan``: the partial is the block's last non-null value
+    (NULL for an all-NULL block), its prefix the carry into the block,
+    and pass 2 falls back to the carry until the block's first value."""
+    v = F.col(VALUE_COL)
+    return _block_scan(
+        a,
+        {"__last": F.max_by(v, F.when(v.isNotNull(), F.col("i0")))},
+        {"__last": _LAST},
+        lambda w: F.coalesce(F.last(v, ignorenulls=True).over(w), F.col("__last")),
+        block,
+    )
 
 
 def _halo_blocks(a: Array, left: int, right: int, block: int = _BLOCK_1D):
@@ -588,7 +546,7 @@ def coarsen(a: Array, factor: int, agg: str = "sum", axis: int = 0) -> Array:
     return Array(d.select(*[f"i{k}" for k in range(a.ndim)], VALUE_COL), tuple(shape))
 
 
-def cumsum_1d_scalable(a: Array, num_partitions: int = 32) -> Array:
+def cumsum_1d_scalable(a: Array) -> Array:
     """Explicit entry to the distributed two-pass prefix sum (the
     automatic route for large 1-D axes); NaN propagation matches
     ``cumsum`` exactly -- a NaN cell poisons every later position,

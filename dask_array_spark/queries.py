@@ -4237,7 +4237,7 @@ def q_text_suite(spark, sf):
     # times and the interpreted projection does not share repeated
     # higher-order subtrees (text.with_tokens, optimization round 13)
     db = T.with_tokens(docs).withColumn(
-        "__tg3", T._ngram_strings(F.col(T.TOKS), 3)
+        "__tg3", F.expr(T._ngram_strings(T.sql_ident(T.TOKS), 3))
     )
     tk = T.TOKS
     base = db.select(

@@ -48,8 +48,8 @@ def timeit(name, df):
     return {"name": name, "min": round(min(ts), 3), "reps": [round(t, 3) for t in ts]}
 
 
-bg = T._ngram_strings(toks, 2)
-tg = T._ngram_strings(toks, 3)
+bg = F.expr(T._ngram_strings(T.sql_ident(T.TOKS), 2))
+tg = F.expr(T._ngram_strings(T.sql_ident(T.TOKS), 3))
 # mirror repetition_stats exactly: the trigram array MATERIALIZES once
 # (a probe passing the raw tg Column would rebuild trigrams per
 # reference and overstate dup3 ~3x)

@@ -72,6 +72,8 @@ def test_push_diff_gradient_both_routes(spark, x, limit):
     assert_eq(W.push(a, limit=limit), _push_model(x, limit))
     if limit is None:
         assert_eq(W.push(a, scalable=True), _push_model(x, None))
+        # multi-block forward fill: carries chain across blocks
+        assert_eq(W._push_1d(a, block=4), _push_model(x, None))
     assert_eq(W.diff(a), np.diff(x))
     assert_eq(W.diff(a, scalable=True), np.diff(x))
     assert_eq(W.gradient(a), np.gradient(x))

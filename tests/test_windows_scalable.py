@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dask_array_spark import from_numpy
+from dask_array_spark.core.array import Array
 from dask_array_spark.operators import windows as W
 
 
@@ -35,18 +36,50 @@ def data():
     return x
 
 
-def test_scan_1d_matches_window_path(spark, data):
-    n = len(data)
+@pytest.fixture(scope="module")
+def scan_inputs(spark, data):
+    """The scan/push comparison inputs at block 50: interior NaNs, an
+    all-NULL interior block, leading NULLs, and a sparse axis with the
+    whole block 150..199 absent."""
+    null_block = data.copy()
+    null_block[100:150] = np.nan
+    leading = data.copy()
+    leading[:12] = np.nan
     a = _vec(spark, data)
-    for kind, fn in [
-        ("cumsum", W.cumsum),
-        ("nancumsum", W.nancumsum),
-        ("cumprod", W.cumprod),
-        ("nancumprod", W.nancumprod),
-    ]:
-        small = _np(fn(a, scalable=False), n)
-        big = _np(W._scan_1d(a, kind, block=50), n)
-        assert np.allclose(small, big, equal_nan=True, atol=1e-9), kind
+    sparse = Array(a.df.filter(~F.col("i0").between(150, 199)), a.shape)
+    return {
+        "nan": a,
+        "null_block": _vec(spark, null_block),
+        "leading_nulls": _vec(spark, leading),
+        "sparse": sparse,
+    }
+
+
+SCANS = [
+    ("cumsum", W.cumsum),
+    ("nancumsum", W.nancumsum),
+    ("cumprod", W.cumprod),
+    ("nancumprod", W.nancumprod),
+]
+
+
+def _check_scans(scan_inputs, n):
+    for name, a in scan_inputs.items():
+        for kind, fn in SCANS:
+            small = _np(fn(a, scalable=False), n)
+            big = _np(W._scan_1d(a, kind, block=50), n)
+            assert np.allclose(small, big, equal_nan=True, atol=1e-9), (name, kind)
+
+
+def _check_push(scan_inputs, n):
+    for name, a in scan_inputs.items():
+        small = _np(W.push(a, scalable=False), n)
+        big = _np(W._push_1d(a, block=50), n)
+        assert np.allclose(small, big, equal_nan=True), name
+
+
+def test_scan_1d_matches_window_path(data, scan_inputs):
+    _check_scans(scan_inputs, len(data))
 
 
 def test_scan_1d_nan_poisons_across_blocks(spark, data):
@@ -56,12 +89,8 @@ def test_scan_1d_nan_poisons_across_blocks(spark, data):
     assert not np.any(np.isnan(out[:40]))
 
 
-def test_push_1d_scalable(spark, data):
-    n = len(data)
-    a = _vec(spark, data)
-    small = _np(W.push(a, scalable=False), n)
-    big = _np(W._push_1d(a, block=50), n)
-    assert np.allclose(small, big, equal_nan=True)
+def test_push_1d_scalable(data, scan_inputs):
+    _check_push(scan_inputs, len(data))
 
 
 def test_diff_gradient_scalable(spark, data):
@@ -121,24 +150,15 @@ def test_scalable_cumsum_values_big(spark):
         assert v == i * (i + 1) / 2.0
 
 
-def test_recursive_partials_correct(spark, data, monkeypatch):
-    """Force the super-block recursion (limit 4 -> 257/50 = 6 blocks
-    recurse) and check every scan kind + push against the plain path."""
-    monkeypatch.setattr(W, "_PARTIALS_WINDOW_LIMIT", 4)
-    n = len(data)
-    a = _vec(spark, data)
-    for kind, fn in [
-        ("cumsum", W.cumsum),
-        ("nancumsum", W.nancumsum),
-        ("cumprod", W.cumprod),
-        ("nancumprod", W.nancumprod),
-    ]:
-        small = _np(fn(a, scalable=False), n)
-        big = _np(W._scan_1d(a, kind, block=50), n)
-        assert np.allclose(small, big, equal_nan=True, atol=1e-9), kind
-    small = _np(W.push(a, scalable=False), n)
-    big = _np(W._push_1d(a, block=50), n)
-    assert np.allclose(small, big, equal_nan=True)
+def test_recursive_partials_correct(data, scan_inputs, monkeypatch):
+    """Force the super-block recursion and check every scan kind + push
+    against the plain path: limit 4 -> 257/50 = 6 blocks recurse one
+    level; limit 2 -> 6 blocks, 3 super-blocks, 2 super-super-blocks,
+    two levels deep."""
+    for limit in (4, 2):
+        monkeypatch.setattr(W, "_PARTIALS_WINDOW_LIMIT", limit)
+        _check_scans(scan_inputs, len(data))
+        _check_push(scan_inputs, len(data))
 
 
 def test_recursive_partials_plan_1e9(spark):
@@ -204,3 +224,67 @@ def test_halo_multihop_window(spark):
         got[r["i0"]] = r["v"]
     want = np.array([x[max(0, i - size + 1) : i + 1].sum() for i in range(100)])
     assert np.allclose(got, want)
+
+
+def _pass2_path_nodes(plan):
+    """Class names of the nodes between the pass-2 window (the topmost
+    Window partitioned by ``__blk``) and the leaves it streams from,
+    skipping the broadcast (partials) side of each join."""
+    def children(node):
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            return [node.plan()]
+        kids = node.children()
+        return [kids.apply(k) for k in range(kids.size())]
+
+    def find(node):
+        if (
+            node.getClass().getSimpleName() == "WindowExec"
+            and "__blk" in node.partitionSpec().toString()
+        ):
+            return node
+        for kid in children(node):
+            hit = find(kid)
+            if hit is not None:
+                return hit
+        return None
+
+    def walk(node, out):
+        name = node.getClass().getSimpleName()
+        if name.startswith("Broadcast") and "Join" not in name:
+            return
+        out.append(name)
+        for kid in children(node):
+            walk(kid, out)
+
+    window = find(plan)
+    assert window is not None, "no block-partitioned pass-2 window"
+    out = []
+    for kid in children(window):
+        walk(kid, out)
+    return out
+
+
+def test_scalable_scan_pass2_has_no_exchange_or_sort(spark):
+    """cumsum and push above the threshold: the executed plan runs the
+    pass-2 window straight off the range-partitioned, sorted cache --
+    no Exchange and no Sort between them.  Exchanges happen only at
+    cache build and on the broadcast partials side.  (The plan before
+    execution may still hold one: until the cache is built, its
+    partitioning is not known to the planner.)"""
+    big_n = W.SCALABLE_1D_THRESHOLD + 5
+    base = spark.range(big_n).selectExpr(
+        "id AS i0",
+        "CASE WHEN id % 7 = 3 THEN NULL ELSE CAST(id % 97 AS DOUBLE) END AS v",
+    )
+    a = Array(base, (big_n,))
+    for name, out in (("cumsum", W.cumsum(a)), ("push", W.push(a))):
+        plan = out.df._jdf.queryExecution().executedPlan()
+        # adaptive execution re-plans once the cache stage exists: run
+        # the query, then read its final plan
+        plan.execute().count()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.executedPlan()
+        nodes = _pass2_path_nodes(plan)
+        assert "InMemoryTableScanExec" in nodes, (name, nodes)
+        bad = [n for n in nodes if "Exchange" in n or "Sort" in n]
+        assert not bad, (name, nodes)
