@@ -24,11 +24,12 @@ from pyspark.sql import functions as F
 from .text import (
     M_COMB,
     P,
-    kgram_combine_sql,
+    kgram_hashes_sql,
     sql_ident,
     token_hashes_sql,
     tokens_col,
     tokens_sql,
+    with_token_hashes,
 )
 
 __all__ = [
@@ -127,21 +128,16 @@ def shingle_hashes(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFra
     Constructed as TWO ``F.expr`` parses of the functions/text.py
     fragments (optimization round 14, guide §7.3/§5): a Column-API
     build of the per-token hash transform plus the shingle fold was
-    ~100 ms of py4j round-trips of driver time."""
+    ~100 ms of py4j round-trips of driver time.  Each document hashes
+    once, after the widening exchange (``with_token_hashes``; the
+    short-document guard is inside ``kgram_hashes_sql``)."""
     from ..sources.ingest import widen_partitions
 
-    d = widen_partitions(df, "doc_id").selectExpr(
-        "doc_id", f"{token_hashes_sql(text_col)} AS __th"
-    ).filter(F.size("__th") >= n)
     # array_distinct already dedups within the row and doc_id makes
     # rows unique across documents, so no post-explode distinct (a
-    # redundant full shuffle of the shingle table) is needed;
-    # 1-based shingle start positions 1 .. len-n+1
-    return d.selectExpr(
-        "doc_id",
-        "explode(array_distinct(transform("
-        f"sequence(1, size(__th) - {n - 1}), i -> {kgram_combine_sql(n)}"
-        "))) AS sh",
+    # redundant full shuffle of the shingle table) is needed
+    return with_token_hashes(widen_partitions(df, "doc_id"), text_col).selectExpr(
+        "doc_id", f"explode(array_distinct({kgram_hashes_sql(n)})) AS sh"
     )
 
 
@@ -390,19 +386,13 @@ def kgram_positions(
 ) -> DataFrame:
     """(doc_id, p, h): hash of the k-token gram starting at 0-based
     token position p -- the positional (non-distinct) variant of
-    shingle_hashes that substring matching needs.  Single-parse
-    construction (optimization round 14), same SQL fragments as
-    shingle_hashes."""
+    shingle_hashes that substring matching needs, from the same SQL
+    fragments: each document hashes once, after the widening
+    exchange."""
     from ..sources.ingest import widen_partitions
 
-    d = widen_partitions(df, "doc_id").selectExpr(
-        "doc_id", f"{token_hashes_sql(text_col)} AS __th"
-    ).filter(F.size("__th") >= k)
-    return d.selectExpr(
-        "doc_id",
-        "posexplode(transform("
-        f"sequence(1, size(__th) - {k - 1}), i -> {kgram_combine_sql(k)}"
-        ")) AS (p, h)",
+    return with_token_hashes(widen_partitions(df, "doc_id"), text_col).selectExpr(
+        "doc_id", f"posexplode({kgram_hashes_sql(k)}) AS (p, h)"
     )
 
 
@@ -652,9 +642,15 @@ def clip_duplicated_spans(
     collect into the per-row clip list.  The clip itself is a per-row
     filter over the token array (O(tokens x merged_spans) inside the
     row).  One join of the corpus against the span-holder table
-    (span-holder-sized, not corpus-sized); no shuffle of document
-    text anywhere else."""
+    (span-holder-sized, not corpus-sized).  The corpus is widened
+    first (``widen_partitions``): a small file scans as one task, which
+    would run the join, the per-token clip and whatever the caller
+    hashes of the clipped text on one core.  So a small corpus has one
+    widening shuffle of its text; a corpus with at least half as many
+    files as cores has none."""
     from pyspark.sql.window import Window
+
+    from ..sources.ingest import widen_partitions
 
     sp = spans.selectExpr(
         "doc_b AS doc_id", "b_start AS s", "b_start + length AS e"
@@ -702,7 +698,8 @@ def clip_duplicated_spans(
     # join so the join exchange carries the raw text, not the wider
     # token array.
     return (
-        df.join(grouped, on="doc_id", how="left")
+        widen_partitions(df, "doc_id")
+        .join(grouped, on="doc_id", how="left")
         .selectExpr(
             "*",
             "coalesce(__mg, CAST(array() AS"

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .dedup import shingle_hashes
 from .text import mixed_hash_col, polyhash_col, salted_id_sql
 
@@ -193,7 +194,8 @@ def mixture_sample_flag(
     composable."""
     spark = df.sparkSession
     wt = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(k, float(v)) for k, v in sorted(weights.items())],
             f"{stratum_col} string, __rate double",
         )

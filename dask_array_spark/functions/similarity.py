@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
 from .dedup import DEFAULT_MAX_BUCKET
 
 __all__ = [
@@ -1246,9 +1247,7 @@ def ann_recall(
             F.count(F.lit(1)).cast("long").alias("__n_exact"),
         )
     )
-    qs = emb.sparkSession.createDataFrame(
-        [(int(q),) for q in query_ids], "qid long"
-    )
+    qs = local_frame(emb.sparkSession, [(int(q),) for q in query_ids], "qid long")
     return (
         qs.join(F.broadcast(per), on="qid", how="left")
         .select(

@@ -113,9 +113,26 @@ def token_hashes_sql(text_col: str, toks: str | None = None) -> str:
 
 
 M_COMB = 1_000_003  # k-gram combine multiplier
+TH = "__th"
 
 
-def kgram_combine_sql(n: int, th: str = "__th") -> str:
+def gram_starts_sql(n: int, arr: str) -> str:
+    """The 1-based start positions ``1 .. size - n + 1`` of the
+    ``n``-element windows of the array-valued SQL expression ``arr``;
+    empty below ``n`` elements or on a NULL array (guarded -- Spark's
+    sequence(1, 0) would count DOWN).
+
+    The guard is a CASE inside the projection, never a filter on the
+    computed array: Catalyst pushes such a filter below the widening
+    exchange and inlines the array into it, so every document would
+    hash twice (once in a one-task scan stage)."""
+    return (
+        f"CASE WHEN size({arr}) >= {n} THEN sequence(1, size({arr}) - {n - 1}) "
+        "ELSE CAST(array() AS ARRAY<INT>) END"
+    )
+
+
+def kgram_combine_sql(n: int, th: str = TH) -> str:
     """The rolling combine of ``n`` consecutive token hashes starting
     at 1-based position ``i`` of the hash array ``th``; products stay
     < 2^63 (hashes < P, multiplier ~1e6)."""
@@ -123,6 +140,15 @@ def kgram_combine_sql(n: int, th: str = "__th") -> str:
     for k in range(1, n):
         h = f"({h} * {M_COMB} + element_at({th}, i + {k})) % {P}"
     return h
+
+
+def kgram_hashes_sql(n: int, th: str = TH) -> str:
+    """The hashes of the ``n``-token grams of the hash array ``th``
+    (a SQL expression, normally the ``with_token_hashes`` column), in
+    position order; empty below ``n`` tokens.  ``th`` is read 2 + n
+    times, so it must be a materialized column: spelled inline, each
+    read would hash the whole document again."""
+    return f"transform({gram_starts_sql(n, th)}, i -> {kgram_combine_sql(n, th)})"
 
 
 def salted_id_sql(salt: str, id_col: str) -> str:
@@ -159,6 +185,18 @@ def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     -- identical to the historical plan.  Builders take the column
     NAME (``toks=TOKS``)."""
     return df.withColumn(TOKS, tokens_col(text_col))
+
+
+def with_token_hashes(
+    df: DataFrame, text_col: str = "text", toks: str | None = None
+) -> DataFrame:
+    """Materialize the per-token hash array ONCE in a lower projection
+    (column ``__th``), the ``with_tokens`` of the hash consumers: the
+    k-gram fragment (``kgram_hashes_sql``) reads the array 2 + n times
+    and the interpreted projection does not share repeated higher-order
+    subtrees.  ``toks``: hash a materialized token array instead of
+    tokenizing ``text_col`` again."""
+    return df.withColumn(TH, F.expr(token_hashes_sql(text_col, toks)))
 
 
 def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -264,9 +302,9 @@ def lang_id_col(text_col: str = "text", toks: str | None = None) -> Column:
     are not shared -- evaluated the 5 marker scans ~3-6x per document).
     Tie-break: strict > keeps the FIRST struct, and the array is built
     in sorted(lang) order, so the alphabetically smallest max-score
-    language wins; a 0 best score is 'und'.  The -2 init sits below
-    every score: size() of a NULL token array is -1 (legacy
-    sizeOfNull), so NULL text gets the first language, not 'und'."""
+    language wins.  The fold starts at (0, 'und'), so a best score of
+    0 is 'und' -- and so is NULL text, whose scores are size(NULL) =
+    -1 under legacy sizeOfNull."""
     t = toks_sql(text_col, toks)
     entries = ", ".join(
         "struct(size(filter({t}, t -> t IN ({m}))) AS s, '{lang}' AS l)".format(
@@ -275,9 +313,8 @@ def lang_id_col(text_col: str = "text", toks: str | None = None) -> Column:
         for lang, markers in sorted(LANG_MARKERS.items())
     )
     return F.expr(
-        f"aggregate(array({entries}), struct(-2 AS s, 'und' AS l), "
-        "(acc, x) -> CASE WHEN x.s > acc.s THEN x ELSE acc END, "
-        "acc -> CASE WHEN acc.s = 0 THEN 'und' ELSE acc.l END)"
+        f"aggregate(array({entries}), struct(0 AS s, 'und' AS l), "
+        "(acc, x) -> CASE WHEN x.s > acc.s THEN x ELSE acc END, acc -> acc.l)"
     )
 
 
@@ -297,13 +334,10 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _ngram_strings(t: str, n: int) -> str:
     """Word n-grams of the token-array SQL expression ``t`` as
-    space-joined strings; empty array below n tokens (guarded --
-    Spark's sequence(1, 0) would count DOWN)."""
+    space-joined strings; empty array below n tokens
+    (``gram_starts_sql``)."""
     grams = ", ".join(f"element_at({t}, i + {k})" for k in range(n))
-    return (
-        f"transform(CASE WHEN size({t}) >= {n} THEN sequence(1, size({t}) - {n - 1}) "
-        f"ELSE CAST(array() AS ARRAY<INT>) END, i -> concat_ws(' ', {grams}))"
-    )
+    return f"transform({gram_starts_sql(n, t)}, i -> concat_ws(' ', {grams}))"
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -433,16 +467,14 @@ def bigram_lm_scores(
     self_ref = ref is df
 
     def th_col(d):
-        return d.selectExpr(
-            "doc_id", f"{token_hashes_sql(text_col)} AS __th"
-        )
+        return d.selectExpr("doc_id", f"{token_hashes_sql(text_col)} AS {TH}")
 
     def bigrams_of(th):
         # (previous token hash, bigram hash) per adjacent token pair
-        return th.filter(F.size("__th") >= 2).selectExpr(
+        return th.selectExpr(
             "doc_id",
-            "inline(transform(sequence(1, size(__th) - 1), i -> struct("
-            f"element_at(__th, i) AS ph, {kgram_combine_sql(2)} AS bh)))",
+            f"inline(transform({gram_starts_sql(2, TH)}, i -> struct("
+            f"element_at({TH}, i) AS ph, {kgram_combine_sql(2)} AS bh)))",
         )
 
     def model_tables(th_ref):

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.array import VALUE_COL, Array
+from ..session import local_frame
 
 __all__ = [
     "matmul",
@@ -428,7 +429,7 @@ def tsqr(a: Array, block_rows: int = 10000, fanin: int = 16):
     rinv = np.linalg.inv(r_final)
     spark = a.spark
     rinv_rows = [(int(i), int(j), float(rinv[i, j])) for i in range(k) for j in range(k)]
-    rinv_df = spark.createDataFrame(rinv_rows, "ri long, rj long, rv double")
+    rinv_df = local_frame(spark, rinv_rows, "ri long, rj long, rv double")
     # Q = A @ R^-1 : join on a.i1 == rinv.ri, group by (i0, rj)
     q = (
         a.df.join(F.broadcast(rinv_df), on=F.col("i1") == F.col("ri"), how="inner")
@@ -476,7 +477,7 @@ def sfqr(a: Array, max_rows: int = 4096):
     qt_rows = [
         (int(i), int(j), float(q_np[i, j])) for i in range(m) for j in range(m)
     ]
-    qt_df = spark.createDataFrame(qt_rows, "ri long, rj long, rv double")
+    qt_df = local_frame(spark, qt_rows, "ri long, rj long, rv double")
     # R = Q^T A : join Q rows (ri) against A rows (i0), group by (rj, i1)
     r = (
         a.df.join(F.broadcast(qt_df), on=F.col("i0") == F.col("ri"), how="inner")
@@ -527,7 +528,7 @@ def svd_tall(a: Array, block_rows: int = 10000):
         for i in range(u_r.shape[0])
         for j in range(u_r.shape[1])
     ]
-    ur_df = spark.createDataFrame(ur_rows, "ri long, rj long, rv double")
+    ur_df = local_frame(spark, ur_rows, "ri long, rj long, rv double")
     u = (
         q.df.join(F.broadcast(ur_df), on=F.col("i1") == F.col("ri"), how="inner")
         .groupBy(F.col("i0"), F.col("rj").alias("i1"))
@@ -603,7 +604,7 @@ def svd_compressed(
     c_rows = [
         (int(i), int(j), float(c_mat[i, j])) for i in range(l) for j in range(kk)
     ]
-    c_df = spark.createDataFrame(c_rows, "ri long, rj long, rv double")
+    c_df = local_frame(spark, c_rows, "ri long, rj long, rv double")
     u = (
         y.df.join(F.broadcast(c_df), on=F.col("i1") == F.col("ri"), how="inner")
         .groupBy(F.col("i0"), F.col("rj").alias("i1"))

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.array import VALUE_COL, Array
+from ..session import local_frame
 
 __all__ = ["getitem", "take", "vindex", "boolean_mask", "set_index_value", "compress", "extract", "isin", "searchsorted", "push_index", "nonzero", "argwhere"]
 
@@ -127,8 +128,8 @@ def take(a: Array, indices, axis: int = 0) -> Array:
     else:
         n = a.shape[axis]
         vals = [int(i) + (n if int(i) < 0 else 0) for i in indices]
-        idx_df = spark.createDataFrame(
-            [(p, i) for p, i in enumerate(vals)], "__pos long, __idx long"
+        idx_df = local_frame(
+            spark, list(enumerate(vals)), "__pos long, __idx long"
         )
         k = len(vals)
     d = a.df.join(F.broadcast(idx_df), on=F.col(f"i{axis}") == F.col("__idx"), how="inner")

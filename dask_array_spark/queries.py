@@ -2188,7 +2188,7 @@ def q_text_quality(spark, sf):
              len(list_filter({_TOKS}, t -> t IN ('de','shi','he','zai'))) AS s_zh
       FROM documents)
     SELECT doc_id,
-           CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
+           CASE WHEN coalesce(greatest(s_de, s_en, s_es, s_fr, s_zh), 0) = 0 THEN 'und'
                 WHEN s_de = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'de'
                 WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
                 WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
@@ -4069,7 +4069,7 @@ def q_events_windows_suite(spark, sf):
                len(list_filter({_TOKS}, t -> t IN ('de','shi','he','zai'))) AS s_zh
         FROM documents)
       SELECT doc_id,
-             CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
+             CASE WHEN coalesce(greatest(s_de, s_en, s_es, s_fr, s_zh), 0) = 0 THEN 'und'
                   WHEN s_de = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'de'
                   WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
                   WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'

@@ -21,9 +21,9 @@ vectorized body measures ~2x faster on a 1k-doc / 225k-gram batch
 Python interpreter dispatch per gram.  This is the streaming
 analogue of the batch tier's
 broadcast hash join (functions/governance.py::contamination_counts).
-The document side computes its n-gram hashes IN-ROW (token polyhashes
--> chained combine, one Catalyst transform) so the stream is never
-exploded and never shuffled.
+The document side computes its n-gram hashes IN-ROW (token polyhashes,
+materialized once per document, -> chained combine, one Catalyst
+transform) so the stream is never exploded and never shuffled.
 """
 
 from __future__ import annotations
@@ -35,10 +35,12 @@ from pyspark.sql import functions as F
 
 from ..functions.governance import split_col
 from ..functions.text import (
+    TH,
     TOKS,
-    kgram_combine_sql,
+    kgram_hashes_sql,
     quality_col,
-    token_hashes_sql,
+    sql_ident,
+    with_token_hashes,
     with_tokens,
 )
 from .dedup import _read_docs_stream
@@ -46,23 +48,15 @@ from .dedup import _read_docs_stream
 __all__ = ["ngram_hash_array", "stream_decontaminate", "stream_clean_corpus"]
 
 
-def ngram_hash_array(text_col: str = "text", n: int = 8) -> Column:
+def ngram_hash_array(th: str = TH, n: int = 8) -> Column:
     """Distinct hashed word n-grams as an IN-ROW array (the
     explode-free form of functions.dedup.shingle_hashes -- identical
     hash values, no row fan-out, so it composes with streaming).  Below
     ``n`` tokens the gram array is empty.
 
-    The token hash array is spelled inline at each use, not bound to a
-    lambda variable: a Python UDF over an argument whose inner lambda
-    reads an outer lambda variable twice is not extracted to an
-    ArrowEvalPython node on Spark 4.1 and fails with "Cannot evaluate
-    expression" (``stream_decontaminate`` feeds this array to one)."""
-    th = token_hashes_sql(text_col)
-    return F.expr(
-        f"array_distinct(transform(CASE WHEN size({th}) >= {n} "
-        f"THEN sequence(1, size({th}) - {n - 1}) "
-        f"ELSE CAST(array() AS ARRAY<INT>) END, i -> {kgram_combine_sql(n, th)}))"
-    )
+    ``th``: the name of the materialized per-token hash array
+    (``with_token_hashes``), which each gram reads n times."""
+    return F.expr(f"array_distinct({kgram_hashes_sql(n, sql_ident(th))})")
 
 
 def _bench_hash_set(spark: SparkSession, bench_path: str, n: int):
@@ -121,9 +115,9 @@ def stream_decontaminate(
     bc = _bench_hash_set(spark, bench_path, n)
     n_hits = _n_hits_udf(bc)
 
-    stream = _read_docs_stream(spark, docs_path)
+    stream = with_token_hashes(_read_docs_stream(spark, docs_path))
     out = stream.withColumn(
-        "n_contam", n_hits(ngram_hash_array("text", n))
+        "n_contam", n_hits(ngram_hash_array(TH, n))
     ).withColumn("contaminated", F.col("n_contam") > 0)
     if drop:
         out = out.filter(~F.col("contaminated"))
@@ -148,10 +142,10 @@ def stream_clean_corpus(
     stream = _read_docs_stream(spark, docs_path)
     # every gate is a Column expression, so the whole pipeline is ONE
     # join-free projection over the stream -- no state, no watermark
-    enriched = with_tokens(stream).select(
+    enriched = with_token_hashes(with_tokens(stream), toks=TOKS).select(
         "doc_id",
         quality_col("text", toks=TOKS).alias("quality"),
-        n_hits(ngram_hash_array("text", n)).alias("n_contam"),
+        n_hits(ngram_hash_array(TH, n)).alias("n_contam"),
         split_col("doc_id").alias("split"),
     )
     return enriched.filter(

@@ -8,6 +8,7 @@ returned Column catches one coming back."""
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 
 from dask_array_spark.functions import dedup as D
 from dask_array_spark.functions import governance as G
@@ -20,7 +21,7 @@ BUILDERS = {
     "simhash_col": lambda: D.simhash_col("text", 32),
     "lang_id_col": lambda: T.lang_id_col("text"),
     "tokens_col": lambda: T.tokens_col("text"),
-    "ngram_hash_array": lambda: ngram_hash_array("text", 8),
+    "ngram_hash_array": lambda: ngram_hash_array(n=8),
     "split_col": lambda: G.split_col("doc_id"),
     "quality_col": lambda: T.quality_col("text"),
     "token_stats_cols": lambda: T.token_stats_cols("text"),
@@ -56,3 +57,20 @@ def test_builder_is_one_parse(spark, py4j_calls, name):
     built = BUILDERS[name]()
     n_cols = len(built) if isinstance(built, list) else 1
     assert py4j_calls[0] <= MAX_CALLS * n_cols, (name, py4j_calls[0], n_cols)
+
+
+def test_column_api_build_skips_call_site_capture(spark, py4j_calls):
+    """A Column-API build costs about two py4j calls per operation: 20
+    for the 10-operation build below.  With PySpark's DataFrame
+    debugging on, every functions/Column call also records its Python
+    call site in the JVM (session lookup, conf read, origin set and
+    clear), and the same build took 90; ``get_spark`` turns it off."""
+
+    def build():
+        a, b = F.col("a"), F.col("b")
+        return F.when(a > 2, (a + F.lit(1)) * b).otherwise(F.lit(0)).alias("c")
+
+    build()
+    py4j_calls[0] = 0
+    build()
+    assert py4j_calls[0] <= 30, py4j_calls[0]

@@ -7,7 +7,7 @@ alphabetically, markers shared between languages, and the 0-score
 from dask_array_spark.functions.text import TOKS, lang_id, lang_id_col, with_tokens
 
 HOSTILE = [
-    (1, None, "de"),   # size(NULL) = -1 beats the -2 init: first language
+    (1, None, "und"),  # size(NULL) = -1 scores below the 0 init
     (2, "", "und"),
     (3, "   ", "und"),
     (4, "the a of and", "en"),

@@ -519,3 +519,60 @@ def test_split_col_hashes_once(spark, sf_dir):
     df = docs.select("doc_id", G.split_col().alias("split"))
     plan = _plan(df)
     assert plan.count("ascii(") == 1, plan[:800]
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        pytest.param(lambda D, d: D.kgram_positions(d, k=8), id="kgram_positions_k8"),
+        pytest.param(lambda D, d: D.shingle_hashes(d, n=3), id="shingle_hashes_n3"),
+    ],
+)
+def test_kgram_builders_hash_each_document_once(spark, sf_dir, build):
+    """The per-token polyhash array is evaluated once per document: a
+    filter on the computed array (the old short-document guard) was
+    pushed below the widening exchange with the array inlined into it,
+    so every document hashed twice, once in a one-task scan stage."""
+    from dask_array_spark.functions import dedup as D
+    from dask_array_spark.sources import read_table
+
+    # a plan no other test caches: on a cache hit the optimized plan
+    # renders the cached relation's initial and final plans
+    docs = read_table(spark, sf_dir, "documents").where("doc_id >= 0")
+    plan = _optimized(build(D, docs))
+    assert plan.count("ascii(") == 1, plan[:800]
+
+
+def test_stream_decontaminate_hashes_each_document_once(spark, sf_dir, tmp_path):
+    """The gram array fed to the contamination UDF reads one
+    materialized hash array; spelled inline it hashed the document
+    2 + n times per gram (10 polyhash folds at n = 8)."""
+    from dask_array_spark.streaming import governance as SG
+
+    docs_path = f"{sf_dir}/documents.parquet"
+    bench_path = str(tmp_path / "bench.parquet")
+    docs = spark.read.parquet(docs_path)
+    docs.filter(F.col("doc_id") % 97 == 0).write.parquet(bench_path)
+    sdf = SG.stream_decontaminate(spark, docs_path, bench_path, n=8)
+    # a streaming frame has no optimizedPlan(); explain renders it
+    text = spark._jvm.PythonSQLUtils.explainString(
+        sdf._jdf.queryExecution(), "extended"
+    )
+    opt = text[text.index("== Optimized Logical Plan ==") : text.index("== Physical Plan ==")]
+    assert opt.count("ascii(") == 1, opt[:800]
+    assert "ArrowEvalPython" in opt
+
+
+def test_take_indexer_is_a_local_table(spark):
+    """A driver-held indexer plans as a LocalTableScan; a list-of-rows
+    createDataFrame plans a Scan ExistingRDD over a PythonRDD, which
+    starts a Python worker on every execution."""
+    import numpy as np
+
+    from dask_array_spark import from_numpy
+    from dask_array_spark.operators.slicing import take
+
+    t = take(from_numpy(spark, np.arange(12.0).reshape(4, 3)), [2, 0])
+    plan = _plan(t.df)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    np.testing.assert_array_equal(t.compute(), np.arange(12.0).reshape(4, 3)[[2, 0]])
