@@ -679,13 +679,16 @@ def ivf_assign(
     codebook is the first ``n_cells`` vectors (a deterministic
     stand-in the oracles replay); pass ``cents`` -- a trained (cell,
     cemb) codebook, e.g. from ``kmeans_fit`` -- to cluster on it
-    instead.  Returns (vec_id, cell).
+    instead.  Returns (vec_id, cell).  Cell ids must lie in
+    [0, 2^20): the argmax packs the cell into the low 20 bits of a
+    BIGINT key (``_argmax_cos_packed_sql``) and the query raises
+    outside that range.
 
     Scale shape: the centroid side is tiny and broadcast (whole
     arrays); the corpus is never exploded -- each dot product folds
     in-row with zip_with + aggregate, and the nearest-cell argmax is a
-    partial-aggregated max_by.  The corpus is never shuffled by pair
-    and never broadcast."""
+    partial-aggregated max over the packed key.  The corpus is never
+    shuffled by pair and never broadcast."""
     corpus = emb.select("vec_id", "embedding", _norm_col().alias("nrm"))
     cents = _codebook(emb, n_cells, cents)
     dot = F.aggregate(
@@ -1369,53 +1372,19 @@ def semantic_dedup(
     )
 
 
-# -- guarded hash-aggregatable argmin (optimization round 14, verdict
-# ask 6) -------------------------------------------------------------------
-# min_by(struct(cell, dist), struct(dist, cell)) is not hash-
-# aggregatable (struct min falls to SortAggregate: per-group sort
-# machinery on every argmin shuffle).  For the engine's distance
-# contract -- dist = round(x, 6) + 0.0, i.e. non-negative or NULL or
-# NaN, never -0.0 -- the ordering packs EXACTLY into one BIGINT:
-#   cell outside [0, 2^20)           -> raise_error (loud, not wrong)
-#   dist IS NULL  -> -2^20 + cell       (NULL sorts FIRST, ties by cell
-#                                        -- probed min_by semantics)
-#   isnan(dist)   ->  2^62 + cell       (NaN sorts LAST, above every
-#                                        finite packed value)
-#   dl >= 2^42    -> raise_error        (would overflow into the NaN
-#                                        band; dl = round(dist * 1e6))
-#   else          ->  dl * 2^20 + cell  (dist asc, then cell asc)
-# min(packed) is then an ordinary long min -> HashAggregate, partial-
-# aggregated.  The round-13 unguarded form was REJECTED for silently
-# corrupting hostile distances; these guards turn that class into a
-# loud error instead (hostile-distance parity + guard tests pinned).
-# Decode is exact: dist was already 6-decimal-rounded, so
-# (dl DIV 2^20) / 1e6 reproduces the same nearest double bit-for-bit.
-_ARGMIN_CELL_CAP = 1 << 20
-_ARGMIN_DL_CAP = 1 << 42
-_ARGMIN_NAN_BASE = 1 << 62
-
-
-def _argmin_packed_sql(cell: str, dist: str) -> str:
-    """SQL fragment: the order-preserving BIGINT packing above."""
-    return (
-        f"CASE WHEN {cell} < 0 OR {cell} >= {_ARGMIN_CELL_CAP} THEN "
-        f"CAST(raise_error('argmin cell id out of [0, 2^20)') AS BIGINT) "
-        f"WHEN {dist} IS NULL THEN CAST({-(1 << 20)} AS BIGINT) + {cell} "
-        f"WHEN isnan({dist}) THEN CAST({_ARGMIN_NAN_BASE} AS BIGINT) + {cell} "
-        f"WHEN CAST(round({dist} * 1000000.0) AS BIGINT) >= {_ARGMIN_DL_CAP} "
-        f"THEN CAST(raise_error("
-        f"'argmin dist too large to pack (>= 2^42/1e6)') AS BIGINT) "
-        f"ELSE CAST(round({dist} * 1000000.0) AS BIGINT) * {_ARGMIN_CELL_CAP}"
-        f" + {cell} END"
-    )
-
-
-def _argmin_cell_sql(p: str) -> str:
-    return f"CAST(pmod({p}, {_ARGMIN_CELL_CAP}) AS BIGINT)"
+# -- guarded hash-aggregatable cosine argmax (ivf_assign) ------------------
+# max_by(cell, struct(c, -cell)) is not hash-aggregatable (struct max
+# falls to SortAggregate: per-group sort machinery on every argmax
+# shuffle), so ivf_assign packs its ordering into one BIGINT whose
+# ordinary long max hash-aggregates.  The packing caps the cell id at
+# [0, 2^20) and raises outside it.  The squared-L2 argmins need no
+# packing: they pick in-row with ``least`` over structs
+# (``_nearest_sql``), which has no aggregate to plan.
+_ARGMAX_CELL_CAP = 1 << 20
 
 
 def _argmax_cos_packed_sql(cell: str, c: str) -> str:
-    """The MAX-side twin for the cosine argmax (ivf_assign):
+    """The packed cosine argmax key (ivf_assign):
     max_by(cell, struct(c, -cell)) with c = round(cos, 6) -- finite in
     [-1e6, 1e6] after scaling, or NULL / NaN / +-Inf for zero-norm
     rows (double division by zero is Inf/NaN in the non-ANSI session).
@@ -1425,10 +1394,10 @@ def _argmax_cos_packed_sql(cell: str, c: str) -> str:
     +-2^61 bands for +-Inf, +-2^62 for NaN/NULL, c6 * 2^20 for finite
     (|c6 * 2^20| <= ~2^40, strictly inside the bands).  Out-of-range
     cells or |c6| > 2^40 raise loudly."""
-    inv = f"({_ARGMIN_CELL_CAP - 1} - {cell})"
+    inv = f"({_ARGMAX_CELL_CAP - 1} - {cell})"
     c6 = f"CAST(round({c} * 1000000.0) AS BIGINT)"
     return (
-        f"CASE WHEN {cell} < 0 OR {cell} >= {_ARGMIN_CELL_CAP} THEN "
+        f"CASE WHEN {cell} < 0 OR {cell} >= {_ARGMAX_CELL_CAP} THEN "
         f"CAST(raise_error('argmax cell id out of [0, 2^20)') AS BIGINT) "
         f"WHEN {c} IS NULL THEN CAST({-(1 << 62)} AS BIGINT) + {inv} "
         f"WHEN isnan({c}) THEN CAST({1 << 62} AS BIGINT) + {inv} "
@@ -1436,22 +1405,13 @@ def _argmax_cos_packed_sql(cell: str, c: str) -> str:
         f"WHEN {c} = double('-Infinity') THEN CAST({-(1 << 61)} AS BIGINT) + {inv} "
         f"WHEN abs({c6}) > {1 << 40} THEN "
         f"CAST(raise_error('argmax cosine too large to pack') AS BIGINT) "
-        f"ELSE {c6} * {_ARGMIN_CELL_CAP} + {inv} END"
+        f"ELSE {c6} * {_ARGMAX_CELL_CAP} + {inv} END"
     )
 
 
 def _argmax_cell_sql(p: str) -> str:
     return (
-        f"CAST({_ARGMIN_CELL_CAP - 1} - pmod({p}, {_ARGMIN_CELL_CAP}) AS BIGINT)"
-    )
-
-
-def _argmin_dist_sql(p: str) -> str:
-    return (
-        f"CASE WHEN {p} < 0 THEN CAST(NULL AS DOUBLE) "
-        f"WHEN {p} >= CAST({_ARGMIN_NAN_BASE} AS BIGINT) THEN "
-        f"CAST('NaN' AS DOUBLE) "
-        f"ELSE CAST({p} DIV {_ARGMIN_CELL_CAP} AS DOUBLE) / 1000000.0 END"
+        f"CAST({_ARGMAX_CELL_CAP - 1} - pmod({p}, {_ARGMAX_CELL_CAP}) AS BIGINT)"
     )
 
 
@@ -1483,37 +1443,95 @@ def _cemb_sql(cemb) -> str:
     return f"CAST(array({', '.join(map(_double_sql, cemb))}) AS ARRAY<DOUBLE>)"
 
 
-def _codebook_frame(spark, cells: list) -> DataFrame:
-    """The driver-held codebook ``cells`` = [(cell, cemb)] as a local
-    (cell, cemb) relation: reading it back runs no Spark job."""
-    if not cells:
-        return spark.sql(
-            "SELECT CAST(NULL AS BIGINT) AS cell, "
-            "CAST(NULL AS ARRAY<DOUBLE>) AS cemb WHERE false"
-        )
-    rows = ", ".join(f"(CAST({c} AS BIGINT), {_cemb_sql(v)})" for c, v in cells)
-    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(cell, cemb)")
-
-
-def _nearest_cell(src: DataFrame, cells: list, keep: str) -> DataFrame:
-    """(keep, __p): each row's packed nearest-cell key against the
-    driver-held codebook ``cells`` (non-empty), computed in-row.  The
-    lower projection folds each cell's ``round(sqdist, 6) + 0.0``
-    exactly once, flat (one zip_with + aggregate per cell against a
-    literal centroid); the upper ``least`` over the packed keys is the
-    argmin with min()'s ties, NULL/NaN order and caps.  The optimizer
-    keeps the two projections apart because every distance is read
-    more than once by its packed key."""
-    folds = src.selectExpr(
-        keep,
-        *[
-            f"round({_sqdist_sql('embedding', _cemb_sql(v))}, 6) + 0.0D AS __d{i}"
-            for i, (_, v) in enumerate(cells)
-        ],
+def _codebook_frame(spark, rows: list, keys: tuple = ("cell",)) -> DataFrame:
+    """The driver-held codebook ``rows`` = [(*keys, cemb)] as a local
+    (*keys, cemb) relation: reading it back runs no Spark job."""
+    if not rows:
+        nulls = "".join(f"CAST(NULL AS BIGINT) AS {k}, " for k in keys)
+        return spark.sql(f"SELECT {nulls}CAST(NULL AS ARRAY<DOUBLE>) AS cemb WHERE false")
+    vals = ", ".join(
+        "(" + "".join(f"CAST({int(x)} AS BIGINT), " for x in r[:-1]) + f"{_cemb_sql(r[-1])})"
+        for r in rows
     )
-    keys = [_argmin_packed_sql(str(int(c)), f"__d{i}") for i, (c, _) in enumerate(cells)]
-    best = keys[0] if len(keys) == 1 else f"least({', '.join(keys)})"
-    return folds.selectExpr(keep, f"{best} AS __p")
+    return spark.sql(f"SELECT * FROM VALUES {vals} AS t({', '.join(keys)}, cemb)")
+
+
+def _book(cents: DataFrame, code: str = "code", s: str | None = "s") -> dict:
+    """Collect a codebook -- PQ's (s, code, cemb), or k-means' (cell,
+    cemb) with ``s=None`` as the one subspace 0 -- into the
+    driver-held {s: [(code, cemb)]} form every nearest-code pick and
+    Lloyd round reads."""
+    book: dict = {}
+    for r in cents.collect():  # bounded-model-collect
+        book.setdefault(r[s] if s else 0, []).append((r[code], r["cemb"]))
+    return book
+
+
+def _pq_dsub(dim: int, m: int) -> int:
+    """The PQ subvector length; ``dim`` must divide into ``m`` parts."""
+    if m <= 0 or dim % m:
+        raise ValueError(f"dim {dim} must divide into m={m} subspaces")
+    return dim // m
+
+
+def _subvec_sql(s, dsub: int | None) -> str:
+    """SQL fragment: subspace ``s`` (an int or a SQL int expression)
+    of the ``embedding`` column -- the ``dsub``-long slice starting at
+    s x dsub, or the whole vector when ``dsub`` is None (k-means: one
+    subspace)."""
+    if dsub is None:
+        return "embedding"
+    return f"slice(embedding, {s} * {dsub} + 1, {dsub})"
+
+
+def _nearest_sql(vec: str, cands: list) -> str:
+    """SQL fragment: the nearest of the driver-held candidates
+    ``cands`` = [(id, cemb)] (non-empty) to the array expression
+    ``vec`` by squared L2, as a struct<d: double, c: bigint>.  The one
+    definition of the k-means/PQ argmin, batch and stream.
+
+    Each candidate's ``round(sqdist, 6) + 0.0`` folds once, flat (one
+    zip_with + aggregate against a literal centroid), and ``least``
+    over the (d, c) structs picks in-row.  Spark orders structs field
+    by field, NULL first and NaN last, so the pick is the smallest
+    distance with ties to the smaller id, a NULL distance (NULL or
+    ragged vector) before every other and NaN after every other --
+    with no cap on the distance or the id and no aggregate to plan.
+    Distances round to 6 decimals BEFORE the pick so a DuckDB oracle
+    (whose sum order differs) replays assignment boundaries
+    bit-for-bit.  Flat is the point: a round-7 rewrite that nested the
+    fold inside an ``aggregate`` over a codebook ARRAY fell out of
+    codegen and measured ~7x slower than the then crossJoin form."""
+    picks = [
+        f"named_struct('d', round({_sqdist_sql(vec, _cemb_sql(v))}, 6) + 0.0D, "
+        f"'c', CAST({int(c)} AS BIGINT))"
+        for c, v in cands
+    ]
+    return picks[0] if len(picks) == 1 else f"least({', '.join(picks)})"
+
+
+def _nearest_codes(
+    src: DataFrame, keep: str, book: dict, dsub: int | None = None
+) -> DataFrame:
+    """(keep, s, code, dist): the nearest code of every subspace of
+    the driver-held codebook ``book`` = {s: [(code, cemb)]}, one row
+    per (row, subspace) -- one ``_nearest_sql`` pick per subspace of
+    ``_subvec_sql(s, dsub)``, inlined in-row into one row per
+    subspace.  No join, no aggregate, no exchange; the plan holds
+    O(codebook) literals."""
+    if not book:
+        return src.selectExpr(
+            keep, "CAST(NULL AS BIGINT) AS s", "CAST(NULL AS BIGINT) AS code",
+            "CAST(NULL AS DOUBLE) AS dist",
+        ).where("false")
+    picks = ", ".join(
+        f"named_struct('s', CAST({s} AS BIGINT), "
+        f"'b', {_nearest_sql(_subvec_sql(s, dsub), cands)})"
+        for s, cands in sorted(book.items())
+    )
+    return src.selectExpr(keep, f"inline(array({picks}))").selectExpr(
+        keep, "s", "b.c AS code", "b.d AS dist"
+    )
 
 
 def kmeans_assign(
@@ -1523,7 +1541,8 @@ def kmeans_assign(
     distance: (vec_id, cell, dist), one row per input row.  ``cents``
     is (cell, cemb) with cemb an array<double>.  Ties break to the
     smaller cell id; a NULL distance (NULL or ragged embedding) sorts
-    first and a NaN one last.
+    first and a NaN one last.  Any BIGINT cell id and any distance
+    work: nothing is packed or capped.
 
     The codebook is model-sized, so it is collected once: that one
     bounded collect both picks the leg and supplies the model (free
@@ -1539,63 +1558,84 @@ def kmeans_assign(
     NULL-vs-NaN bug class -- and nothing at the current scale needs
     it.
 
-    Scale shape (``"sql"``): one narrow projection over the widened
-    corpus (``widen_partitions``: a small file scans as one task
-    otherwise).  The codebook enters as literal centroids, one flat
-    in-row distance fold per cell, and the argmin is a per-row
-    ``least`` over the packed keys -- no crossJoin fan-out, no
-    broadcast, no vec_id shuffle.  Distances round to 6 decimals
-    BEFORE the argmin so a DuckDB oracle (whose sum order differs)
-    replays assignment boundaries bit-for-bit.  Flat is the point: a
-    round-7 rewrite that nested the distance fold inside an
-    ``aggregate`` over a codebook ARRAY fell out of codegen and
-    measured ~7x slower than the then crossJoin form.
+    Scale shape (``"sql"``): ``_nearest_codes`` with one subspace --
+    one narrow projection over the widened corpus
+    (``widen_partitions``: a small file scans as one task otherwise)
+    that folds every distance in-row against the literal codebook and
+    picks the cell per row: no crossJoin fan-out, no broadcast, no
+    vec_id shuffle.
 
     Measured on the sf0.1 embeddings (2,000 x 64, k=4, 4-core
     container, warm median of 5): 0.59 s with the former crossJoin +
-    vec_id-shuffle argmin, 0.38 s in this form."""
+    vec_id-shuffle argmin, 0.38 s in the in-row form."""
     if impl not in ("auto", "arrow", "sql"):
         raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
-    cells = [(r["cell"], r["cemb"]) for r in cents.collect()]  # bounded-model-collect
+    book = _book(cents, "cell", None)
     if impl == "auto":
-        impl = _resolve_train_impl("auto", len(cells))
+        impl = _resolve_train_impl("auto", len(book.get(0, [])))
     if impl == "arrow":
-        as_pq = _codebook_frame(emb.sparkSession, cells).select(
-            F.lit(0).cast("long").alias("s"), F.col("cell").alias("code"), "cemb"
-        )
-        return _pq_assign_arrow(emb, as_pq, dim=None, m=1).select(
-            "vec_id", F.col("code").alias("cell"), "dist"
-        )
-    if not cells:
-        return emb.selectExpr(
-            "vec_id", "CAST(NULL AS BIGINT) AS cell", "CAST(NULL AS DOUBLE) AS dist"
-        ).limit(0)
-    from ..sources.ingest import widen_partitions
+        asg = _pq_assign_arrow(emb, book, dim=None, m=1)
+    else:
+        from ..sources.ingest import widen_partitions
 
-    return _nearest_cell(widen_partitions(emb, "vec_id"), cells, "vec_id").selectExpr(
-        "vec_id",
-        f"{_argmin_cell_sql('__p')} AS cell",
-        f"{_argmin_dist_sql('__p')} AS dist",
-    )
+        asg = _nearest_codes(widen_partitions(emb, "vec_id"), "vec_id", book)
+    return asg.select("vec_id", F.col("code").alias("cell"), "dist")
 
 
-def _lloyd_round(src: DataFrame, cells: list) -> DataFrame:
-    """One relational Lloyd round as one query: (cell, pos, c), the
-    6-decimal mean of coordinate ``pos`` over the rows whose nearest
-    cell is ``cell``.  Assignment is ``_nearest_cell``'s in-row
-    argmin; the members' embeddings posexplode in the same stage and
-    a partial-aggregated (cell, pos) avg crosses the round's only
-    exchange -- model-sized partials, never the corpus."""
+def _lloyd_round(src: DataFrame, book: dict, dsub: int | None = None) -> DataFrame:
+    """One relational Lloyd round as one query: (s, code, pos, c), the
+    6-decimal mean of coordinate ``pos`` of subspace ``s`` over the
+    rows whose nearest code there is ``code``.  Assignment is
+    ``_nearest_codes``' in-row pick; the members' subvectors
+    posexplode in the same stage and a partial-aggregated
+    (s, code, pos) avg crosses the round's only exchange --
+    model-sized partials, never the corpus."""
     return (
-        _nearest_cell(src, cells, "embedding")
+        _nearest_codes(src, "embedding", book, dsub)
         .selectExpr(
-            f"{_argmin_cell_sql('__p')} AS cell", "posexplode(embedding) AS (pos, e)"
+            "s", "code", f"posexplode({_subvec_sql('CAST(s AS INT)', dsub)}) AS (pos, e)"
         )
-        .groupBy("cell", "pos")
+        .groupBy("s", "code", "pos")
         .agg(
             (F.round(F.avg(F.col("e").cast("double")), 6) + F.lit(0.0)).alias("c")
         )
     )
+
+
+def _lloyd(
+    emb: DataFrame, book: dict, iters: int, impl: str, m: int = 1,
+    dsub: int | None = None,
+) -> dict:
+    """The Lloyd loop behind ``kmeans_fit`` (m = 1, ``dsub`` None)
+    and ``pq_train``: ``iters`` rounds over the driver-held codebook
+    ``book`` = {s: [(code, cemb)]}, returned in the same form.
+
+    The driver holds the model -- m x n_codes centroids, the same
+    bounded model MLlib's KMeans broadcasts every round.  Each round
+    is ONE query over the widened corpus (``_lloyd_round``, or
+    ``_train_round_arrow`` for ``impl="arrow"``) whose only exchange
+    carries model-sized (s, code, pos) partials, and one collect
+    brings the new means back; a code that loses all members drops
+    out.  Nothing corpus-sized is joined, broadcast, checkpointed or
+    collected, and every round's plan is O(codebook) literals
+    regardless of ``iters``."""
+    from ..sources.ingest import widen_partitions
+
+    src = widen_partitions(emb, "vec_id")
+    for _ in range(iters):
+        if not book:
+            break
+        if impl == "arrow":
+            rnd = _train_round_arrow(src, book, m)
+        else:
+            rnd = _lloyd_round(src, book, dsub)
+        means: dict = {}
+        for r in rnd.collect():  # bounded-model-collect
+            means.setdefault((r["s"], r["code"]), []).append((r["pos"], r["c"]))
+        book = {}
+        for (s, code), pc in sorted(means.items()):
+            book.setdefault(s, []).append((code, [c for _, c in sorted(pc)]))
+    return book
 
 
 def kmeans_fit(
@@ -1606,73 +1646,35 @@ def kmeans_fit(
     vectors.  Deterministic: init centroids = vectors 0..k-1, squared
     L2 assignment with ties to the smaller cell, centroid coordinates
     rounded to 6 decimals each round (so an SQL oracle replays every
-    iteration exactly).  Returns the final (cell, cemb) codebook; a
-    cell that loses all members drops out (production pipelines
-    re-seed; at k << n this never happens in practice).
+    iteration exactly).  Returns the final (cell, cemb) codebook as a
+    local relation, so a following ``kmeans_assign`` reads it without
+    a job; a cell that loses all members drops out (production
+    pipelines re-seed; at k << n this never happens in practice).
 
-    Scale shape (``"sql"``): the driver holds the codebook -- at most
-    31 x dim doubles below the ``"auto"`` switch, the same bounded
-    model collect ``_train_round_arrow`` makes (and MLlib's KMeans
-    broadcasts every round).  Each round is then ONE query
-    (``_lloyd_round``): a single pass over the widened corpus
-    folds every distance in-row against the literal codebook, picks
-    the cell per row, posexplodes the members and partial-aggregates
-    the (cell, pos) means, so the round's one exchange carries
-    model-sized partials and a collect brings the new codebook back.
-    Nothing corpus-sized is joined, broadcast, checkpointed or
-    collected, and the plan of every round is O(k x dim) literals
-    regardless of ``iters``.  The result is a local relation, so a
-    following ``kmeans_assign`` reads it without a job.
+    Scale shape: ``_lloyd`` with one subspace -- k-means IS product
+    quantization with m=1, so it shares ``pq_train``'s loop and
+    rounds.  Measured with the repository benchmark
+    (``training_sf01``, 4-core container, ten runs per side): the
+    ``kmeans_codebook`` slot (k=4, 2 rounds + assign) went from a warm
+    median of 2.34 s with the former per-round broadcast + vec_id
+    argmin shuffle + ``collect_list`` reassembly + ``localCheckpoint``
+    to 1.73 s with one-query rounds, and the traced pass starts 7
+    Spark jobs while building its queries instead of 13.
 
-    Measured with the repository benchmark (``training_sf01``, 4-core
-    container, ten runs per side): the ``kmeans_codebook`` slot (k=4,
-    2 rounds + assign) went from a warm median of 2.34 s with the
-    former per-round broadcast + vec_id argmin shuffle +
-    ``collect_list`` reassembly + ``localCheckpoint`` to 1.73 s, and
-    the traced pass starts 7 Spark jobs while building its queries
-    instead of 13.  A fit that stays lazy (the former plan without
-    checkpoints) measured 1.55 s against 1.51 s for the collected
-    codebook.
-
-    ``assign_impl="arrow"`` runs each Lloyd round through the shared
-    batched-NumPy kernel (``_train_round_arrow`` with m=1 -- k-means
-    IS product quantization with one subspace): assignment argmin AND
+    ``assign_impl="arrow"`` runs each round through the batched-NumPy
+    kernel (``_train_round_arrow``): assignment argmin AND
     per-(cell, pos) partial sums in one corpus pass.  Bit-identical
     to the relational ``"sql"`` form on finite data (same round-6
     HALF_UP pre-argmin, same ties, fuzz-pinned); ``"auto"`` (default)
     picks by k -- see ``_resolve_train_impl`` for the measured
     crossover."""
     assign_impl = _resolve_train_impl(assign_impl, k)
-    init = emb.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").cast("long").alias("cell"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cemb"),
+    init = emb.filter(F.col("vec_id") < k).selectExpr(
+        "CAST(vec_id AS BIGINT) AS cell",
+        "transform(embedding, x -> CAST(x AS DOUBLE)) AS cemb",
     )
-    if assign_impl == "arrow":
-        cents = init.localCheckpoint()
-        for _ in range(iters):
-            as_pq = cents.select(
-                F.lit(0).cast("long").alias("s"),
-                F.col("cell").cast("long").alias("code"),
-                "cemb",
-            )
-            cents = (
-                _train_round_arrow(emb, as_pq, m=1)
-                .select(F.col("code").alias("cell"), "cemb")
-                .localCheckpoint()
-            )
-        return cents
-    from ..sources.ingest import widen_partitions
-
-    src = widen_partitions(emb, "vec_id")
-    cells = [(r["cell"], r["cemb"]) for r in init.collect()]  # bounded-model-collect
-    for _ in range(iters):
-        if not cells:
-            break
-        by_cell: dict = {}
-        for r in _lloyd_round(src, cells).collect():  # bounded-model-collect
-            by_cell.setdefault(r["cell"], []).append((r["pos"], r["c"]))
-        cells = [(c, [v for _, v in sorted(pv)]) for c, pv in sorted(by_cell.items())]
-    return _codebook_frame(emb.sparkSession, cells)
+    book = _lloyd(emb, _book(init, "cell", None), iters, assign_impl)
+    return _codebook_frame(emb.sparkSession, book.get(0, []))
 
 
 # -- product quantization (Jegou, Douze, Schmid 2011: "Product
@@ -1692,20 +1694,16 @@ def _pq_subspaces(
     """(id, s, semb): each vector split into its m contiguous
     subvectors IN-ROW (array slices + one posexplode -- a bounded
     m-fold fan-out, no shuffle, no join)."""
-    if m <= 0 or dim % m:
-        raise ValueError(f"dim {dim} must divide into m={m} subspaces")
     from ..sources.ingest import widen_partitions
 
-    dsub = dim // m
+    dsub = _pq_dsub(dim, m)
     subs = F.array(
         *[F.slice(F.col("embedding"), s * dsub + 1, dsub) for s in range(m)]
     )
-    # widen BEFORE the fan-out: the downstream assign join is a
+    # widen BEFORE the fan-out: the downstream codebook join is a
     # broadcast (narrow), so the m x n_codes interpreted distance
-    # folds inherit THIS partitioning -- a small parquet scan's 1-2
-    # input splits would serialize the whole training pass onto 1-2
-    # cores (measured 84 s -> 9 s per Lloyd round at sf1 with 256
-    # codes); at real scale the input is already wide and this no-ops
+    # folds inherit THIS partitioning; at real scale the input is
+    # already wide and this no-ops
     return widen_partitions(emb, id_col).select(
         F.col(id_col), F.posexplode(subs).alias("s", "semb")
     ).select(
@@ -1719,8 +1717,8 @@ def _sqdist_sql(a: str, b: str) -> str:
     """SQL fragment: in-row squared L2 between two array expressions
     -- zip_with the coordinate differences, fold the squares left to
     right.  The single shared definition behind every k-means/PQ
-    distance (kmeans_assign/kmeans_fit, _pq_assign, the ADC lookup
-    table, the re-rank, stream_pq_encode), so the cast/fold contract
+    distance (``_nearest_sql``'s k-means/PQ picks, the ADC lookup
+    table, the re-rank), so the cast/fold contract
     cannot drift between them.
 
     Measured and rejected (4-core host, ``kmeans_codebook`` benchmark
@@ -1740,32 +1738,6 @@ def _sqdist_sql(a: str, b: str) -> str:
 def _sqdist(a_col: str, b_col: str):
     """``_sqdist_sql`` between two named array columns, as a Column."""
     return F.expr(_sqdist_sql(a_col, b_col))
-
-
-def _pq_assign(sub: DataFrame, cents: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """Nearest code per (vector, subspace) by squared L2: (id, s,
-    code, dist).  Same discipline as kmeans_assign: the (s, code)
-    codebook is tiny and broadcast with whole centroid arrays, each
-    distance folds in-row, distances round to 6 decimals BEFORE the
-    argmin (cross-engine tie stability), ties break to the smaller
-    code, and the argmin is a partial-aggregated min_by."""
-    sq = _sqdist("semb", "cemb")
-    scored = sub.join(F.broadcast(cents), on="s").select(
-        id_col, "s", "code", (F.round(sq, 6) + F.lit(0.0)).alias("dist")
-    )
-    return (
-        scored.selectExpr(
-            id_col, "s", f"{_argmin_packed_sql('code', 'dist')} AS __pp"
-        )
-        .groupBy(id_col, "s")
-        .agg(F.expr("min(__pp) AS __p"))
-        .selectExpr(
-            id_col,
-            "s",
-            f"{_argmin_cell_sql('__p')} AS code",
-            f"{_argmin_dist_sql('__p')} AS dist",
-        )
-    )
 
 
 def _spark_round6_np(a: "np.ndarray") -> "np.ndarray":
@@ -1799,33 +1771,31 @@ def _spark_round6_np(a: "np.ndarray") -> "np.ndarray":
     return out
 
 
-def _codebook_mats(rows) -> tuple[dict, int]:
-    """Collected (s, code, cemb) codebook rows -> per-subspace
+def _codebook_mats(book: dict) -> tuple[dict, int]:
+    """A driver-held codebook {s: [(code, cemb)]} -> per-subspace
     (codes, centroid-matrix) NumPy pairs, code-ASCENDING so that
     ``np.argmin``'s first-hit IS the smaller-code tie-break the
-    relational ``min_by(struct(dist, code))`` applies.  Shared by the
+    relational ``_nearest_sql`` pick applies.  Shared by the
     training-round and encode Arrow kernels so the layout contract
     cannot drift between them."""
     import numpy as np
 
-    dsub = len(rows[0]["cemb"])
-    by_s: dict[int, list] = {}
-    for r in rows:
-        by_s.setdefault(int(r["s"]), []).append((int(r["code"]), list(r["cemb"])))
-    mats = {
-        s: (
-            np.asarray([c for c, _ in sorted(pairs)], dtype="int64"),
-            np.asarray([v for _, v in sorted(pairs)], dtype="float64"),
+    dsub = len(next(iter(book.values()))[0][1])
+    mats = {}
+    for s, cands in book.items():
+        pairs = sorted((int(c), list(v)) for c, v in cands)
+        mats[int(s)] = (
+            np.asarray([c for c, _ in pairs], dtype="int64"),
+            np.asarray([v for _, v in pairs], dtype="float64"),
         )
-        for s, pairs in by_s.items()
-    }
     return mats, dsub
 
 
-def _train_round_arrow(emb: DataFrame, cents: DataFrame, m: int) -> DataFrame:
-    """One FULL Lloyd round (assign + centroid update) as one
-    Arrow-batched NumPy pass: returns the new (s, code, cemb)
-    codebook under the relational round's exact contract (squared L2
+def _train_round_arrow(src: DataFrame, book: dict, m: int) -> DataFrame:
+    """One FULL Lloyd round (assign + centroid update) over the
+    widened corpus ``src`` as one Arrow-batched NumPy pass: returns
+    the new (s, code, pos, c) means of the driver-held codebook
+    ``book`` under the relational round's exact contract (squared L2
     rounded to 6 decimals with Spark's HALF_UP-on-shortest-repr scheme
     BEFORE the argmin, ties to the smaller code, mean coordinates
     rounded to 6 decimals, memberless codes dropping out).
@@ -1852,7 +1822,7 @@ def _train_round_arrow(emb: DataFrame, cents: DataFrame, m: int) -> DataFrame:
 
     Scale shape: ONE mapInArrow pass over the (widened) corpus; each
     task computes all m subspace argmins for its batch in C-speed
-    NumPy and emits per-(s, code, spos) PARTIAL SUMS (the map-side
+    NumPy and emits per-(s, code, pos) PARTIAL SUMS (the map-side
     combine -- m x n_codes x dsub rows per batch, model-sized), so the
     only shuffle in a training round carries model-sized partials, not
     the corpus; the final mean + 6-decimal round stays relational on
@@ -1860,10 +1830,7 @@ def _train_round_arrow(emb: DataFrame, cents: DataFrame, m: int) -> DataFrame:
     broadcast."""
     import numpy as np
 
-    from ..sources.ingest import widen_partitions
-
-    rows = cents.collect()  # bounded-model-collect: m x n_codes codebook rows
-    mats, dsub = _codebook_mats(rows)
+    mats, dsub = _codebook_mats(book)
     dim = dsub * m
     spos = np.arange(dsub, dtype="int64")
 
@@ -1876,7 +1843,7 @@ def _train_round_arrow(emb: DataFrame, cents: DataFrame, m: int) -> DataFrame:
             if isinstance(col, pa.ChunkedArray):
                 col = col.combine_chunks()
             X = np.asarray(col.flatten(), dtype="float64").reshape(nvec, dim)
-            cols = {k: [] for k in ("s", "code", "spos", "se", "cnt")}
+            cols = {k: [] for k in ("s", "code", "pos", "se", "cnt")}
             for s, (codes, C) in mats.items():
                 Xs = X[:, s * dsub : (s + 1) * dsub]
                 best = np.empty(nvec, dtype="int64")
@@ -1893,7 +1860,7 @@ def _train_round_arrow(emb: DataFrame, cents: DataFrame, m: int) -> DataFrame:
                 used = np.flatnonzero(cnts)
                 cols["s"].append(np.full(len(used) * dsub, s, dtype="int64"))
                 cols["code"].append(np.repeat(codes[used], dsub))
-                cols["spos"].append(np.tile(spos, len(used)))
+                cols["pos"].append(np.tile(spos, len(used)))
                 cols["se"].append(sums[used].reshape(-1))
                 cols["cnt"].append(np.repeat(cnts[used].astype("int64"), dsub))
             yield pa.RecordBatch.from_arrays(
@@ -1901,20 +1868,15 @@ def _train_round_arrow(emb: DataFrame, cents: DataFrame, m: int) -> DataFrame:
                 names=list(cols),
             )
 
-    src = widen_partitions(emb, "vec_id").select(
+    src = src.select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
     parts = src.mapInArrow(
-        kernel, schema="s long, code long, spos long, se double, cnt long"
+        kernel, schema="s long, code long, pos long, se double, cnt long"
     )
-    newc = parts.groupBy("s", "code", "spos").agg(
+    return parts.groupBy("s", "code", "pos").agg(
         (F.round(F.sum("se") / F.sum("cnt"), 6) + F.lit(0.0)).alias("c")
-    )
-    return newc.groupBy("s", "code").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("spos", "c"))), lambda t: t["c"]
-        ).alias("cemb")
     )
 
 
@@ -1957,43 +1919,34 @@ def pq_train(
     assignment with 6-decimal pre-argmin rounding and ties to the
     smaller code, centroid coordinates rounded to 6 decimals per
     round.  Returns the (s, code, cemb) codebook (m x n_codes rows --
-    always broadcastable).  ``dim`` is the embedding length (schema
-    metadata every real pipeline knows); it must divide by ``m``.
+    always broadcastable) as a local relation.  ``dim`` is the
+    embedding length (schema metadata every real pipeline knows); it
+    must divide by ``m``.
 
-    Scale shape: identical to kmeans_fit per round -- one assignment
-    pass (``assign_impl``: ``"arrow"`` runs the whole Lloyd round as a
-    batched NumPy mapInArrow kernel, see ``_train_round_arrow``;
-    ``"sql"`` keeps the relational broadcast-join + interpreted-fold
-    form; ``"auto"``, the default, picks by candidate count -- see
-    ``_resolve_train_impl``), then for the sql form one posexplode +
-    groupBy(s, code, spos) mean (map-side partial sums);
-    localCheckpoint keeps the iterated plan O(1) either way."""
+    Scale shape: ``kmeans_fit``'s loop (``_lloyd``) over m slices --
+    one query per round with one (s, code, pos) aggregate exchange
+    and a model-sized collect.  ``assign_impl``: ``"arrow"`` runs each
+    round as a batched NumPy mapInArrow kernel (``_train_round_arrow``),
+    ``"sql"`` as the relational in-row pick (``_lloyd_round``);
+    ``"auto"``, the default, picks by candidate count -- see
+    ``_resolve_train_impl``."""
     assign_impl = _resolve_train_impl(assign_impl, n_codes)
-    sub = _pq_subspaces(emb, dim, m)
-    cents = (
-        sub.filter(F.col("vec_id") < n_codes)
-        .select("s", F.col("vec_id").cast("long").alias("code"), F.col("semb").alias("cemb"))
-        .localCheckpoint()
+    dsub = _pq_dsub(dim, m)
+    init = emb.filter(F.col("vec_id") < n_codes).selectExpr(
+        "CAST(vec_id AS BIGINT) AS code",
+        "transform(embedding, x -> CAST(x AS DOUBLE)) AS cemb",
     )
-    for _ in range(iters):
-        if assign_impl == "arrow":
-            cents = _train_round_arrow(emb, cents, m).localCheckpoint()
-            continue
-        asg = _pq_assign(sub, cents).select("vec_id", "s", "code")
-        ex = sub.select("vec_id", "s", F.posexplode("semb").alias("spos", "e"))
-        newc = (
-            ex.join(asg, on=["vec_id", "s"])
-            .groupBy("s", "code", "spos")
-            .agg((F.round(F.avg(F.col("e")), 6) + F.lit(0.0)).alias("c"))
-        )
-        arr = newc.groupBy("s", "code").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("spos", "c"))),
-                lambda t: t["c"],
-            ).alias("cemb")
-        )
-        cents = arr.localCheckpoint()
-    return cents
+    vecs = _book(init, "code", None).get(0, [])
+    book = {
+        s: [(c, None if v is None else v[s * dsub : (s + 1) * dsub]) for c, v in vecs]
+        for s in range(m)
+    } if vecs else {}
+    book = _lloyd(emb, book, iters, assign_impl, m, dsub)
+    return _codebook_frame(
+        emb.sparkSession,
+        [(s, c, v) for s, cands in sorted(book.items()) for c, v in cands],
+        ("s", "code"),
+    )
 
 
 def _auto_rerank(n: int) -> int:
@@ -2008,15 +1961,16 @@ def _auto_rerank(n: int) -> int:
 
 
 def _pq_assign_arrow(
-    emb: DataFrame, cents: DataFrame, dim: int | None, m: int,
+    emb: DataFrame, book: dict, dim: int | None, m: int,
     id_col: str = "vec_id",
 ) -> DataFrame:
     """The encode counterpart of ``_train_round_arrow``: nearest code
-    per (vector, subspace) computed in ONE mapInArrow pass -- batched
+    per (vector, subspace) of the driver-held codebook ``book`` =
+    {s: [(code, cemb)]} computed in ONE mapInArrow pass -- batched
     NumPy argmin under the exact relational contract (squared L2
     rounded to 6 decimals with Spark's HALF_UP-on-shortest-repr
     scheme BEFORE the argmin, ties to the smaller code).  Output
-    (id, s, code, dist), identical to ``_pq_assign``; equality is
+    (id, s, code, dist), identical to ``_nearest_codes``; equality is
     fuzz-pinned, with the same accepted ~1e-11 divergence class as
     training (a distance within ~1 ulp of a 1e-6 rounding boundary
     AND within 1e-6 of a competing candidate).
@@ -2027,14 +1981,12 @@ def _pq_assign_arrow(
     (1.2e9 fold rows for a 600k corpus, ~700 s measured), and encode
     is HALF the index build the training fix left behind.  The kernel
     emits exactly corpus x m rows, nothing corpus-sized is collected
-    or broadcast, and the codebook it reads is model parameters (the
-    same bounded collect the training round makes)."""
+    or broadcast, and the codebook it reads is model parameters."""
     import numpy as np
 
     from ..sources.ingest import widen_partitions
 
-    rows = cents.collect()  # bounded-model-collect: m x n_codes codebook rows
-    mats, dsub = _codebook_mats(rows)
+    mats, dsub = _codebook_mats(book)
     if dim is None:
         dim = dsub * m
     if dsub * m != dim:
@@ -2098,27 +2050,30 @@ def pq_encode(
     the per-subspace quantization error (the reconstruction-quality
     diagnostic).
 
-    ``impl``: ``"sql"`` is the relational form (bounded m-fold
-    fan-out + broadcast join + partial-aggregated argmin -- the
-    oracled, plan-pinned surface); ``"arrow"`` runs the argmin as a
-    batched NumPy mapInArrow kernel (``_pq_assign_arrow``) -- at 256
-    codes the relational form's corpus x m x n_codes interpreted fold
-    rows dominate the whole index build, the same economics that
-    moved training to Arrow in round 9; ``"auto"`` (default) picks by
-    codebook size with the training threshold (arrow at >= 32
-    codes)."""
+    The codebook is model-sized and collected once (the same bounded
+    collect ``kmeans_assign`` makes).  ``impl``: ``"sql"`` is the
+    relational form (``_nearest_codes`` over m slices: one in-row
+    pick per subspace against the literal codebook, no join, no
+    aggregate -- the oracled, plan-pinned surface); ``"arrow"`` runs
+    the argmin as a batched NumPy mapInArrow kernel
+    (``_pq_assign_arrow``) -- at 256 codes the relational form's
+    corpus x m x n_codes interpreted folds dominate the whole index
+    build, the same economics that moved training to Arrow in round
+    9; ``"auto"`` (default) picks by codebook size with the training
+    threshold (arrow at >= 32 codes)."""
     if impl not in ("auto", "arrow", "sql"):
         raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
-    if impl == "sql":
-        return _pq_assign(_pq_subspaces(emb, dim, m), cents)
+    book = _book(cents)
     if impl == "auto":
-        # the codebook is model-sized; counting it is O(model).
         # m rows per code -> n_codes = rows / m
-        n_codes = cents.count() // max(1, m)
-        impl = _resolve_train_impl("auto", n_codes)
-    if impl == "sql":
-        return _pq_assign(_pq_subspaces(emb, dim, m), cents)
-    return _pq_assign_arrow(emb, cents, dim, m)
+        impl = _resolve_train_impl("auto", sum(map(len, book.values())) // max(1, m))
+    if impl == "arrow":
+        return _pq_assign_arrow(emb, book, dim, m)
+    from ..sources.ingest import widen_partitions
+
+    return _nearest_codes(
+        widen_partitions(emb, "vec_id"), "vec_id", book, _pq_dsub(dim, m)
+    )
 
 
 def pq_pack(codes: DataFrame) -> DataFrame:

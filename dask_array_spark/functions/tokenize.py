@@ -78,7 +78,11 @@ def chunk_tokens(
     if window <= 0 or stride <= 0:
         raise ValueError(f"window and stride must be positive, got {window}, {stride}")
     toks = tokens_col(text_col)
-    d = df.select("doc_id", toks.alias("__toks")).filter(F.size("__toks") > 0)
+    # no filter on the computed array: Catalyst would push it below
+    # this projection with the tokenization inlined, so every document
+    # would tokenize twice; a NULL or empty token array gets an empty
+    # chunk sequence instead (the gram_starts_sql guard)
+    d = df.select("doc_id", toks.alias("__toks"))
     n = F.size("__toks")
     if stride < window:
         # overlapping: stop once a window reaches the last token -- a
@@ -94,11 +98,10 @@ def chunk_tokens(
         # gapped/adjacent: every start below n yields a fresh chunk,
         # and a start at/after n would be empty
         n_chunks = F.ceil(n.cast("double") / F.lit(float(stride))).cast("int")
-    d = d.select(
-        "doc_id",
-        "__toks",
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
+    starts = F.when(n > 0, F.sequence(F.lit(0), n_chunks - 1)).otherwise(
+        F.array().cast("array<int>")
     )
+    d = d.select("doc_id", "__toks", F.explode(starts).alias("chunk_id"))
     piece = F.slice(
         F.col("__toks"), F.col("chunk_id") * stride + 1, window
     )

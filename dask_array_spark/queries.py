@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from .core.array import Array
 from .operators import creation, elemwise as E, linalg, manipulation as M, reductions as R
 from .operators import slicing as S, windows as W
+from .session import local_frame
 from .sources import (
     densify,
     from_table_arrays,
@@ -612,7 +613,7 @@ def q_median_scalable(spark, sf):
     'exact medians on huge axes' hard part (SURVEY section 7)."""
     x = from_table_column(_li(spark, sf), LI_IDX, "l_extendedprice")
     med = R.median_scalable(x)
-    return spark.createDataFrame([(round(med, 6),)], "v double")
+    return local_frame(spark, [(round(med, 6),)], "v double")
 
 
 @query(
@@ -1279,7 +1280,8 @@ def q_vindex(spark, sf):
     """point-wise coordinate gather == broadcast join on the composite
     index key (reference VIndexArray, slicing/_vindex.py:143)."""
     m = _nation_month_matrix(spark, sf)
-    coords = m.spark.createDataFrame(
+    coords = local_frame(
+        m.spark,
         [(0, 3, 5), (1, 7, 11), (2, 24, 0), (3, 3, 5), (4, 0, 0)],
         "pos long, c0 long, c1 long",
     )
@@ -1466,8 +1468,10 @@ def q_lstsq(spark, sf):
     design = Array(cells, (None, 2))
     b = from_table_column(l, "rid", "l_extendedprice")
     x, _ = linalg.lstsq(design, b, block_rows=65536)
-    return spark.createDataFrame(
-        [(int(i), round(float(v), 6) + 0.0) for i, v in enumerate(x)], "i0 long, v double"
+    return local_frame(
+        spark,
+        [(int(i), round(float(v), 6) + 0.0) for i, v in enumerate(x)],
+        "i0 long, v double",
     )
 
 
@@ -1570,7 +1574,8 @@ def q_svd_values(spark, sf):
     )
     m = Array(cells, (None, 3))
     _, s, _ = linalg.svd_tall(m, block_rows=65536)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(i), round(math.log10(1.0 + float(x)), 6) + 0.0)
          for i, x in enumerate(s)],
         "i0 long, v double",
@@ -1588,8 +1593,8 @@ def q_svd_rows(spark, sf):
     orthonormality is covered by tsqr_q_orthonormal's invariant."""
     m = _nation_month_matrix(spark, sf).astype("double")
     _, s, _ = linalg.svd_tall(m, block_rows=8)
-    return spark.createDataFrame(
-        [(int(i), float(x)) for i, x in enumerate(s)], "i0 long, v double"
+    return local_frame(
+        spark, [(int(i), float(x)) for i, x in enumerate(s)], "i0 long, v double"
     )
 
 
@@ -3747,13 +3752,14 @@ def q_tsqr_lstsq(spark, sf):
         m.df.selectExpr("SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE)) AS f").first()["f"]
     )
     energy = round(float((s_vals ** 2).sum()) / frob2, 6)
-    sv = spark.createDataFrame([(2, 0, energy)], "kind long, i0 long, v double")
+    sv = local_frame(spark, [(2, 0, energy)], "kind long, i0 long, v double")
     # kind 3: thin-SVD singular values from the distributed TSQR path
     # (svd_tall), pinned through their log10 power-sum moments -- the
     # driver-side fold over the k-element s vector is O(k), not a
     # collect of anything matrix-sized
     _, s_tall, _ = linalg.svd_tall(m, block_rows=8)
-    mom = spark.createDataFrame(
+    mom = local_frame(
+        spark,
         [
             (3, mm, math.log10(float((s_tall ** (2 * mm)).sum())))
             for mm in range(1, 13)

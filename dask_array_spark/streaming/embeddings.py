@@ -5,17 +5,17 @@ shards its ANN index or runs SemDeDup wants cell routing decided
 before vectors land in the lake.
 
 Scale/stream shape: the trained codebook (functions/similarity.py::
-kmeans_fit, or any (cell, cemb) table) collapses to ONE row holding a
-cell-sorted array of (cell, cemb) structs and joins the stream as a
-broadcast stream-static cross join -- stateless, no watermark, no
-state store.  The nearest-cell argmin then folds IN-ROW: an
-F.aggregate over the codebook array whose step computes the squared
-L2 distance with a nested zip_with fold, keeping the first
-(= smallest) cell on ties.  The stream is never exploded, never
-shuffled, and the per-row cost is k x dim multiply-adds exactly like
-the batch path.  Distances round to 6 decimals BEFORE the argmin so
-the result matches batch ``kmeans_assign`` bit-for-bit
-(test_streaming_embeddings pins batch parity and statelessness).
+kmeans_fit / pq_train, or any (cell, cemb) / (s, code, cemb) table)
+is static and model-sized, so it is collected once when the stream
+is built and enters the plan as literal centroids.  The
+nearest-code pick is the batch path's own SQL fragment
+(``_nearest_sql``): one flat squared-L2 fold per candidate and a
+``least`` over (dist, id) structs, in-row.  The stream is never
+joined or shuffled, the plan is stateless (no watermark, no state
+store), and the per-row cost is k x dim multiply-adds exactly
+like the batch path -- so a NULL, NaN or ragged vector gets the same
+answer on the stream as in batch (test_streaming_embeddings pins
+batch parity, hostile rows and statelessness).
 """
 
 from __future__ import annotations
@@ -25,9 +25,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "stream_codebook_assign",
-    "codebook_row",
     "stream_pq_encode",
-    "pq_codebook_row",
     "stream_sq8_encode",
 ]
 
@@ -38,19 +36,6 @@ def _read_embeddings_stream(spark: SparkSession, emb_path: str) -> DataFrame:
     return _read_parquet_stream(spark, emb_path)
 
 
-def codebook_row(cents: DataFrame) -> DataFrame:
-    """Collapse a (cell, cemb) codebook to ONE row carrying the
-    cell-sorted struct array (the broadcastable stream-static side).
-    collect_list order is nondeterministic, so the array sorts by its
-    leading struct field (cell) -- ties in the fold then resolve to
-    the smallest cell by keeping the first strict improvement."""
-    return cents.agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("cell"), F.col("cemb")))
-        ).alias("__cb")
-    )
-
-
 def stream_codebook_assign(
     spark: SparkSession,
     emb_path: str,
@@ -58,42 +43,14 @@ def stream_codebook_assign(
 ) -> DataFrame:
     """(vec_id, cell, dist) for every vector arriving on the stream:
     nearest codebook cell by squared L2, ties to the smaller cell --
-    batch ``kmeans_assign`` semantics, computed as one stateless
+    batch ``kmeans_assign`` semantics (its relational leg's
+    ``_nearest_codes`` with one subspace), computed as one stateless
     projection per micro-batch."""
+    from ..functions.similarity import _book, _nearest_codes
+
     stream = _read_embeddings_stream(spark, emb_path)
-    cb = codebook_row(cents)
-
-    from ..functions.similarity import _sqdist_sql
-
-    cand = (
-        "named_struct('cell', CAST(c.cell AS BIGINT), 'dist', "
-        f"round({_sqdist_sql('embedding', 'c.cemb')}, 6) + 0.0D)"
-    )
-    best = F.expr(
-        "aggregate(__cb, named_struct('cell', CAST(-1 AS BIGINT), "
-        "'dist', CAST('Infinity' AS DOUBLE)), "
-        f"(acc, c) -> CASE WHEN {cand}.dist < acc.dist THEN {cand} ELSE acc END)"
-    )
-    return (
-        stream.crossJoin(F.broadcast(cb))
-        .withColumn("__best", best)
-        .select(
-            "vec_id",
-            F.col("__best.cell").alias("cell"),
-            F.col("__best.dist").alias("dist"),
-        )
-    )
-
-
-def pq_codebook_row(cents: DataFrame) -> DataFrame:
-    """Collapse a PQ (s, code, cemb) codebook (functions/similarity.py
-    ``pq_train``) to ONE row carrying the (s, code)-sorted struct
-    array -- the broadcastable stream-static side for
-    ``stream_pq_encode``."""
-    return cents.agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("s"), F.col("code"), F.col("cemb")))
-        ).alias("__pqcb")
+    return _nearest_codes(stream, "vec_id", _book(cents, "cell", None)).select(
+        "vec_id", F.col("code").alias("cell"), "dist"
     )
 
 
@@ -110,40 +67,17 @@ def stream_pq_encode(
     ``pq_pack(pq_encode(...))`` semantics, computed as one stateless
     projection per micro-batch so an ingestion pipeline can land the
     32x-smaller ANN index next to the raw vectors as they arrive.
+    Each subspace's code is ``_nearest_sql``'s pick over that
+    subspace's slice, in subspace order."""
+    from ..functions.similarity import _book, _nearest_sql, _pq_dsub, _subvec_sql
 
-    Stream shape: the m x n_codes codebook collapses to one
-    broadcast row; each subspace's argmin folds IN-ROW over the
-    F.filter'd slice of that array against the vector's own subvector
-    (same nested zip_with fold as ``stream_codebook_assign``).  No
-    explode, no shuffle, no state store; 6-decimal pre-argmin
-    rounding keeps bit parity with the batch path (pinned by
-    test_streaming_embeddings)."""
-    if m <= 0 or dim % m:
-        raise ValueError(f"dim {dim} must divide into m={m} subspaces")
-    dsub = dim // m
-    stream = _read_embeddings_stream(spark, emb_path)
-    cb = pq_codebook_row(cents)
-
-    from ..functions.similarity import _sqdist_sql
-
-    def best_code(s: int) -> str:
-        sub = f"slice(embedding, {s * dsub + 1}, {dsub})"
-        cand = (
-            "named_struct('code', CAST(c.code AS BIGINT), 'dist', "
-            f"round({_sqdist_sql(sub, 'c.cemb')}, 6) + 0.0D)"
-        )
-        return (
-            f"aggregate(filter(__pqcb, c -> c.s = {s}), "
-            "named_struct('code', CAST(-1 AS BIGINT), "
-            "'dist', CAST('Infinity' AS DOUBLE)), "
-            f"(acc, c) -> CASE WHEN {cand}.dist < acc.dist THEN {cand} "
-            "ELSE acc END).code"
-        )
-
-    codes = F.expr(f"array({', '.join(best_code(s) for s in range(m))})")
-    return (
-        stream.crossJoin(F.broadcast(cb))
-        .select("vec_id", codes.alias("codes"))
+    dsub = _pq_dsub(dim, m)
+    codes = ", ".join(
+        f"{_nearest_sql(_subvec_sql(s, dsub), cands)}.c"
+        for s, cands in sorted(_book(cents).items())
+    )
+    return _read_embeddings_stream(spark, emb_path).selectExpr(
+        "vec_id", f"CAST(array({codes}) AS ARRAY<BIGINT>) AS codes"
     )
 
 

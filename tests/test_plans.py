@@ -374,9 +374,10 @@ def test_kmeans_assign_join_free_and_fit_round_one_exchange(spark, sf_dir):
     """kmeans_assign's relational leg folds every distance IN-ROW
     (zip_with + aggregate lambda) against the literal codebook and
     takes the argmin per row: no Join (no crossJoin fan-out, no
-    broadcast) and no aggregate on vec_id.  Each kmeans_fit round is
-    one query whose only aggregate exchange is the partial-aggregated
-    (cell, pos) mean's -- no codebook broadcast, no argmin shuffle."""
+    broadcast) and no aggregate on vec_id.  Each kmeans_fit or
+    pq_train round is one query whose only aggregate exchange is the
+    partial-aggregated (s, code, pos) mean's -- no codebook broadcast,
+    no argmin shuffle."""
     from dask_array_spark.functions import similarity as SIM
     from dask_array_spark.sources import read_table
     from dask_array_spark.sources.ingest import widen_partitions
@@ -390,19 +391,21 @@ def test_kmeans_assign_join_free_and_fit_round_one_exchange(spark, sf_dir):
         assert "Join" not in p and "Aggregate" not in p
     assert "BroadcastExchange" not in plan
 
-    cells = [(r["cell"], r["cemb"]) for r in cents.collect()]
-    rnd = _plan(SIM._lloyd_round(widen_partitions(emb, "vec_id"), cells))
-    assert "Join" not in rnd and "BroadcastExchange" not in rnd
-    agg_exchanges = [
-        l for l in rnd.splitlines()
-        if "Exchange hashpartitioning(cell#" in l
-    ]
-    assert len(agg_exchanges) == 1
-    assert "partial_avg" in rnd
-    assert all(
-        "Exchange" not in l or "hashpartitioning(vec_id#" in l
-        for l in rnd.splitlines() if l not in agg_exchanges
-    )
+    src = widen_partitions(emb, "vec_id")
+    pqc = SIM.pq_train(emb, dim=64, m=4, n_codes=4, iters=1)
+    for book, dsub in ((SIM._book(cents, "cell", None), None), (SIM._book(pqc), 16)):
+        rnd = _plan(SIM._lloyd_round(src, book, dsub))
+        assert "Join" not in rnd and "BroadcastExchange" not in rnd
+        agg_exchanges = [
+            l for l in rnd.splitlines()
+            if "Exchange hashpartitioning(s#" in l
+        ]
+        assert len(agg_exchanges) == 1
+        assert "partial_avg" in rnd
+        assert all(
+            "Exchange" not in l or "hashpartitioning(vec_id#" in l
+            for l in rnd.splitlines() if l not in agg_exchanges
+        )
 
 
 def test_pq_adc_scan_shape(spark, sf_dir):
@@ -576,3 +579,16 @@ def test_take_indexer_is_a_local_table(spark):
     plan = _plan(t.df)
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     np.testing.assert_array_equal(t.compute(), np.arange(12.0).reshape(4, 3)[[2, 0]])
+
+
+def test_registry_driver_rows_are_local_table_scans(spark, sf_dir):
+    """Registry queries that build rows on the driver hand them to
+    Spark through ``session.local_frame``: a ``LocalTableScan`` in the
+    JVM, not a ``Scan ExistingRDD`` over a PythonRDD that starts a
+    Python worker on every execution."""
+    from dask_array_spark import queries as Q
+
+    for q in (Q.q_vindex, Q.q_svd_rows, Q.q_median_scalable):
+        plan = _plan(q(spark, sf_dir))
+        assert "LocalTableScan" in plan, q.__name__
+        assert "ExistingRDD" not in plan, q.__name__

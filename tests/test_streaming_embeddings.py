@@ -4,6 +4,8 @@ kmeans_assign exactly, and the plan carries no stateful operator."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 
@@ -41,10 +43,9 @@ def test_stream_assign_matches_batch(spark, emb_path):
 
 
 def test_stream_assign_plan_is_stateless(spark, emb_path):
-    """The assignment is one stateless projection per micro-batch:
-    the only join is the broadcast stream-STATIC codebook cross join
-    (stateless by construction); no aggregation, dedup, or state
-    store ever enters the plan."""
+    """The assignment is one stateless projection per micro-batch
+    against the literal codebook: no aggregation, dedup, or state
+    store ever enters the stream's plan."""
     from dask_array_spark.functions.similarity import kmeans_fit
     from dask_array_spark.streaming.embeddings import stream_codebook_assign
 
@@ -124,3 +125,54 @@ def test_stream_sq8_encode_plan_is_stateless(spark, emb_path):
     for op in ("Deduplicate", "FlatMapGroupsWithState", "EventTimeWatermark",
                "Join", "Aggregate"):
         assert op not in plan, f"unexpected op {op}"
+
+
+def test_stream_encoders_match_batch_on_hostile_rows(spark, tmp_path):
+    """NULL and NaN embeddings get batch's answer on the stream: the
+    smallest id with a NULL (resp. NaN) distance, not a (-1, +Inf)
+    fold seed."""
+    from dask_array_spark.functions.similarity import (
+        kmeans_assign,
+        pq_encode,
+        pq_pack,
+    )
+    from dask_array_spark.streaming.embeddings import (
+        stream_codebook_assign,
+        stream_pq_encode,
+    )
+
+    nan = float("nan")
+    rows = [(0, [0.0, 0.0]), (1, None), (2, [nan, 1.0]), (3, [4.0, 4.0]),
+            (4, [1.0, nan])]
+    path = str(tmp_path / "hostile_emb")
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(path)
+    emb = spark.read.parquet(path)
+    cents = spark.createDataFrame(
+        [(3, [4.0, 4.0]), (1, [0.0, 0.0])], "cell long, cemb array<double>"
+    )
+    tag = lambda d: "nan" if d is not None and math.isnan(d) else d
+    batch = {
+        r["vec_id"]: (r["cell"], tag(r["dist"]))
+        for r in kmeans_assign(emb, cents, impl="sql").collect()
+    }
+    streamed = {
+        r["vec_id"]: (r["cell"], tag(r["dist"]))
+        for r in _drain(stream_codebook_assign(spark, path, cents), "emb_hostile")
+    }
+    assert streamed == batch
+    assert batch[1] == (1, None) and batch[2] == (1, "nan")
+
+    pqc = spark.createDataFrame(
+        [(s, c, [float(c)]) for s in range(2) for c in (2, 0)],
+        "s long, code long, cemb array<double>",
+    )
+    batch = {
+        r["vec_id"]: list(r["codes"])
+        for r in pq_pack(pq_encode(emb, pqc, dim=2, m=2, impl="sql")).collect()
+    }
+    streamed = {
+        r["vec_id"]: list(r["codes"])
+        for r in _drain(stream_pq_encode(spark, path, pqc, dim=2, m=2), "pq_hostile")
+    }
+    assert streamed == batch
+    assert batch[1] == [0, 0] and batch[4] == [0, 0]

@@ -40,6 +40,28 @@ def test_chunks_overlapping_stride(spark):
     assert rows[1]["chunk_text"].split(" ")[0] == "t8"
 
 
+def test_chunks_skip_null_and_empty_text(spark):
+    from dask_array_spark.functions.tokenize import chunk_tokens
+
+    docs = spark.createDataFrame(
+        [(0, None), (1, ""), (2, "   "), (3, "a b c")], "doc_id long, text string"
+    )
+    for stride in (2, 4):
+        rows = chunk_tokens(docs, window=3, stride=stride).collect()
+        assert [(r["doc_id"], r["chunk_text"]) for r in rows] == [(3, "a b c")]
+
+
+def test_chunks_tokenize_once(spark, sf_dir):
+    """chunk_tokens has no filter on the token array, so Catalyst has
+    nothing to push below the tokenizing projection: the optimized
+    plan splits each document once."""
+    from dask_array_spark.functions.tokenize import chunk_tokens
+    from dask_array_spark.sources import read_table
+
+    df = chunk_tokens(read_table(spark, sf_dir, "documents"), window=16, stride=8)
+    assert df._jdf.queryExecution().optimizedPlan().toString().count("split(") == 1
+
+
 def test_chunks_validate_params(spark):
     from dask_array_spark.functions.tokenize import chunk_tokens
 
