@@ -6,8 +6,16 @@ Serving paths (SURVEY.md section 7 M6):
   zip_with/aggregate dot against the broadcast query side, per-query
   rank window) and a batched NumPy ``mapInArrow`` kernel that
   threshold-prunes per batch and feeds the same window.  ``"auto"``
-  picks by measured pair work (SCALE.md round 12).  Either way the
-  corpus streams through one scan and never moves at 100 TB.
+  picks by measured pair work (SCALE.md round 12; ``_route``).
+  Either way the corpus streams through one scan and never moves at
+  100 TB.
+- every arrow top-k leg -- cosine, IVF, SQ8, IVF x SQ8, PQ (ADC),
+  IVF x PQ and the exact rerank -- is one skeleton, ``_arrow_topk``:
+  the ``_row_blocks`` batch walk (length/valid mask per query group,
+  optional blocking by cell or qid), a leg-supplied NumPy scorer
+  (``_cos_score``, ``_adc_score``, ``_l2_score``), the ties-included
+  per-batch keep (``_batch_keep``) and the one exact rank window
+  (``_rank``, shared with the relational legs).
 - LSH sign-bucket partitioning: integer hyperplanes bucket vectors so
   candidate generation joins only within buckets (the ANN scale path),
   plus the IVF / PQ / SQ8 index tiers below.
@@ -28,6 +36,7 @@ rounding absorbs float-sum association differences.
 from __future__ import annotations
 
 import math
+from collections import namedtuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -133,9 +142,52 @@ def _plan_stats_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def _resolve_query_groups(emb: DataFrame, query_ids):
-    """Resolve the query vectors for the arrow serving kernels and
-    group them by vector length.  The collect here is the ONE
+def _route(impl, sized=None, n_queries=1, n_probe=1, n_cells=1, work=None):
+    """Validate a serving ``impl`` and resolve ``"auto"`` on estimated
+    pair work: ``work`` bytes when given, else Catalyst's size
+    estimate of ``sized`` x n_queries x n_probe / n_cells (driver-side
+    planning, no job).  ``"auto"`` takes the lazy relational form
+    (``"sql"``) when the estimate is known and below
+    ``_ARROW_AUTO_MIN_WORK_BYTES``, the arrow kernel otherwise -- an
+    unknown size is assumed at-scale."""
+    if impl not in ("auto", "arrow", "sql"):
+        raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
+    if impl != "auto":
+        return impl
+    if sized is not None:
+        sz = _plan_stats_bytes(sized)
+        work = (
+            None
+            if sz is None
+            else sz * max(1, n_queries) * max(1, int(n_probe)) / max(1, int(n_cells))
+        )
+    return "sql" if work is not None and work < _ARROW_AUTO_MIN_WORK_BYTES else "arrow"
+
+
+def _rank(df: DataFrame, score: str, k: int, descending: bool) -> DataFrame:
+    """The exact per-query rank every top-k leg ends in, relational or
+    arrow: row_number per qid over (``score``, vec_id asc), the first
+    ``k`` rows, as (qid, rank, vec_id, score) with rank 0-based."""
+    order = F.col(score).desc() if descending else F.col(score).asc()
+    w = Window.partitionBy("qid").orderBy(order, F.col("vec_id").asc())
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", (F.col("rank") - 1).cast("long").alias("rank"), "vec_id", score)
+    )
+
+
+# One query group of ``_row_blocks``: the queries ``qids`` that score
+# rows whose list column has length ``d``; ``allowed`` = (keys, mask)
+# when rows block by a key column (query j scores the rows of key
+# keys[i] iff mask[i, j]; keys sorted), else None; ``p`` the leg
+# scorer's payload.
+_QGroup = namedtuple("_QGroup", "d qids allowed p")
+
+
+def _resolve_query_groups(emb: DataFrame, query_ids, probes=None):
+    """Resolve the query vectors of the cosine-family arrow legs into
+    ``_QGroup``s by vector length.  The collect here is the ONE
     sanctioned eager step on the arrow path (|query_ids| rows, whole
     vectors, never the corpus) and runs at plan-build time -- the
     documented laziness exception, pinned by test_plans.py
@@ -149,10 +201,12 @@ def _resolve_query_groups(emb: DataFrame, query_ids):
     - a ragged query set is served per LENGTH GROUP: the SQL per-pair
       length predicate (zip_with pads the shorter side -> NULL fold)
       keeps only corpus rows of the query's own length, which is the
-      kernel's per-group ``len == d`` filter.
+      skeleton's per-group ``len == d`` filter.
 
-    Returns [(d, qids, Q, qnrm), ...] or None when no query resolves
-    to a usable vector (both forms then return an empty relation)."""
+    ``probes`` (the collected (qid, cell) probe rows of an IVF leg)
+    gives every group its ``_probe_mask``.  Payload: (Q, qnrm).
+    Returns None when no query resolves to a usable vector or no cell
+    is probed (both forms then return an empty relation)."""
     import numpy as np
 
     qrows = (
@@ -176,188 +230,199 @@ def _resolve_query_groups(emb: DataFrame, query_ids):
         with np.errstate(all="ignore"):  # inf/NaN payloads mask later
             for j in range(d):
                 qnrm += Q[:, j] * Q[:, j]
-            groups.append((d, qids, Q, np.sqrt(qnrm)))
+            qnrm = np.sqrt(qnrm)
+        allowed = None if probes is None else _probe_mask(probes, qids)
+        if allowed is not None and allowed[0].size == 0:
+            return None
+        groups.append(_QGroup(d, qids, allowed, (Q, qnrm)))
     return groups
 
 
-def _cosine_topk_arrow(emb: DataFrame, query_ids: list[int], k: int):
-    """Arrow scan for ``cosine_topk``: one mapInPandas-free
-    mapInArrow pass emits, per query, every per-batch row whose
-    cosine reaches the batch's k-th largest; the caller's window then
-    ranks the metadata-sized union.  Returns None only when NO query
-    id resolves to a usable vector (both forms are then empty).
+def _row_blocks(vec_col, groups, score, key=None, cols=(), dtype="float64"):
+    """The batch walk every arrow top-k leg shares: a function of one
+    Arrow batch yielding (ids, score, ok, qids, qsel) blocks.
 
-    Exactness contract (what a plain GEMM port would get wrong):
-    - the norm accumulates SEQUENTIALLY over elements j=0..d-1 in
-      float64 (the SQL aggregate's left-fold order); the (n, nq) dot
-      runs as a BLAS GEMM whose entries are PROVEN to round-6
-      identically to that same left-fold -- entries within the
-      summation-error radius of a half-decimal boundary are
-      recomputed through the exact sequential fold
-      (``_gemm_seqfold_cos``), so the SQL and arrow forms cannot
-      disagree at rounding boundaries;
-    - exclusions replicate the SQL guard exactly: zero denominator
-      (SQL x/0.0 -> NULL), NaN cos (NaN payloads), self-match, NULL
-      or wrong-length embeddings (SQL zip_with pads -> NULL fold);
-    - pruning keeps every row with cos >= the batch's k-th largest
-      (ties INCLUDED, ``_batch_topk_rows``), a provable superset of
-      the global top-k, so the window's (cos desc, vec_id asc) order
-      decides ranks exactly -- no id packing, hence no id-range
-      bound and no duplicate-vec_id caveat (both were round-11
-      limitations of the packed-key pruning)."""
+    Per ``_QGroup`` it keeps the rows whose ``vec_col`` list is
+    non-NULL with length ``d`` (the SQL forms' zip_with pads a length
+    mismatch to a NULL fold, so those rows never score) and
+    flattens them into an (n, d) ``dtype`` matrix X.  With ``key``
+    None every query of the group scores every row (qsel =
+    slice(None)); otherwise the rows block by their ``key`` column
+    and each block scores only the queries ``allowed`` lets in --
+    compute equals the relational candidate pair count (the IVF legs
+    block by probed cell; the rerank by qid with an identity mask).
+    ``score(g, qsel, ids, X, extra)`` -> (score, ok), both
+    (rows, |qsel|), where ``extra`` holds the block's ``cols`` as
+    float64 vectors."""
     import numpy as np
 
+    def walk(batch):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if batch.num_rows == 0:
+            return
+        names = batch.schema.names
+
+        def lists(b):
+            c = b.column(names.index(vec_col))
+            return c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c
+
+        col = lists(batch)
+        lens = pc.fill_null(pc.list_value_length(col), -1)
+        valid = pc.is_valid(col)
+        for g in groups:
+            keep = pc.and_(valid, pc.equal(lens, g.d))
+            if pc.all(keep).as_py():
+                sub, scol = batch, col
+            else:
+                sub = batch.filter(keep)
+                if sub.num_rows == 0:
+                    continue
+                scol = lists(sub)
+            n = sub.num_rows
+            ids = np.asarray(sub.column(names.index("vec_id")), dtype="int64")
+            X = np.asarray(scol.flatten(), dtype=dtype).reshape(n, g.d)
+            extra = {
+                c: np.asarray(sub.column(names.index(c)), dtype="float64")
+                for c in cols
+            }
+            if key is None:
+                s, ok = score(g, slice(None), ids, X, extra)
+                yield ids, s, ok, g.qids, slice(None)
+                continue
+            kv = np.asarray(sub.column(names.index(key)), dtype="int64")
+            order = np.argsort(kv, kind="stable")
+            sk = kv[order]
+            starts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
+            keys, mask = g.allowed
+            for s0, e0 in zip(starts, np.r_[starts[1:], sk.size]):
+                i = np.searchsorted(keys, sk[s0])
+                if i == keys.size or keys[i] != sk[s0]:
+                    continue
+                qsel = np.flatnonzero(mask[i])
+                if qsel.size == 0:
+                    continue
+                rows = order[s0:e0]
+                s, ok = score(
+                    g, qsel, ids[rows], X[rows], {c: v[rows] for c, v in extra.items()}
+                )
+                yield ids[rows], s, ok, g.qids, qsel
+
+    return walk
+
+
+def _batch_keep(ids, score, ok, qids, kk, descending):
+    """Per-batch candidate pruning: keep, per query, every surviving
+    row whose score reaches the batch's kk-th best (ties INCLUDED).
+    Any dropped row has >= kk rows in its own batch ranked strictly
+    above it on score alone, so it cannot enter the global top-kk --
+    the kept set is a provable superset and the final window's
+    (score, vec_id asc) order decides the exact ranks: no id packing,
+    hence no id-range bound and no duplicate-vec_id caveat.  Tie rows
+    at the threshold cost only a handful of extra candidate rows
+    (scores are round-6 quantized, so exact ties are common but
+    k-bounded in practice).  Returns [qid, vec_id, score] pyarrow
+    arrays or None when no row survives."""
+    import numpy as np
+    import pyarrow as pa
+
+    out_q, out_v, out_s = [], [], []
+    for c in range(len(qids)):
+        idx = np.flatnonzero(ok[:, c])
+        if idx.size == 0:
+            continue
+        sc = score[idx, c]
+        if idx.size > kk:
+            if descending:
+                idx = idx[sc >= np.partition(sc, idx.size - kk)[idx.size - kk]]
+            else:
+                idx = idx[sc <= np.partition(sc, kk - 1)[kk - 1]]
+        out_q.append(np.full(idx.size, qids[c], dtype="int64"))
+        out_v.append(ids[idx])
+        out_s.append(score[idx, c])
+    if not out_q:
+        return None
+    return [pa.array(np.concatenate(a)) for a in (out_q, out_v, out_s)]
+
+
+def _arrow_topk(src: DataFrame, walk, k: int, descending: bool, name: str, thr=None):
+    """THE arrow top-k skeleton (SURVEY.md section 2.5: per-chunk
+    top-k, then a merge): one mapInArrow pass over ``src`` walks each
+    batch through ``walk`` (``_row_blocks``), prunes every block to
+    its per-query ties-included top-``k`` (``_batch_keep``; best =
+    largest when ``descending``) and the exact rank window
+    (``_rank``) orders the metadata-sized union into (qid, rank,
+    vec_id, ``name``).  ``thr`` (aligned with the one query group's
+    qids) additionally gates an ascending score on an exact
+    per-query bound (``_adc_thresholds``): a row above the global
+    k-th score cannot rank, and ``<=`` keeps the boundary ties."""
+    kk = int(k)
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            for ids, s, ok, qids, qsel in walk(batch):
+                if thr is not None:
+                    ok = ok & (s <= thr[qsel][None, :])
+                arrays = _batch_keep(ids, s, ok, qids[qsel], kk, descending)
+                if arrays is not None:
+                    yield pa.RecordBatch.from_arrays(
+                        arrays, names=["qid", "vec_id", name]
+                    )
+
+    cand = src.mapInArrow(kernel, schema=f"qid long, vec_id long, {name} double")
+    return _rank(cand, name, k, descending)
+
+
+def _cos_score(g, qsel, ids, X, extra):
+    """The cosine scorer of the cosine / IVF / SQ8 legs: the pre-round
+    (rows x queries) cosine runs as a BLAS GEMM with the
+    ``_gemm_seqfold_cos`` boundary fixup (provably round-6-equal to
+    the SQL left-fold element order), then round6 + 0.0.  A raw
+    embedding row folds its norm SEQUENTIALLY over j=0..d-1 in
+    float64 (the SQL aggregate's order); an SQ8 row (``extra`` holds
+    its ``scale`` and index-stored dequantized ``nrm``) scales the
+    integer-code dot instead.  ``ok`` replicates the SQL guard: zero
+    denominator (SQL x/0.0 -> NULL), NaN cosine (NaN payloads),
+    self-match."""
+    import numpy as np
+
+    Q, qnrm = g.p
+    with np.errstate(all="ignore"):  # NaN/Inf masked below
+        if extra:
+            nrm, scale = extra["nrm"], extra["scale"]
+        else:
+            nrm, scale = np.zeros(X.shape[0]), None
+            for j in range(X.shape[1]):
+                xj = X[:, j]
+                nrm += xj * xj
+            nrm = np.sqrt(nrm)
+        denom = nrm[:, None] * qnrm[qsel][None, :]
+        cos = _spark_round6_signed(_gemm_seqfold_cos(X, Q[qsel], denom, scale)) + 0.0
+        ok = (
+            (denom != 0.0)
+            & ~np.isnan(cos)
+            & (ids[:, None] != g.qids[qsel][None, :])
+        )
+    return cos, ok
+
+
+def _cosine_topk_arrow(emb: DataFrame, query_ids: list[int], k: int):
+    """Arrow leg of ``cosine_topk``: ``_arrow_topk`` over the widened
+    (vec_id, embedding) corpus with the ``_cos_score`` scorer.
+    Returns None only when NO query id resolves to a usable vector
+    (both forms are then empty)."""
     from ..sources.ingest import widen_partitions
 
     groups = _resolve_query_groups(emb, query_ids)
     if groups is None:
         return None
-    kk = int(k)
-
-    def kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            col = batch.column(1)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            # rows the SQL form would exclude anyway: NULL embedding
-            # or length != the group's d (zip_with pads -> NULL fold)
-            lens = pc.fill_null(pc.list_value_length(col), -1)
-            valid = pc.is_valid(col)
-            for d, qids, Q, qnrm in groups:
-                keep = pc.and_(valid, pc.equal(lens, d))
-                if not pc.all(keep).as_py():
-                    sub = batch.filter(keep)
-                    if sub.num_rows == 0:
-                        continue
-                    scol = sub.column(1)
-                    if isinstance(scol, pa.ChunkedArray):
-                        scol = scol.combine_chunks()
-                else:
-                    sub, scol = batch, col
-                n = sub.num_rows
-                nq = len(qids)
-                ids = np.asarray(sub.column(0), dtype="int64")
-                X = np.asarray(scol.flatten(), dtype="float64").reshape(n, d)
-                with np.errstate(all="ignore"):  # NaN/Inf masked below
-                    # the per-row norm stays a sequential left-fold
-                    # (SQL fold order; d passes over an (n,) array
-                    # are cache-resident and cheap) -- the (n, nq)
-                    # dot goes through the BLAS + boundary-fixup
-                    # helper, bit-equal after round6
-                    nrm = np.zeros(n)
-                    for j in range(d):
-                        xj = X[:, j]
-                        nrm += xj * xj
-                    nrm = np.sqrt(nrm)
-                    denom = nrm[:, None] * qnrm[None, :]
-                    x = _gemm_seqfold_cos(X, Q, denom)
-                    cos = _spark_round6_signed(x) + 0.0
-                    ok = (
-                        (denom != 0.0)
-                        & ~np.isnan(cos)
-                        & (ids[:, None] != qids[None, :])
-                    )
-                arrays = _batch_topk_rows(ids, cos, ok, qids, kk)
-                if arrays is None:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=["qid", "vec_id", "cos"]
-                )
-
     src = widen_partitions(emb, "vec_id").select(
         F.col("vec_id").cast("long").alias("vec_id"), "embedding"
     )
-    cand = src.mapInArrow(kernel, schema="qid long, vec_id long, cos double")
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid",
-            (F.col("rank") - 1).cast("long").alias("rank"),
-            "vec_id",
-            "cos",
-        )
-    )
-
-
-def _batch_topk_rows(ids, cos, ok, qids, kk):
-    """Per-batch candidate pruning shared by the arrow scan kernels:
-    keep, per query, every surviving row whose cosine reaches the
-    batch's k-th largest (ties INCLUDED).  Any dropped row has >= k
-    rows in its own batch ranked strictly above it on cos alone, so
-    it cannot enter the global top-k -- the kept set is a provable
-    superset and the caller's (cos desc, vec_id asc) window decides
-    the exact ranks.  This replaces the round-11 int64-packed
-    (cos, vec_id) key: no 2**40 id bound, no duplicate-vec_id
-    caveat, no |cos|-overflow special case, and tie rows at the
-    threshold cost only a handful of extra candidate rows (cos is
-    round-6 quantized, so exact ties are common but k-bounded in
-    practice).  Returns [qid, vec_id, cos] pyarrow arrays or None
-    when no row survives."""
-    import numpy as np
-    import pyarrow as pa
-
-    nq = len(qids)
-    out_q, out_v, out_c = [], [], []
-    for c in range(nq):
-        idx = np.flatnonzero(ok[:, c])
-        if idx.size == 0:
-            continue
-        cc = cos[idx, c]
-        if idx.size > kk:
-            thr = np.partition(cc, idx.size - kk)[idx.size - kk]
-            keep = idx[cc >= thr]
-        else:
-            keep = idx
-        out_q.append(np.full(keep.size, qids[c], dtype="int64"))
-        out_v.append(ids[keep])
-        out_c.append(cos[keep, c])
-    if not out_q:
-        return None
-    return [
-        pa.array(np.concatenate(out_q)),
-        pa.array(np.concatenate(out_v)),
-        pa.array(np.concatenate(out_c)),
-    ]
-
-
-def _batch_bottomk_rows(ids, dist, ok, qids, kk):
-    """``_batch_topk_rows`` mirrored for ASCENDING rank keys (ADC
-    distances): keep, per query, every surviving row whose distance
-    is <= the batch's k-th smallest (ties included) -- the same
-    provable-superset argument with the order flipped.  Returns
-    [qid, vec_id, dist] pyarrow arrays or None."""
-    import numpy as np
-    import pyarrow as pa
-
-    nq = len(qids)
-    out_q, out_v, out_c = [], [], []
-    for c in range(nq):
-        idx = np.flatnonzero(ok[:, c])
-        if idx.size == 0:
-            continue
-        cc = dist[idx, c]
-        if idx.size > kk:
-            thr = np.partition(cc, kk - 1)[kk - 1]
-            keep = idx[cc <= thr]
-        else:
-            keep = idx
-        out_q.append(np.full(keep.size, qids[c], dtype="int64"))
-        out_v.append(ids[keep])
-        out_c.append(dist[keep, c])
-    if not out_q:
-        return None
-    return [
-        pa.array(np.concatenate(out_q)),
-        pa.array(np.concatenate(out_v)),
-        pa.array(np.concatenate(out_c)),
-    ]
+    return _arrow_topk(src, _row_blocks("embedding", groups, _cos_score), k, True, "cos")
 
 
 def _spark_round6_signed(a: "np.ndarray") -> "np.ndarray":
@@ -484,17 +549,7 @@ def cosine_topk(
     re-evaluates per predicate.  Measured round 12 (SCALE.md
     "arrow-vs-sql crossover"): arrow 2.4-5.9x from ~20 MB-query of
     work, 28x at 30k x 64q, 110x at 100k x 64q, 34x at 200k x 64q."""
-    if impl not in ("auto", "arrow", "sql"):
-        raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
-    if impl == "auto":
-        sz = _plan_stats_bytes(emb)
-        impl = (
-            "sql"
-            if sz is not None
-            and sz * max(1, len(query_ids)) < _ARROW_AUTO_MIN_WORK_BYTES
-            else "arrow"
-        )
-    if impl == "arrow":
+    if _route(impl, emb, len(query_ids)) == "arrow":
         out = _cosine_topk_arrow(emb, query_ids, k)
         if out is not None:
             return out
@@ -543,17 +598,7 @@ def cosine_topk(
         # would rank first).  test_zero_norm.py pins both semantics.
         .filter(F.col("cos").isNotNull() & ~F.isnan("cos"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        cos.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid",
-            (F.col("rank") - 1).cast("long").alias("rank"),
-            "vec_id",
-            "cos",
-        )
-    )
+    return _rank(cos, "cos", k, True)
 
 
 def lsh_sign_bucket(emb: DataFrame, n_planes: int = 8) -> DataFrame:
@@ -675,51 +720,48 @@ def ivf_assign(
     emb: DataFrame, n_cells: int = 4, cents: DataFrame | None = None
 ) -> DataFrame:
     """IVF coarse quantization: assign each vector to its nearest
-    centroid by cosine (ties -> smaller cell id).  The default
-    codebook is the first ``n_cells`` vectors (a deterministic
-    stand-in the oracles replay); pass ``cents`` -- a trained (cell,
-    cemb) codebook, e.g. from ``kmeans_fit`` -- to cluster on it
-    instead.  Returns (vec_id, cell).  Cell ids must lie in
-    [0, 2^20): the argmax packs the cell into the low 20 bits of a
-    BIGINT key (``_argmax_cos_packed_sql``) and the query raises
-    outside that range.
+    centroid by cosine (ties -> smaller cell id): (vec_id, cell), one
+    row per input row.  The default codebook is the first ``n_cells``
+    vectors (a deterministic stand-in the oracles replay); pass
+    ``cents`` -- a trained (cell, cemb) codebook, e.g. from
+    ``kmeans_fit`` -- to cluster on it instead.  Any BIGINT cell id
+    works: nothing is packed or capped.
 
-    Scale shape: the centroid side is tiny and broadcast (whole
-    arrays); the corpus is never exploded -- each dot product folds
-    in-row with zip_with + aggregate, and the nearest-cell argmax is a
-    partial-aggregated max over the packed key.  The corpus is never
-    shuffled by pair and never broadcast."""
-    corpus = emb.select("vec_id", "embedding", _norm_col().alias("nrm"))
-    cents = _codebook(emb, n_cells, cents)
-    dot = F.aggregate(
-        F.zip_with(
-            "embedding", "cemb", lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = corpus.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cell",
-        # 6-decimal rounding before the argmax so assignment boundaries
-        # replay bit-for-bit cross-engine (fold-order ulps would
-        # otherwise flip near-ties between centroids; same policy as
-        # kmeans_assign)
-        F.round(dot / (F.col("nrm") * F.col("cnrm")), 6).alias("c"),
-    )
-    # argmax with deterministic ties (higher cosine, then smaller
-    # cell) through the guarded packed form -- max(packed) is an
-    # ordinary long max, so the argmax hash-aggregates instead of
-    # falling to SortAggregate (optimization round 14; NULL/NaN/Inf
-    # ordering engine-probed and replicated exactly, zero-norm parity
-    # pinned by tests)
+    The codebook is model-sized and collected once (<= n_cells rows,
+    the same bounded collect ``kmeans_assign`` makes); the pick is
+    ``_nearest_sql``'s in-row shape mirrored for the argmax --
+    ``greatest`` over one named_struct('c', round(cos, 6) + 0.0D,
+    'n', ~cell) per literal centroid.  Spark orders structs field by
+    field with NULL < -Inf < finite < +Inf < NaN (engine-checked over
+    every pair of NULL, NaN, +-Inf, +-1, +-0), so a NULL cosine (a
+    zero-norm side: x / 0.0 is NULL) loses to every other, and
+    ``~cell`` (bitwise NOT: reverses the BIGINT order with no
+    overflow) sends ties to the smaller cell -- ``max_by(cell,
+    struct(c, -cell))`` exactly.  Cosines round to 6 decimals BEFORE
+    the pick so assignment boundaries replay bit-for-bit
+    cross-engine (fold-order ulps would otherwise flip near-ties
+    between centroids; same policy as kmeans_assign).
+
+    Scale shape: one narrow projection over the corpus -- each dot
+    product folds in-row with zip_with + aggregate against a literal
+    centroid and the vector's norm folds once: no join, no
+    aggregate, no exchange, no broadcast; the plan holds O(codebook)
+    literals."""
+    book = _codebook(emb, n_cells, cents).collect()  # bounded-model-collect
+    if not book:
+        return emb.selectExpr("vec_id", "CAST(NULL AS BIGINT) AS cell").where("false")
+    picks = [
+        "named_struct('c', round(aggregate(zip_with(embedding, "
+        f"{_cemb_sql(r['cemb'])}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        f"0.0D, (acc, x) -> acc + x) / (nrm * {_double_sql(r['cnrm'])}), 6) + 0.0D, "
+        f"'n', CAST({~int(r['cell'])} AS BIGINT))"
+        for r in book
+    ]
+    pick = picks[0] if len(picks) == 1 else f"greatest({', '.join(picks)})"
     return (
-        scored.selectExpr(
-            "vec_id", f"{_argmax_cos_packed_sql('cell', 'c')} AS __pp"
-        )
-        .groupBy("vec_id")
-        .agg(F.expr("max(__pp) AS __p"))
-        .selectExpr("vec_id", f"{_argmax_cell_sql('__p')} AS cell")
+        emb.select("vec_id", "embedding", _norm_col().alias("nrm"))
+        .selectExpr("vec_id", f"{pick} AS __b")
+        .selectExpr("vec_id", "~__b.n AS cell")
     )
 
 
@@ -899,174 +941,68 @@ def _probe_cells(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
     )
 
 
-def _probe_layout(probes):
-    """Collected (qid, cell) probe rows -> (qid -> probed cell set,
-    sorted union of probed cells).  Shared by every cell-blocked
-    arrow serving kernel so the probe decoding cannot drift."""
-    cells_by_qid: dict[int, set] = {}
-    for r in probes:
-        cells_by_qid.setdefault(int(r["qid"]), set()).add(int(r["cell"]))
-    union_cells = sorted({c for s in cells_by_qid.values() for c in s})
-    return cells_by_qid, union_cells
-
-
-def _allowed_matrix(cells_by_qid, union_cells, qids):
-    """(len(union_cells), len(qids)) bool: does query j probe cell
-    i?  The kernel-side gate that keeps per-cell folds restricted to
-    exactly the relational candidate pairs."""
+def _probe_mask(probes, qids):
+    """The IVF legs' ``allowed`` for ``_row_blocks``: (cells, mask)
+    with ``cells`` the sorted union of the collected (qid, cell)
+    ``probes`` and mask[i, j] true iff query qids[j] probes cells[i]
+    -- the kernel-side gate that keeps per-cell folds restricted to
+    exactly the relational candidate pairs (an unmasked full rows x
+    queries matrix measured SLOWER than the relational join at 2/16
+    probes: the mask must gate compute, not results)."""
     import numpy as np
 
-    pos = {c: i for i, c in enumerate(union_cells)}
-    allowed = np.zeros((len(union_cells), len(qids)), dtype=bool)
-    for j, qid in enumerate(qids):
-        for c in cells_by_qid.get(int(qid), ()):
-            allowed[pos[c], j] = True
-    return allowed
+    by_q: dict[int, list] = {}
+    for r in probes:
+        by_q.setdefault(int(r["qid"]), []).append(int(r["cell"]))
+    cells = np.array(sorted({c for cs in by_q.values() for c in cs}), dtype="int64")
+    mask = np.zeros((cells.size, len(qids)), dtype=bool)
+    for j, q in enumerate(qids):
+        mask[np.searchsorted(cells, by_q.get(int(q), [])), j] = True
+    return cells, mask
+
+
+def _probed_rows(rel: DataFrame, cols, assign: DataFrame, cells) -> DataFrame:
+    """The IVF arrow legs' source: (vec_id, cell, *cols) for the rows
+    of ``rel`` in the probed ``cells``, widened.  A cell-partitioned
+    index that carries its cell (``pq_write_index`` /
+    ``sq8_write_index`` layout) takes the probe restriction as a
+    PARTITION filter on its own scan, with no join; otherwise the
+    ``cell IN (...)`` filter prunes the assignment index (partition-
+    prunable at scale) and one hash join attaches ``cols``."""
+    from ..sources.ingest import widen_partitions
+
+    cells = [int(c) for c in cells]
+    vid = F.col("vec_id").cast("long").alias("vec_id")
+    if "cell" in rel.columns:
+        src = rel.filter(F.col("cell").isin(cells)).select(
+            vid, F.col("cell").cast("long").alias("cell"), *cols
+        )
+    else:
+        src = (
+            assign.filter(F.col("cell").isin(cells))
+            .select(vid, F.col("cell").cast("long").alias("cell"))
+            .join(rel.select(vid, *cols), on="vec_id")
+        )
+    return widen_partitions(src, "vec_id")
 
 
 def _ivf_topk_arrow(
     emb: DataFrame, query_ids, k: int, assign: DataFrame, probes
 ) -> DataFrame | None:
-    """Arrow scan for ``ivf_topk``: the probed-cell restriction
-    becomes (a) a plain ``cell IN (union of probed cells)`` FILTER on
-    the assignment index (partition-prunable at scale) + one hash
-    join attaching embeddings, and (b) cell-BLOCKED folds inside the
-    same batched kernel ``cosine_topk`` uses: each cell's rows score
-    only against the queries probing that cell, so kernel compute
-    equals the relational candidate pair count and query A's rows
-    never pay for query B's cells.  ``probes`` is the
-    collected (qid, cell) probe list (|queries| x n_probe rows, the
-    same bounded class as the query-vector collect).  Cosine values,
-    exclusions, per-length query groups, and threshold pruning are
-    bit-identical to the relational form (shared helpers + fold
-    order).  Returns None when no query or no probe resolves."""
-    import numpy as np
-
-    from ..sources.ingest import widen_partitions
-
-    groups = _resolve_query_groups(emb, query_ids)
+    """Arrow leg of ``ivf_topk``: ``_arrow_topk`` with the cosine
+    scorer over the probed rows (``_probed_rows``), blocked by cell so
+    each cell's rows score only against the queries probing it.
+    ``probes`` is the collected (qid, cell) probe list (|queries| x
+    n_probe rows, the same bounded class as the query-vector
+    collect).  Returns None when no query or no probe resolves."""
+    groups = _resolve_query_groups(emb, query_ids, probes)
     if groups is None:
         return None
-    cells_by_qid, union_cells = _probe_layout(probes)
-    if not union_cells:
-        return None
-    lut_cells = np.array(union_cells, dtype="int64")
-    gq = [
-        (d, qids, Q, qnrm, _allowed_matrix(cells_by_qid, union_cells, qids))
-        for d, qids, Q, qnrm in groups
-    ]
-    kk = int(k)
-
-    def kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            ecol = batch.column(names.index("embedding"))
-            if isinstance(ecol, pa.ChunkedArray):
-                ecol = ecol.combine_chunks()
-            lens = pc.fill_null(pc.list_value_length(ecol), -1)
-            valid = pc.is_valid(ecol)
-            for d, qids, Q, qnrm, allowed in gq:
-                keep = pc.and_(valid, pc.equal(lens, d))
-                if not pc.all(keep).as_py():
-                    sub = batch.filter(keep)
-                    if sub.num_rows == 0:
-                        continue
-                    scol = sub.column(names.index("embedding"))
-                    if isinstance(scol, pa.ChunkedArray):
-                        scol = scol.combine_chunks()
-                else:
-                    sub, scol = batch, ecol
-                n = sub.num_rows
-                ids = np.asarray(
-                    sub.column(names.index("vec_id")), dtype="int64"
-                )
-                cells = np.asarray(
-                    sub.column(names.index("cell")), dtype="int64"
-                )
-                X = np.asarray(scol.flatten(), dtype="float64").reshape(n, d)
-                # block by cell so each cell's rows fold ONLY against
-                # the queries probing it -- compute equals the
-                # relational candidate pair count (an unmasked full
-                # rows x queries matrix was measured SLOWER than the
-                # relational join at 2/16 probes: the mask must gate
-                # compute, not results)
-                order = np.argsort(cells, kind="stable")
-                sc = cells[order]
-                starts = np.flatnonzero(
-                    np.r_[True, sc[1:] != sc[:-1]]
-                )
-                ends = np.r_[starts[1:], sc.size]
-                for s, e in zip(starts, ends):
-                    # rows are pre-filtered to union cells, so the
-                    # sorted lookup is exact
-                    qsel = allowed[np.searchsorted(lut_cells, sc[s]), :]
-                    qsel = np.flatnonzero(qsel)
-                    if qsel.size == 0:
-                        continue
-                    rows = order[s:e]
-                    Xc = X[rows]
-                    idsc = ids[rows]
-                    Qc = Q[qsel]
-                    qnrmc = qnrm[qsel]
-                    qidsc = qids[qsel]
-                    with np.errstate(all="ignore"):
-                        # sequential-fold norm; BLAS + boundary-fixup
-                        # dot, bit-equal after round6 (the shared
-                        # _gemm_seqfold_cos contract)
-                        nrm = np.zeros(rows.size)
-                        for j in range(d):
-                            xj = Xc[:, j]
-                            nrm += xj * xj
-                        nrm = np.sqrt(nrm)
-                        denom = nrm[:, None] * qnrmc[None, :]
-                        x = _gemm_seqfold_cos(Xc, Qc, denom)
-                        cos = _spark_round6_signed(x) + 0.0
-                        ok = (
-                            (denom != 0.0)
-                            & ~np.isnan(cos)
-                            & (idsc[:, None] != qidsc[None, :])
-                        )
-                    arrays = _batch_topk_rows(idsc, cos, ok, qidsc, kk)
-                    if arrays is None:
-                        continue
-                    yield pa.RecordBatch.from_arrays(
-                        arrays, names=["qid", "vec_id", "cos"]
-                    )
-
-    src = (
-        assign.filter(F.col("cell").isin([int(c) for c in union_cells]))
-        .select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("cell").cast("long").alias("cell"),
-        )
-        .join(
-            emb.select(
-                F.col("vec_id").cast("long").alias("vec_id"), "embedding"
-            ),
-            on="vec_id",
-        )
+    src = _probed_rows(
+        emb.select("vec_id", "embedding"), ["embedding"], assign, groups[0].allowed[0]
     )
-    cand = widen_partitions(src, "vec_id").mapInArrow(
-        kernel, schema="qid long, vec_id long, cos double"
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid",
-            (F.col("rank") - 1).cast("long").alias("rank"),
-            "vec_id",
-            "cos",
-        )
-    )
+    walk = _row_blocks("embedding", groups, _cos_score, key="cell")
+    return _arrow_topk(src, walk, k, True, "cos")
 
 
 def ivf_topk(
@@ -1121,26 +1057,10 @@ def ivf_topk(
     kernel (``_ivf_topk_arrow``, bit-identical, fuzz-pinned), which
     round-12 forensics showed is REQUIRED for the index to keep its
     advantage once brute itself went vectorized (SCALE.md)."""
-    if impl not in ("auto", "arrow", "sql"):
-        raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
+    impl = _route(impl, emb, len(query_ids), n_probe, n_cells)
     cents = _codebook(emb, n_cells, cents)
     if assign is None:
         assign = ivf_assign(emb, n_cells, cents)
-    if impl == "auto":
-        sz = _plan_stats_bytes(emb)
-        est = (
-            None
-            if sz is None
-            else sz
-            * max(1, len(query_ids))
-            * max(1, int(n_probe))
-            / max(1, int(n_cells))
-        )
-        impl = (
-            "sql"
-            if est is not None and est < _ARROW_AUTO_MIN_WORK_BYTES
-            else "arrow"
-        )
     if impl == "arrow":
         qp = emb.filter(F.col("vec_id").isin(query_ids)).select(
             F.col("vec_id").alias("qid"),
@@ -1189,17 +1109,7 @@ def ivf_topk(
         # this guard a zero-norm vector lands inside top-k with cos NULL
         .filter(F.col("cos").isNotNull() & ~F.isnan("cos"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        cos.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid",
-            (F.col("rank") - 1).cast("long").alias("rank"),
-            "vec_id",
-            "cos",
-        )
-    )
+    return _rank(cos, "cos", k, True)
 
 
 def ann_recall(
@@ -1369,49 +1279,6 @@ def semantic_dedup(
             "ccos",
             F.coalesce(F.col("__d"), F.lit(False)).alias("is_dup"),
         )
-    )
-
-
-# -- guarded hash-aggregatable cosine argmax (ivf_assign) ------------------
-# max_by(cell, struct(c, -cell)) is not hash-aggregatable (struct max
-# falls to SortAggregate: per-group sort machinery on every argmax
-# shuffle), so ivf_assign packs its ordering into one BIGINT whose
-# ordinary long max hash-aggregates.  The packing caps the cell id at
-# [0, 2^20) and raises outside it.  The squared-L2 argmins need no
-# packing: they pick in-row with ``least`` over structs
-# (``_nearest_sql``), which has no aggregate to plan.
-_ARGMAX_CELL_CAP = 1 << 20
-
-
-def _argmax_cos_packed_sql(cell: str, c: str) -> str:
-    """The packed cosine argmax key (ivf_assign):
-    max_by(cell, struct(c, -cell)) with c = round(cos, 6) -- finite in
-    [-1e6, 1e6] after scaling, or NULL / NaN / +-Inf for zero-norm
-    rows (double division by zero is Inf/NaN in the non-ANSI session).
-    Engine-probed ascending order: NULL < -Inf < finite < +Inf < NaN,
-    ties to the SMALLER cell -- packed so max(packed) replicates it:
-    inverted cell in the low 20 bits (smaller cell = larger inv),
-    +-2^61 bands for +-Inf, +-2^62 for NaN/NULL, c6 * 2^20 for finite
-    (|c6 * 2^20| <= ~2^40, strictly inside the bands).  Out-of-range
-    cells or |c6| > 2^40 raise loudly."""
-    inv = f"({_ARGMAX_CELL_CAP - 1} - {cell})"
-    c6 = f"CAST(round({c} * 1000000.0) AS BIGINT)"
-    return (
-        f"CASE WHEN {cell} < 0 OR {cell} >= {_ARGMAX_CELL_CAP} THEN "
-        f"CAST(raise_error('argmax cell id out of [0, 2^20)') AS BIGINT) "
-        f"WHEN {c} IS NULL THEN CAST({-(1 << 62)} AS BIGINT) + {inv} "
-        f"WHEN isnan({c}) THEN CAST({1 << 62} AS BIGINT) + {inv} "
-        f"WHEN {c} = double('Infinity') THEN CAST({1 << 61} AS BIGINT) + {inv} "
-        f"WHEN {c} = double('-Infinity') THEN CAST({-(1 << 61)} AS BIGINT) + {inv} "
-        f"WHEN abs({c6}) > {1 << 40} THEN "
-        f"CAST(raise_error('argmax cosine too large to pack') AS BIGINT) "
-        f"ELSE {c6} * {_ARGMAX_CELL_CAP} + {inv} END"
-    )
-
-
-def _argmax_cell_sql(p: str) -> str:
-    return (
-        f"CAST({_ARGMAX_CELL_CAP - 1} - pmod({p}, {_ARGMAX_CELL_CAP}) AS BIGINT)"
     )
 
 
@@ -2222,56 +2089,44 @@ def _adc_lut(emb: DataFrame, query_ids, cents: DataFrame, dim: int, m: int):
     return qids, lut, lutv, seen, code_vals
 
 
-def _adc_score_batch(batch, m, code_vals, lut, lutv, seen, qids):
-    """THE shared ADC scoring body for one arrow batch of packed
-    (vec_id, codes) rows: returns (ids, dist, ok) -- dist the round-6
-    subspace-sum replica, ok the full relational exclusion mask
-    (self, NaN, no matching codebook entry, all-NULL fold) -- or None
-    when nothing scoreable survives.  Shared by the serving kernel
-    and the large-shortlist threshold kernel so the fold/exclusion
-    contract cannot drift between the pass that PICKS the pruning
-    threshold and the pass that APPLIES it."""
+def _adc_score(g, qsel, ids, C, extra):
+    """The ADC scorer of the PQ legs, over an (n, m) block of int64
+    codes: returns (dist, ok) -- dist the round-6 subspace-sum
+    replica, ok the full relational exclusion mask (self, NaN, no
+    matching codebook entry, all-NULL fold).  ``g.p`` is the
+    ``_adc_lut`` layout; the threshold pass (``_adc_thresholds``) and
+    the serving pass score through this one function over the same
+    ``_row_blocks`` walk, so the pass that PICKS the pruning
+    threshold and the pass that APPLIES it price exactly the same
+    pairs on one contract."""
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
-    if batch.num_rows == 0:
-        return None
-    names = batch.schema.names
-    ccol = batch.column(names.index("codes"))
-    if isinstance(ccol, pa.ChunkedArray):
-        ccol = ccol.combine_chunks()
-    lens = pc.fill_null(pc.list_value_length(ccol), -1)
-    keep_rows = pc.and_(pc.is_valid(ccol), pc.equal(lens, m))
-    if not pc.all(keep_rows).as_py():
-        batch = batch.filter(keep_rows)
-        if batch.num_rows == 0:
-            return None
-        ccol = batch.column(names.index("codes"))
-        if isinstance(ccol, pa.ChunkedArray):
-            ccol = ccol.combine_chunks()
-    n = batch.num_rows
-    ids = np.asarray(batch.column(names.index("vec_id")), dtype="int64")
-    C = np.asarray(ccol.flatten(), dtype="int64").reshape(n, m)
-    nq = len(qids)
-    D = np.empty((n, nq))
+    lut, lutv, seen, code_vals = g.p[1:]
+    n, m = C.shape
+    qs = g.qids[qsel]
+    flat = isinstance(qsel, slice)
+    D = np.empty((n, qs.size))
+    valid_any = np.empty((n, qs.size), dtype=bool)
     matched = np.zeros(n, dtype="int64")
-    valid_any = np.empty((n, nq), dtype=bool)
     with np.errstate(all="ignore"):
-        # row-blocked accumulation: the (block, nq) working set stays
+        # row-blocked accumulation: the (block, |q|) working set stays
         # cache-resident across the m subspace passes instead of m
-        # full DRAM round-trips over an (n, nq) accumulator -- the
+        # full DRAM round-trips over an (n, |q|) accumulator -- the
         # per-element op sequence (ascending s, where/add) is
         # unchanged, so the fold stays bit-identical
         for r0 in range(0, n, _ADC_ROW_BLOCK):
             r1 = min(n, r0 + _ADC_ROW_BLOCK)
-            Db = np.zeros((r1 - r0, nq))
-            vb = np.zeros((r1 - r0, nq), dtype=bool)
+            Db = np.zeros((r1 - r0, qs.size))
+            vb = np.zeros((r1 - r0, qs.size), dtype=bool)
             for s in range(m):
                 inr, idx = _code_index(code_vals, C[r0:r1, s])
                 hit = inr & seen[s, idx]
-                v = lutv[s, idx, :] & hit[:, None]
-                Db += np.where(v, lut[s, idx, :], 0.0)
+                # one direct (rows, |qsel|) gather -- the chained
+                # [idx][:, qsel] form materializes the full (rows,
+                # |q|) slab first, paying the unprobed columns
+                at = (idx, qsel) if flat else (idx[:, None], qsel[None, :])
+                v = lutv[s][at] & hit[:, None]
+                Db += np.where(v, lut[s][at], 0.0)
                 vb |= v
                 matched[r0:r1] += hit
             D[r0:r1] = Db
@@ -2280,91 +2135,20 @@ def _adc_score_batch(batch, m, code_vals, lut, lutv, seen, qids):
         # matched>0: the relational group exists (>=1 join row);
         # valid_any: dist is not the all-NULL SUM
         ok = (
-            (ids[:, None] != qids[None, :])
+            (ids[:, None] != qs[None, :])
             & ~np.isnan(dist)
             & (matched > 0)[:, None]
             & valid_any
         )
-    return ids, dist, ok
+    return dist, ok
 
 
-def _adc_score_cell_blocks(
-    batch, m, code_vals, lut, lutv, seen, qids, lut_cells, allowed
-):
-    """Cell-blocked variant of ``_adc_score_batch`` for the composed
-    IVF x PQ path: yields (ids, dist, ok, qsel) per probed-cell block
-    of one arrow batch of (vec_id, cell, codes) rows, where ``qsel``
-    indexes the queries probing that block's cell -- the blocking
-    that keeps compute equal to the relational candidate pair count.
-    Shared by the composed serving kernel and the composed threshold
-    kernel so the two passes score on one contract."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if batch.num_rows == 0:
-        return
-    names = batch.schema.names
-    ccol = batch.column(names.index("codes"))
-    if isinstance(ccol, pa.ChunkedArray):
-        ccol = ccol.combine_chunks()
-    lens = pc.fill_null(pc.list_value_length(ccol), -1)
-    keep_rows = pc.and_(pc.is_valid(ccol), pc.equal(lens, m))
-    if not pc.all(keep_rows).as_py():
-        batch = batch.filter(keep_rows)
-        if batch.num_rows == 0:
-            return
-        ccol = batch.column(names.index("codes"))
-        if isinstance(ccol, pa.ChunkedArray):
-            ccol = ccol.combine_chunks()
-    n = batch.num_rows
-    ids = np.asarray(batch.column(names.index("vec_id")), dtype="int64")
-    cellv = np.asarray(batch.column(names.index("cell")), dtype="int64")
-    C = np.asarray(ccol.flatten(), dtype="int64").reshape(n, m)
-    order = np.argsort(cellv, kind="stable")
-    sc = cellv[order]
-    starts = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-    ends = np.r_[starts[1:], sc.size]
-    for s0, e0 in zip(starts, ends):
-        qsel = allowed[np.searchsorted(lut_cells, sc[s0]), :]
-        qsel = np.flatnonzero(qsel)
-        if qsel.size == 0:
-            continue
-        rows = order[s0:e0]
-        idsb = ids[rows]
-        Db = np.zeros((rows.size, qsel.size))
-        matched = np.zeros(rows.size, dtype="int64")
-        valid_any = np.zeros((rows.size, qsel.size), dtype=bool)
-        with np.errstate(all="ignore"):
-            qcols = qsel[None, :]
-            for s in range(m):
-                inr, idx = _code_index(code_vals, C[rows, s])
-                hit = inr & seen[s, idx]
-                # direct (rows, |qsel|) gather -- the chained
-                # [idx][:, qsel] form materializes the full (rows,
-                # |q|) slab first, paying the unprobed columns
-                v = lutv[s][idx[:, None], qcols] & hit[:, None]
-                Db += np.where(v, lut[s][idx[:, None], qcols], 0.0)
-                valid_any |= v
-                matched += hit
-            dist = _spark_round6_signed(Db) + 0.0
-            ok = (
-                (idsb[:, None] != qids[qsel][None, :])
-                & ~np.isnan(dist)
-                & (matched > 0)[:, None]
-                & valid_any
-            )
-        yield idsb, dist, ok, qsel
-
-
-def _adc_thresholds(src, score_blocks, qids, keep):
+def _adc_thresholds(src, walk, qids, keep):
     """EXACT per-query ``keep``-th smallest valid ADC distance over
     ``src`` -- the pruning bound for large-shortlist serving (round
-    13).  ``score_blocks(batch)`` yields (ids, dist, ok, qsel) blocks
-    (the flat scorer wraps ``_adc_score_batch`` with qsel = all; the
-    composed path passes ``_adc_score_cell_blocks``), so the
-    threshold pass prices EXACTLY the candidate pairs its serving
-    kernel will score.  Returns t[len(qids)] float64 (+inf when a
+    13).  ``walk`` is the serving scan's own ``_row_blocks`` walk
+    (one query group, ``qids``), so the threshold pass prices
+    EXACTLY the candidate pairs its serving kernel will score.  Returns t[len(qids)] float64 (+inf when a
     query has fewer than ``keep`` valid rows: no pruning, still
     exact).
 
@@ -2398,9 +2182,8 @@ def _adc_thresholds(src, score_blocks, qids, keep):
         bufs = [[] for _ in range(nq)]
         sizes = np.zeros(nq, dtype="int64")
         for batch in batches:
-            for ids, dist, ok, qsel in score_blocks(batch):
-                for jj in range(qsel.size):
-                    j = int(qsel[jj])
+            for _, dist, ok, _, qsel in walk(batch):
+                for jj, j in enumerate(np.arange(nq)[qsel]):
                     dj = dist[ok[:, jj], jj]
                     if dj.size == 0:
                         continue
@@ -2498,6 +2281,32 @@ def _adc_thresholds(src, score_blocks, qids, keep):
     )
 
 
+def _adc_topk(src: DataFrame, layout, m: int, keep: int, allowed=None) -> DataFrame:
+    """The PQ legs' arrow ADC scan: ``_arrow_topk`` with the
+    ``_adc_score`` scorer over ``src``'s (vec_id, [cell,] codes) rows
+    -- one query group of every resolved query over rows with m codes,
+    blocked by cell when ``allowed`` (the IVF x PQ probe mask) is
+    given.
+
+    Large shortlists (rerank-grade keep > ``_ARROW_ADC_MAX_KEEP``) are
+    where the per-batch bottom-keep stops pruning (keep ~ batch rows
+    -> the kernel emits ~corpus x queries rows) AND where the
+    relational window total-sorts (keep above Spark's group-limit
+    pushdown bound): there the scan first prices the EXACT per-query
+    keep-th distance over the same walk (``_adc_thresholds``, one
+    eager scan) and gates on it, so the serving emission is ~|q| x
+    keep rows (round 13)."""
+    groups = [_QGroup(m, layout[0], allowed, layout)]
+    key = None if allowed is None else "cell"
+    walk = _row_blocks("codes", groups, _adc_score, key=key, dtype="int64")
+    thr = (
+        _adc_thresholds(src, walk, layout[0], keep)
+        if int(keep) > _ARROW_ADC_MAX_KEEP
+        else None
+    )
+    return _arrow_topk(src, walk, keep, False, "dist", thr)
+
+
 def _pq_topk_arrow(
     packed: DataFrame,
     emb: DataFrame,
@@ -2507,16 +2316,13 @@ def _pq_topk_arrow(
     m: int,
     keep: int,
 ) -> DataFrame | None:
-    """Arrow scan for ``pq_topk``'s ADC pass (packed codes, no
+    """Arrow leg of ``pq_topk``'s ADC pass (packed codes, no
     candidates): the per-query (s, code) -> distance lookup table is
     built ON THE DRIVER from the collected query vectors and the
     collected codebook (both model-sized -- |q| x m x n_codes floats;
-    the same bounded class as every other model collect), then one
-    mapInArrow pass folds dist[row, q] = sum_s lut[q, s, code_row_s]
-    with per-batch bottom-k threshold pruning.  A rerank-grade keep
-    (> ``_ARROW_ADC_MAX_KEEP``) first runs the ``_adc_thresholds``
-    eager scan and additionally gates on the exact per-query keep-th
-    distance, keeping the emission ~|q| x keep rows (round 13).
+    the same bounded class as every other model collect), then
+    ``_adc_topk`` folds dist[row, q] = sum_s lut[q, s, code_row_s]
+    over the widened packed relation.
 
     Bit-parity with the relational form: per-(s, code) distances
     replicate ``_sqdist``'s sequential element fold then round6 +
@@ -2528,74 +2334,15 @@ def _pq_topk_arrow(
     exclusions match (self, NaN dist, all-NULL dist, rows with no
     matching codebook entry).  Returns None when no query
     resolves."""
-    import numpy as np
-
     from ..sources.ingest import widen_partitions
 
     layout = _adc_lut(emb, query_ids, cents, dim, m)
     if layout is None:
         return None
-    qids, lut, lutv, seen, code_vals = layout
-    kk = int(keep)
-
     src = widen_partitions(packed, "vec_id").select(
         F.col("vec_id").cast("long").alias("vec_id"), "codes"
     )
-    # large shortlists (rerank-grade keep) are where the per-batch
-    # bottom-keep stops pruning (keep ~ batch rows -> the kernel
-    # emits ~corpus x queries rows) AND where the relational window
-    # total-sorts (keep above Spark's group-limit pushdown bound):
-    # prune with the EXACT per-query keep-th distance instead -- one
-    # eager scan, then the serving emission is ~|q| x keep rows
-    def score_blocks(batch):
-        scored = _adc_score_batch(batch, m, code_vals, lut, lutv, seen, qids)
-        if scored is not None:
-            ids, dist, ok = scored
-            yield ids, dist, ok, np.arange(len(qids))
-
-    thr = (
-        _adc_thresholds(src, score_blocks, qids, kk)
-        if kk > _ARROW_ADC_MAX_KEEP
-        else None
-    )
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            scored = _adc_score_batch(
-                batch, m, code_vals, lut, lutv, seen, qids
-            )
-            if scored is None:
-                continue
-            ids, dist, ok = scored
-            if thr is not None:
-                # rows above the exact global keep-th distance cannot
-                # be in the bottom-keep (>= keep rows sort strictly
-                # below them on dist alone); <= keeps boundary ties,
-                # the window's (dist, vec_id) order then cuts exactly
-                ok = ok & (dist <= thr[None, :])
-            arrays = _batch_bottomk_rows(ids, dist, ok, qids, kk)
-            if arrays is None:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=["qid", "vec_id", "dist"]
-            )
-
-    cand = src.mapInArrow(kernel, schema="qid long, vec_id long, dist double")
-    w = Window.partitionBy("qid").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= keep)
-        .select(
-            "qid",
-            (F.col("rank") - 1).cast("long").alias("rank"),
-            "vec_id",
-            "dist",
-        )
-    )
+    return _adc_topk(src, layout, m, keep)
 
 
 def pq_topk(
@@ -2694,8 +2441,6 @@ def pq_topk(
         raise ValueError(
             f"rerank must be >= 1, 'auto', or None for pure ADC, got {rerank!r}"
         )
-    if impl not in ("auto", "arrow", "sql"):
-        raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
     if impl == "arrow" and candidates is not None:
         # same rule as long-form codes: a caller forcing the kernel
         # path gets a loud error, never a silent plan change
@@ -2707,29 +2452,16 @@ def pq_topk(
     if codes is None:
         codes = pq_encode(emb, cents, dim, m)
     packed = codes if "codes" in codes.columns else None
+    if impl == "arrow" and packed is None:
+        raise ValueError(
+            "pq_topk impl='arrow' needs the PACKED codes layout "
+            "(pq_pack output); long-form codes run relationally"
+        )
     keep = k if rerank is None else k * rerank
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
     adc = None
-    if candidates is None and impl != "sql":
-        if packed is None:
-            if impl == "arrow":
-                raise ValueError(
-                    "pq_topk impl='arrow' needs the PACKED codes layout "
-                    "(pq_pack output); long-form codes run relationally"
-                )
-        else:
-            use = impl == "arrow"
-            if impl == "auto":
-                sz = _plan_stats_bytes(packed)
-                use = not (
-                    sz is not None
-                    and sz * max(1, len(query_ids))
-                    < _ARROW_AUTO_MIN_WORK_BYTES
-                )
-            if use:
-                adc = _pq_topk_arrow(
-                    packed, emb, query_ids, cents, dim, m, keep
-                )
+    scan = packed if candidates is None else None  # the arrow-served scan
+    if _route(impl, scan, len(query_ids)) == "arrow" and scan is not None:
+        adc = _pq_topk_arrow(packed, emb, query_ids, cents, dim, m, keep)
     if adc is None:
         if "codes" in codes.columns:  # packed layout: unpack in-row
             codes = codes.select(
@@ -2772,16 +2504,7 @@ def pq_topk(
             # ``_adc_lut``'s validity mask.
             .filter(F.col("dist").isNotNull() & ~F.isnan("dist"))
         )
-        adc = (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= keep)
-            .select(
-                "qid",
-                (F.col("rank") - 1).cast("long").alias("rank"),
-                "vec_id",
-                "dist",
-            )
-        )
+        adc = _rank(scored, "dist", keep, False)
     if rerank is None:
         return adc
     return _exact_rerank(
@@ -2789,32 +2512,46 @@ def pq_topk(
     )
 
 
+def _l2_score(g, qsel, ids, X, extra):
+    """The exact squared-L2 scorer of the rerank leg: per pair,
+    (x_j - q_j)^2 accumulates SEQUENTIALLY over j=0..d-1 in float64
+    -- ``_sqdist``'s left-fold order (``np.cumsum`` is a strict left
+    fold) -- then round6 + 0.0.  ``ok`` drops NaN distances: NaN
+    payloads, and NULL elements on either side (NULL poisons the SQL
+    fold; they ride as NaN here).  No self-exclusion, exactly like
+    the relational form: the ADC pass already excluded self."""
+    import numpy as np
+
+    with np.errstate(all="ignore"):
+        diff = X[:, None, :] - g.p[qsel][None, :, :]
+        sq = diff * diff
+        acc = np.cumsum(sq, axis=2)[:, :, -1] if X.shape[1] else np.zeros(sq.shape[:2])
+        dist = _spark_round6_signed(acc) + 0.0
+    return dist, ~np.isnan(dist)
+
+
 def _exact_rerank_arrow(
     emb: DataFrame, query_ids, adc: DataFrame, k: int
 ) -> DataFrame | None:
     """Vectorized scoring pass for ``_exact_rerank``: the SAME
     broadcast-shortlist candidates join (the join was never the
-    problem), but the per-pair squared-L2 fold runs as one mapInArrow
-    NumPy pass instead of the interpreted ``zip_with``/``aggregate``
-    lambda -- the last interpreted hot loop in the serving tier
-    (round-12 crossover measured that expression class 2.4-110x
-    slower than the kernel form; at rerank shortlists of |q| x 10^4
-    rows the fold dominated the whole query).
+    problem), but the per-pair squared-L2 fold runs through
+    ``_arrow_topk`` with the ``_l2_score`` scorer instead of the
+    interpreted ``zip_with``/``aggregate`` lambda (round-12 crossover
+    measured that expression class 2.4-110x slower than the kernel
+    form; at rerank shortlists of |q| x 10^4 rows the fold dominated
+    the whole query).  The candidate rows block by qid with an
+    identity mask, so each row scores only against its own query.
 
-    Bit-parity with the relational form (the shared round-6
-    contract): per pair, (x_j - q_j)^2 accumulates SEQUENTIALLY over
-    j=0..d-1 in float64 -- ``_sqdist``'s exact left-fold order --
-    then round6 + 0.0.  Exclusions replicate the SQL filter: a NULL
-    or wrong-length corpus embedding (zip_with pads -> NULL fold), a
-    NULL element on either side (NULL product poisons the fold; rides
-    as NaN here, excluded like the NULL it replicates), NaN payloads.
-    A NULL query embedding serves no rows (its inner-join rows all
-    fold NULL); an EMPTY query scores only empty corpus rows (zero
-    elements fold to the init 0.0 -- a real distance), which the d=0
-    group preserves.  No self-exclusion, exactly like the relational
-    form: the ADC pass already excluded self, so the shortlist never
-    carries it.  Returns None when no query resolves (the relational
-    form then serves the provably-empty plan)."""
+    Query resolution keeps the relational semantics: a NULL query
+    embedding serves no rows (its inner-join rows all fold NULL); an
+    EMPTY query scores only empty corpus rows (zero elements fold to
+    the init 0.0 -- a real distance), which its d=0 group preserves;
+    NULL query elements ride as NaN.  Duplicate query vec_ids return
+    None (the relational join scores every duplicate row; that
+    multi-row semantics is served there), as does a query set with
+    no resolvable vector (the relational form then serves the
+    provably-empty plan)."""
     import numpy as np
 
     from ..sources.ingest import widen_partitions
@@ -2825,8 +2562,6 @@ def _exact_rerank_arrow(
         .collect()  # bounded-model-collect: |query_ids| query vectors
     )
     if len({int(r["qid"]) for r in qrows}) < len(qrows):
-        # duplicate query vec_ids: the relational join scores every
-        # duplicate row; serve that exact multi-row semantics there
         return None
     by_len: dict[int, list] = {}
     for r in qrows:
@@ -2838,110 +2573,25 @@ def _exact_rerank_arrow(
         return None
     groups = []
     for d, pairs in sorted(by_len.items()):
-        pairs.sort()  # qid-ascending for searchsorted membership
+        pairs.sort()  # qid-ascending: the identity mask's sorted keys
         qg = np.array([p[0] for p in pairs], dtype="int64")
-        # None ELEMENTS ride as NaN: the SQL NULL product poisons the
-        # whole fold exactly like NaN does, and both forms exclude
         Qg = np.array(
             [[np.nan if x is None else float(x) for x in p[1]] for p in pairs],
             dtype="float64",
         ).reshape(len(pairs), d)
-        groups.append((d, qg, Qg))
-    kk = int(k)
-
-    def kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            ecol = batch.column(names.index("embedding"))
-            if isinstance(ecol, pa.ChunkedArray):
-                ecol = ecol.combine_chunks()
-            lens = np.asarray(
-                pc.fill_null(pc.list_value_length(ecol), -1), dtype="int64"
-            )
-            evalid = np.asarray(pc.is_valid(ecol), dtype=bool)
-            qv_all = np.asarray(batch.column(names.index("qid")), dtype="int64")
-            for d, qg, Qg in groups:
-                pos = np.searchsorted(qg, qv_all)
-                posc = np.clip(pos, 0, qg.size - 1)
-                inq = (pos < qg.size) & (qg[posc] == qv_all)
-                mask = evalid & (lens == d) & inq
-                if not mask.any():
-                    continue
-                sub = batch.filter(pa.array(mask))
-                scol = sub.column(names.index("embedding"))
-                if isinstance(scol, pa.ChunkedArray):
-                    scol = scol.combine_chunks()
-                n = sub.num_rows
-                ids = np.asarray(
-                    sub.column(names.index("vec_id")), dtype="int64"
-                )
-                qv = qv_all[mask]
-                Qr = Qg[np.clip(np.searchsorted(qg, qv), 0, qg.size - 1)]
-                X = np.asarray(scol.flatten(), dtype="float64").reshape(n, d)
-                with np.errstate(all="ignore"):
-                    # sequential left-fold accumulation, SQL fold order
-                    acc = np.zeros(n)
-                    for j in range(d):
-                        diff = X[:, j] - Qr[:, j]
-                        acc += diff * diff
-                    dist = _spark_round6_signed(acc) + 0.0
-                ok = ~np.isnan(dist)
-                if not ok.any():
-                    continue
-                # per-batch per-query bottom-k prune (ties included):
-                # a dropped row has >= k batch rows strictly below it
-                # on dist alone -- the kept set is a provable superset
-                # of the global top-k, same argument as the scan
-                # kernels' _batch_bottomk_rows
-                rows = np.flatnonzero(ok)
-                order = rows[np.argsort(qv[rows], kind="stable")]
-                sq = qv[order]
-                starts = np.flatnonzero(np.r_[True, sq[1:] != sq[:-1]])
-                ends = np.r_[starts[1:], sq.size]
-                out_q, out_v, out_d = [], [], []
-                for s0, e0 in zip(starts, ends):
-                    g = order[s0:e0]
-                    dd = dist[g]
-                    if g.size > kk:
-                        thr = np.partition(dd, kk - 1)[kk - 1]
-                        g = g[dd <= thr]
-                    out_q.append(qv[g])
-                    out_v.append(ids[g])
-                    out_d.append(dist[g])
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_q)),
-                        pa.array(np.concatenate(out_v)),
-                        pa.array(np.concatenate(out_d)),
-                    ],
-                    names=["qid", "vec_id", "dist"],
-                )
-
-    short = adc.select("qid", "vec_id")
-    cand = (
+        groups.append(_QGroup(d, qg, (qg, np.eye(qg.size, dtype=bool)), Qg))
+    short = adc.select(
+        F.col("qid").cast("long").alias("qid"),
+        F.col("vec_id").cast("long").alias("vec_id"),
+    )
+    src = (
         widen_partitions(emb, "vec_id")
         .select(F.col("vec_id").cast("long").alias("vec_id"), "embedding")
-        .join(F.broadcast(short.select(F.col("qid").cast("long").alias("qid"),
-                                       F.col("vec_id").cast("long").alias("vec_id"))),
-              on="vec_id")
+        .join(F.broadcast(short), on="vec_id")
         .select("qid", "vec_id", "embedding")
     )
-    rescored = cand.mapInArrow(
-        kernel, schema="qid long, vec_id long, dist double"
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", (F.col("rank") - 1).cast("long").alias("rank"), "vec_id", "dist")
-    )
+    walk = _row_blocks("embedding", groups, _l2_score, key="qid")
+    return _arrow_topk(src, walk, k, False, "dist")
 
 
 def _exact_rerank(
@@ -2969,18 +2619,8 @@ def _exact_rerank(
     spent 59 s vs brute 34 s), and the rerank kernel's emission IS
     pruned to ~k
     rows per query per batch."""
-    if impl == "auto":
-        est = (
-            None
-            if keep is None or dim is None
-            else len(list(query_ids)) * int(keep) * int(dim) * 8
-        )
-        impl = (
-            "sql"
-            if est is not None and est < _ARROW_AUTO_MIN_WORK_BYTES
-            else "arrow"
-        )
-    if impl == "arrow":
+    work = None if keep is None or dim is None else len(list(query_ids)) * int(keep) * int(dim) * 8
+    if _route(impl, work=work) == "arrow":
         out = _exact_rerank_arrow(emb, query_ids, adc, k)
         if out is not None:
             return out
@@ -3003,14 +2643,7 @@ def _exact_rerank(
         # ADC pass's own exclusions
         F.col("dist").isNotNull() & ~F.isnan("dist")
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", (F.col("rank") - 1).cast("long").alias("rank"), "vec_id", "dist")
-    )
+    return _rank(rescored, "dist", k, False)
 
 
 def _ivf_pq_topk_arrow(
@@ -3024,101 +2657,21 @@ def _ivf_pq_topk_arrow(
     assign: DataFrame,
     probes,
 ) -> DataFrame | None:
-    """Cell-blocked arrow scan for ``ivf_pq_topk``'s ADC pass:
-    ``_pq_topk_arrow``'s driver-LUT fold restricted per cell to the
-    queries probing it (``_ivf_topk_arrow``'s blocking), over the
-    probed fraction of the packed codes relation -- bit-identical to
-    the relational ``pq_topk(candidates=...)`` composition.  A
-    rerank-grade keep (> ``_ARROW_ADC_MAX_KEEP``) runs the same
-    exact-threshold pruning as the flat path (round 13), priced over
-    exactly the probed candidate pairs via the shared cell-blocked
-    scorer."""
-    import numpy as np
-
-    from ..sources.ingest import widen_partitions
-
+    """Cell-blocked arrow leg of ``ivf_pq_topk``'s ADC pass:
+    ``_pq_topk_arrow``'s driver-LUT fold over the probed fraction of
+    the packed codes relation (``_probed_rows``), each cell scoring
+    only the queries probing it -- bit-identical to the relational
+    ``pq_topk(candidates=...)`` composition.  A rerank-grade keep
+    runs the same exact-threshold pruning as the flat path, priced
+    over exactly the probed candidate pairs (``_adc_topk``)."""
     layout = _adc_lut(emb, query_ids, cents, dim, m)
     if layout is None:
         return None
-    qids, lut, lutv, seen, code_vals = layout
-    cells_by_qid, union_cells = _probe_layout(probes)
-    if not union_cells:
+    allowed = _probe_mask(probes, layout[0])
+    if allowed[0].size == 0:
         return None
-    lut_cells = np.array(union_cells, dtype="int64")
-    allowed = _allowed_matrix(cells_by_qid, union_cells, qids)
-    kk = int(keep)
-
-    if "cell" in packed.columns:
-        # cell-partitioned packed index (pq_write_index layout): the
-        # probed restriction is a PARTITION filter on the codes scan
-        # itself and the assign join disappears -- the index embeds it
-        src = widen_partitions(
-            packed.filter(
-                F.col("cell").isin([int(c) for c in union_cells])
-            ).select(
-                F.col("vec_id").cast("long").alias("vec_id"),
-                F.col("cell").cast("long").alias("cell"),
-                "codes",
-            ),
-            "vec_id",
-        )
-    else:
-        src = widen_partitions(
-            assign.filter(F.col("cell").isin([int(c) for c in union_cells]))
-            .select(
-                F.col("vec_id").cast("long").alias("vec_id"),
-                F.col("cell").cast("long").alias("cell"),
-            )
-            .join(
-                packed.select(
-                    F.col("vec_id").cast("long").alias("vec_id"), "codes"
-                ),
-                on="vec_id",
-            ),
-            "vec_id",
-        )
-
-    def score_blocks(batch):
-        yield from _adc_score_cell_blocks(
-            batch, m, code_vals, lut, lutv, seen, qids, lut_cells, allowed
-        )
-
-    thr = (
-        _adc_thresholds(src, score_blocks, qids, kk)
-        if kk > _ARROW_ADC_MAX_KEEP
-        else None
-    )
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            for idsb, dist, ok, qsel in score_blocks(batch):
-                if thr is not None:
-                    ok = ok & (dist <= thr[qsel][None, :])
-                arrays = _batch_bottomk_rows(idsb, dist, ok, qids[qsel], kk)
-                if arrays is None:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=["qid", "vec_id", "dist"]
-                )
-
-    cand = src.mapInArrow(
-        kernel, schema="qid long, vec_id long, dist double"
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= keep)
-        .select(
-            "qid",
-            (F.col("rank") - 1).cast("long").alias("rank"),
-            "vec_id",
-            "dist",
-        )
-    )
+    src = _probed_rows(packed, ["codes"], assign, allowed[0])
+    return _adc_topk(src, layout, m, keep, allowed)
 
 
 def ivf_pq_topk(
@@ -3176,6 +2729,20 @@ def ivf_pq_topk(
     reads ~n_probe/n_cells of the codes bytes with NO assign join,
     and ``assign`` may be omitted -- the index's (vec_id, cell)
     columns ARE the assignment."""
+    # the composed arrow route needs the PACKED index relation (the
+    # production layout); long-form/derived codes run relationally
+    packed = (
+        codes if codes is not None and "codes" in codes.columns else None
+    )
+    if impl == "arrow" and packed is None:
+        raise ValueError(
+            "ivf_pq_topk impl='arrow' needs the PACKED codes relation "
+            "(pq_pack output); long-form codes run relationally"
+        )
+    use_arrow = (
+        _route(impl, packed, len(query_ids), n_probe, n_cells) == "arrow"
+        and packed is not None
+    )
     cents = _codebook(emb, n_cells, ivf_cents)
     if assign is None:
         if codes is not None and "cell" in codes.columns:
@@ -3184,8 +2751,6 @@ def ivf_pq_topk(
             assign = codes.select("vec_id", "cell")
         else:
             assign = ivf_assign(emb, n_cells, cents)
-    if impl not in ("auto", "arrow", "sql"):
-        raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
     q = emb.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qemb"),
@@ -3199,44 +2764,20 @@ def ivf_pq_topk(
         # (round-9 review)
         n = emb.select("vec_id").count() * n_probe // max(1, n_cells)
         rerank = _auto_rerank(n)
-    # the composed arrow route needs the PACKED index relation (the
-    # production layout); long-form/derived codes run relationally
-    packed = (
-        codes if codes is not None and "codes" in codes.columns else None
-    )
-    if impl == "arrow" and packed is None:
-        raise ValueError(
-            "ivf_pq_topk impl='arrow' needs the PACKED codes relation "
-            "(pq_pack output); long-form codes run relationally"
-        )
-    if impl != "sql" and packed is not None:
+    if use_arrow:
         keep = k if rerank is None else k * int(rerank)
-        use = impl == "arrow"
-        if impl == "auto":
-            sz = _plan_stats_bytes(packed)
-            est = (
-                None
-                if sz is None
-                else sz
-                * max(1, len(query_ids))
-                * max(1, int(n_probe))
-                / max(1, int(n_cells))
+        probes = _probe_cells(
+            q, cents, n_probe
+        ).collect()  # bounded-model-collect: |q| x n_probe rows
+        adc = _ivf_pq_topk_arrow(
+            packed, emb, query_ids, pq_cents, dim, m, keep, assign, probes,
+        )
+        if adc is not None:
+            if rerank is None:
+                return adc
+            return _exact_rerank(
+                emb, query_ids, adc, k, keep=keep, dim=dim, impl=impl
             )
-            use = est is None or est >= _ARROW_AUTO_MIN_WORK_BYTES
-        if use:
-            probes = _probe_cells(
-                q, cents, n_probe
-            ).collect()  # bounded-model-collect: |q| x n_probe rows
-            adc = _ivf_pq_topk_arrow(
-                packed, emb, query_ids, pq_cents, dim, m, keep,
-                assign, probes,
-            )
-            if adc is not None:
-                if rerank is None:
-                    return adc
-                return _exact_rerank(
-                    emb, query_ids, adc, k, keep=keep, dim=dim, impl=impl
-                )
     cand = assign.join(
         F.broadcast(_probe_cells(q, cents, n_probe)), on="cell"
     ).select("qid", "vec_id")
@@ -3323,96 +2864,23 @@ def sq8_encode(emb: DataFrame) -> DataFrame:
 
 
 def _sq8_topk_arrow(codes: DataFrame, emb: DataFrame, query_ids, k: int):
-    """Arrow scan for ``sq8_topk`` (no-candidates form): one
-    mapInArrow pass over the 4x-smaller (vec_id, scale, q, nrm)
-    relation, replicating the SQL expression bit-for-bit -- the
-    integer-code dot runs as a BLAS GEMM proven round-6-equal to the
-    SQL sequential fold (boundary-flagged entries recomputed through
-    the exact left-fold, ``_gemm_seqfold_cos``), then
-    round6((scale * dot) / (nrm * qnrm)) + 0.0 with the same
-    exclusion set (zero denominator, NaN, self, NULL/ragged codes).  Query resolution, per-length grouping, and threshold
-    pruning follow ``_cosine_topk_arrow`` exactly (shared helpers).
+    """Arrow leg of ``sq8_topk`` (no-candidates form): ``_arrow_topk``
+    over the 4x-smaller (vec_id, scale, q, nrm) relation with the
+    ``_cos_score`` scorer's SQ8 arithmetic --
+    round6((scale * dot) / (nrm * qnrm)) + 0.0, the integer-code dot
+    a BLAS GEMM proven round-6-equal to the SQL sequential fold.
     Returns None only when no query id resolves to a usable vector
     (both forms are then empty)."""
-    import numpy as np
-
     from ..sources.ingest import widen_partitions
 
     groups = _resolve_query_groups(emb, query_ids)
     if groups is None:
         return None
-    kk = int(k)
-
-    def kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            qcol = batch.column(names.index("q"))
-            if isinstance(qcol, pa.ChunkedArray):
-                qcol = qcol.combine_chunks()
-            lens = pc.fill_null(pc.list_value_length(qcol), -1)
-            valid = pc.is_valid(qcol)
-            for d, qids, Q, qnrm in groups:
-                keep = pc.and_(valid, pc.equal(lens, d))
-                if not pc.all(keep).as_py():
-                    sub = batch.filter(keep)
-                    if sub.num_rows == 0:
-                        continue
-                    scol = sub.column(names.index("q"))
-                    if isinstance(scol, pa.ChunkedArray):
-                        scol = scol.combine_chunks()
-                else:
-                    sub, scol = batch, qcol
-                n = sub.num_rows
-                nq = len(qids)
-                ids = np.asarray(
-                    sub.column(names.index("vec_id")), dtype="int64"
-                )
-                scale = np.asarray(
-                    sub.column(names.index("scale")), dtype="float64"
-                )
-                nrm = np.asarray(
-                    sub.column(names.index("nrm")), dtype="float64"
-                )
-                C = np.asarray(scol.flatten(), dtype="float64").reshape(n, d)
-                with np.errstate(all="ignore"):
-                    denom = nrm[:, None] * qnrm[None, :]
-                    # BLAS dot + provable boundary fixup: bit-equal
-                    # to the sequential fold after round6 (see
-                    # _gemm_seqfold_cos), ~d x less memory traffic
-                    x = _gemm_seqfold_cos(C, Q, denom, scale=scale)
-                    cos = _spark_round6_signed(x) + 0.0
-                    ok = (
-                        (denom != 0.0)
-                        & ~np.isnan(cos)
-                        & (ids[:, None] != qids[None, :])
-                    )
-                arrays = _batch_topk_rows(ids, cos, ok, qids, kk)
-                if arrays is None:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=["qid", "vec_id", "cos"]
-                )
-
     src = widen_partitions(codes, "vec_id").select(
         F.col("vec_id").cast("long").alias("vec_id"), "scale", "q", "nrm"
     )
-    cand = src.mapInArrow(kernel, schema="qid long, vec_id long, cos double")
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid",
-            (F.col("rank") - 1).cast("long").alias("rank"),
-            "vec_id",
-            "cos",
-        )
-    )
+    walk = _row_blocks("q", groups, _cos_score, cols=("scale", "nrm"))
+    return _arrow_topk(src, walk, k, True, "cos")
 
 
 def sq8_topk(
@@ -3459,8 +2927,6 @@ def sq8_topk(
     scan is probe-bounded per query and always runs relationally
     (explicit ``impl="arrow"`` with candidates raises rather than
     silently switching -- round-13 ADVICE)."""
-    if impl not in ("auto", "arrow", "sql"):
-        raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
     if impl == "arrow" and candidates is not None:
         # a caller forcing the kernel path gets a loud error, never a
         # silent plan change (round-13 ADVICE; same rule as pq_topk)
@@ -3472,15 +2938,8 @@ def sq8_topk(
         codes = sq8_encode(emb)
     if "nrm" not in codes.columns:
         codes = codes.withColumn("nrm", _sq8_nrm())
-    if impl == "auto" and candidates is None:
-        sz = _plan_stats_bytes(codes)
-        impl = (
-            "sql"
-            if sz is not None
-            and sz * max(1, len(query_ids)) < _ARROW_AUTO_MIN_WORK_BYTES
-            else "arrow"
-        )
-    if impl == "arrow" and candidates is None:
+    scan = codes if candidates is None else None  # the arrow-served scan
+    if _route(impl, scan, len(query_ids)) == "arrow" and scan is not None:
         out = _sq8_topk_arrow(codes, emb, query_ids, k)
         if out is not None:
             return out
@@ -3525,156 +2984,24 @@ def sq8_topk(
         # which DO sort largest under desc.  Pinned in test_zero_norm.py.
         .filter(F.col("cos").isNotNull() & ~F.isnan("cos"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        cos.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", (F.col("rank") - 1).cast("long").alias("rank"), "vec_id", "cos")
-    )
+    return _rank(cos, "cos", k, True)
 
 
 def _ivf_sq8_topk_arrow(
     codes: DataFrame, emb: DataFrame, query_ids, k: int,
     assign: DataFrame, probes,
 ) -> DataFrame | None:
-    """Cell-blocked arrow scan for ``ivf_sq8_topk``: ``_ivf_topk_arrow``'s
-    shape (probed-cell IN filter on the assignment index + per-cell
-    folds against only the probing queries) over the 4x-smaller
-    (vec_id, scale, q, nrm) relation with ``_sq8_topk_arrow``'s
-    dequantized-cosine arithmetic -- bit-identical to the relational
-    ``sq8_topk(candidates=...)`` composition, fuzz-pinned."""
-    import numpy as np
-
-    from ..sources.ingest import widen_partitions
-
-    groups = _resolve_query_groups(emb, query_ids)
+    """Cell-blocked arrow leg of ``ivf_sq8_topk``: ``_sq8_topk_arrow``'s
+    scorer over the probed rows of the codes relation
+    (``_probed_rows``), each cell scoring only the queries probing it
+    -- bit-identical to the relational ``sq8_topk(candidates=...)``
+    composition, fuzz-pinned."""
+    groups = _resolve_query_groups(emb, query_ids, probes)
     if groups is None:
         return None
-    cells_by_qid, union_cells = _probe_layout(probes)
-    if not union_cells:
-        return None
-    lut_cells = np.array(union_cells, dtype="int64")
-    gq = [
-        (d, qids, Q, qnrm, _allowed_matrix(cells_by_qid, union_cells, qids))
-        for d, qids, Q, qnrm in groups
-    ]
-    kk = int(k)
-
-    def kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            qcol = batch.column(names.index("q"))
-            if isinstance(qcol, pa.ChunkedArray):
-                qcol = qcol.combine_chunks()
-            lens = pc.fill_null(pc.list_value_length(qcol), -1)
-            valid = pc.is_valid(qcol)
-            for d, qids, Q, qnrm, allowed in gq:
-                keep = pc.and_(valid, pc.equal(lens, d))
-                if not pc.all(keep).as_py():
-                    sub = batch.filter(keep)
-                    if sub.num_rows == 0:
-                        continue
-                    scol = sub.column(names.index("q"))
-                    if isinstance(scol, pa.ChunkedArray):
-                        scol = scol.combine_chunks()
-                else:
-                    sub, scol = batch, qcol
-                n = sub.num_rows
-                ids = np.asarray(
-                    sub.column(names.index("vec_id")), dtype="int64"
-                )
-                cellv = np.asarray(
-                    sub.column(names.index("cell")), dtype="int64"
-                )
-                scale = np.asarray(
-                    sub.column(names.index("scale")), dtype="float64"
-                )
-                nrm = np.asarray(
-                    sub.column(names.index("nrm")), dtype="float64"
-                )
-                C = np.asarray(scol.flatten(), dtype="float64").reshape(n, d)
-                order = np.argsort(cellv, kind="stable")
-                sc = cellv[order]
-                starts = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-                ends = np.r_[starts[1:], sc.size]
-                for s, e in zip(starts, ends):
-                    qsel = allowed[np.searchsorted(lut_cells, sc[s]), :]
-                    qsel = np.flatnonzero(qsel)
-                    if qsel.size == 0:
-                        continue
-                    rows = order[s:e]
-                    Cc = C[rows]
-                    idsc = ids[rows]
-                    Qc = Q[qsel]
-                    qnrmc = qnrm[qsel]
-                    qidsc = qids[qsel]
-                    with np.errstate(all="ignore"):
-                        # BLAS + boundary-fixup dot, bit-equal after
-                        # round6 (the shared _gemm_seqfold_cos
-                        # contract)
-                        denom = nrm[rows][:, None] * qnrmc[None, :]
-                        x = _gemm_seqfold_cos(
-                            Cc, Qc, denom, scale=scale[rows]
-                        )
-                        cos = _spark_round6_signed(x) + 0.0
-                        ok = (
-                            (denom != 0.0)
-                            & ~np.isnan(cos)
-                            & (idsc[:, None] != qidsc[None, :])
-                        )
-                    arrays = _batch_topk_rows(idsc, cos, ok, qidsc, kk)
-                    if arrays is None:
-                        continue
-                    yield pa.RecordBatch.from_arrays(
-                        arrays, names=["qid", "vec_id", "cos"]
-                    )
-
-    if "cell" in codes.columns:
-        # cell-partitioned SQ8 index (sq8_write_index layout): probed
-        # restriction = PARTITION filter on the codes scan, no join
-        src = codes.filter(
-            F.col("cell").isin([int(c) for c in union_cells])
-        ).select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("cell").cast("long").alias("cell"),
-            "scale", "q", "nrm",
-        )
-    else:
-        src = (
-            assign.filter(F.col("cell").isin([int(c) for c in union_cells]))
-            .select(
-                F.col("vec_id").cast("long").alias("vec_id"),
-                F.col("cell").cast("long").alias("cell"),
-            )
-            .join(
-                codes.select(
-                    F.col("vec_id").cast("long").alias("vec_id"),
-                    "scale", "q", "nrm",
-                ),
-                on="vec_id",
-            )
-        )
-    cand = widen_partitions(src, "vec_id").mapInArrow(
-        kernel, schema="qid long, vec_id long, cos double"
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid",
-            (F.col("rank") - 1).cast("long").alias("rank"),
-            "vec_id",
-            "cos",
-        )
-    )
+    src = _probed_rows(codes, ["scale", "q", "nrm"], assign, groups[0].allowed[0])
+    walk = _row_blocks("q", groups, _cos_score, key="cell", cols=("scale", "nrm"))
+    return _arrow_topk(src, walk, k, True, "cos")
 
 
 def ivf_sq8_topk(
@@ -3714,34 +3041,18 @@ def ivf_sq8_topk(
     restriction then partition-prunes the codes scan itself and the
     assign join disappears; ``assign`` may be omitted -- the index's
     (vec_id, cell) columns ARE the assignment."""
-    if impl not in ("auto", "arrow", "sql"):
-        raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
-    cents = _codebook(emb, n_cells, ivf_cents)
-    if assign is None:
-        if codes is not None and "cell" in codes.columns:
-            # cell-partitioned index: the assignment rides in it
-            assign = codes.select("vec_id", "cell")
-        else:
-            assign = ivf_assign(emb, n_cells, cents)
     if codes is None:
         codes = sq8_encode(emb)
     if "nrm" not in codes.columns:
         codes = codes.withColumn("nrm", _sq8_nrm())
-    if impl == "auto":
-        sz = _plan_stats_bytes(codes)
-        est = (
-            None
-            if sz is None
-            else sz
-            * max(1, len(query_ids))
-            * max(1, int(n_probe))
-            / max(1, int(n_cells))
-        )
-        impl = (
-            "sql"
-            if est is not None and est < _ARROW_AUTO_MIN_WORK_BYTES
-            else "arrow"
-        )
+    impl = _route(impl, codes, len(query_ids), n_probe, n_cells)
+    cents = _codebook(emb, n_cells, ivf_cents)
+    if assign is None:
+        if "cell" in codes.columns:
+            # cell-partitioned index: the assignment rides in it
+            assign = codes.select("vec_id", "cell")
+        else:
+            assign = ivf_assign(emb, n_cells, cents)
     q = emb.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qemb"),

@@ -5,8 +5,10 @@ _nearest_sql, behind kmeans_assign, pq_encode, the Lloyd rounds and
 the stream encoders) must equal a Python min_by over (dist, id) --
 dist = round(sqdist, 6) + 0.0, NULL first, NaN last, ties to the
 smaller id -- for any distance and any BIGINT id: nothing is packed
-or capped.  ivf_assign's cosine argmax still packs into a BIGINT and
-must replicate max_by exactly."""
+or capped.  ivf_assign's cosine argmax is the mirror pick (``greatest``
+over (c, ~cell) structs) and must equal a max_by over (c, -cell) --
+NULL < -Inf < finite < +Inf < NaN, ties to the smaller cell -- with
+no cap on the cell id either."""
 
 import math
 import random
@@ -170,41 +172,60 @@ def _old_argmax(df):
     )
 
 
-def _new_argmax(df):
-    from dask_array_spark.functions.similarity import (
-        _argmax_cell_sql,
-        _argmax_cos_packed_sql,
-    )
+def _cos_rows(emb, cents):
+    """(vec_id, cell, c) for every vector x centroid: the rounded
+    cosine ivf_assign ranks, scored by the crossJoin form."""
+    from dask_array_spark.functions import similarity as SIM
 
+    dot = F.aggregate(
+        F.zip_with("embedding", "cemb",
+                   lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
     return (
-        df.selectExpr("vec_id", f"{_argmax_cos_packed_sql('cell', 'c')} AS __pp")
-        .groupBy("vec_id")
-        .agg(F.expr("max(__pp) AS __p"))
-        .selectExpr("vec_id", f"{_argmax_cell_sql('__p')} AS cell")
+        emb.select("vec_id", "embedding", SIM._norm_col().alias("nrm"))
+        .crossJoin(SIM._codebook(emb, 4, cents))
+        .select("vec_id", "cell",
+                F.round(dot / (F.col("nrm") * F.col("cnrm")), 6).alias("c"))
     )
 
 
-def test_packed_argmax_matches_max_by_on_hostile_cosines(spark):
-    """ivf_assign's cosine argmax packing: NULL < -Inf < finite <
-    +Inf < NaN ascending, ties to the smaller cell (engine-probed
-    max_by semantics) -- including the zero-norm division artifacts
-    (NaN, +-Inf) the round-9 bug class is about."""
-    import random
+def test_ivf_assign_matches_max_by_on_hostile_cosines(spark):
+    """ivf_assign equals max_by(cell, struct(c, -cell)) over every
+    centroid on zero-norm rows and centroids (NULL cosines), NaN
+    payloads, NULL and ragged rows, tied centroids, and trained
+    codebooks whose cell ids reach 2^21, 2^40 and below zero (the
+    former packed BIGINT key raised outside [0, 2^20)).  Its plan
+    holds no join, no aggregate and no raise_error."""
+    from dask_array_spark.functions import similarity as SIM
 
-    inf, nan = float("inf"), float("nan")
+    nan = float("nan")
     rng = random.Random(41)
-    vals = [None, nan, inf, -inf, -1.0, 1.0, 0.0, -0.0, 0.123456, -0.999999]
-    rows = []
-    for vid in range(600):
-        for cell in range(rng.randint(1, 5)):
-            rows.append((vid, cell, rng.choice(vals)))
-    rows += [(9001, 0, 0.5), (9001, 1, 0.5), (9002, 0, nan), (9002, 1, nan),
-             (9003, 1, None), (9003, 0, -inf), (9004, 0, -0.0), (9004, 1, 0.0)]
-    df = spark.createDataFrame(rows, "vec_id long, cell long, c double")
-    a, b = _old_argmax(df), _new_argmax(df)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    plan = _new_argmax(df)._sc._jvm.PythonSQLUtils.explainString(
-        _new_argmax(df)._jdf.queryExecution(), "simple"
-    )
-    assert "SortAggregate" not in plan and "HashAggregate" in plan
+    rows = [(i, [float(rng.randint(-3, 3)) for _ in range(4)])
+            for i in range(120)]
+    rows += [(200, [0.0] * 4), (201, [nan, 1.0, 2.0, 3.0]), (202, None),
+             (203, [1.0, 2.0]), (204, [1e200] * 4), (205, [1.0, 1.0, 0.0, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    book = [(3, [1.0, 1.0, 0.0, 0.0]), (1, [2.0, 2.0, 0.0, 0.0]),  # tied
+            (1 << 21, [0.0, 0.0, 1.0, -1.0]), (-5, [0.0] * 4),
+            (1 << 40, [-1.0, 0.0, 2.0, 0.0])]
+    trained = SIM.kmeans_fit(emb.filter("vec_id < 120"), k=4, iters=1)
+    books = {
+        "stub": None,
+        "hostile": spark.createDataFrame(book, "cell long, cemb array<double>"),
+        "nan_centroid": spark.createDataFrame(
+            book + [(7, [nan, 0.0, 0.0, 0.0])], "cell long, cemb array<double>"),
+        "trained_2_21": trained.selectExpr("cell + 2097152 AS cell", "cemb"),
+    }
+    for name, cents in books.items():
+        got = SIM.ivf_assign(emb, 4, cents)
+        want = _old_argmax(_cos_rows(emb, cents))
+        assert got.exceptAll(want).count() == 0, name
+        assert want.exceptAll(got).count() == 0, name
+        assert got.count() == len(rows), name
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "Aggregate" not in plan, name
+        assert "raise_error" not in plan, name
+    served = SIM.ivf_topk(emb, [0, 1], k=3, cents=books["trained_2_21"], impl="sql")
+    assert "raise_error" not in served._jdf.queryExecution().executedPlan().toString()

@@ -864,20 +864,16 @@ def test_adc_thresholds_exact(spark):
     packed = SIM.pq_pack(SIM.pq_encode(emb, cents, dim=8, m=2))
     qids_in = [0, 5]
     layout = SIM._adc_lut(emb, qids_in, cents, 8, 2)
-    qids, lut, lutv, seen, code_vals = layout
+    qids = layout[0]
     src = widen_partitions(packed, "vec_id").select(
         F.col("vec_id").cast("long").alias("vec_id"), "codes"
     )
 
-    def score_blocks(batch):
-        scored = SIM._adc_score_batch(batch, 2, code_vals, lut, lutv,
-                                      seen, qids)
-        if scored is not None:
-            ids, dist, ok = scored
-            yield ids, dist, ok, np.arange(len(qids))
+    walk = SIM._row_blocks("codes", [SIM._QGroup(2, qids, None, layout)],
+                           SIM._adc_score, dtype="int64")
 
     for keep in (7, 250, 400):
-        t = SIM._adc_thresholds(src, score_blocks, qids, keep)
+        t = SIM._adc_thresholds(src, walk, qids, keep)
         # replay: full ADC distances via the relational form at k=n
         full = SIM.pq_topk(emb, qids_in, cents, dim=8, m=2, k=10**6,
                            codes=packed, impl="sql").collect()
@@ -928,3 +924,159 @@ def test_ivf_pq_topk_arrow_threshold_route_matches_sql(spark):
         ts = [tuple(r) for r in s.collect()]
         assert ta == ts, f"qids={qids} k={k} rr={rr}"
     assign.unpersist(); cents.unpersist(); packed.unpersist()
+
+
+# Hostile ADC inputs: the arrow leg must match the relational lookup
+# join on NULL elements inside a query or centroid (the affected
+# (s, code, q) entries fold to NULL and are skipped by the sum, never
+# a driver crash), on negative and sparse code values (the LUT is
+# laid out on the codebook's sorted distinct code VALUES,
+# ``_code_index``), and explicit impl='arrow' with candidates raises.
+# ---------------------------------------------------------------------------
+
+
+def _pq_fixture(spark, n=24, dim=8, m=2, n_codes=3):
+    from dask_array_spark.functions import similarity as SIM
+
+    rng = np.random.default_rng(131)
+    vecs = rng.normal(size=(n, dim)) * 2
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = SIM.pq_train(emb, dim=dim, m=m, n_codes=n_codes, iters=1)
+    packed = SIM.pq_pack(SIM.pq_encode(emb, cents, dim=dim, m=m))
+    return emb, cents, packed
+
+
+def _parity(spark, emb, cents, packed, qids, dim=8, m=2, k=4, rerank=None):
+    from dask_array_spark.functions import similarity as SIM
+
+    a = SIM.pq_topk(emb, qids, cents, dim=dim, m=m, k=k, codes=packed,
+                    rerank=rerank, impl="arrow").orderBy("qid", "rank")
+    s = SIM.pq_topk(emb, qids, cents, dim=dim, m=m, k=k, codes=packed,
+                    rerank=rerank, impl="sql").orderBy("qid", "rank")
+    ta = [tuple(r) for r in a.collect()]
+    ts = [tuple(r) for r in s.collect()]
+    assert ta == ts, f"arrow != sql: {ta} vs {ts}"
+    return ta
+
+
+def test_pq_topk_arrow_null_query_element(spark):
+    """A NULL element INSIDE a query embedding poisons only its own
+    subspace folds (partial ADC sum over the valid subspaces, the
+    relational semantics) -- previously float(None) crashed the
+    driver at plan build on the arrow route."""
+    from dask_array_spark.functions import similarity as SIM
+
+    emb, cents, packed = _pq_fixture(spark)
+    holed = emb.withColumn(
+        "embedding",
+        # vec_id 0's first coordinate becomes NULL: its s=0 subspace
+        # folds to NULL against every code, s=1 stays valid
+        SIM.F.when(
+            SIM.F.col("vec_id") == 0,
+            SIM.F.transform(
+                "embedding",
+                lambda x, i: SIM.F.when(i == 0, SIM.F.lit(None)).otherwise(x),
+            ),
+        ).otherwise(SIM.F.col("embedding")),
+    )
+    got = _parity(spark, holed, cents, packed, [0, 3, 7])
+    # the holed query still serves (partial subspace sum), it is not
+    # silently dropped
+    assert any(t[0] == 0 for t in got)
+
+
+def test_pq_topk_arrow_null_centroid_element(spark):
+    """A NULL element inside a CODEBOOK centroid folds every query's
+    entry at that (s, code) to NULL -- invalid, skipped by the sum --
+    in both forms."""
+    from dask_array_spark.functions import similarity as SIM
+
+    emb, cents, packed = _pq_fixture(spark)
+    holed = cents.withColumn(
+        "cemb",
+        SIM.F.when(
+            (SIM.F.col("s") == 0) & (SIM.F.col("code") == 1),
+            SIM.F.transform(
+                "cemb",
+                lambda x, i: SIM.F.when(i == 0, SIM.F.lit(None)).otherwise(x),
+            ),
+        ).otherwise(SIM.F.col("cemb")),
+    )
+    _parity(spark, emb, holed, packed, [0, 5])
+
+
+def test_pq_topk_arrow_negative_codes_parity(spark):
+    """The relational join matches a negative corpus code against a
+    negative codebook code and scores it; the arrow kernel's value
+    remap must agree (the old 0 <= code gate silently dropped it)."""
+    from pyspark.sql import functions as F
+
+    emb, cents, packed = _pq_fixture(spark)
+    # shift every code negative in BOTH relations (codebook and
+    # corpus), the self-consistent hostile layout
+    cents_n = cents.withColumn("code", F.col("code") - F.lit(5))
+    packed_n = packed.withColumn(
+        "codes", F.transform("codes", lambda c: c - F.lit(5))
+    )
+    got = _parity(spark, emb, cents_n, packed_n, [0, 3, 7], rerank=None)
+    assert got  # negative codes are scored, not dropped
+
+
+def test_pq_topk_arrow_sparse_codes_parity(spark):
+    """Sparse / huge code values: the LUT is sized by the codebook's
+    CARDINALITY (3 rows here), never by max(code) -- the old layout
+    allocated m x (10**9+8) x nq doubles for this table."""
+    from pyspark.sql import functions as F
+
+    emb, cents, packed = _pq_fixture(spark)
+    remap = F.when(F.col("code") == 1, F.lit(7)).otherwise(
+        F.when(F.col("code") == 2, F.lit(1_000_000_007)).otherwise(F.col("code"))
+    )
+    cents_s = cents.withColumn("code", remap.cast("long"))
+    packed_s = packed.withColumn(
+        "codes",
+        F.transform(
+            "codes",
+            lambda c: F.when(c == 1, F.lit(7)).otherwise(
+                F.when(c == 2, F.lit(1_000_000_007)).otherwise(c)
+            ).cast("long"),
+        ),
+    )
+    got = _parity(spark, emb, cents_s, packed_s, [0, 3, 7])
+    assert got
+
+
+def test_code_index_contract():
+    """The remap helper: contiguous codebooks take the direct-index
+    path; sparse/negative ones probe by value; absent codes gate out
+    exactly like the relational inner join."""
+    from dask_array_spark.functions.similarity import _code_index
+
+    cs = np.array([-3, 0, 2, 7, 99], dtype="int64")
+    # contiguous 0..3
+    inr, idx = _code_index(np.arange(4, dtype="int64"), cs)
+    assert inr.tolist() == [False, True, True, False, False]
+    assert idx[inr].tolist() == [0, 2]
+    # sparse with a negative
+    inr, idx = _code_index(np.array([-3, 2, 7], dtype="int64"), cs)
+    assert inr.tolist() == [True, False, True, True, False]
+    assert idx[inr].tolist() == [0, 1, 2]
+    # empty codebook matches nothing
+    inr, idx = _code_index(np.array([], dtype="int64"), cs)
+    assert not inr.any()
+
+
+def test_pq_topk_arrow_candidates_raises(spark):
+    from dask_array_spark.functions import similarity as SIM
+
+    emb, cents, packed = _pq_fixture(spark)
+    cand = emb.selectExpr("0 as qid", "vec_id")
+    with pytest.raises(ValueError, match="candidates"):
+        SIM.pq_topk(emb, [0], cents, dim=8, m=2, k=3, codes=packed,
+                    candidates=cand, impl="arrow")
+    # auto / sql still serve the candidate-restricted scan
+    assert SIM.pq_topk(emb, [0], cents, dim=8, m=2, k=3, codes=packed,
+                       candidates=cand, impl="auto").count() == 3

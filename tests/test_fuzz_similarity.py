@@ -289,13 +289,14 @@ def test_sq8_topk_arrow_matches_sql(spark):
     rng = np.random.default_rng(5)
     vecs = rng.normal(size=(40, 6)) * 3
     vecs[7] = 0.0  # zero vector -> zero scale/norm
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    # NULL and ragged embeddings: NULL / short codes, which the SQL
+    # zip_with folds to NULL and the kernel's length mask drops
+    rows += [(40, None), (41, [1.0, 2.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     codes = SIM.sq8_encode(emb).persist()
     codes.count()
-    for qids, k in ([[0, 7, 19], 5], [[3], 1], [list(range(12)), 9]):
+    for qids, k in ([[0, 7, 19, 40, 41], 5], [[3], 1], [list(range(12)), 9]):
         a = SIM.sq8_topk(emb, qids, k=k, codes=codes, impl="sql").orderBy(
             "qid", "rank"
         )
@@ -363,3 +364,22 @@ def test_ivf_topk_arrow_matches_sql_hostile(spark):
         tb = [tuple(r) for r in b.collect()]
         assert ta == tb, f"qids={qids}: {ta} != {tb}"
     assign.unpersist()
+
+
+def test_sq8_topk_arrow_candidates_raises(spark):
+    """Explicit impl='arrow' with candidates raises (candidate scans
+    run relationally); auto still serves the restricted scan."""
+    from dask_array_spark.functions import similarity as SIM
+
+    rng = np.random.default_rng(131)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(rng.normal(size=(24, 8)) * 2)],
+        "vec_id long, embedding array<double>",
+    )
+    codes = SIM.sq8_encode(emb)
+    cand = emb.selectExpr("0 as qid", "vec_id")
+    with pytest.raises(ValueError, match="candidates"):
+        SIM.sq8_topk(emb, [0], k=3, codes=codes, candidates=cand,
+                     impl="arrow")
+    assert SIM.sq8_topk(emb, [0], k=3, codes=codes, candidates=cand,
+                        impl="auto").count() == 3

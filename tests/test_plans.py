@@ -198,10 +198,10 @@ def test_similarity_arrow_path_scan_shape(spark, sf_dir):
     # production posture for the composed tiers: the assignment index
     # is built ONCE and persisted.  localCheckpoint (not persist)
     # because the pin is TEXTUAL: a cached InMemoryRelation still
-    # PRINTS its construction plan -- including ivf_assign's
-    # legitimate broadcast-cross against the centroid side -- inside
-    # the serving plan string, while the checkpoint truncates lineage
-    # to an RDD scan, leaving only the true serving shape
+    # PRINTS its construction plan -- ivf_assign's literal-codebook
+    # projection, sq8_encode's folds -- inside the serving plan
+    # string, while the checkpoint truncates lineage to an RDD scan,
+    # leaving only the true serving shape
     asg = SIM.ivf_assign(emb, n_cells=4).localCheckpoint()
     sq = SIM.sq8_encode(emb).localCheckpoint()
     for df in (
