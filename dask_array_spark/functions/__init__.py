@@ -17,10 +17,13 @@ persists it at the fan-out.
   silently recompute the fan-out on every downstream action, which is
   the worse failure mode at corpus scale.  THE RETURNED PLAN PINS ITS
   PERSISTED INPUTS -- a long-lived session composing many pipeline
-  calls should bound cache growth with
-  ``spark.catalog.clearCache()`` between pipelines, or rely on LRU
-  eviction (entries are MEMORY_AND_DISK; eviction costs a recompute,
-  never correctness).
+  calls bounds cache growth with ``session.release_caches()`` between
+  pipelines (it unpersists every fan-out cache persisted through
+  ``session._track_persist``: the dedup band and k-gram tables and
+  the scalable scans' sorted copy), or relies on LRU eviction
+  (entries are MEMORY_AND_DISK; eviction costs a recompute, never
+  correctness).  ``ingest.with_dense_index``'s persist is not tracked
+  yet: its offsets and rows agree only while that cache lives.
 """
 
 from . import dedup, governance, similarity, text, tokenize  # noqa: F401

@@ -16,11 +16,10 @@ DuckDB oracle replays the whole pipeline bit-for-bit.
 
 from __future__ import annotations
 
-import threading
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import _track_persist, release_caches  # noqa: F401 (re-export)
 from .text import (
     M_COMB,
     P,
@@ -51,59 +50,6 @@ __all__ = [
 # multipliers; products stay < 2^63 (a_i < 2^31, x < 2^30)
 A_MUL = 1_664_525
 B_ADD = 1_013_904_223
-
-# fan-out caches created by lsh_candidate_pairs / duplicated_spans,
-# tracked so a long-lived service has an explicit cleanup path
-# (round-8 ADVICE: a doc-comment lifecycle is not an API).  Keyed per
-# SparkSession and guarded by a lock (round-9 ADVICE): a process
-# hosting several sessions -- or several threads driving pipelines on
-# one session -- must not have one pipeline's release_caches()
-# unpersist caches still backing another session's lazy frames, and
-# list mutation from query threads must be synchronized.
-_TRACKED_CACHES: dict[int, list[DataFrame]] = {}
-_TRACKED_LOCK = threading.Lock()
-
-
-def _track_persist(df: DataFrame) -> DataFrame:
-    cached = df.persist()
-    with _TRACKED_LOCK:
-        _TRACKED_CACHES.setdefault(id(df.sparkSession), []).append(cached)
-    return cached
-
-
-def release_caches(
-    blocking: bool = False, spark: "SparkSession | None" = None
-) -> int:
-    """Unpersist every fan-out cache this module created (the
-    persisted band / k-gram position tables backing
-    ``lsh_candidate_pairs`` and ``duplicated_spans`` results) -- for
-    one session when ``spark`` is given, else for all sessions this
-    process created caches on.
-
-    A long-lived service processing distinct corpus batches calls this
-    between batches; one-shot pipelines never need to (the caches die
-    with the app).  Caches are tracked PER SESSION, so a multi-tenant
-    process releasing one tenant's session leaves the others' caches
-    warm; within one session the caller still owns the ordering
-    contract: only call AFTER fully consuming the returned frames --
-    the caches back those lazy plans, so an un-consumed frame
-    recomputes its lineage (correct, just slower).  Returns the number
-    of cache entries released."""
-    with _TRACKED_LOCK:
-        if spark is None:
-            drained = [d for lst in _TRACKED_CACHES.values() for d in lst]
-            _TRACKED_CACHES.clear()
-        else:
-            drained = _TRACKED_CACHES.pop(id(spark), [])
-    n = 0
-    for df in drained:
-        try:
-            df.unpersist(blocking)
-            n += 1
-        except Exception:
-            pass  # session already stopped -- nothing to release
-    return n
-
 
 def exact_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact duplicate groups: hash-groupBy on the text, representative

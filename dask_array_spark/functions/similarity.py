@@ -1401,64 +1401,210 @@ def _nearest_codes(
     )
 
 
+def _nearest_codes_arrow(
+    src: DataFrame, keep: str, book: dict, dsub: int | None = None
+) -> DataFrame:
+    """``_nearest_codes`` as one batched-NumPy mapInArrow pass: the
+    same (keep, s, code, dist) rows, under ``_nearest_sql``'s order.
+
+    A (row, candidate) distance is NULL exactly where ``_sqdist_sql``
+    gives NULL: a NULL row or centroid, a NULL element, or a length
+    mismatch (``dsub`` slices like ``_subvec_sql``, so a longer row
+    still scores its slices).  Each length group of clean rows and
+    centroids folds as one chunked (rows x codes x len) einsum,
+    rounds with ``_spark_round6_np`` and picks a NULL distance first,
+    NaN last and ties to the smaller code.  The kernel emits one
+    array<struct<s, code, dist>> per row next to the untouched
+    ``keep`` column, and the ``inline`` fans it out in the JVM.
+
+    Equality with the relational pick is fuzz-pinned.  The one
+    accepted divergence is summation order: a distance within ~1 ulp
+    of a 1e-6 rounding boundary AND within 1e-6 of a competing
+    candidate may round apart (~1e-11 per pick on continuous data).
+    The codebook is model parameters, so holding it in the kernel is
+    O(model), never O(data)."""
+    if not book:
+        return _nearest_codes(src, keep, book)
+    import numpy as np
+
+    subs = []  # (s, codes ascending, [(width, candidate columns, matrix)])
+    for s, cands in sorted(book.items()):
+        cands = sorted(cands, key=lambda p: int(p[0]))
+        groups: dict = {}
+        for j, (_, v) in enumerate(cands):
+            if v is not None and None not in v:
+                groups.setdefault(len(v), []).append(j)
+        subs.append((
+            int(s),
+            np.asarray([int(c) for c, _ in cands], dtype="int64"),
+            [
+                (w, np.asarray(ix), np.asarray(
+                    [cands[j][1] for j in ix], dtype="float64").reshape(len(ix), w))
+                for w, ix in groups.items()
+            ],
+        ))
+    # chunk rows so the (rows x codes x width) diff tensor stays near
+    # 2 MB: on a 4-core host the 8 x 256-code kernel over 20,000 rows
+    # took 2.8 s at 32 MB chunks and 1.7 s at 2 MB ones
+    step = max(1, (1 << 18) // max(
+        len(codes) * max([w for w, _, _ in blocks] + [1]) for _, codes, blocks in subs
+    ))
+    s_keys = np.asarray([s for s, _, _ in subs], dtype="int64")
+
+    def fold(vals, st, ln, ok, k, blocks):
+        """One row chunk's rounded (rows x k) distances, NaN where the
+        pair is NULL, and the (rows x k) NULL mask."""
+        def sqd(r, w, C):
+            d = vals[st[r, None] + np.arange(w)][:, None, :] - C[None, :, :]
+            return _spark_round6_np(np.einsum("ijk,ijk->ij", d, d))
+
+        w, ix, C = blocks[0] if blocks else (-1, (), None)
+        if len(ix) == k and ok.all() and (ln == w).all():  # one clean block
+            return sqd(slice(None), w, C), np.zeros((len(st), k), dtype=bool)
+        D = np.full((len(st), k), np.nan)
+        N = np.ones((len(st), k), dtype=bool)
+        for w, ix, C in blocks:
+            r = np.flatnonzero(ok & (ln == w))
+            if r.size:
+                D[r[:, None], ix] = sqd(r, w, C)
+                N[r[:, None], ix] = False
+        return D, N
+
+    def pick(D, N):
+        """Per row: the first NULL column, else the smallest distance
+        with NaN after +Inf, else (all NaN) column 0."""
+        nan = np.isnan(D)
+        if not nan.any():
+            return D.argmin(axis=1), False
+        key = np.where(nan, np.inf, D)
+        hit = (key == key.min(axis=1, keepdims=True)) & ~nan
+        best = np.where(hit.any(axis=1), hit.argmax(axis=1), 0)
+        anynull = N.any(axis=1)
+        return np.where(anynull, N.argmax(axis=1), best), anynull
+
+    def kernel(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            n = batch.num_rows
+            vec = batch.column("embedding")
+            lens = pc.list_value_length(vec).fill_null(-1).to_numpy()
+            flat = vec.flatten()
+            vals = flat.cast(pa.float64(), safe=False).to_numpy(zero_copy_only=False)
+            nulls = np.concatenate(
+                [[0], np.cumsum(flat.is_null().to_numpy(zero_copy_only=False))]
+            )
+            offs = np.concatenate([[0], np.cumsum(np.maximum(lens, 0))])[:-1]
+            code = np.empty((n, len(subs)), dtype="int64")
+            dist = np.empty((n, len(subs)))
+            null = np.empty((n, len(subs)), dtype=bool)
+            for t, (s, codes, blocks) in enumerate(subs):
+                ln = lens if dsub is None else np.where(
+                    lens < 0, -1, np.clip(lens - s * dsub, 0, dsub))
+                st = np.where(ln > 0, offs + (0 if dsub is None else s * dsub), 0)
+                ok = (ln >= 0) & (nulls[st + np.maximum(ln, 0)] == nulls[st])
+                for lo in range(0, n, step):
+                    hi = min(n, lo + step)
+                    D, N = fold(vals, st[lo:hi], ln[lo:hi], ok[lo:hi], len(codes), blocks)
+                    best, null[lo:hi, t] = pick(D, N)
+                    code[lo:hi, t] = codes[best]
+                    dist[lo:hi, t] = D[np.arange(hi - lo), best]
+            items = pa.StructArray.from_arrays(
+                [
+                    pa.array(np.tile(s_keys, n)),
+                    pa.array(code.reshape(-1)),
+                    pa.array(dist.reshape(-1), mask=null.reshape(-1)),
+                ],
+                names=["s", "code", "dist"],
+            )
+            offsets = pa.array(np.arange(0, n * len(subs) + 1, len(subs), dtype="int32"))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(keep), pa.ListArray.from_arrays(offsets, items)],
+                names=[keep, "b"],
+            )
+
+    schema = (
+        f"{keep} {src.schema[keep].dataType.simpleString()}, "
+        "b array<struct<s: bigint, code: bigint, dist: double>>"
+    )
+    cols = [keep] if keep == "embedding" else [keep, "embedding"]
+    return src.select(*cols).mapInArrow(kernel, schema).selectExpr(keep, "inline(b)")
+
+
+def _pick(impl: str, n_candidates: int, arg: str = "impl"):
+    """The nearest-code pick behind ``impl``: ``_nearest_codes_arrow``
+    for ``"arrow"``, ``_nearest_codes`` for ``"sql"``.  ``"auto"``
+    takes the Arrow pick once the per-vector candidate count (cells,
+    or codes per subspace) reaches 32: below that the relational
+    form's n_rows x candidates interpreted in-row folds cost less than
+    the kernel's fixed Python-worker round trip.  Measured crossover
+    ~32 at both 2k and 20k vectors against the former crossJoin
+    rounds, with the kernel 12x ahead by 256 candidates.  Re-measured
+    for kmeans_fit + kmeans_assign with one-query rounds (sf0.1,
+    2,000 x 64, 2 rounds, 4-core container, median of 6): k=4 sql
+    1.38 s vs arrow 2.18 s, k=16 2.21 vs 2.14 s, k=32 3.09 vs 2.09 s
+    -- the crossover now sits between 16 and 32.  Both picks give the
+    same rows on every input, so this is purely a cost choice."""
+    if impl not in ("auto", "arrow", "sql"):
+        raise ValueError(f"{arg} must be 'auto', 'arrow' or 'sql', got {impl!r}")
+    if impl == "arrow" or (impl == "auto" and n_candidates >= 32):
+        return _nearest_codes_arrow
+    return _nearest_codes
+
+
 def kmeans_assign(
     emb: DataFrame, cents: DataFrame, impl: str = "auto"
 ) -> DataFrame:
     """Assign each vector to its nearest centroid by squared L2
     distance: (vec_id, cell, dist), one row per input row.  ``cents``
     is (cell, cemb) with cemb an array<double>.  Ties break to the
-    smaller cell id; a NULL distance (NULL or ragged embedding) sorts
-    first and a NaN one last.  Any BIGINT cell id and any distance
-    work: nothing is packed or capped.
+    smaller cell id; a NULL distance (NULL, NULL-element or ragged
+    embedding) sorts first and a NaN one last.  Any BIGINT cell id and
+    any distance work: nothing is packed or capped.
 
     The codebook is model-sized, so it is collected once: that one
     bounded collect both picks the leg and supplies the model (free
     when ``cents`` is a ``kmeans_fit`` result, a local relation).
-    ``impl``: ``"sql"`` is the relational form below (the oracled
-    surface); ``"arrow"`` reuses the PQ encode kernel with one
-    subspace (k-means IS product quantization with m=1), which wins
-    once the per-row fold count is large; ``"auto"`` (default)
-    switches at the shared >= 32-candidate threshold.  The
-    cosine-ranked ``ivf_assign`` deliberately has NO arrow form: its
-    zero-norm rows produce NULL cosines whose argmax semantics a
-    NumPy kernel would have to re-implement exactly -- the round-9
-    NULL-vs-NaN bug class -- and nothing at the current scale needs
-    it.
+    The assignment is ONE nearest-code pick with one subspace (k-means
+    IS product quantization with m=1) in one of two forms that give
+    the same rows on every input: ``"sql"``, the relational
+    ``_nearest_codes`` (the oracled surface), or ``"arrow"``, the
+    batched-NumPy ``_nearest_codes_arrow``, which wins once the
+    per-row fold count is large; ``"auto"`` (default) switches at the
+    shared >= 32-candidate threshold (``_pick``).
 
-    Scale shape (``"sql"``): ``_nearest_codes`` with one subspace --
-    one narrow projection over the widened corpus
-    (``widen_partitions``: a small file scans as one task otherwise)
-    that folds every distance in-row against the literal codebook and
-    picks the cell per row: no crossJoin fan-out, no broadcast, no
-    vec_id shuffle.
+    Scale shape (``"sql"``): one narrow projection over the widened
+    corpus (``widen_partitions``: a small file scans as one task
+    otherwise) that folds every distance in-row against the literal
+    codebook and picks the cell per row: no crossJoin fan-out, no
+    broadcast, no vec_id shuffle.
 
     Measured on the sf0.1 embeddings (2,000 x 64, k=4, 4-core
     container, warm median of 5): 0.59 s with the former crossJoin +
     vec_id-shuffle argmin, 0.38 s in the in-row form."""
-    if impl not in ("auto", "arrow", "sql"):
-        raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
-    book = _book(cents, "cell", None)
-    if impl == "auto":
-        impl = _resolve_train_impl("auto", len(book.get(0, [])))
-    if impl == "arrow":
-        asg = _pq_assign_arrow(emb, book, dim=None, m=1)
-    else:
-        from ..sources.ingest import widen_partitions
+    from ..sources.ingest import widen_partitions
 
-        asg = _nearest_codes(widen_partitions(emb, "vec_id"), "vec_id", book)
+    book = _book(cents, "cell", None)
+    pick = _pick(impl, len(book.get(0, [])))
+    asg = pick(widen_partitions(emb, "vec_id"), "vec_id", book)
     return asg.select("vec_id", F.col("code").alias("cell"), "dist")
 
 
-def _lloyd_round(src: DataFrame, book: dict, dsub: int | None = None) -> DataFrame:
-    """One relational Lloyd round as one query: (s, code, pos, c), the
-    6-decimal mean of coordinate ``pos`` of subspace ``s`` over the
-    rows whose nearest code there is ``code``.  Assignment is
-    ``_nearest_codes``' in-row pick; the members' subvectors
-    posexplode in the same stage and a partial-aggregated
-    (s, code, pos) avg crosses the round's only exchange --
-    model-sized partials, never the corpus."""
+def _lloyd_round(
+    src: DataFrame, book: dict, dsub: int | None = None, pick=_nearest_codes
+) -> DataFrame:
+    """One Lloyd round as one query: (s, code, pos, c), the 6-decimal
+    mean of coordinate ``pos`` of subspace ``s`` over the rows whose
+    nearest code there is ``code``.  Assignment is ``pick``
+    (``_nearest_codes`` or ``_nearest_codes_arrow``) keeping the
+    embedding; the members' subvectors posexplode in the same stage
+    and a partial-aggregated (s, code, pos) avg crosses the round's
+    only exchange -- model-sized partials, never the corpus.  Spark's
+    avg skips NULL elements, and a ragged member adds to the
+    positions it has."""
     return (
-        _nearest_codes(src, "embedding", book, dsub)
+        pick(src, "embedding", book, dsub)
         .selectExpr(
             "s", "code", f"posexplode({_subvec_sql('CAST(s AS INT)', dsub)}) AS (pos, e)"
         )
@@ -1470,34 +1616,40 @@ def _lloyd_round(src: DataFrame, book: dict, dsub: int | None = None) -> DataFra
 
 
 def _lloyd(
-    emb: DataFrame, book: dict, iters: int, impl: str, m: int = 1,
+    emb: DataFrame, n_codes: int, iters: int, pick, m: int = 1,
     dsub: int | None = None,
 ) -> dict:
-    """The Lloyd loop behind ``kmeans_fit`` (m = 1, ``dsub`` None)
-    and ``pq_train``: ``iters`` rounds over the driver-held codebook
-    ``book`` = {s: [(code, cemb)]}, returned in the same form.
+    """The Lloyd loop behind ``kmeans_fit`` (m = 1, ``dsub`` None) and
+    ``pq_train``: init code c of every subspace = vector c's
+    ``_subvec_sql`` slice, then ``iters`` rounds; returns the
+    driver-held codebook {s: [(code, cemb)]}.
 
     The driver holds the model -- m x n_codes centroids, the same
     bounded model MLlib's KMeans broadcasts every round.  Each round
-    is ONE query over the widened corpus (``_lloyd_round``, or
-    ``_train_round_arrow`` for ``impl="arrow"``) whose only exchange
-    carries model-sized (s, code, pos) partials, and one collect
-    brings the new means back; a code that loses all members drops
-    out.  Nothing corpus-sized is joined, broadcast, checkpointed or
-    collected, and every round's plan is O(codebook) literals
-    regardless of ``iters``."""
+    is ONE query over the widened corpus (``_lloyd_round`` through
+    ``pick``) whose only exchange carries model-sized (s, code, pos)
+    partials, and one collect brings the new means back; a code that
+    loses all members drops out.  Nothing corpus-sized is joined,
+    broadcast, checkpointed or collected, and every round's plan is
+    O(codebook) regardless of ``iters``."""
     from ..sources.ingest import widen_partitions
 
+    init = emb.filter(F.col("vec_id") < n_codes).selectExpr(
+        "CAST(vec_id AS BIGINT) AS code",
+        "transform(embedding, x -> CAST(x AS DOUBLE)) AS cemb",
+    )
+    vecs = _book(init, "code", None).get(0, [])
+    book = {
+        s: [(c, v if v is None or dsub is None else v[s * dsub : (s + 1) * dsub])
+            for c, v in vecs]
+        for s in range(m)
+    } if vecs else {}
     src = widen_partitions(emb, "vec_id")
     for _ in range(iters):
         if not book:
             break
-        if impl == "arrow":
-            rnd = _train_round_arrow(src, book, m)
-        else:
-            rnd = _lloyd_round(src, book, dsub)
         means: dict = {}
-        for r in rnd.collect():  # bounded-model-collect
+        for r in _lloyd_round(src, book, dsub, pick).collect():  # bounded-model-collect
             means.setdefault((r["s"], r["code"]), []).append((r["pos"], r["c"]))
         book = {}
         for (s, code), pc in sorted(means.items()):
@@ -1528,19 +1680,12 @@ def kmeans_fit(
     to 1.73 s with one-query rounds, and the traced pass starts 7
     Spark jobs while building its queries instead of 13.
 
-    ``assign_impl="arrow"`` runs each round through the batched-NumPy
-    kernel (``_train_round_arrow``): assignment argmin AND
-    per-(cell, pos) partial sums in one corpus pass.  Bit-identical
-    to the relational ``"sql"`` form on finite data (same round-6
-    HALF_UP pre-argmin, same ties, fuzz-pinned); ``"auto"`` (default)
-    picks by k -- see ``_resolve_train_impl`` for the measured
-    crossover."""
-    assign_impl = _resolve_train_impl(assign_impl, k)
-    init = emb.filter(F.col("vec_id") < k).selectExpr(
-        "CAST(vec_id AS BIGINT) AS cell",
-        "transform(embedding, x -> CAST(x AS DOUBLE)) AS cemb",
-    )
-    book = _lloyd(emb, _book(init, "cell", None), iters, assign_impl)
+    ``assign_impl`` picks the form of the round's one nearest-code
+    pick, as in ``kmeans_assign``: ``"sql"`` (``_nearest_codes``),
+    ``"arrow"`` (``_nearest_codes_arrow``), or ``"auto"`` (default) by
+    k -- see ``_pick`` for the measured crossover.  Both give the same
+    codebook on every input."""
+    book = _lloyd(emb, k, iters, _pick(assign_impl, k, "assign_impl"))
     return _codebook_frame(emb.sparkSession, book.get(0, []))
 
 
@@ -1620,12 +1765,16 @@ def _spark_round6_np(a: "np.ndarray") -> "np.ndarray":
     fallback cost is negligible."""
     import numpy as np
 
-    y = a * 1e6
-    fl = np.floor(y)
-    frac = y - fl
-    out = np.where(frac >= 0.5, fl + 1.0, fl) / 1e6
+    with np.errstate(invalid="ignore", over="ignore"):  # NaN / +-Inf pass through
+        y = a * 1e6
+        fl = np.floor(y)
+        frac = y - fl
+    # from |x| >= 1e11 the shortest repr has at most 5 decimals: the
+    # round is the identity (x*1e6 may overflow); NaN, +-Inf pass too
+    keep = ~(np.abs(a) < 1e11)
+    out = np.where(keep, a, np.where(frac >= 0.5, fl + 1.0, fl) / 1e6)
     band = 4.0 * np.spacing(np.maximum(np.abs(y), 1.0))
-    risky = np.abs(frac - 0.5) <= band
+    risky = ~keep & (np.abs(frac - 0.5) <= band)
     if risky.any():
         from decimal import ROUND_HALF_UP, Decimal
 
@@ -1636,139 +1785,6 @@ def _spark_round6_np(a: "np.ndarray") -> "np.ndarray":
                 Decimal(repr(float(src[i]))).quantize(q, rounding=ROUND_HALF_UP)
             )
     return out
-
-
-def _codebook_mats(book: dict) -> tuple[dict, int]:
-    """A driver-held codebook {s: [(code, cemb)]} -> per-subspace
-    (codes, centroid-matrix) NumPy pairs, code-ASCENDING so that
-    ``np.argmin``'s first-hit IS the smaller-code tie-break the
-    relational ``_nearest_sql`` pick applies.  Shared by the
-    training-round and encode Arrow kernels so the layout contract
-    cannot drift between them."""
-    import numpy as np
-
-    dsub = len(next(iter(book.values()))[0][1])
-    mats = {}
-    for s, cands in book.items():
-        pairs = sorted((int(c), list(v)) for c, v in cands)
-        mats[int(s)] = (
-            np.asarray([c for c, _ in pairs], dtype="int64"),
-            np.asarray([v for _, v in pairs], dtype="float64"),
-        )
-    return mats, dsub
-
-
-def _train_round_arrow(src: DataFrame, book: dict, m: int) -> DataFrame:
-    """One FULL Lloyd round (assign + centroid update) over the
-    widened corpus ``src`` as one Arrow-batched NumPy pass: returns
-    the new (s, code, pos, c) means of the driver-held codebook
-    ``book`` under the relational round's exact contract (squared L2
-    rounded to 6 decimals with Spark's HALF_UP-on-shortest-repr scheme
-    BEFORE the argmin, ties to the smaller code, mean coordinates
-    rounded to 6 decimals, memberless codes dropping out).
-    Equality with the ``"sql"`` form is fuzz-pinned; the one residual
-    divergence class is a distance within ~1 ulp of a 1e-6 rounding
-    boundary AND within 1e-6 of a competing candidate (summation
-    order differs between NumPy and Catalyst folds) -- the same
-    accepted class the round-6-before-argmin contract exists to
-    absorb for the DuckDB oracles, with per-argmin probability
-    ~1e-11 on continuous data.
-
-    Why this exists (round-8 verdict): the relational assign's
-    m x n_codes distance folds are Catalyst ``aggregate`` lambdas --
-    interpreted, not codegen'd -- which dominates codebook training at
-    256 codes (~10 s per Lloyd round at sf1).  Training is the one
-    place a batched NumPy kernel is strictly better: the codebook is
-    MODEL PARAMETERS (m x n_codes rows, bounded by construction, the
-    same thing MLlib's KMeans collects and broadcasts every round), so
-    materializing it driver-side is O(model), never O(data).  The
-    SERVING paths (pq_encode / pq_topk / kmeans_assign) stay fully
-    relational and plan-pinned -- they are the oracled, composable
-    surface.  Reference analog: per-block NumPy kernels are exactly
-    how the reference executes its compute (_chunk.py wrappers).
-
-    Scale shape: ONE mapInArrow pass over the (widened) corpus; each
-    task computes all m subspace argmins for its batch in C-speed
-    NumPy and emits per-(s, code, pos) PARTIAL SUMS (the map-side
-    combine -- m x n_codes x dsub rows per batch, model-sized), so the
-    only shuffle in a training round carries model-sized partials, not
-    the corpus; the final mean + 6-decimal round stays relational on
-    that tiny table.  Nothing corpus-sized is collected, shuffled, or
-    broadcast."""
-    import numpy as np
-
-    mats, dsub = _codebook_mats(book)
-    dim = dsub * m
-    spos = np.arange(dsub, dtype="int64")
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            nvec = batch.num_rows
-            col = batch.column(1)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            X = np.asarray(col.flatten(), dtype="float64").reshape(nvec, dim)
-            cols = {k: [] for k in ("s", "code", "pos", "se", "cnt")}
-            for s, (codes, C) in mats.items():
-                Xs = X[:, s * dsub : (s + 1) * dsub]
-                best = np.empty(nvec, dtype="int64")
-                # chunk the (rows x codes x dsub) diff tensor so the
-                # kernel's working set stays a few MB per task
-                step = max(1, 4_000_000 // max(1, C.shape[0] * dsub))
-                for lo in range(0, nvec, step):
-                    d = Xs[lo : lo + step, None, :] - C[None, :, :]
-                    dist = _spark_round6_np(np.einsum("ijk,ijk->ij", d, d))
-                    best[lo : lo + step] = np.argmin(dist, axis=1)
-                sums = np.zeros((C.shape[0], dsub))
-                np.add.at(sums, best, Xs)
-                cnts = np.bincount(best, minlength=C.shape[0])
-                used = np.flatnonzero(cnts)
-                cols["s"].append(np.full(len(used) * dsub, s, dtype="int64"))
-                cols["code"].append(np.repeat(codes[used], dsub))
-                cols["pos"].append(np.tile(spos, len(used)))
-                cols["se"].append(sums[used].reshape(-1))
-                cols["cnt"].append(np.repeat(cnts[used].astype("int64"), dsub))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(cols[k])) for k in cols],
-                names=list(cols),
-            )
-
-    src = src.select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    parts = src.mapInArrow(
-        kernel, schema="s long, code long, pos long, se double, cnt long"
-    )
-    return parts.groupBy("s", "code", "pos").agg(
-        (F.round(F.sum("se") / F.sum("cnt"), 6) + F.lit(0.0)).alias("c")
-    )
-
-
-def _resolve_train_impl(assign_impl: str, n_candidates: int) -> str:
-    """Pick the Lloyd-round implementation.  ``"auto"`` chooses the
-    batched-NumPy Arrow kernel once the per-vector candidate count
-    (codes per subspace / cells) reaches 32: below that the
-    relational form wins (its cost is n_rows x candidates interpreted
-    in-row folds, one query per round; the kernel's is a fixed
-    Python-worker round-trip + a per-round model collect -- measured
-    crossover ~32 at both 2k and 20k vectors against the former
-    crossJoin rounds, with the kernel 12x ahead by 256 candidates).
-    Re-measured for kmeans_fit + kmeans_assign with one-query rounds
-    (sf0.1, 2,000 x 64, 2 rounds, 4-core container, median of 6): k=4
-    sql 1.38 s vs arrow 2.18 s, k=16 2.21 vs 2.14 s, k=32 3.09 vs
-    2.09 s -- the crossover now sits between 16 and 32.  The two
-    forms are bit-identical on finite data (fuzz-pinned), so this is
-    purely a cost choice; callers can force either."""
-    if assign_impl == "auto":
-        return "arrow" if n_candidates >= 32 else "sql"
-    if assign_impl not in ("arrow", "sql"):
-        raise ValueError(
-            f"assign_impl must be 'auto', 'arrow' or 'sql', got {assign_impl!r}"
-        )
-    return assign_impl
 
 
 def pq_train(
@@ -1792,23 +1808,13 @@ def pq_train(
 
     Scale shape: ``kmeans_fit``'s loop (``_lloyd``) over m slices --
     one query per round with one (s, code, pos) aggregate exchange
-    and a model-sized collect.  ``assign_impl``: ``"arrow"`` runs each
-    round as a batched NumPy mapInArrow kernel (``_train_round_arrow``),
-    ``"sql"`` as the relational in-row pick (``_lloyd_round``);
-    ``"auto"``, the default, picks by candidate count -- see
-    ``_resolve_train_impl``."""
-    assign_impl = _resolve_train_impl(assign_impl, n_codes)
-    dsub = _pq_dsub(dim, m)
-    init = emb.filter(F.col("vec_id") < n_codes).selectExpr(
-        "CAST(vec_id AS BIGINT) AS code",
-        "transform(embedding, x -> CAST(x AS DOUBLE)) AS cemb",
-    )
-    vecs = _book(init, "code", None).get(0, [])
-    book = {
-        s: [(c, None if v is None else v[s * dsub : (s + 1) * dsub]) for c, v in vecs]
-        for s in range(m)
-    } if vecs else {}
-    book = _lloyd(emb, book, iters, assign_impl, m, dsub)
+    and a model-sized collect.  ``assign_impl`` picks the form of the
+    round's one nearest-code pick, as in ``pq_encode``: ``"sql"``
+    (``_nearest_codes``), ``"arrow"`` (``_nearest_codes_arrow``), or
+    ``"auto"`` (default) by candidate count -- see ``_pick``.  Both
+    give the same codebook on every input."""
+    pick = _pick(assign_impl, n_codes, "assign_impl")
+    book = _lloyd(emb, n_codes, iters, pick, m, _pq_dsub(dim, m))
     return _codebook_frame(
         emb.sparkSession,
         [(s, c, v) for s, cands in sorted(book.items()) for c, v in cands],
@@ -1827,86 +1833,6 @@ def _auto_rerank(n: int) -> int:
     return max(8, min(1024, -(-n // 600)))
 
 
-def _pq_assign_arrow(
-    emb: DataFrame, book: dict, dim: int | None, m: int,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """The encode counterpart of ``_train_round_arrow``: nearest code
-    per (vector, subspace) of the driver-held codebook ``book`` =
-    {s: [(code, cemb)]} computed in ONE mapInArrow pass -- batched
-    NumPy argmin under the exact relational contract (squared L2
-    rounded to 6 decimals with Spark's HALF_UP-on-shortest-repr
-    scheme BEFORE the argmin, ties to the smaller code).  Output
-    (id, s, code, dist), identical to ``_nearest_codes``; equality is
-    fuzz-pinned, with the same accepted ~1e-11 divergence class as
-    training (a distance within ~1 ulp of a 1e-6 rounding boundary
-    AND within 1e-6 of a competing candidate).
-
-    Why this exists (round-10 scale finding): the relational assign
-    explodes to corpus x m x n_codes rows of interpreted ``aggregate``
-    folds -- at 256 codes that is a 256x row blowup per subspace
-    (1.2e9 fold rows for a 600k corpus, ~700 s measured), and encode
-    is HALF the index build the training fix left behind.  The kernel
-    emits exactly corpus x m rows, nothing corpus-sized is collected
-    or broadcast, and the codebook it reads is model parameters."""
-    import numpy as np
-
-    from ..sources.ingest import widen_partitions
-
-    mats, dsub = _codebook_mats(book)
-    if dim is None:
-        dim = dsub * m
-    if dsub * m != dim:
-        raise ValueError(
-            f"codebook subvector length {dsub} x m={m} != dim {dim}"
-        )
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            nvec = batch.num_rows
-            ids = np.asarray(batch.column(0), dtype="int64")
-            col = batch.column(1)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            X = np.asarray(col.flatten(), dtype="float64").reshape(nvec, dim)
-            out_s, out_code, out_dist = [], [], []
-            for s, (codes, C) in mats.items():
-                Xs = X[:, s * dsub : (s + 1) * dsub]
-                best = np.empty(nvec, dtype="int64")
-                dmin = np.empty(nvec, dtype="float64")
-                # chunk the (rows x codes x dsub) diff tensor so the
-                # working set stays a few MB per task
-                step = max(1, 4_000_000 // max(1, C.shape[0] * dsub))
-                for lo in range(0, nvec, step):
-                    d = Xs[lo : lo + step, None, :] - C[None, :, :]
-                    dist = _spark_round6_np(np.einsum("ijk,ijk->ij", d, d))
-                    am = np.argmin(dist, axis=1)
-                    best[lo : lo + step] = am
-                    dmin[lo : lo + step] = dist[np.arange(dist.shape[0]), am]
-                out_s.append(np.full(nvec, s, dtype="int64"))
-                out_code.append(codes[best])
-                out_dist.append(dmin)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.tile(ids, len(mats))),
-                    pa.array(np.concatenate(out_s)),
-                    pa.array(np.concatenate(out_code)),
-                    pa.array(np.concatenate(out_dist)),
-                ],
-                names=[id_col, "s", "code", "dist"],
-            )
-
-    src = widen_partitions(emb, id_col).select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    return src.mapInArrow(
-        kernel, schema=f"{id_col} long, s long, code long, dist double"
-    )
-
-
 def pq_encode(
     emb: DataFrame, cents: DataFrame, dim: int, m: int = 4,
     impl: str = "auto",
@@ -1918,29 +1844,22 @@ def pq_encode(
     diagnostic).
 
     The codebook is model-sized and collected once (the same bounded
-    collect ``kmeans_assign`` makes).  ``impl``: ``"sql"`` is the
-    relational form (``_nearest_codes`` over m slices: one in-row
-    pick per subspace against the literal codebook, no join, no
-    aggregate -- the oracled, plan-pinned surface); ``"arrow"`` runs
-    the argmin as a batched NumPy mapInArrow kernel
-    (``_pq_assign_arrow``) -- at 256 codes the relational form's
+    collect ``kmeans_assign`` makes).  The encode is ONE nearest-code
+    pick per subspace (m slices) in one of two forms that give the
+    same rows on every input: ``"sql"``, the relational
+    ``_nearest_codes`` (one in-row pick per subspace against the
+    literal codebook, no join, no aggregate -- the oracled,
+    plan-pinned surface), or ``"arrow"``, the batched-NumPy
+    ``_nearest_codes_arrow`` -- at 256 codes the relational form's
     corpus x m x n_codes interpreted folds dominate the whole index
-    build, the same economics that moved training to Arrow in round
-    9; ``"auto"`` (default) picks by codebook size with the training
-    threshold (arrow at >= 32 codes)."""
-    if impl not in ("auto", "arrow", "sql"):
-        raise ValueError(f"impl must be 'auto', 'arrow' or 'sql', got {impl!r}")
-    book = _book(cents)
-    if impl == "auto":
-        # m rows per code -> n_codes = rows / m
-        impl = _resolve_train_impl("auto", sum(map(len, book.values())) // max(1, m))
-    if impl == "arrow":
-        return _pq_assign_arrow(emb, book, dim, m)
+    build.  ``"auto"`` (default) picks by codebook size with the
+    training threshold (arrow at >= 32 codes, ``_pick``)."""
     from ..sources.ingest import widen_partitions
 
-    return _nearest_codes(
-        widen_partitions(emb, "vec_id"), "vec_id", book, _pq_dsub(dim, m)
-    )
+    book = _book(cents)
+    # m rows per code -> n_codes = rows / m
+    pick = _pick(impl, sum(map(len, book.values())) // max(1, m))
+    return pick(widen_partitions(emb, "vec_id"), "vec_id", book, _pq_dsub(dim, m))
 
 
 def pq_pack(codes: DataFrame) -> DataFrame:

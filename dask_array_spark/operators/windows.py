@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..core.array import VALUE_COL, Array
+from ..session import _track_persist
 
 __all__ = [
     "cumsum",
@@ -185,11 +186,11 @@ def _block_scan(
     # (__blk, i0) ordering, so the one shuffle happens at cache build
     # and neither consumer exchanges or sorts.  Block keys are
     # equal-sized by construction, so range partitions are balanced.
-    d = (
+    # ``session.release_caches`` frees the copy.
+    d = _track_persist(
         a.df.withColumn("__blk", F.floor(F.col("i0") / F.lit(block)).cast("long"))
         .repartitionByRange("__blk")
         .sortWithinPartitions("__blk", "i0")
-        .persist()
     )
     p = d.groupBy("__blk").agg(*[e.alias(c) for c, e in partials.items()])
     n = a.shape[0]

@@ -5,12 +5,14 @@ entry point takes an existing ``SparkSession`` (mirroring how the
 reference delegates execution to whatever dask scheduler is active,
 /root/reference/dask_array/_collection.py:282).  ``get_spark`` is a
 convenience for tests / bench only; ``local_frame`` turns small
-driver-held rows into a frame.
+driver-held rows into a frame; ``release_caches`` frees the fan-out
+caches the package persisted.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -110,3 +112,56 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, struct)
+
+
+# Fan-out caches the package persisted (the scalable scans' sorted
+# copy, the LSH band and k-gram position tables), tracked so a
+# long-lived service has an explicit cleanup path.  Keyed per
+# SparkSession and guarded by a lock: a process hosting several
+# sessions -- or several threads driving pipelines on one session --
+# must not have one pipeline's release_caches() unpersist caches still
+# backing another session's lazy frames.
+_TRACKED_CACHES: dict[int, list[DataFrame]] = {}
+_TRACKED_LOCK = threading.Lock()
+
+
+def _track_persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, registered for ``release_caches``."""
+    cached = df.persist()
+    with _TRACKED_LOCK:
+        _TRACKED_CACHES.setdefault(id(df.sparkSession), []).append(cached)
+    return cached
+
+
+def release_caches(
+    blocking: bool = False, spark: SparkSession | None = None
+) -> int:
+    """Unpersist every fan-out cache the package created (the sorted
+    axis copy behind a scalable ``cumsum``/``push``, the persisted
+    band / k-gram position tables behind ``lsh_candidate_pairs`` and
+    ``duplicated_spans``) -- for one session when ``spark`` is given,
+    else for all sessions this process created caches on.
+
+    A long-lived service processing distinct batches calls this
+    between batches; one-shot pipelines never need to (the caches die
+    with the app).  Caches are tracked PER SESSION, so a multi-tenant
+    process releasing one tenant's session leaves the others' caches
+    warm; within one session the caller still owns the ordering
+    contract: only call AFTER fully consuming the returned frames --
+    the caches back those lazy plans, so an un-consumed frame
+    recomputes its lineage (correct, just slower).  Returns the number
+    of cache entries released."""
+    with _TRACKED_LOCK:
+        if spark is None:
+            drained = [d for lst in _TRACKED_CACHES.values() for d in lst]
+            _TRACKED_CACHES.clear()
+        else:
+            drained = _TRACKED_CACHES.pop(id(spark), [])
+    n = 0
+    for df in drained:
+        try:
+            df.unpersist(blocking)
+            n += 1
+        except Exception:
+            pass  # session already stopped -- nothing to release
+    return n

@@ -46,6 +46,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from ..core.array import VALUE_COL, Array
+from ..session import local_frame
 from .ingest import _cells_value, _value_kind, _value_sql_type
 
 __all__ = ["from_hdf5", "to_hdf5", "h5_ls"]
@@ -653,7 +654,8 @@ def _materialize_fill(spark, arr, info, table, shape, chunks, dtype) -> Array:
     missing = [c for c in np.ndindex(*grid) if tuple(c) not in present]
     if not missing:
         return arr
-    mdf = spark.createDataFrame(
+    mdf = local_frame(
+        spark,
         [tuple(int(x) for x in c) for c in missing],
         ", ".join(f"c{k} long" for k in range(ndim)),
     ).repartition(min(len(missing), 64))
@@ -728,7 +730,7 @@ def _read_contiguous(spark, path, info, shape, dtype, filters) -> Array:
         )
         for s in range(nslabs)
     ]
-    sdf = spark.createDataFrame(slabs, "addr long, nbytes long, row0 long")
+    sdf = local_frame(spark, slabs, "addr long, nbytes long, row0 long")
     sdf = sdf.repartition(min(nslabs, spark.sparkContext.defaultParallelism))
     ndim = len(shape)
     dtype_str = dtype.str
@@ -763,7 +765,8 @@ def _read_chunked(spark, path, table, shape, chunks, dtype, filters) -> Array:
         vt = _value_sql_type(_value_kind(dtype))
         schema = ", ".join(f"i{k} long" for k in range(ndim)) + f", {VALUE_COL} {vt}"
         return Array(spark.createDataFrame([], schema), shape)
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [tuple(int(x) for x in row) for row in table],
         "addr long, nbytes long, " + ", ".join(f"c{k} long" for k in range(ndim)),
     )

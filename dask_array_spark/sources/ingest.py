@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.array import VALUE_COL, Array
+from ..session import local_frame
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -821,8 +822,8 @@ def from_map(
     elif block_lengths is None:
         block_lengths = [block_len] * len(vals)
     offsets = np.concatenate([[0], np.cumsum(block_lengths)]).astype("int64")
-    off_df = spark.createDataFrame(
-        [(i, int(offsets[i])) for i in range(len(vals))], "bid long, off long"
+    off_df = local_frame(
+        spark, [(i, int(offsets[i])) for i in range(len(vals))], "bid long, off long"
     )
     d = base.join(F.broadcast(off_df), on="bid")
 

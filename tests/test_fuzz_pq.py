@@ -173,8 +173,8 @@ def test_pq_topk_adc_model(spark, n, m, n_codes, k, seed):
     st.integers(0, 10_000),
 )
 def test_pq_train_arrow_equals_sql(spark, n, m, n_codes, iters, seed):
-    """The round-9 Arrow train path (batched NumPy argmin,
-    _train_assign_arrow) must produce BIT-IDENTICAL codebooks to the
+    """The Arrow train path (Lloyd rounds through _nearest_codes_arrow)
+    must produce BIT-IDENTICAL codebooks to the
     relational form on hostile continuous data -- not just the FP-exact
     grid the model tests use -- exercising the Spark-round-6 guard-band
     fallback on real double noise."""
@@ -193,6 +193,19 @@ def test_pq_train_arrow_equals_sql(spark, n, m, n_codes, iters, seed):
     assert got == want and got
 
 
+def _hostile_emb(spark, X):
+    """X's rows, then a NULL row, a NULL-element row, a NaN row, and a
+    short and a long ragged row."""
+    dim = X.shape[1]
+    extra = [
+        None, [None] + [1.0] * (dim - 1), [float("nan")] * dim,
+        [1.0] * (dim - 3), [0.5] * (dim + 3),
+    ]
+    rows = [(i, [float(x) for x in r]) for i, r in enumerate(X.astype("float32"))]
+    rows += [(len(X) + j, v) for j, v in enumerate(extra)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
 @settings(max_examples=4, deadline=None)
 @given(
     st.integers(6, 16),
@@ -201,10 +214,12 @@ def test_pq_train_arrow_equals_sql(spark, n, m, n_codes, iters, seed):
     st.integers(0, 10_000),
 )
 def test_pq_encode_arrow_equals_sql(spark, n, m, n_codes, seed):
-    """The round-10 Arrow encode path (_pq_assign_arrow) must produce
-    IDENTICAL (vec_id, s, code, dist) rows to the relational
-    _pq_assign on hostile continuous data AND on an integer grid that
-    forces exact distance ties (the smaller-code tie-break)."""
+    """The Arrow pick (_nearest_codes_arrow) must produce IDENTICAL
+    (vec_id, s, code, dist) rows to the relational _nearest_codes on
+    hostile continuous data, on an integer grid that forces exact
+    distance ties (the smaller-code tie-break), on NULL, NULL-element,
+    NaN and ragged rows, and against a codebook with a NULL and a NaN
+    centroid."""
     from dask_array_spark.functions import similarity as SIM
 
     dim = 8
@@ -214,21 +229,31 @@ def test_pq_encode_arrow_equals_sql(spark, n, m, n_codes, seed):
         if seed % 3 == 0
         else rng.normal(size=(n, dim)) * rng.choice([1e-3, 1.0, 50.0])
     )
-    emb = _emb_df(spark, X)
-    cents = SIM.pq_train(emb, dim=dim, m=m, n_codes=n_codes, iters=1)
+    emb = _hostile_emb(spark, X)
+    cents = SIM.pq_train(_emb_df(spark, X), dim=dim, m=m, n_codes=n_codes, iters=1)
+    # a NULL centroid in subspace 0, a NaN one in every subspace
+    book = [tuple(r) for r in cents.collect()] + [(0, n_codes, None)] + [
+        (s, n_codes + 1, [float("nan")] * (dim // m)) for s in range(m)
+    ]
+    cents = spark.createDataFrame(book, "s long, code long, cemb array<double>")
     a = SIM.pq_encode(emb, cents, dim=dim, m=m, impl="arrow")
     s = SIM.pq_encode(emb, cents, dim=dim, m=m, impl="sql")
-    got = {(r["vec_id"], r["s"]): (r["code"], r["dist"]) for r in a.collect()}
-    want = {(r["vec_id"], r["s"]): (r["code"], r["dist"]) for r in s.collect()}
-    assert got == want and got
+    got = {(r["vec_id"], r["s"]): (r["code"], _nan_tag(r["dist"])) for r in a.collect()}
+    want = {(r["vec_id"], r["s"]): (r["code"], _nan_tag(r["dist"])) for r in s.collect()}
+    assert got == want and len(got) == (n + 5) * m
+
+
+def _nan_tag(d):
+    return "nan" if d is not None and np.isnan(d) else d
 
 
 @settings(max_examples=4, deadline=None)
 @given(st.integers(6, 16), st.integers(2, 5), st.integers(0, 10_000))
 def test_kmeans_assign_arrow_equals_sql(spark, n, k, seed):
-    """kmeans_assign through the m=1 encode kernel must produce
-    IDENTICAL (vec_id, cell, dist) rows to the relational crossJoin +
-    min_by form, including forced exact-distance ties."""
+    """kmeans_assign through the Arrow pick must produce IDENTICAL
+    (vec_id, cell, dist) rows to the relational pick, including
+    forced exact-distance ties, NULL, NULL-element, NaN and ragged
+    rows, and a codebook holding a NaN centroid or a NULL one."""
     from dask_array_spark.functions import similarity as SIM
 
     rng = np.random.default_rng(seed)
@@ -237,13 +262,15 @@ def test_kmeans_assign_arrow_equals_sql(spark, n, k, seed):
         if seed % 3 == 0
         else rng.normal(size=(n, 8)) * rng.choice([1e-3, 1.0, 50.0])
     )
-    emb = _emb_df(spark, X)
-    cents = SIM.kmeans_fit(emb, k=k, iters=1)
-    a = SIM.kmeans_assign(emb, cents, impl="arrow")
-    s = SIM.kmeans_assign(emb, cents, impl="sql")
-    got = {r["vec_id"]: (r["cell"], r["dist"]) for r in a.collect()}
-    want = {r["vec_id"]: (r["cell"], r["dist"]) for r in s.collect()}
-    assert got == want and got
+    emb = _hostile_emb(spark, X)
+    trained = [tuple(r) for r in SIM.kmeans_fit(_emb_df(spark, X), k=k, iters=1).collect()]
+    for extra in ([(k, [float("nan")] * 8)], [(k, None)]):
+        cents = spark.createDataFrame(trained + extra, "cell long, cemb array<double>")
+        a = SIM.kmeans_assign(emb, cents, impl="arrow")
+        s = SIM.kmeans_assign(emb, cents, impl="sql")
+        got = {r["vec_id"]: (r["cell"], _nan_tag(r["dist"])) for r in a.collect()}
+        want = {r["vec_id"]: (r["cell"], _nan_tag(r["dist"])) for r in s.collect()}
+        assert got == want and len(got) == n + 5
 
 
 def test_auto_rerank_rule():
@@ -311,6 +338,11 @@ def test_spark_round6_np_matches_decimal_model():
     got = _spark_round6_np(hostile)
     for x, g in zip(hostile, got):
         assert g == spark_round6(float(x)), (x, g, spark_round6(float(x)))
+    # from 1e11 up the shortest repr has at most 5 decimals: the round
+    # is the identity, also where x * 1e6 overflows
+    big = np.array([1e11 + 0.5, 3.0e15 + 0.5, 1e22, 1e300, np.inf])
+    assert list(_spark_round6_np(big)) == list(big)
+    assert [spark_round6(float(x)) for x in big[:2]] == list(big[:2])
 
 
 def test_pq_validates_dim(spark):

@@ -383,3 +383,47 @@ def test_sq8_topk_arrow_candidates_raises(spark):
                      impl="arrow")
     assert SIM.sq8_topk(emb, [0], k=3, codes=codes, candidates=cand,
                         impl="auto").count() == 3
+
+
+def test_explicit_arrow_serves_null_and_ragged_queries(spark):
+    """Explicit impl='arrow' with a query set containing a NULL
+    embedding and a ragged (different-length) vector must still run
+    the kernel and agree with the SQL form exactly."""
+    from dask_array_spark.functions import similarity as SIM
+
+    rows = [
+        (0, [1.0, 2.0, 3.0]),
+        (1, [4.0, -1.0, 0.5]),
+        (2, None),
+        (3, [1.0, 2.0]),
+        (4, [-1.0, -2.0, -3.0]),
+        (5, [2.0, 1.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    qids = [0, 2, 3]
+    a = SIM.cosine_topk(emb, qids, k=3, impl="arrow").orderBy("qid", "rank")
+    s = SIM.cosine_topk(emb, qids, k=3, impl="sql").orderBy("qid", "rank")
+    ta, ts = [tuple(r) for r in a.collect()], [tuple(r) for r in s.collect()]
+    assert ta == ts
+    # the ragged query (id 3, len 2) matches ONLY the other len-2 row
+    assert [t for t in ta if t[0] == 3] == [
+        t for t in ts if t[0] == 3
+    ] and any(t[0] == 3 and t[2] == 5 for t in ta)
+    # the NULL query (id 2) emits no rows in either form
+    assert not any(t[0] == 2 for t in ta)
+    # the arrow plan is honored: a mapInArrow scan is present
+    assert "mapinarrow" in a._jdf.queryExecution().executedPlan().toString().lower()
+
+
+def test_arrow_kernel_accepts_huge_vec_ids(spark):
+    """vec_id >= 2**40 no longer refuses: threshold pruning carries
+    ids verbatim (the round-11 packed key could not)."""
+    from dask_array_spark.functions import similarity as SIM
+
+    big = 1 << 50
+    rows = [(big + i, [float(i + 1), 1.0, -float(i)]) for i in range(8)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    qids = [big, big + 3]
+    a = SIM.cosine_topk(emb, qids, k=4, impl="arrow").orderBy("qid", "rank")
+    s = SIM.cosine_topk(emb, qids, k=4, impl="sql").orderBy("qid", "rank")
+    assert [tuple(r) for r in a.collect()] == [tuple(r) for r in s.collect()]

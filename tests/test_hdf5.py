@@ -261,3 +261,78 @@ def test_external_int_dataset_reads_as_long(spark, tmp_path):
     from dask_array_spark.operators import reductions as R
 
     assert R.sum(a, axis=None).compute() == xi.sum()
+
+
+def _masked_int_array(spark, dtype="long"):
+    """A 1-d int array with one NULL cell, in the engine's cell form."""
+    import decimal
+
+    from dask_array_spark.core.array import Array
+
+    one, three = (
+        (decimal.Decimal(1), decimal.Decimal(3))
+        if dtype.startswith("decimal")
+        else (1, 3)
+    )
+    df = spark.createDataFrame(
+        [(0, one), (1, None), (2, three)], f"i0 long, v {dtype}"
+    )
+    return Array(df, (3,))
+
+
+def test_to_hdf5_int64_null_cells_refused(spark, tmp_path):
+    from dask_array_spark.sources.hdf5 import to_hdf5
+
+    a = _masked_int_array(spark)
+    with pytest.raises(Exception, match="NULL cells .* int64/uint64 HDF5"):
+        to_hdf5(a, str(tmp_path / "x.h5"), "/x")
+
+
+def test_to_hdf5_chunked_int64_null_cells_refused(spark, tmp_path):
+    from dask_array_spark.sources.hdf5 import to_hdf5
+
+    a = _masked_int_array(spark)
+    with pytest.raises(Exception, match="NULL cells .* int64/uint64 HDF5"):
+        to_hdf5(a, str(tmp_path / "x.h5"), "/x", chunks=(2,),
+                compression="gzip")
+
+
+def test_to_hdf5_uint64_null_cells_refused(spark, tmp_path):
+    from dask_array_spark.sources.hdf5 import to_hdf5
+
+    a = _masked_int_array(spark, dtype="decimal(20,0)")
+    with pytest.raises(Exception, match="NULL cells .* int64/uint64 HDF5"):
+        to_hdf5(a, str(tmp_path / "x.h5"), "/x")
+
+
+def test_to_hdf5_int64_without_nulls_still_roundtrips(spark, tmp_path):
+    """The flag-and-coalesce rewrite must not disturb clean int writes
+    (values above 2**53 stay exact)."""
+    from dask_array_spark.operators import reductions as R
+    from dask_array_spark.sources.hdf5 import from_hdf5, to_hdf5
+    from dask_array_spark.sources.ingest import from_numpy
+
+    x = np.array([2**53 + 1, -7, 0, 2**62], dtype=np.int64)
+    p = str(tmp_path / "ok.h5")
+    to_hdf5(from_numpy(spark, x), p, "/x")
+    back = from_hdf5(spark, p, "/x")
+    assert R.sum(back, axis=None).compute() == int(x.sum())
+
+
+def test_chunk_pass_missing_addr_entry_is_explanatory(spark, tmp_path):
+    """A chunk appearing only in pass 2 (nondeterministic source with
+    constant encoded size) raises the persist() guidance, not a bare
+    KeyError."""
+    from dask_array_spark.core.array import Array
+    from dask_array_spark.sources import hdf5 as H
+
+    df = spark.createDataFrame([(0, 1.0), (1, 2.0), (2, 3.0)], "i0 long, v double")
+    a = Array(df, (3,))
+    # pass-1 layout that is missing chunk (2,): pass 2 must refuse
+    # with the determinism error when it encounters it
+    addr_map = {(0,): (4096, 16)}
+    p = str(tmp_path / "t.h5")
+    with open(p, "wb") as f:
+        f.write(b"\0" * 8192)
+    with pytest.raises(Exception, match="not deterministic|appeared only"):
+        H._chunk_pass(a, (2,), [], filename=p, addr_map=addr_map)

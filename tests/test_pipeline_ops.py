@@ -112,44 +112,39 @@ _K_ABOVE_FIT = (
     {0: [0.0, 0.0], 1: [4.0, 4.0], 2: [1.0, 0.5]},
     {0: (0, 0.0), 1: (1, 0.0), 2: (2, 0.0)},
 )
-# case -> (embeddings, k, sql leg, arrow leg): the (codebook {cell:
-# cemb}, assignment {vec_id: (cell, dist)}) each leg produces after 2
-# Lloyd rounds, or None where the leg rejects the input.  The relational
-# leg ranks a NULL distance (NULL or ragged row) first and NaN last and
-# drops emptied cells; the Arrow kernel needs a dense matrix, so it fails
-# on NULL, ragged and empty input, and np.argmin ranks NaN first.
+# case -> (embeddings, k, want): the (codebook {cell: cemb}, assignment
+# {vec_id: (cell, dist)}) both legs produce after 2 Lloyd rounds.  A
+# NULL distance (NULL or ragged row, NULL centroid) ranks first and NaN
+# last, ties go to the smaller cell, and emptied cells drop out.
 _HOSTILE_KMEANS = {
     "null_embedding": (
         [[0.0, 0.0], [4.0, 4.0], None, [1.0, 0.5], [5.0, 4.5]], 2,
-        _NULL_EMB_FIT, None,
+        _NULL_EMB_FIT,
     ),
     "null_init_centroid": (
         [None, [4.0, 4.0], [1.0, 0.5], [5.0, 4.5]], 2,
         ({0: [3.333333, 3.0]},
          {0: (0, None), 1: (0, 1.444445), 2: (0, 11.694443), 3: (0, 5.027779)}),
-        None,
     ),
     "nan_coordinate": (
         [[0.0, 0.0], [4.0, 4.0], [_NAN, 1.0], [1.0, 0.5], [5.0, 4.5]], 2,
         ({0: [_NAN, 1.0], 1: [2.5, 2.25]},
          {0: (1, 11.3125), 1: (1, 5.3125), 2: (0, _NAN), 3: (1, 5.3125),
           4: (1, 11.3125)}),
-        ({0: [_NAN, 2.0]}, {i: (0, _NAN) for i in range(5)}),
     ),
     "ragged_row": (
         [[0.0, 0.0], [4.0, 4.0], [1.0, 0.5, 2.0], [1.0, 0.5], [5.0, 4.5]], 2,
         ({0: [2.5, 2.25], 1: [1.0, 0.5, 2.0]},
          {0: (1, None), 1: (1, None), 2: (0, None), 3: (1, None), 4: (1, None)}),
-        None,
     ),
     "emptied_cell": (
         [[0.0, 0.0], [0.0, 0.0], [4.0, 4.0], [1.0, 0.5], [5.0, 4.5]], 3,
-        _EMPTIED_FIT, _EMPTIED_FIT,
+        _EMPTIED_FIT,
     ),
     "k_above_rows": (
-        [[0.0, 0.0], [4.0, 4.0], [1.0, 0.5]], 5, _K_ABOVE_FIT, _K_ABOVE_FIT,
+        [[0.0, 0.0], [4.0, 4.0], [1.0, 0.5]], 5, _K_ABOVE_FIT,
     ),
-    "empty_corpus": ([], 3, ({}, {}), None),
+    "empty_corpus": ([], 3, ({}, {})),
 }
 
 
@@ -163,31 +158,22 @@ def _nan_tagged(v):
 @pytest.mark.parametrize("case", sorted(_HOSTILE_KMEANS))
 def test_kmeans_hostile_inputs_pinned(spark, case, impl):
     """NULL / NaN / ragged embeddings, an emptied cell, k above the row
-    count and an empty corpus: both legs keep exactly the codebook and
-    assignment rows pinned above."""
+    count and an empty corpus: both legs give exactly the one codebook
+    and assignment row set pinned above."""
     from dask_array_spark.functions.similarity import kmeans_assign, kmeans_fit
 
-    rows, k, sql_want, arrow_want = _HOSTILE_KMEANS[case]
-    want = sql_want if impl == "sql" else arrow_want
+    rows, k, (cb, asg) = _HOSTILE_KMEANS[case]
     emb = spark.createDataFrame(
         [(i, r) for i, r in enumerate(rows)], "vec_id long, embedding array<float>"
     )
 
-    def run():
-        cents = kmeans_fit(emb, k=k, iters=2, assign_impl=impl)
-        codebook = {r["cell"]: _nan_tagged(r["cemb"]) for r in cents.collect()}
-        assign = {
-            r["vec_id"]: (r["cell"], _nan_tagged(r["dist"]))
-            for r in kmeans_assign(emb, cents, impl=impl).collect()
-        }
-        return codebook, assign
-
-    if want is None:
-        with pytest.raises(Exception):
-            run()
-        return
-    cb, asg = want
-    assert run() == (
+    cents = kmeans_fit(emb, k=k, iters=2, assign_impl=impl)
+    codebook = {r["cell"]: _nan_tagged(r["cemb"]) for r in cents.collect()}
+    assign = {
+        r["vec_id"]: (r["cell"], _nan_tagged(r["dist"]))
+        for r in kmeans_assign(emb, cents, impl=impl).collect()
+    }
+    assert (codebook, assign) == (
         {c: _nan_tagged(v) for c, v in cb.items()},
         {i: (c, _nan_tagged(d)) for i, (c, d) in asg.items()},
     )

@@ -592,3 +592,20 @@ def test_registry_driver_rows_are_local_table_scans(spark, sf_dir):
         plan = _plan(q(spark, sf_dir))
         assert "LocalTableScan" in plan, q.__name__
         assert "ExistingRDD" not in plan, q.__name__
+
+
+def test_hdf5_driver_rows_are_local_table_scans(spark, tmp_path):
+    """A contiguous and a chunked ``from_hdf5`` read hand their
+    driver-held slab / chunk tables to Spark as a ``LocalTableScan``,
+    not a ``Scan ExistingRDD``."""
+    import numpy as np
+
+    from dask_array_spark.sources import from_hdf5, from_numpy, to_hdf5
+
+    x = from_numpy(spark, np.arange(40, dtype="float64").reshape(8, 5))
+    for name, kw in (("contiguous", {}), ("chunked", {"chunks": (3, 5)})):
+        fn = str(tmp_path / f"{name}.h5")
+        to_hdf5(x, fn, "/x", **kw)
+        plan = _plan(from_hdf5(spark, fn, "/x").df)
+        assert "LocalTableScan" in plan, name
+        assert "ExistingRDD" not in plan, name

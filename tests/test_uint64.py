@@ -248,3 +248,14 @@ def test_decimal_col_refusals():
         _decimal_col_to_uint64(
             pd.Series([decimal.Decimal(2**64)], dtype=object)
         )
+
+
+def test_parse_fill_uint64_rejects_out_of_domain():
+    from dask_array_spark.sources.ingest import _parse_fill
+
+    assert _parse_fill(0, "u") == 0
+    assert _parse_fill(float(2**53), "u") == 2**53
+    assert _parse_fill(str(2**64 - 1), "u") == 2**64 - 1
+    for bad in (-5, -3.0, "-1", 2**64, float(2**65)):
+        with pytest.raises(ValueError, match=r"\[0, 2\*\*64\)"):
+            _parse_fill(bad, "u")

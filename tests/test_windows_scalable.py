@@ -288,3 +288,24 @@ def test_scalable_scan_pass2_has_no_exchange_or_sort(spark):
         assert "InMemoryTableScanExec" in nodes, (name, nodes)
         bad = [n for n in nodes if "Exchange" in n or "Sort" in n]
         assert not bad, (name, nodes)
+
+
+def test_release_caches_frees_scalable_scan_caches(spark):
+    """Scalable cumsum and push each persist a range-sorted copy of
+    their axis; ``release_caches()`` unpersists them, so the session's
+    persistent-RDD count returns to where it started."""
+    from dask_array_spark.session import release_caches
+
+    release_caches(blocking=True, spark=spark)
+    sc = spark.sparkContext._jsc.sc()
+    start = sc.getPersistentRDDs().size()
+    big_n = W.SCALABLE_1D_THRESHOLD + 5
+    for op, v in (
+        (W.cumsum, "CAST(id % 97 AS DOUBLE)"),
+        (W.push, "CASE WHEN id % 7 = 3 THEN NULL ELSE CAST(id % 89 AS DOUBLE) END"),
+    ):
+        a = Array(spark.range(big_n).selectExpr("id AS i0", f"{v} AS v"), (big_n,))
+        op(a).df.count()
+    assert sc.getPersistentRDDs().size() == start + 2
+    assert release_caches(blocking=True, spark=spark) == 2
+    assert sc.getPersistentRDDs().size() == start
