@@ -37,7 +37,6 @@ the same layout h5py's chunked/gzip default produces).
 from __future__ import annotations
 
 import math
-import os
 import struct
 from typing import Iterator
 
@@ -47,7 +46,14 @@ from pyspark.sql import SparkSession
 
 from ..core.array import VALUE_COL, Array
 from ..session import local_frame
-from .ingest import _cells_value, _value_kind, _value_sql_type
+from .ingest import (
+    _cells_block,
+    _cells_schema,
+    _chunk_cells,
+    _fill_chunks,
+    _value_kind,
+    from_numpy,
+)
 
 __all__ = ["from_hdf5", "to_hdf5", "h5_ls"]
 
@@ -594,8 +600,7 @@ def from_hdf5(spark: SparkSession, path: str, datapath: str) -> Array:
 
         if info.get("layout") == "compact":
             data = _decode_chunk(info["data"], filters, dtype, 0)
-            vals = np.frombuffer(data, dtype=dtype).reshape(shape)
-            return _from_driver_dense(spark, vals)
+            return from_numpy(spark, np.frombuffer(data, dtype=dtype).reshape(shape))
 
         if info.get("layout") == "contiguous":
             return _read_contiguous(spark, path, info, shape, dtype, filters)
@@ -634,8 +639,10 @@ def from_hdf5(spark: SparkSession, path: str, datapath: str) -> Array:
 def _materialize_fill(spark, arr, info, table, shape, chunks, dtype) -> Array:
     """h5py's default fill is 0 (not NaN): unwritten chunks of a
     chunked dataset must read as the fill value, so emit fill cells
-    for the grid positions absent from the chunk index -- same
-    chunk-coordinate diff the zarr reader does (metadata-sized)."""
+    (``_fill_chunks``, the zarr readers' emitter) for the grid
+    positions absent from the chunk index.  The missing set is a
+    driver-side set difference, unlike zarr's distributed anti-join:
+    the driver already holds the chunk table from the B-tree walk."""
     fill_bytes = info.get("fill")
     fill = np.zeros(1, dtype=dtype)[0]  # h5py default fill = 0
     if fill_bytes is not None and len(fill_bytes) == dtype.itemsize:
@@ -643,10 +650,6 @@ def _materialize_fill(spark, arr, info, table, shape, chunks, dtype) -> Array:
         # float() would round values above 2**53 and break the
         # value-exact int contract for fill cells
         fill = np.frombuffer(fill_bytes, dtype=dtype)[0]
-    # a NaN fill emits NULL cells below via _cells_value (the engine's
-    # NaN encoding) -- absent ROWS would be invisible to reductions'
-    # count(*)-vs-count(v) propagation (round-8 IO-tier NaN sweep)
-    kind = _value_kind(dtype)
     ndim = len(shape)
     grid = [math.ceil(shape[k] / chunks[k]) for k in range(ndim)]
     present = {tuple(int(row[2 + k]) // chunks[k] for k in range(ndim))
@@ -659,56 +662,9 @@ def _materialize_fill(spark, arr, info, table, shape, chunks, dtype) -> Array:
         [tuple(int(x) for x in c) for c in missing],
         ", ".join(f"c{k} long" for k in range(ndim)),
     ).repartition(min(len(missing), 64))
-
-    def emit_fill(it):
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                coords = tuple(int(getattr(row, f"c{k}")) for k in range(ndim))
-                dims = [min(chunks[k], shape[k] - coords[k] * chunks[k])
-                        for k in range(ndim)]
-                idx = np.indices(dims).reshape(ndim, -1)
-                cols = {f"i{k}": idx[k] + coords[k] * chunks[k]
-                        for k in range(ndim)}
-                cols[VALUE_COL] = _cells_value(
-                    np.full(idx.shape[1], fill, dtype=dtype), kind
-                )
-                yield pd.DataFrame(cols)
-
-    vt = _value_sql_type(kind)
-    schema = ", ".join(f"i{k} long" for k in range(ndim)) + f", {VALUE_COL} {vt}"
-    return Array(arr.df.unionByName(mdf.mapInPandas(emit_fill, schema=schema)),
-                 shape)
-
-
-def _from_driver_dense(spark, vals: np.ndarray) -> Array:
-    vals = np.asarray(vals)
-    kind = _value_kind(vals.dtype)
-    ndim = vals.ndim
-    idx = np.indices(vals.shape).reshape(ndim, -1)
-    flat = vals.reshape(-1)
-
-    def pyval(x):
-        # NaN -> None (true SQL NULL: a raw Python NaN would ship as a
-        # double NaN through createDataFrame, bypassing the encoding)
-        if kind == "f":
-            return None if math.isnan(float(x)) else float(x)
-        if kind == "u":
-            # decimal(20,0) cells: createDataFrame's type verifier
-            # needs true Decimal objects (a raw int is rejected);
-            # driver-local compact datasets only, so per-value
-            # construction is fine here
-            import decimal
-
-            return decimal.Decimal(int(x))
-        return bool(x) if kind == "b" else int(x)
-
-    rows = [
-        tuple(int(idx[k][j]) for k in range(ndim)) + (pyval(flat[j]),)
-        for j in range(vals.size)
-    ]
-    vt = _value_sql_type(kind)
-    schema = ", ".join(f"i{k} long" for k in range(ndim)) + f", {VALUE_COL} {vt}"
-    return Array(spark.createDataFrame(rows, schema), vals.shape)
+    return Array(
+        arr.df.unionByName(_fill_chunks(mdf, shape, chunks, fill, dtype)), shape
+    )
 
 
 def _read_contiguous(spark, path, info, shape, dtype, filters) -> Array:
@@ -732,38 +688,31 @@ def _read_contiguous(spark, path, info, shape, dtype, filters) -> Array:
     ]
     sdf = local_frame(spark, slabs, "addr long, nbytes long, row0 long")
     sdf = sdf.repartition(min(nslabs, spark.sparkContext.defaultParallelism))
-    ndim = len(shape)
-    dtype_str = dtype.str
+    kind = _value_kind(dtype)
+    tail = tuple(shape[1:])
 
     def read_slab(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         with open(path, "rb") as f:
             for pdf in it:
                 for a, n, r0 in zip(pdf["addr"], pdf["nbytes"], pdf["row0"]):
                     f.seek(int(a))
-                    raw = f.read(int(n))
-                    vals = np.frombuffer(raw, dtype=dtype_str)
-                    nrows = len(vals) // max(row_elems, 1)
-                    block = vals.reshape((nrows,) + tuple(shape[1:]))
-                    idx = np.indices(block.shape).reshape(ndim, -1)
-                    flat = block.reshape(-1)
-                    # NaN -> NULL rows; int/bool dtypes preserved
-                    cols = {f"i{k}": idx[k] for k in range(ndim)}
-                    cols["i0"] = cols["i0"] + int(r0)
-                    cols[VALUE_COL] = _cells_value(flat, _value_kind(dtype_str))
-                    yield pd.DataFrame(cols)
+                    vals = np.frombuffer(f.read(int(n)), dtype=dtype)
+                    block = vals.reshape((len(vals) // max(row_elems, 1),) + tail)
+                    offs = (int(r0),) + (0,) * len(tail)
+                    yield _chunk_cells(block, offs, kind, shape)
 
-    vt = _value_sql_type(_value_kind(dtype_str))
-    schema = ", ".join(f"i{k} long" for k in range(ndim)) + f", {VALUE_COL} {vt}"
-    return Array(sdf.mapInPandas(read_slab, schema=schema), shape)
+    return Array(
+        sdf.mapInPandas(read_slab, schema=_cells_schema(len(shape), kind)), shape
+    )
 
 
 def _read_chunked(spark, path, table, shape, chunks, dtype, filters) -> Array:
     ndim = len(shape)
+    kind = _value_kind(dtype)
+    schema = _cells_schema(ndim, kind)
     if not table:
         # no chunks written: all-fill dataset -> empty cell form (the
         # caller's _materialize_fill emits every cell at the fill)
-        vt = _value_sql_type(_value_kind(dtype))
-        schema = ", ".join(f"i{k} long" for k in range(ndim)) + f", {VALUE_COL} {vt}"
         return Array(spark.createDataFrame([], schema), shape)
     cdf = local_frame(
         spark,
@@ -771,7 +720,6 @@ def _read_chunked(spark, path, table, shape, chunks, dtype, filters) -> Array:
         "addr long, nbytes long, " + ", ".join(f"c{k} long" for k in range(ndim)),
     )
     cdf = cdf.repartition(min(len(table), spark.sparkContext.defaultParallelism * 4))
-    dtype_str = dtype.str
     flist = list(filters)
 
     def read_chunks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -779,25 +727,11 @@ def _read_chunked(spark, path, table, shape, chunks, dtype, filters) -> Array:
             for pdf in it:
                 for row in pdf.itertuples(index=False):
                     f.seek(int(row.addr))
-                    raw = f.read(int(row.nbytes))
-                    dt = np.dtype(dtype_str)
-                    raw = _decode_chunk(raw, flist, dt, 0)
-                    block = np.frombuffer(raw, dtype=dt).reshape(chunks)
+                    raw = _decode_chunk(f.read(int(row.nbytes)), flist, dtype, 0)
+                    block = np.frombuffer(raw, dtype=dtype).reshape(chunks)
                     offs = [int(getattr(row, f"c{k}")) for k in range(ndim)]
-                    sl = tuple(
-                        slice(0, min(chunks[k], shape[k] - offs[k]))
-                        for k in range(ndim)
-                    )
-                    core = np.asarray(block[sl])
-                    idx = np.indices(core.shape).reshape(ndim, -1)
-                    flat = core.reshape(-1)
-                    # NaN -> NULL rows; int/bool dtypes preserved
-                    cols = {f"i{k}": idx[k] + offs[k] for k in range(ndim)}
-                    cols[VALUE_COL] = _cells_value(flat, _value_kind(dtype_str))
-                    yield pd.DataFrame(cols)
+                    yield _chunk_cells(block, offs, kind, shape)
 
-    vt = _value_sql_type(_value_kind(dtype_str))
-    schema = ", ".join(f"i{k} long" for k in range(ndim)) + f", {VALUE_COL} {vt}"
     return Array(cdf.mapInPandas(read_chunks, schema=schema), shape)
 
 
@@ -994,6 +928,21 @@ def _encode_chunk(block: np.ndarray, filters) -> bytes:
     return raw
 
 
+def _store_dtype(arr: Array) -> np.dtype:
+    """The HDF5 dataset dtype of an array's value column: complex
+    (STRUCT<re,im>) cells write the h5py compound {r,i} convention at
+    16 bytes/cell; uint64 cells (decimal(20,0)) and long cells write
+    native unsigned / signed 64-bit datasets (fill 0 like every int
+    store, value-exact above 2**53); everything else stays the float64
+    contract."""
+    vtype = dict(arr.df.dtypes).get(VALUE_COL, "")
+    if vtype.startswith("struct"):
+        return np.dtype("<c16")
+    return np.dtype(
+        {"decimal(20,0)": "<u8", "bigint": "<i8"}.get(vtype.replace(" ", ""), "<f8")
+    )
+
+
 def _chunk_pass(arr: Array, cdims, filters, *, filename, addr_map):
     """One executor sweep over the chunk grid.  ``filename=None`` is
     pass 1: return metadata-sized [(coords, stored_nbytes)] rows for
@@ -1011,21 +960,8 @@ def _chunk_pass(arr: Array, cdims, filters, *, filename, addr_map):
 
     shape = tuple(int(s) for s in arr.shape)
     ndim = len(shape)
-    vtype = dict(arr.df.dtypes).get(VALUE_COL, "double")
-    is_cx = vtype.startswith("struct")
-    is_u64 = vtype.replace(" ", "") == "decimal(20,0)"
-    is_i64 = vtype == "bigint"
+    dtype = _store_dtype(arr)
     d = arr.df
-    if is_i64 or is_u64:
-        # an int store has NO NULL representation -- refuse loudly
-        # like to_zarr / to_npy_stack (round-12 ADVICE: the silent
-        # drop wrote corrupting zeros).  The flag-and-coalesce keeps
-        # the kernel column non-nullable long/decimal so the
-        # Arrow->pandas bridge never coerces it to float64 (which
-        # would shred ints above 2**53)
-        d = d.withColumn("__nul", F.col(VALUE_COL).isNull()).withColumn(
-            VALUE_COL, F.coalesce(F.col(VALUE_COL), F.lit(0).cast(vtype))
-        )
     ccols = []
     for k in range(ndim):
         cc = f"__c{k}"
@@ -1036,41 +972,11 @@ def _chunk_pass(arr: Array, cdims, filters, *, filename, addr_map):
 
     def one_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         coords = tuple(int(pdf[c].iloc[0]) for c in ccols)
-        if (is_i64 or is_u64) and pdf["__nul"].any():
-            raise ValueError(
-                f"hdf5 chunk {coords}: NULL cells in a {vtype!r} "
-                "array cannot round-trip through an int64/uint64 HDF5 "
-                "store; cast to float64 first (NULL -> NaN)"
-            )
-        pdf = pdf[pdf[VALUE_COL].notna()]
         # HDF5 stores FULL chunk extents (edge chunks padded with fill)
-        if is_cx:
-            from .ingest import _struct_col_to_complex
-
-            block = np.full(cdims, complex(np.nan, np.nan), dtype="<c16")
-        elif is_u64:
-            block = np.zeros(cdims, dtype="<u8")
-        elif is_i64:
-            block = np.zeros(cdims, dtype="<i8")
-        else:
-            block = np.full(cdims, np.nan, dtype="<f8")
-        if len(pdf):
-            loc = tuple(
-                pdf[f"i{k}"].to_numpy(dtype="int64") - coords[k]
-                for k in range(ndim)
-            )
-            if is_cx:
-                block[loc] = _struct_col_to_complex(pdf[VALUE_COL])
-            elif is_u64:
-                from .ingest import _decimal_col_to_uint64
-
-                block[loc] = _decimal_col_to_uint64(pdf[VALUE_COL])
-            elif is_i64:
-                block[loc] = pdf[VALUE_COL].to_numpy(dtype="int64")
-            else:
-                block[loc] = pd.to_numeric(pdf[VALUE_COL]).to_numpy(
-                    dtype="float64"
-                )
+        block = _cells_block(
+            pdf, coords, cdims, dtype,
+            f"hdf5 chunk {coords} of an int64/uint64 HDF5 store",
+        )
         payload = _encode_chunk(block, filters)
         if filename is None:
             return pd.DataFrame(
@@ -1196,24 +1102,16 @@ def to_hdf5(
     def write_dataset(arr: Array) -> int:
         shape = tuple(int(s) for s in arr.shape)
         ndim = len(shape)
-        # complex arrays (STRUCT<re,im> value column) write the h5py
-        # compound {r,i} convention at 16 bytes/cell; uint64 cells
-        # (decimal(20,0)) write a native unsigned 64-bit dataset
-        # (fill 0 like every int store); everything else stays the
-        # float64 contract
-        vtype = dict(arr.df.dtypes).get(VALUE_COL, "")
-        is_cx = vtype.startswith("struct")
-        is_u64 = vtype.replace(" ", "") == "decimal(20,0)"
-        is_i64 = vtype == "bigint"
-        isz = 16 if is_cx else 8
+        dtype = _store_dtype(arr)
+        isz = dtype.itemsize
         nbytes = int(np.prod(shape, dtype=np.int64)) * isz
-        if is_cx:
+        if dtype.kind == "c":
             fill = struct.pack("<dd", float("nan"), float("nan"))
             dt_msg = _dt_c16_message()
-        elif is_u64:
+        elif dtype.kind == "u":
             fill = struct.pack("<Q", 0)
             dt_msg = _dt_u8_message()
-        elif is_i64:
+        elif dtype.kind == "i":
             fill = struct.pack("<q", 0)
             dt_msg = _dt_i8_message()
         else:
@@ -1336,7 +1234,7 @@ def to_hdf5(
         # per-dataset itemsize: complex datasets are 16 bytes/cell --
         # a flat 8 here would overlap the NEXT dataset's extent in a
         # multi-dataset file (round-11 audit catch)
-        isz = 16 if dict(arr.df.dtypes).get(VALUE_COL, "").startswith("struct") else 8
+        isz = _store_dtype(arr).itemsize
         if kind_tag == "contig":
             nbytes = int(np.prod(shape, dtype=np.int64)) * isz
             struct.pack_into("<Q", w.buf, patch_at, pos)
@@ -1399,33 +1297,21 @@ def _write_slabs(arr: Array, filename: str, data_addr: int) -> None:
     shape = tuple(int(s) for s in arr.shape)
     ndim = len(shape)
     vtype = dict(arr.df.dtypes).get(VALUE_COL, "double")
-    is_cx = vtype.startswith("struct")
-    is_u64 = vtype.replace(" ", "") == "decimal(20,0)"
-    is_i64 = vtype == "bigint"
-    isz = 16 if is_cx else 8
+    dtype = _store_dtype(arr)
+    isz = dtype.itemsize
     row_elems = int(np.prod(shape[1:], dtype=np.int64)) if ndim > 1 else 1
     rows_per_slab = max(1, _SLAB_BYTES // max(row_elems * isz, 1))
     nslabs = math.ceil(shape[0] / rows_per_slab)
-    d = arr.df
-    if is_i64 or is_u64:
-        # an int store has NO NULL representation: refuse loudly like
-        # to_zarr / to_npy_stack instead of silently writing the fill
-        # (round-12 ADVICE -- the silent drop wrote corrupting zeros).
-        # NULLs ride into the kernel as a bool flag next to a
-        # coalesced value so the Arrow->pandas bridge never sees a
-        # nullable long column (which would coerce to float64 and
-        # shred ints above 2**53, the round-11 int-write bug).
-        d = d.withColumn("__nul", F.col(VALUE_COL).isNull()).withColumn(
-            VALUE_COL, F.coalesce(F.col(VALUE_COL), F.lit(0).cast(vtype))
-        )
-    d = d.withColumn("__slab", (F.col("i0") / F.lit(rows_per_slab)).cast("long"))
-    if not (is_i64 or is_u64):
+    d = arr.df.withColumn(
+        "__slab", (F.col("i0") / F.lit(rows_per_slab)).cast("long")
+    )
+    if dtype.kind in "fc":
         # float/complex slabs must ALL write (absent cells are NaN but
         # the preallocated file holds zeros): union one null-valued
         # marker row per slab so the kernel fires even for slabs with
         # no cells.  Int slabs skip this -- their fill IS the
-        # preallocated zero bytes, and the marker's NULL would trigger
-        # the float64 coercion above
+        # preallocated zero bytes, and the marker's NULL would be
+        # refused as a NULL cell
         marker = arr.spark.range(nslabs).select(
             *[(F.col("id") * rows_per_slab if k == 0 else F.lit(0)).alias(f"i{k}")
               for k in range(ndim)],
@@ -1438,48 +1324,14 @@ def _write_slabs(arr: Array, filename: str, data_addr: int) -> None:
     def write_slab(pdf: pd.DataFrame) -> pd.DataFrame:
         slab = int(pdf["__slab"].iloc[0])
         r0 = slab * rows_per_slab
-        nrows = min(rows_per_slab, shape[0] - r0)
-        if (is_i64 or is_u64) and pdf["__nul"].any():
-            raise ValueError(
-                f"hdf5 slab at row {r0}: NULL cells in a {vtype!r} "
-                "array cannot round-trip through an int64/uint64 HDF5 "
-                "store; cast to float64 first (NULL -> NaN)"
-            )
-        pdf = pdf[pdf[VALUE_COL].notna()]
-        loc = tuple(
-            pdf[f"i{k}"].to_numpy(dtype="int64") - (r0 if k == 0 else 0)
-            for k in range(ndim)
+        dims = (min(rows_per_slab, shape[0] - r0),) + tail
+        block = _cells_block(
+            pdf, (r0,) + (0,) * len(tail), dims, dtype,
+            f"hdf5 slab at row {r0} of an int64/uint64 HDF5 store",
         )
-        if is_cx:
-            from .ingest import _struct_col_to_complex
-
-            block = np.full(
-                (nrows,) + tail, complex(np.nan, np.nan), dtype="<c16"
-            )
-            block[loc] = _struct_col_to_complex(pdf[VALUE_COL])
-            payload = np.ascontiguousarray(block, dtype="<c16").tobytes()
-        elif is_u64:
-            # uint64 cells write <u8 EXACTLY (a float64 block would
-            # shred low bits above 2**53); absent cells are 0, the
-            # declared fill of every int store
-            from .ingest import _decimal_col_to_uint64
-
-            block = np.zeros((nrows,) + tail, dtype="uint64")
-            block[loc] = _decimal_col_to_uint64(pdf[VALUE_COL])
-            payload = np.ascontiguousarray(block, dtype="<u8").tobytes()
-        elif is_i64:
-            # int64 cells write <i8 exactly (absent cells 0, the
-            # declared fill -- same contract as to_zarr's int stores)
-            block = np.zeros((nrows,) + tail, dtype="int64")
-            block[loc] = pdf[VALUE_COL].to_numpy(dtype="int64")
-            payload = np.ascontiguousarray(block, dtype="<i8").tobytes()
-        else:
-            block = np.full((nrows,) + tail, np.nan)
-            block[loc] = pd.to_numeric(pdf[VALUE_COL]).to_numpy(dtype="float64")
-            payload = np.ascontiguousarray(block, dtype="<f8").tobytes()
         with open(filename, "r+b") as f:
             f.seek(data_addr + r0 * row_elems * isz)
-            f.write(payload)
+            f.write(block.tobytes())
         return pd.DataFrame({"n": [int(block.size)]})
 
     d.groupBy("__slab").applyInPandas(write_slab, schema="n long").count()

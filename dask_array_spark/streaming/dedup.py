@@ -41,8 +41,8 @@ _STATE_CAP = 256  # bounded per-band state ring
 def _read_parquet_stream(spark: SparkSession, path: str) -> DataFrame:
     """File stream over a parquet file OR directory (schema inferred
     from a static read; single-file paths stream their parent dir
-    with a glob filter).  Shared by the docs and embeddings intake
-    readers."""
+    with a glob filter).  The one file-stream reader of the docs,
+    embeddings, events and serving-query intakes."""
     static = spark.read.parquet(path)
     reader = spark.readStream.schema(static.schema)
     if os.path.isfile(path):

@@ -23,17 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .dedup import _read_parquet_stream
+
 __all__ = [
     "stream_codebook_assign",
     "stream_pq_encode",
     "stream_sq8_encode",
 ]
-
-
-def _read_embeddings_stream(spark: SparkSession, emb_path: str) -> DataFrame:
-    from .dedup import _read_parquet_stream
-
-    return _read_parquet_stream(spark, emb_path)
 
 
 def stream_codebook_assign(
@@ -48,7 +44,7 @@ def stream_codebook_assign(
     projection per micro-batch."""
     from ..functions.similarity import _book, _nearest_codes
 
-    stream = _read_embeddings_stream(spark, emb_path)
+    stream = _read_parquet_stream(spark, emb_path)
     return _nearest_codes(stream, "vec_id", _book(cents, "cell", None)).select(
         "vec_id", F.col("code").alias("cell"), "dist"
     )
@@ -76,7 +72,7 @@ def stream_pq_encode(
         f"{_nearest_sql(_subvec_sql(s, dsub), cands)}.c"
         for s, cands in sorted(_book(cents).items())
     )
-    return _read_embeddings_stream(spark, emb_path).selectExpr(
+    return _read_parquet_stream(spark, emb_path).selectExpr(
         "vec_id", f"CAST(array({codes}) AS ARRAY<BIGINT>) AS codes"
     )
 
@@ -92,4 +88,4 @@ def stream_sq8_encode(spark: SparkSession, emb_path: str) -> DataFrame:
     at the measured scales -- SCALE.md)."""
     from ..functions.similarity import sq8_encode
 
-    return sq8_encode(_read_embeddings_stream(spark, emb_path))
+    return sq8_encode(_read_parquet_stream(spark, emb_path))

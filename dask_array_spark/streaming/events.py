@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .dedup import _read_parquet_stream
+
 __all__ = [
     "tumbling_agg",
     "sliding_agg",
@@ -97,21 +99,13 @@ def sessionize(events: DataFrame, gap_sec: int) -> DataFrame:
 # -- Structured Streaming forms (tested with file source/memory sink) ----
 
 def _read_stream(spark: SparkSession, events_path: str) -> DataFrame:
-    """File-source readStream that also accepts a single parquet FILE
-    path (the file streaming source requires a directory; fall back to
-    parent dir + pathGlobFilter)."""
-    import os
-
+    """The events file stream (``_read_parquet_stream``: a parquet file
+    or directory) with nanosecond ``ts`` read as BIGINT nanos."""
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    static = spark.read.parquet(events_path)
-    reader = spark.readStream.schema(static.schema)
-    if os.path.isfile(events_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(events_path))
-        return reader.parquet(os.path.dirname(events_path))
-    return reader.parquet(events_path)
+    return _read_parquet_stream(spark, events_path)
 
 
 def _event_time(stream: DataFrame):

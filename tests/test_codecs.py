@@ -232,3 +232,36 @@ def test_zarr_chunk_error_names_chunk_and_codec(spark, tmp_path):
         arr.compute()
     msg = str(ei.value)
     assert "zarr chunk" in msg and "blosclz" in msg and "zbad/0" in msg
+
+
+def test_crc32c_strict_arg_overrides_env(monkeypatch):
+    """The driver-resolved ``strict`` argument is authoritative: even
+    with NO env var set (an executor's worker env in a real cluster),
+    strict='raise' refuses the unverified read, and strict='verify'
+    verifies.  Reading the env inside the kernel was the round-10
+    ADVICE bug -- the knob silently reverted on real clusters."""
+    from dask_array_spark.sources import ingest as I
+
+    if I._crc32c_lib() is not None:  # pragma: no cover
+        pytest.skip("C crc32c installed: every size verifies, no fallback path")
+
+    body = b"\xcd" * 64
+    good = I._crc32c(body)
+    monkeypatch.setattr(I, "_CRC32C_VERIFY_CAP", 16)
+    # executor-like environment: the knob is NOT in os.environ
+    monkeypatch.delenv("SPARK_GRAFT_CRC32C_STRICT", raising=False)
+
+    with pytest.raises(RuntimeError, match="forbids unverified"):
+        I._crc32c_check(body, good, "chunk", "raise")
+    with pytest.raises(ValueError, match="crc32c mismatch"):
+        I._crc32c_check(body, good + 1, "chunk", "verify")
+    # and through the codec-chain wrapper too
+    with pytest.raises(RuntimeError, match="forbids unverified"):
+        I._zarr3_decode_bb(
+            body + good.to_bytes(4, "little"), [("crc32c", {})], "chunk", "raise"
+        )
+    # conversely: env says raise, but the driver resolved '' (default)
+    # -- the argument still wins (warn-and-strip)
+    monkeypatch.setenv("SPARK_GRAFT_CRC32C_STRICT", "raise")
+    with pytest.warns(RuntimeWarning, match="UNVERIFIED"):
+        I._crc32c_check(body, good, "chunk", "")

@@ -1239,3 +1239,81 @@ def test_hdf5_generic_compound_refused():
     ) + member("i", 8) + member("j", 16)
     with pytest.raises(NotImplementedError, match="complex"):
         r._parse_datatype(bad3)
+
+
+def test_zarr_v3_reader_resolves_strict_at_build_time(monkeypatch, tmp_path, spark):
+    """End-to-end: build the reader under strict=raise, clear the env
+    (executor never saw it), run the plan -- the oversized crc32c chunk
+    still refuses, proving the policy travels in the closure."""
+    from dask_array_spark.sources import ingest as I
+    from dask_array_spark.sources.ingest import from_zarr
+
+    if I._crc32c_lib() is not None:  # pragma: no cover
+        pytest.skip("C crc32c installed: every size verifies, no fallback path")
+
+    url = str(tmp_path / "a.zarr")
+    os.makedirs(os.path.join(url, "c"), exist_ok=True)
+    # the chunk must REALLY exceed _CRC32C_VERIFY_CAP (1 MiB) in the
+    # EXECUTOR: monkeypatching the driver module does not reach the
+    # worker processes, which is exactly the env-propagation gap this
+    # test exists to cover.  400x400 f8 = 1.28 MB.
+    data = np.arange(160_000, dtype="float64").reshape(400, 400)
+    meta = {
+        "zarr_format": 3,
+        "node_type": "array",
+        "shape": [400, 400],
+        "data_type": "float64",
+        "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [400, 400]}},
+        "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
+        "fill_value": 0.0,
+        "codecs": [
+            {"name": "bytes", "configuration": {"endian": "little"}},
+            {"name": "crc32c"},
+        ],
+    }
+    with open(os.path.join(url, "zarr.json"), "w") as f:
+        json.dump(meta, f)
+    raw = data.tobytes()
+    os.makedirs(os.path.join(url, "c", "0"), exist_ok=True)
+    with open(os.path.join(url, "c", "0", "0"), "wb") as f:
+        f.write(raw + I._crc32c(raw).to_bytes(4, "little"))
+
+    monkeypatch.setenv("SPARK_GRAFT_CRC32C_STRICT", "raise")
+    arr = from_zarr(spark, url)  # policy resolved HERE
+    monkeypatch.delenv("SPARK_GRAFT_CRC32C_STRICT", raising=False)
+    with pytest.raises(Exception, match="forbids unverified"):
+        arr.df.collect()
+    # sanity: the default policy (resolved at build time, env unset)
+    # decodes the same store fine, warning executor-side
+    arr2 = from_zarr(spark, url)
+    np.testing.assert_array_equal(arr2.compute(), data)
+
+
+def test_zarr_v2_0d_refuses(tmp_path, spark):
+    from dask_array_spark.sources.ingest import from_zarr
+
+    url = str(tmp_path / "s.zarr")
+    os.makedirs(url)
+    meta = {
+        "zarr_format": 2,
+        "shape": [],
+        "chunks": [],
+        "dtype": "<f8",
+        "compressor": None,
+        "fill_value": 1.5,
+        "filters": None,
+        "order": "C",
+    }
+    with open(os.path.join(url, ".zarray"), "w") as f:
+        json.dump(meta, f)
+    with open(os.path.join(url, "0"), "wb") as f:
+        f.write(np.float64(2.5).tobytes())
+    with pytest.raises(NotImplementedError, match="0-dimensional"):
+        from_zarr(spark, url)
+
+
+def test_missing_chunks_df_guards_ndim0(spark):
+    from dask_array_spark.sources.ingest import _chunk_grid
+
+    with pytest.raises(ValueError, match="ndim >= 1"):
+        _chunk_grid(spark, (), ())

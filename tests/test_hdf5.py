@@ -118,12 +118,12 @@ def _dt_msg(dtype: np.dtype) -> bytes:
     return head + struct.pack("<HH", 0, dtype.itemsize * 8)
 
 
-def _foreign_chunked_file(path, data: np.ndarray, chunk: int,
-                          skip_chunks=(), fill: float = 0.0,
-                          filtered: bool = True):
-    """Superblock v2 + OHDR v2 + link-message root group + chunked v3
-    layout with a v1 B-tree, optional shuffle+deflate pipeline."""
-    img = bytearray()
+def _foreign_file(path, build):
+    """Superblock v2 + a link-message root group (OHDR v2) over the
+    datasets that ``build(add)`` lays out: ``add(bytes) -> address``
+    appends 8-byte aligned, and ``build`` returns {name: object header
+    address}."""
+    img = bytearray(b"\x00" * 512)  # superblock written last
 
     def add(b: bytes) -> int:
         while len(img) % 8:
@@ -132,59 +132,108 @@ def _foreign_chunked_file(path, data: np.ndarray, chunk: int,
         img.extend(b)
         return addr
 
-    img.extend(b"\x00" * 512)  # superblock written last
-    dtype = data.dtype
-    ts = dtype.itemsize
-    nchunks = -(-len(data) // chunk)
-    entries = []
-    for c in range(nchunks):
-        if c in skip_chunks:
-            continue
-        seg = np.full(chunk, fill, dtype=dtype)
-        core = data[c * chunk : (c + 1) * chunk]
-        seg[: len(core)] = core
-        raw = seg.tobytes()
-        if filtered:
-            arr = np.frombuffer(raw, dtype="u1")
-            n = len(raw) // ts
-            raw = arr.reshape(n, ts).T.tobytes()
-            raw = zlib.compress(raw, 6)
-        addr = add(raw)
-        entries.append((len(raw), c * chunk, addr))
-    # v1 B-tree, node type 1, level 0; keys: size(4) mask(4) offsets 2x8
-    bt = struct.pack("<4sBBHQQ", b"TREE", 1, 0, len(entries), _UNDEF, _UNDEF)
-    for nb, off, addr in entries:
-        bt += struct.pack("<IIQQQ", nb, 0, off, 0, addr)
-    bt += struct.pack("<IIQQ", 0, 0, len(data), 0)  # trailing key
-    btree_addr = add(bt)
-
-    msgs = [
-        _v2_msg(0x0001, struct.pack("<BBBB", 2, 1, 0, 1)
-                + struct.pack("<Q", len(data))),
-        _v2_msg(0x0003, _dt_msg(dtype)),
-        _v2_msg(0x0005, struct.pack("<BBI", 3, 0x20, ts)
-                + np.array([fill], dtype=dtype).tobytes()),
-        _v2_msg(0x0008, struct.pack("<BBB", 3, 2, 2)
-                + struct.pack("<Q", btree_addr)
-                + struct.pack("<II", chunk, ts)),
-    ]
-    if filtered:
-        pipe = struct.pack("<BB", 2, 2)
-        pipe += struct.pack("<HHH", 2, 0, 1) + struct.pack("<I", ts)  # shuffle
-        pipe += struct.pack("<HHH", 1, 1, 1) + struct.pack("<I", 6)  # deflate
-        msgs.append(_v2_msg(0x000B, pipe))
-    ds_addr = add(_ohdr_v2(msgs))
-
-    name = b"dset"
-    link = struct.pack("<BBB", 1, 0, len(name)) + name + struct.pack("<Q", ds_addr)
-    root_addr = add(_ohdr_v2([_v2_msg(0x0006, link)]))
-
+    links = []
+    for name, ds_addr in build(add).items():
+        nm = name.encode()
+        links.append(_v2_msg(
+            0x0006,
+            struct.pack("<BBB", 1, 0, len(nm)) + nm + struct.pack("<Q", ds_addr),
+        ))
+    root_addr = add(_ohdr_v2(links))
     sb = (b"\x89HDF\r\n\x1a\n" + struct.pack("<BBBB", 2, 8, 8, 0)
           + struct.pack("<QQQQ", 0, _UNDEF, len(img), root_addr)
           + b"\x00" * 4)
     img[: len(sb)] = sb
     with open(path, "wb") as f:
         f.write(bytes(img))
+
+
+def _foreign_chunked_file(path, data: np.ndarray, chunk: int,
+                          skip_chunks=(), fill: float = 0.0,
+                          filtered: bool = True):
+    """One dataset "dset": chunked v3 layout with a v1 B-tree, optional
+    shuffle+deflate pipeline."""
+    dtype = data.dtype
+    ts = dtype.itemsize
+
+    def build(add):
+        nchunks = -(-len(data) // chunk)
+        entries = []
+        for c in range(nchunks):
+            if c in skip_chunks:
+                continue
+            seg = np.full(chunk, fill, dtype=dtype)
+            core = data[c * chunk : (c + 1) * chunk]
+            seg[: len(core)] = core
+            raw = seg.tobytes()
+            if filtered:
+                arr = np.frombuffer(raw, dtype="u1")
+                n = len(raw) // ts
+                raw = arr.reshape(n, ts).T.tobytes()
+                raw = zlib.compress(raw, 6)
+            addr = add(raw)
+            entries.append((len(raw), c * chunk, addr))
+        # v1 B-tree, node type 1, level 0; keys: size(4) mask(4) offsets 2x8
+        bt = struct.pack("<4sBBHQQ", b"TREE", 1, 0, len(entries), _UNDEF, _UNDEF)
+        for nb, off, addr in entries:
+            bt += struct.pack("<IIQQQ", nb, 0, off, 0, addr)
+        bt += struct.pack("<IIQQ", 0, 0, len(data), 0)  # trailing key
+        btree_addr = add(bt)
+
+        msgs = [
+            _v2_msg(0x0001, struct.pack("<BBBB", 2, 1, 0, 1)
+                    + struct.pack("<Q", len(data))),
+            _v2_msg(0x0003, _dt_msg(dtype)),
+            _v2_msg(0x0005, struct.pack("<BBI", 3, 0x20, ts)
+                    + np.array([fill], dtype=dtype).tobytes()),
+            _v2_msg(0x0008, struct.pack("<BBB", 3, 2, 2)
+                    + struct.pack("<Q", btree_addr)
+                    + struct.pack("<II", chunk, ts)),
+        ]
+        if filtered:
+            pipe = struct.pack("<BB", 2, 2)
+            pipe += struct.pack("<HHH", 2, 0, 1) + struct.pack("<I", ts)  # shuffle
+            pipe += struct.pack("<HHH", 1, 1, 1) + struct.pack("<I", 6)  # deflate
+            msgs.append(_v2_msg(0x000B, pipe))
+        return {"dset": add(_ohdr_v2(msgs))}
+
+    _foreign_file(path, build)
+
+
+def _v3_compound_body(size: int, members: list[tuple[str, int, int]]) -> bytes:
+    """A v3 compound datatype message: header (ver 3, class 6, member
+    count in bits 0-15, 4-byte size), then per member a bare
+    NUL-terminated name, the offset in the spec's byte width (minimum
+    bytes to encode ``size``), and a class-1 float member datatype
+    message (8B header + 12B props)."""
+    nb = max(1, (size.bit_length() + 7) // 8)
+    body = bytes([0x36]) + struct.pack("<BBB", len(members), 0, 0)
+    body += struct.pack("<I", size)
+    for name, off, msize in members:
+        body += name.encode() + b"\x00"
+        body += off.to_bytes(nb, "little")
+        body += bytes([0x11, 0, 0, 0]) + struct.pack("<I", msize) + b"\x00" * 12
+    return body
+
+
+def _foreign_compact_file(path, datasets: dict[str, tuple[bytes, np.ndarray]]):
+    """Datasets in the COMPACT layout (layout message v3, class 0): the
+    raw data sits inline in the object header.  ``datasets`` maps a
+    name to (datatype message body, C-order data)."""
+
+    def build(add):
+        return {
+            name: add(_ohdr_v2([
+                _v2_msg(0x0001, struct.pack("<BBBB", 2, data.ndim, 0, 1)
+                        + b"".join(struct.pack("<Q", n) for n in data.shape)),
+                _v2_msg(0x0003, dt_body),
+                _v2_msg(0x0008, struct.pack("<BBH", 3, 0, data.nbytes)
+                        + data.tobytes()),
+            ]))
+            for name, (dt_body, data) in datasets.items()
+        }
+
+    _foreign_file(path, build)
 
 
 def test_foreign_v2_chunked_deflate_shuffle(spark, tmp_path):
@@ -336,3 +385,52 @@ def test_chunk_pass_missing_addr_entry_is_explanatory(spark, tmp_path):
         f.write(b"\0" * 8192)
     with pytest.raises(Exception, match="not deterministic|appeared only"):
         H._chunk_pass(a, (2,), [], filename=p, addr_map=addr_map)
+
+
+def test_hdf5_v3_compound_offset_width_power_of_256():
+    """size=256: the offset field is 2 bytes (256 needs 9 bits), where
+    the old size-1 derivation read 1 byte (255 fits in 8) and walked
+    the second member's name one byte early.  With the fix the member
+    walk parses cleanly and the refusal NAMES the members."""
+    from dask_array_spark.sources.hdf5 import _Reader
+
+    body = _v3_compound_body(256, [("x", 0, 128), ("y", 128, 128)])
+    rdr = object.__new__(_Reader)
+    with pytest.raises(NotImplementedError, match=r"\['x', 'y'\]"):
+        rdr._parse_compound_complex(body, 3, body[1:4], 256)
+    # the accepted complex shapes still parse (regression guard):
+    # c16 (size 16 -> 1-byte offsets) through the same v3 path
+    body16 = _v3_compound_body(16, [("r", 0, 8), ("i", 8, 8)])
+    dt = rdr._parse_compound_complex(body16, 3, body16[1:4], 16)
+    assert dt == np.dtype("<c16")
+
+
+def test_foreign_compact_layout(spark, tmp_path):
+    """Compact datasets read through ``from_numpy``: a float64 NaN
+    becomes a NULL cell, int64 stays exact above 2**53, and the h5py
+    complex compound reads as STRUCT<re,im> cells."""
+    fn = str(tmp_path / "compact.h5")
+    f8 = np.array([[1.5, np.nan, -2.0], [3.25, 0.0, 7.0]], dtype="<f8")
+    i8 = np.array([2**53 + 1, -7, 0], dtype="<i8")
+    c16 = np.array([1 + 2j, complex(np.nan, 1.0), -3 - 0.5j, 0.5j], dtype="<c16")
+    _foreign_compact_file(fn, {
+        "f8": (_dt_msg(f8.dtype), f8),
+        "i8": (_dt_msg(i8.dtype), i8),
+        "c16": (_v3_compound_body(16, [("r", 0, 8), ("i", 8, 8)]), c16),
+    })
+    assert h5_ls(fn) == ["c16", "f8", "i8"]
+
+    a = from_hdf5(spark, fn, "f8")
+    assert a.shape == (2, 3)
+    assert a.df.filter("v IS NULL").count() == 1
+    np.testing.assert_array_equal(a.compute(), f8)
+
+    b = from_hdf5(spark, fn, "i8")
+    assert dict(b.df.dtypes)["v"] == "bigint"
+    assert sorted(tuple(r) for r in b.df.collect()) == [
+        (0, 2**53 + 1), (1, -7), (2, 0)
+    ]
+
+    c = from_hdf5(spark, fn, "c16")
+    assert dict(c.df.dtypes)["v"].startswith("struct")
+    np.testing.assert_array_equal(c.compute(), c16)

@@ -609,3 +609,17 @@ def test_hdf5_driver_rows_are_local_table_scans(spark, tmp_path):
         plan = _plan(from_hdf5(spark, fn, "/x").df)
         assert "LocalTableScan" in plan, name
         assert "ExistingRDD" not in plan, name
+
+
+def test_tiledb_tile_grid_is_a_range(spark, tmp_path):
+    """``from_tiledb`` generates its tile grid with ``spark.range``,
+    not a driver-built ``Scan ExistingRDD`` of tile coordinates."""
+    import numpy as np
+
+    from dask_array_spark.sources import from_tiledb
+    from tests.test_tiledb import FAKE, _mkarray
+
+    uri = _mkarray(str(tmp_path), np.arange(30.0).reshape(6, 5), tile=(4, 2))
+    plan = _plan(from_tiledb(spark, uri, _tiledb=FAKE).df)
+    assert "Range" in plan, plan
+    assert "ExistingRDD" not in plan, plan

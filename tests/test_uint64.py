@@ -97,27 +97,29 @@ def test_zarr_v3_sharded_roundtrip(spark):
 
 
 def test_zarr_fill_value_above_float_precision(spark):
-    """A hand-written v2 store with a missing chunk and a fill value
-    no float64 can hold: fill cells must materialize EXACTLY (the
-    old float(fill) route would shred the low bits)."""
+    """Hand-written v2 stores with a missing chunk and a fill value
+    no float64 can hold (uint64 2**63+5, int64 2**53+1): fill cells
+    must materialize EXACTLY (a float(fill) route would shred the low
+    bits)."""
     import json
 
-    fill = 2**63 + 5
-    url = _mkdir()
-    os.makedirs(url, exist_ok=True)
-    first = np.arange(4, dtype="<u8")
-    with open(os.path.join(url, ".zarray"), "w") as f:
-        json.dump(
-            {"zarr_format": 2, "shape": [8], "chunks": [4], "dtype": "<u8",
-             "compressor": None, "fill_value": fill, "filters": None,
-             "order": "C"},
-            f,
-        )
-    with open(os.path.join(url, "0"), "wb") as f:
-        f.write(first.tobytes())
-    got = from_zarr(spark, url).compute()
-    expect = np.concatenate([first, np.full(4, fill, dtype="uint64")])
-    np.testing.assert_array_equal(got, expect)
+    for dtype, fill in (("<u8", 2**63 + 5), ("<i8", 2**53 + 1)):
+        url = _mkdir()
+        os.makedirs(url, exist_ok=True)
+        first = np.arange(4, dtype=dtype)
+        with open(os.path.join(url, ".zarray"), "w") as f:
+            json.dump(
+                {"zarr_format": 2, "shape": [8], "chunks": [4], "dtype": dtype,
+                 "compressor": None, "fill_value": fill, "filters": None,
+                 "order": "C"},
+                f,
+            )
+        with open(os.path.join(url, "0"), "wb") as f:
+            f.write(first.tobytes())
+        got = from_zarr(spark, url).compute()
+        expect = np.concatenate([first, np.full(4, fill, dtype=dtype)])
+        assert got.dtype == expect.dtype, dtype
+        np.testing.assert_array_equal(got, expect)
 
 
 def test_npy_stack_roundtrip_exact(spark):
