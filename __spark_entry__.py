@@ -15,10 +15,8 @@ ONE representative of every operator family sits inside the first 50
 registry slots (the driver's round-1 correctness window); the first
 50 entries cover the complete SURVEY section-2 + LLM-pipeline scope
 with full oracles, and the 8 past-window entries are rows-only /
-locally-verified diagnostics (queries.py _FINAL_ORDER documents which;
-round 10 rotated svd_singular_values INTO the window with a
-closed-form eigenvalue oracle and digitize_searchsorted out -- the
-latter keeps its oracle and is still hash-checked by test_oracle.py).
+locally-verified diagnostics (``_FINAL_ORDER`` at the top of
+queries.py lists the order; test_oracle.py hash-checks every oracle).
 Robust to the driver's own session defaults (ANSI mode, shuffle
 partitions) -- verified under a bare default session at sf0.001 and
 sf0.01.

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import local_frame
+from ..session import _track_persist, local_frame
 from .dedup import DEFAULT_MAX_BUCKET
 
 __all__ = [
@@ -648,7 +648,7 @@ def cosine_pairs_bucketed(
         buckets = buckets.join(small, on="bucket")
     # persist-at-fan-out: the pair join consumes the bucketed exploded
     # table on both sides (SURVEY.md section 4.4)
-    ex = _exploded(emb).join(buckets, on="vec_id").persist()
+    ex = _track_persist(_exploded(emb).join(buckets, on="vec_id"))
     a = ex.select(
         F.col("vec_id").alias("vec_a"), F.col("nrm").alias("na"),
         "bucket", "pos", F.col("e").alias("ea"),
@@ -1230,7 +1230,7 @@ def semantic_dedup(
     # persist-at-fan-out: ranked feeds BOTH the pair join below and
     # the final output join -- without this the corpus-scale
     # assignment + centroid-cosine + rank-window lineage runs twice
-    ranked = base.withColumn("rnk", F.row_number().over(wr)).persist()
+    ranked = _track_persist(base.withColumn("rnk", F.row_number().over(wr)))
     dedupable = ranked
     if max_cell is not None:
         small = (
@@ -1242,9 +1242,9 @@ def semantic_dedup(
         dedupable = ranked.join(small, on="cell")
     # persist-at-fan-out: the pair join consumes the exploded ranked
     # table on both sides (SURVEY.md section 4.4)
-    ex = _exploded(emb).join(
-        dedupable.select("vec_id", "cell", "rnk"), on="vec_id"
-    ).persist()
+    ex = _track_persist(
+        _exploded(emb).join(dedupable.select("vec_id", "cell", "rnk"), on="vec_id")
+    )
     a = ex.select(
         F.col("rnk").alias("rnk_a"), F.col("nrm").alias("na"),
         "cell", "pos", F.col("e").alias("ea"),

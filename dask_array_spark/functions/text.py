@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import _track_persist
+
 __all__ = [
     "tokens_col",
     "polyhash_col",
@@ -491,9 +493,9 @@ def bigram_lm_scores(
         )
         return runi, rbi
 
-    th_ref = th_col(ref).persist()
+    th_ref = _track_persist(th_col(ref))
     runi, rbi = model_tables(th_ref)
-    runi, rbi = runi.persist(), rbi.persist()
+    runi, rbi = _track_persist(runi), _track_persist(rbi)
     nv, nb = runi.count(), rbi.count()
     if not self_ref:
         # both consumers (the model counts) are materialized; the
@@ -573,7 +575,7 @@ def perplexity_buckets(
     from pyspark.storagelevel import StorageLevel
 
     if lm.storageLevel == StorageLevel.NONE:
-        lm = lm.persist()
+        lm = _track_persist(lm)
     n = lm.count()  # scalar action; documented driver-side bound
     sc = F.col(score_col)
     counts = lm.groupBy(score_col).agg(F.count(F.lit(1)).alias("__c")).withColumn(
@@ -594,11 +596,11 @@ def perplexity_buckets(
         .withColumn("__boff", F.sum("__bc").over(w_bins) - F.col("__bc"))
         .select("__bin", "__boff")
     )
-    cum = (
+    cum = _track_persist(
         counts.withColumn("__cumin", F.sum("__c").over(w_in))
         .join(F.broadcast(boff), on="__bin")
         .withColumn("__cum", F.col("__boff") + F.col("__cumin"))
-    ).persist()
+    )
     labels = (
         ["head", "middle", "tail"] if len(qs) == 2
         else [f"b{i}" for i in range(len(qs) + 1)]
@@ -647,11 +649,11 @@ def tfidf_keywords(
     the persist policy note in functions/__init__.py."""
     from pyspark.sql.window import Window
 
-    tf = (
+    tf = _track_persist(
         df.select("doc_id", F.explode(tokens_col(text_col)).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("__tf"))
-    ).persist()
+    )
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("__df"))
     n = df.agg(F.count(F.lit(1)).alias("__n"))
     idf = F.log((F.col("__n") + 1).cast("double") / (F.col("__df") + 1)) + 1

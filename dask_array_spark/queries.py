@@ -1,5 +1,8 @@
 """Operator-coverage query registry: one entry per implemented
 operator family from SURVEY.md section 2, each with a DuckDB oracle.
+Only ``@query`` builders are registered, and every one of them is named
+in ``_FINAL_ORDER``; the other ``q_*`` functions are plain building
+blocks that the suites, ``bench.py`` and the plan tests call.
 
 Every query runs THROUGH the engine's Array operators (not raw SQL) so
 the driver's oracle check exercises the operator implementations.  The
@@ -39,6 +42,84 @@ from .sources import (
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
+# The registry, in the driver's order.  The driver verifies entries in
+# insertion order and only the first 50 of them, so those 50 cover one
+# representative of every SURVEY section-2 family plus the LLM-pipeline,
+# streaming and TPC-H scope.  ``query`` refuses any other name, and the
+# module checks at import that every name here was registered.
+_FINAL_ORDER = [
+    # elemwise / projection tier
+    "elemwise_suite",
+    "complex_square_polar",
+    # slicing / indexing
+    "slice_basic",
+    "gather_points",
+    "boolean_mask",
+    "setitem_masked",
+    "compress_axis",
+    "isin_semi",
+    # reductions
+    "reduce_per_order",
+    "reduce_stats_by_flag",
+    "scalar_suite",
+    "reduce_any_all",
+    "quantiles_multi",
+    "topk_per_group",
+    "histograms_suite",
+    "unique_counts",
+    # windows / cumulative
+    "daily_windows_suite",
+    "sliding_rows_2d",
+    "cumprod_log_trick",
+    "window_1d_scalable",
+    "overlap_gradient_smooth",
+    # manipulation / creation
+    "manip_1d_suite",
+    "manip_2d_suite",
+    "pad_modes",
+    # linalg / contraction
+    "matmul_gram",
+    "linalg_row_suite",
+    "outer_product",
+    "tsqr_lstsq",
+    "svd_singular_values",
+    "linalg_invariants",
+    "fft_monthly",
+    # sort / set ops
+    "sort_argsort",
+    "setops_suite",
+    # UDF surface
+    "map_blocks_suite",
+    "gufunc_matmul",
+    "custom_reduction_suite",
+    # TPC-H trio
+    "tpch_q1_pricing_summary",
+    "tpch_q6_forecast_revenue",
+    "tpch_q3_shipping_priority",
+    # event-time windows
+    "events_windows_suite",
+    # LLM-pipeline scope
+    "text_suite",
+    "dedup_exact_groups",
+    "dedup_lsh_pairs_verify",
+    "dedup_substring_spans",
+    "tokenize_suite",
+    "similarity_suite",
+    "embed_assign_bucket",
+    "pipeline_clean_corpus",
+    "media_features",
+    "media_bytes_frames",
+    # ---- past the 50-entry window: weaker or rows-only checks ----
+    "digitize_searchsorted",
+    "uint64_exact_suite",
+    "dedup_minhash_sigs",
+    "svd_singular_values_rows",
+    "approx_percentile_rows",
+    "random_choice_counts_rows",
+    "random_seeded_hist_rows",
+    "random_vector_draws_check",
+]
+
 # NOTE: (l_orderkey, l_linenumber) is NOT unique in the driver's
 # synthetic lineitem.  LI_IDX is fine as a (possibly duplicated) cell
 # index for projection/aggregation queries -- both engines see the same
@@ -68,6 +149,9 @@ NDAYS = 3000
 
 
 def query(name: str, oracle: str | None = None):
+    if name not in _FINAL_ORDER or name in QUERIES:
+        raise ValueError(f"query {name!r} is not in _FINAL_ORDER or is registered twice")
+
     def deco(fn):
         QUERIES[name] = fn
         if oracle is not None:
@@ -121,14 +205,6 @@ def _daily_cents(spark, sf) -> Array:
 # Elemwise / projection family (SURVEY section 2.2)
 # ---------------------------------------------------------------------------
 
-@query(
-    "elemwise_arith",
-    f"""
-    SELECT {LI_IDX} AS i0,
-           l_extendedprice * (1 - l_discount) * (1 + l_tax) AS v
-    FROM lineitem
-    """,
-)
 def q_elemwise_arith(spark, sf):
     """Fused scalar arithmetic chain (reference _ufunc.py:18-125) --
     one projection, no joins (FusedBlockwise analogue)."""
@@ -138,115 +214,6 @@ def q_elemwise_arith(spark, sf):
     )
     out = arrs["p"] * (1 - arrs["d"]) * (1 + arrs["t"])
     return out.df
-
-
-@query(
-    "elemwise_math",
-    f"""
-    SELECT {LI_IDX} AS i0,
-           round(sqrt(l_quantity) + ln(l_extendedprice) + sin(l_discount), 6) AS v
-    FROM lineitem
-    """,
-)
-def q_elemwise_math(spark, sf):
-    """Transcendental ufuncs (reference _ufunc.py:128-141)."""
-    arrs = from_table_arrays(
-        _li(spark, sf), LI_IDX,
-        {"q": "l_quantity", "p": "l_extendedprice", "d": "l_discount"},
-    )
-    out = E.sqrt(arrs["q"]) + E.log(arrs["p"]) + E.sin(arrs["d"])
-    return out.round(6).df
-
-
-@query(
-    "elemwise_where_clip",
-    f"""
-    SELECT {LI_IDX} AS i0,
-           least(greatest(CASE WHEN l_quantity > 25 THEN l_extendedprice
-                               ELSE -l_extendedprice END,
-                          -50000.0), 50000.0) AS v
-    FROM lineitem
-    """,
-)
-def q_where_clip(spark, sf):
-    """where/select + clip (reference routines/_where.py:8,
-    _collection clip)."""
-    arrs = from_table_arrays(
-        _li(spark, sf), LI_IDX, {"q": "l_quantity", "p": "l_extendedprice"}
-    )
-    out = E.where(arrs["q"] > 25, arrs["p"], -arrs["p"]).clip(-50000.0, 50000.0)
-    return out.df
-
-
-@query(
-    "elemwise_comparison_logical",
-    f"""
-    SELECT {LI_IDX} AS i0,
-           CAST((l_quantity > 25 AND l_discount < 0.05)
-                OR NOT (l_tax >= 0.03) AS BIGINT) AS v
-    FROM lineitem
-    """,
-)
-def q_comparison_logical(spark, sf):
-    """comparison + logical ufuncs (reference _ufunc.py table)."""
-    a = from_table_arrays(
-        _li(spark, sf), LI_IDX,
-        {"q": "l_quantity", "d": "l_discount", "t": "l_tax"},
-    )
-    out = ((a["q"] > 25) & (a["d"] < 0.05)) | E.logical_not(a["t"] >= 0.03)
-    return out.astype("long").df
-
-
-@query(
-    "elemwise_rounding_sign",
-    f"""
-    SELECT {LI_IDX} AS i0,
-           floor(l_extendedprice / 1000) + ceil(l_discount * 10)
-             + sign(l_quantity - 25.0) + abs(l_tax - 0.04) AS v
-    FROM lineitem
-    """,
-)
-def q_rounding_sign(spark, sf):
-    a = from_table_arrays(
-        _li(spark, sf), LI_IDX,
-        {"p": "l_extendedprice", "d": "l_discount", "q": "l_quantity", "t": "l_tax"},
-    )
-    out = (
-        E.floor(a["p"] / 1000)
-        + E.ceil(a["d"] * 10)
-        + E.sign(a["q"] - 25.0)
-        + abs(a["t"] - 0.04)
-    )
-    return out.df
-
-
-@query(
-    "elemwise_extended",
-    f"""
-    SELECT {LI_IDX} AS i0,
-           round(pow(2.0, l_discount * 10)
-                 + CASE WHEN l_discount = 0 THEN 1.0
-                        ELSE sin(pi() * l_discount) / (pi() * l_discount) END
-                 + l_quantity * 4.0
-                 + CASE WHEN l_discount - 0.05 < 0 THEN -abs(l_tax)
-                        ELSE abs(l_tax) END, 6) AS v
-    FROM lineitem
-    """,
-)
-def q_elemwise_extended(spark, sf):
-    """extended ufunc table in one fused projection: exp2 + sinc +
-    ldexp + copysign (reference _ufunc.py:18-141)."""
-    a = from_table_arrays(
-        _li(spark, sf), LI_IDX,
-        {"q": "l_quantity", "d": "l_discount", "t": "l_tax"},
-    )
-    out = (
-        E.exp2(a["d"] * 10)
-        + E.sinc(a["d"])
-        + E.ldexp(a["q"], 2)
-        + E.copysign(a["t"], a["d"] - 0.05)
-    )
-    return out.round(6).df
 
 
 @query(
@@ -278,26 +245,6 @@ def q_complex_square(spark, sf):
     )
 
 
-@query(
-    "cast_astype",
-    f"SELECT {LI_IDX} AS i0, CAST(l_quantity AS BIGINT) AS v FROM lineitem",
-)
-def q_astype(spark, sf):
-    """astype (reference _collection.py:1569)."""
-    x = from_table_column(_li(spark, sf), LI_IDX, "l_quantity")
-    return x.astype("long").df
-
-
-@query(
-    "digitize_uniform",
-    """
-    SELECT o_orderkey AS i0,
-           CASE WHEN o_totalprice < 0 THEN 0
-                WHEN o_totalprice >= 600000 THEN 13
-                ELSE CAST(floor(o_totalprice / 600000 * 12) AS BIGINT) + 1 END AS v
-    FROM orders
-    """,
-)
 def q_digitize(spark, sf):
     """digitize (reference routines/_select.py digitize)."""
     o = read_table(spark, sf, "orders")
@@ -324,14 +271,6 @@ def q_slice_basic(spark, sf):
     return x[1000:50000:7].df
 
 
-@query(
-    "take_fancy",
-    """
-    SELECT t.pos AS i0, cast(round(p.p_retailprice * 100) as bigint) AS v
-    FROM (VALUES (0, 5), (1, 3), (2, 11), (3, 7), (4, 3)) t(pos, idx)
-    JOIN part p ON p.p_partkey = t.idx
-    """,
-)
 def q_take(spark, sf):
     """fancy integer indexing with duplicates (reference
     slicing/_basic.py:75) == broadcast join against the indexer."""
@@ -416,16 +355,6 @@ def q_isin(spark, sf):
     return S.isin(x, [1, 3, 5]).astype("long").df
 
 
-@query(
-    "searchsorted_range_join",
-    """
-    SELECT o.o_orderkey AS i0,
-           CAST((SELECT count(*) FROM (VALUES (100000.0), (200000.0),
-                 (300000.0), (400000.0)) b(e) WHERE b.e <= o.o_totalprice)
-                AS BIGINT) AS v
-    FROM orders o
-    """,
-)
 def q_searchsorted(spark, sf):
     """searchsorted == range join vs sorted boundaries (reference
     routines/_search.py:20)."""
@@ -439,13 +368,6 @@ def q_searchsorted(spark, sf):
 # Reductions (SURVEY section 2.5)
 # ---------------------------------------------------------------------------
 
-@query(
-    "reduce_sum_axis",
-    f"""
-    SELECT l_orderkey AS i0, CAST(SUM({CENTS}) AS BIGINT) AS v
-    FROM lineitem GROUP BY l_orderkey
-    """,
-)
 def q_sum_axis(spark, sf):
     """sum over one axis == partial/final hash aggregate (reference
     reductions/_reduction.py:154)."""
@@ -453,36 +375,17 @@ def q_sum_axis(spark, sf):
     return R.nansum(m, axis=1).df
 
 
-@query(
-    "reduce_grand_total",
-    f"SELECT CAST(SUM({CENTS}) AS BIGINT) AS v FROM lineitem",
-)
 def q_grand_total(spark, sf):
     x = from_table_column(_li(spark, sf), LI_IDX, CENTS)
     return R.nansum(x, axis=None).df
 
 
-@query(
-    "reduce_min_max_ptp",
-    f"""
-    SELECT {FLAG_IDX} AS i0,
-           CAST(max({CENTS}) - min({CENTS}) AS BIGINT) AS v
-    FROM lineitem GROUP BY 1
-    """,
-)
 def q_ptp(spark, sf):
     """ptp = max - min per group (reference routines/_statistics.py:158)."""
     m = from_table_matrix(_li(spark, sf), FLAG_IDX, LI_IDX, CENTS, (3, None))
     return R.ptp(m, axis=1).df
 
 
-@query(
-    "reduce_mean",
-    f"""
-    SELECT {FLAG_IDX} AS i0, avg(l_quantity) AS v
-    FROM lineitem GROUP BY 1
-    """,
-)
 def q_mean(spark, sf):
     """mean of integer-valued doubles: exact sums, deterministic
     division (reference reductions/_common.py:270)."""
@@ -490,17 +393,6 @@ def q_mean(spark, sf):
     return R.nanmean(m, axis=1).df
 
 
-@query(
-    "reduce_var_power_sums",
-    f"""
-    SELECT i0, round((s2 - s1 * s1 / n) / n, 6) AS v FROM (
-      SELECT {FLAG_IDX} AS i0,
-             SUM(l_quantity) AS s1,
-             SUM(l_quantity * l_quantity) AS s2,
-             CAST(count(*) AS DOUBLE) AS n
-      FROM lineitem GROUP BY 1) t
-    """,
-)
 def q_var_power_sums(spark, sf):
     """variance composed from exact power sums (reference merges power
     sums, reductions/_common.py:368) -- engine-side it's a fused
@@ -538,16 +430,6 @@ def q_any_all(spark, sf):
     return R.any_(m, axis=1).astype("long").df
 
 
-@query(
-    "reduce_prod_log_trick",
-    """
-    SELECT round(CASE WHEN count(CASE WHEN x = 0 THEN 1 END) > 0 THEN 0.0
-                ELSE (CASE WHEN count(CASE WHEN x < 0 THEN 1 END) % 2 = 1
-                      THEN -1.0 ELSE 1.0 END)
-                     * exp(SUM(CASE WHEN x != 0 THEN ln(abs(x)) END)) END, 6) AS v
-    FROM (SELECT 1.0 + l_discount / 100 AS x FROM lineitem WHERE l_orderkey < 200) t
-    """,
-)
 def q_prod(spark, sf):
     """product via exp-sum-log with sign/zero bookkeeping (no SQL PROD
     aggregate; reference reductions/_common.py:57).  Factors stay near
@@ -557,18 +439,6 @@ def q_prod(spark, sf):
     return R.prod(x, axis=None).round(6).df
 
 
-@query(
-    "argmax_first_tie",
-    """
-    SELECT l.l_orderkey AS i0,
-           CAST(min(l.l_linenumber) - 1 AS BIGINT) AS v
-    FROM lineitem l
-    JOIN (SELECT l_orderkey, max(l_extendedprice) AS mx
-          FROM lineitem GROUP BY l_orderkey) m
-      ON l.l_orderkey = m.l_orderkey AND l.l_extendedprice = m.mx
-    GROUP BY 1
-    """,
-)
 def q_argmax(spark, sf):
     """argmax with first-occurrence tie-break (reference
     reductions/_common.py:675; min-index-of-max, no offsets needed)."""
@@ -576,37 +446,17 @@ def q_argmax(spark, sf):
     return R.nanargmax(m, axis=1).df
 
 
-@query(
-    "median_exact",
-    f"""
-    SELECT {FLAG_IDX} AS i0, round(quantile_cont(l_quantity, 0.5), 6) AS v
-    FROM lineitem GROUP BY 1
-    """,
-)
 def q_median(spark, sf):
     """exact grouped median (reference reductions/_common.py:844)."""
     m = from_table_matrix(_li(spark, sf), FLAG_IDX, LI_IDX, "l_quantity", (3, None))
     return R.nanmedian(m, axis=1).round(6).df
 
 
-@query(
-    "quantile_exact",
-    f"""
-    SELECT {FLAG_IDX} AS i0, round(quantile_cont(l_quantity, 0.9), 6) AS v
-    FROM lineitem GROUP BY 1
-    """,
-)
 def q_quantile(spark, sf):
     m = from_table_matrix(_li(spark, sf), FLAG_IDX, LI_IDX, "l_quantity", (3, None))
     return R.quantile(m, 0.9, axis=1).round(6).df
 
 
-@query(
-    "median_scalable_global",
-    """
-    SELECT round(quantile_cont(l_extendedprice, 0.5), 6) AS v FROM lineitem
-    """,
-)
 def q_median_scalable(spark, sf):
     """exact global median by iterative bucket narrowing (3-4 full
     passes at any scale; no single-node gather of the axis) -- the
@@ -664,14 +514,6 @@ def q_topk(spark, sf):
     return R.argtopk(m, 5, axis=1).df
 
 
-@query(
-    "bincount",
-    """
-    SELECT CAST(l_linenumber AS BIGINT) AS i0,
-           CAST(count(*) AS BIGINT) AS v
-    FROM lineitem GROUP BY 1
-    """,
-)
 def q_bincount(spark, sf):
     """bincount == groupBy(value).count (reference
     routines/_bincount.py:39)."""
@@ -679,15 +521,6 @@ def q_bincount(spark, sf):
     return R.bincount(x).df
 
 
-@query(
-    "histogram_uniform",
-    """
-    SELECT least(CAST(floor((l_quantity - 1.0) / 50.0 * 10) AS BIGINT), 9) AS i0,
-           CAST(count(*) AS BIGINT) AS v
-    FROM lineitem WHERE l_quantity >= 1.0 AND l_quantity <= 51.0
-    GROUP BY 1
-    """,
-)
 def q_histogram(spark, sf):
     """uniform histogram, explicit bucket arithmetic (reference
     _histogram.py:41)."""
@@ -711,26 +544,11 @@ def q_unique(spark, sf):
     return R.unique_table(x)
 
 
-@query(
-    "count_nonzero",
-    """
-    SELECT CAST(count(*) AS BIGINT) AS v FROM lineitem WHERE l_discount != 0
-    """,
-)
 def q_count_nonzero(spark, sf):
     x = from_table_column(_li(spark, sf), LI_IDX, "l_discount")
     return R.count_nonzero(x, axis=None).df
 
 
-@query(
-    "weighted_average",
-    """
-    SELECT round(CAST(SUM(cast(round(l_extendedprice * 100) as bigint)
-                          * CAST(l_quantity AS BIGINT)) AS DOUBLE)
-                 / 100.0 / SUM(l_quantity), 6) AS v
-    FROM lineitem
-    """,
-)
 def q_weighted_average(spark, sf):
     """weighted mean (reference routines/_statistics.py:27); numerator
     in exact integer cents*qty so both engines sum order-independently,
@@ -744,13 +562,6 @@ def q_weighted_average(spark, sf):
     return (num.astype("double") / 100.0 / den).round(6).df
 
 
-@query(
-    "corr_pair",
-    """
-    SELECT round(corr(o_totalprice, c_acctbal), 6) + 0.0 AS v
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    """,
-)
 def q_corr(spark, sf):
     """Pearson correlation of two aligned arrays (reference
     routines/_statistics.py:164)."""
@@ -774,13 +585,6 @@ _DAILY_ORACLE = f"""
 """
 
 
-@query(
-    "cumsum_daily",
-    f"""
-    SELECT d AS i0, CAST(SUM(v) OVER (ORDER BY d) AS BIGINT) AS v
-    FROM ({_DAILY_ORACLE}) t
-    """,
-)
 def q_cumsum(spark, sf):
     """running total (reference reductions/_cumulative.py:100); exact
     in integer cents."""
@@ -788,15 +592,6 @@ def q_cumsum(spark, sf):
     return W.cumsum(daily, axis=0).df
 
 
-@query(
-    "diff_daily",
-    f"""
-    SELECT d AS i0,
-           lead(v) OVER (ORDER BY d) - v AS v
-    FROM ({_DAILY_ORACLE}) t
-    QUALIFY lead(v) OVER (ORDER BY d) IS NOT NULL
-    """,
-)
 def q_diff(spark, sf):
     """first difference (reference routines/_diff.py:6)."""
     daily = _daily_cents(spark, sf)
@@ -804,14 +599,6 @@ def q_diff(spark, sf):
     return W.diff(sparse, axis=0).df
 
 
-@query(
-    "moving_mean_7",
-    f"""
-    SELECT d AS i0,
-           round(avg(v) OVER (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS v
-    FROM ({_DAILY_ORACLE}) t
-    """,
-)
 def q_moving_mean(spark, sf):
     """trailing moving average (reference
     reductions/_sliding_window.py:249)."""
@@ -820,16 +607,6 @@ def q_moving_mean(spark, sf):
     return W.moving_reduce(sparse, 7, "mean", axis=0).round(6).df
 
 
-@query(
-    "sliding_max_30",
-    f"""
-    SELECT d AS i0,
-           CAST(max(v) OVER (ORDER BY d ROWS BETWEEN CURRENT ROW AND 29 FOLLOWING)
-                AS BIGINT) AS v
-    FROM ({_DAILY_ORACLE}) t
-    QUALIFY row_number() OVER (ORDER BY d DESC) > 29
-    """,
-)
 def q_sliding_max(spark, sf):
     """forward sliding-window max, fused (reference
     reductions/_sliding_window.py:405)."""
@@ -848,14 +625,6 @@ def q_sliding_max(spark, sf):
     return out
 
 
-@query(
-    "push_ffill",
-    f"""
-    SELECT g.i0 AS i0, last_value(t.v IGNORE NULLS) OVER (ORDER BY g.i0) AS v
-    FROM (SELECT unnest(generate_series(0, {NDAYS - 1})) AS i0) g
-    LEFT JOIN ({_DAILY_ORACLE}) t ON t.d = g.i0
-    """,
-)
 def q_push(spark, sf):
     """forward-fill over a dense day grid (reference _overlap.py:1449);
     gap days densified to NULL first."""
@@ -863,13 +632,6 @@ def q_push(spark, sf):
     return W.push(daily, axis=0).df
 
 
-@query(
-    "coarsen_weekly",
-    f"""
-    SELECT d // 7 AS i0, CAST(SUM(v) AS BIGINT) AS v
-    FROM ({_DAILY_ORACLE}) t GROUP BY 1
-    """,
-)
 def q_coarsen(spark, sf):
     """coarsen: tumbling index window (reference
     routines/_coarsen.py:42)."""
@@ -922,12 +684,6 @@ def q_cumprod(spark, sf):
 # Manipulation / layout (SURVEY section 2.10) + linalg (2.7)
 # ---------------------------------------------------------------------------
 
-@query(
-    "transpose_reshape_flat",
-    f"""
-    SELECT i1 * 25 + i0 AS i0, v FROM ({NM_SQL}) t
-    """,
-)
 def q_transpose_reshape(spark, sf):
     """transpose (axis rename) + C-order reshape (flat index math) --
     both pure projections (reference manipulation/_transpose.py:14,
@@ -936,13 +692,6 @@ def q_transpose_reshape(spark, sf):
     return M.reshape(M.transpose(m), (300,)).df
 
 
-@query(
-    "concat_roll",
-    f"""
-    SELECT (i1 + 6) % 12 AS i0, CAST(SUM(v) AS BIGINT) AS v
-    FROM ({NM_SQL}) t GROUP BY 1
-    """,
-)
 def q_concat_roll(spark, sf):
     """monthly totals rolled by 6 == concatenate(x[6:], x[:6])
     (reference stacking/_concatenate.py:20, manipulation/_roll.py:8)."""
@@ -953,15 +702,6 @@ def q_concat_roll(spark, sf):
     return rolled.df
 
 
-@query(
-    "stack_flip",
-    f"""
-    WITH mo AS (SELECT i1, CAST(SUM(v) AS BIGINT) AS v FROM ({NM_SQL}) t GROUP BY i1)
-    SELECT 0 AS i0, i1 AS i1, v FROM mo
-    UNION ALL
-    SELECT 1 AS i0, 11 - i1 AS i1, v FROM mo
-    """,
-)
 def q_stack_flip(spark, sf):
     """stack + flip (reference stacking/_stack.py:18,
     manipulation/_flip.py:10)."""
@@ -971,15 +711,6 @@ def q_stack_flip(spark, sf):
     return M.stack([monthly, M.flip(monthly, 0)], axis=0).df
 
 
-@query(
-    "broadcast_center",
-    f"""
-    SELECT t.i0, t.i1, t.v - m.mu AS v
-    FROM ({NM_SQL}) t
-    JOIN (SELECT i0, CAST(SUM(v) AS DOUBLE) / 12.0 AS mu
-          FROM ({NM_SQL}) g GROUP BY i0) m USING (i0)
-    """,
-)
 def q_broadcast_center(spark, sf):
     """matrix minus row-mean vector: broadcasting == join on the shared
     axis (reference _blockwise.py:1243).  Mean over the TRUE dense
@@ -1007,13 +738,6 @@ def q_matmul(spark, sf):
     return linalg.matmul(m, M.transpose(m)).df
 
 
-@query(
-    "tensordot_vec",
-    f"""
-    SELECT i0, CAST(SUM(v * (i1 + 1)) AS BIGINT) AS v
-    FROM ({NM_SQL}) t GROUP BY i0
-    """,
-)
 def q_tensordot(spark, sf):
     """contraction with a weight vector (reference
     linalg/_tensordot.py:140)."""
@@ -1047,15 +771,6 @@ def q_outer(spark, sf):
     return linalg.outer(Array(rc, (5,)), Array(lc, (7,))).df
 
 
-@query(
-    "trace_diagonal",
-    f"""
-    WITH a AS ({NM_SQL}),
-         c AS (SELECT x.i0 AS i0, y.i0 AS i1, CAST(SUM(x.v * y.v) AS BIGINT) AS v
-               FROM a x JOIN a y ON x.i1 = y.i1 GROUP BY 1, 2)
-    SELECT i0, v FROM c WHERE i1 = i0
-    """,
-)
 def q_trace_diag(spark, sf):
     """diagonal extraction WHERE i1 = i0 (reference
     creation/_diagonal.py:16)."""
@@ -1064,13 +779,6 @@ def q_trace_diag(spark, sf):
     return creation.diagonal(gram, 0).df
 
 
-@query(
-    "norm_frobenius",
-    f"""
-    SELECT round(sqrt(SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), 6) AS v
-    FROM ({NM_SQL}) t
-    """,
-)
 def q_norm(spark, sf):
     """Frobenius norm (reference linalg/_norm.py:13); int squares sum
     exactly."""
@@ -1089,12 +797,6 @@ def _monthly(spark, sf) -> Array:
 _MONTHLY_SQL = f"SELECT i1 AS i, CAST(SUM(v) AS BIGINT) AS v FROM ({NM_SQL}) t GROUP BY i1"
 
 
-@query(
-    "einsum_row_norms",
-    f"""
-    SELECT i0, CAST(SUM(v * v) AS BIGINT) AS v FROM ({NM_SQL}) t GROUP BY i0
-    """,
-)
 def q_einsum_row_norms(spark, sf):
     """einsum('ij,ij->i') row-wise self inner products: shared labels
     on BOTH axes -> one self-equi-join + grouped sum (reference
@@ -1104,12 +806,6 @@ def q_einsum_row_norms(spark, sf):
     return out.df.select("i0", F.col("v").cast("long").alias("v"))
 
 
-@query(
-    "einsum_trace_gram",
-    f"""
-    SELECT CAST(SUM(v * v) AS BIGINT) AS v FROM ({NM_SQL}) t
-    """,
-)
 def q_einsum_trace(spark, sf):
     """einsum('ii->') on the Gram matrix == trace(A@A.T) == ||A||_F^2;
     exercises the repeated-label (diagonal) filter path."""
@@ -1119,15 +815,6 @@ def q_einsum_trace(spark, sf):
     return out.df.select(F.col("v").cast("long").alias("v"))
 
 
-@query(
-    "tri_masked_sum",
-    f"""
-    WITH a AS ({NM_SQL}),
-         c AS (SELECT x.i0 AS i0, y.i0 AS i1, CAST(SUM(x.v * y.v) AS BIGINT) AS v
-               FROM a x JOIN a y ON x.i1 = y.i1 GROUP BY 1, 2)
-    SELECT CAST(SUM(v) AS BIGINT) AS v FROM c WHERE i1 <= i0
-    """,
-)
 def q_tri_masked_sum(spark, sf):
     """lower-triangular masked sum: gram * tri(25) elemwise (sparse
     mask cells == implicit zeros drop via the join; reference
@@ -1140,13 +827,6 @@ def q_tri_masked_sum(spark, sf):
     return out.df.select(F.col("v").cast("long").alias("v"))
 
 
-@query(
-    "creation_linspace_arange",
-    """
-    SELECT round(SUM((i / 100.0) * i), 6) AS v
-    FROM (SELECT unnest(range(101)) AS i) t
-    """,
-)
 def q_linspace_arange(spark, sf):
     """linspace * arange elemwise join + total (reference
     creation/_linspace.py:15, _arange.py:16)."""
@@ -1155,17 +835,6 @@ def q_linspace_arange(spark, sf):
     return R.nansum(x * y, axis=None).round(6).df
 
 
-@query(
-    "gradient_monthly",
-    f"""
-    WITH mo AS (SELECT i1 AS i, CAST(SUM(v) AS DOUBLE) AS v FROM ({NM_SQL}) t GROUP BY i1)
-    SELECT i AS i0,
-           round(CASE WHEN i = 0 THEN lead(v) OVER w - v
-                      WHEN i = 11 THEN v - lag(v) OVER w
-                      ELSE (lead(v) OVER w - lag(v) OVER w) / 2.0 END, 6) + 0.0 AS v
-    FROM mo WINDOW w AS (ORDER BY i)
-    """,
-)
 def q_gradient(spark, sf):
     """central-difference gradient with one-sided edges (reference
     routines/_gradient.py:36, overlap depth 1 == lag/lead)."""
@@ -1173,13 +842,6 @@ def q_gradient(spark, sf):
     return W.gradient(mo, axis=0).round(6).df
 
 
-@query(
-    "cov_sample_pair",
-    """
-    SELECT round(covar_samp(o_totalprice, c_acctbal) / 1e7, 6) + 0.0 AS v
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    """,
-)
 def q_cov_pair(spark, sf):
     """sample covariance of two aligned arrays (reference matmul-based
     cov, routines/_statistics.py:67); scaled before rounding so the
@@ -1193,18 +855,6 @@ def q_cov_pair(spark, sf):
     return (out / 1e7).round(6).df
 
 
-@query(
-    "histogram2d_qty_disc",
-    """
-    SELECT least(CAST(floor((l_quantity - 1.0) / 50.0 * 10) AS BIGINT), 9) AS i0,
-           least(CAST(floor((l_discount - 0.0) / 0.11 * 5) AS BIGINT), 4) AS i1,
-           CAST(count(*) AS BIGINT) AS v
-    FROM lineitem
-    WHERE l_quantity >= 1.0 AND l_quantity <= 51.0
-      AND l_discount >= 0.0 AND l_discount <= 0.11
-    GROUP BY 1, 2
-    """,
-)
 def q_histogram2d(spark, sf):
     """2-D histogram over two columns of one base -- a single
     projection + grouped count, no join (reference _histogram.py:161)."""
@@ -1214,18 +864,6 @@ def q_histogram2d(spark, sf):
     return R.histogram2d(a["q"], a["d"], (10, 5), ((1.0, 51.0), (0.0, 0.11))).df
 
 
-@query(
-    "tile_pad_vector",
-    f"""
-    WITH mo AS ({_MONTHLY_SQL}),
-    tiled AS (SELECT r.r * 12 + i AS i, CAST(v AS DOUBLE) AS v
-              FROM mo CROSS JOIN (SELECT unnest(range(2)) AS r) r)
-    SELECT i + 2 AS i0, v FROM tiled
-    UNION ALL
-    SELECT b.i AS i0, 0.0 AS v
-    FROM (SELECT unnest([0, 1, 26, 27, 28]) AS i) b
-    """,
-)
 def q_tile_pad(spark, sf):
     """tile(x, 2) then constant-pad (2, 3) (reference
     creation/_tile.py:10, _pad.py:227): cross-join with a broadcast
@@ -1235,14 +873,6 @@ def q_tile_pad(spark, sf):
     return M.pad_constant(tiled, [(2, 3)], 0.0).df
 
 
-@query(
-    "repeat_vector",
-    f"""
-    WITH mo AS ({_MONTHLY_SQL})
-    SELECT i * 3 + r.r AS i0, v
-    FROM mo CROSS JOIN (SELECT unnest(range(3)) AS r) r
-    """,
-)
 def q_repeat(spark, sf):
     """repeat(x, 3): each element thrice, index i*3+r (reference
     creation/_repeat.py:13)."""
@@ -1250,17 +880,6 @@ def q_repeat(spark, sf):
     return M.repeat(mo, 3, axis=0).df
 
 
-@query(
-    "insert_delete_splice",
-    f"""
-    WITH mo AS ({_MONTHLY_SQL}),
-    del AS (SELECT CASE WHEN i > 3 THEN i - 1 ELSE i END AS i,
-                   CAST(v AS DOUBLE) AS v
-            FROM mo WHERE i != 3)
-    SELECT i + 1 AS i0, v FROM del
-    UNION ALL SELECT 0 AS i0, 0.0 AS v
-    """,
-)
 def q_insert_delete(spark, sf):
     """np.delete at 3 then np.insert 0.0 at 0: index-shifted splices
     (reference routines/_insert_delete.py:19-140)."""
@@ -1268,14 +887,6 @@ def q_insert_delete(spark, sf):
     return M.insert_1d(M.delete_1d(mo, 3), 0, 0.0).df
 
 
-@query(
-    "vindex_points",
-    f"""
-    SELECT t.pos AS i0, a.v
-    FROM (VALUES (0, 3, 5), (1, 7, 11), (2, 24, 0), (3, 3, 5), (4, 0, 0)) t(pos, c0, c1)
-    JOIN ({NM_SQL}) a ON a.i0 = t.c0 AND a.i1 = t.c1
-    """,
-)
 def q_vindex(spark, sf):
     """point-wise coordinate gather == broadcast join on the composite
     index key (reference VIndexArray, slicing/_vindex.py:143)."""
@@ -1288,15 +899,6 @@ def q_vindex(spark, sf):
     return S.vindex(m, coords).df
 
 
-@query(
-    "set_union1d",
-    """
-    WITH u AS (SELECT DISTINCT v FROM (
-      SELECT c_nationkey AS v FROM customer
-      UNION SELECT s_nationkey AS v FROM supplier))
-    SELECT row_number() OVER (ORDER BY v) - 1 AS i0, v FROM u
-    """,
-)
 def q_union1d(spark, sf):
     """sorted distinct union (reference routines/_unique.py:226)."""
     from .operators import setops as SO
@@ -1308,15 +910,6 @@ def q_union1d(spark, sf):
     return SO.union1d(a, b).df
 
 
-@query(
-    "set_intersect1d",
-    """
-    WITH a AS (SELECT DISTINCT o_custkey AS v FROM orders),
-         b AS (SELECT DISTINCT c_custkey AS v FROM customer WHERE c_acctbal < 0),
-         i AS (SELECT v FROM a INTERSECT SELECT v FROM b)
-    SELECT row_number() OVER (ORDER BY v) - 1 AS i0, v FROM i
-    """,
-)
 def q_intersect1d(spark, sf):
     """sorted intersection == Spark INTERSECT (left semi join):
     customers in debt who have orders."""
@@ -1329,14 +922,6 @@ def q_intersect1d(spark, sf):
     return SO.intersect1d(a, b).df
 
 
-@query(
-    "set_setdiff1d",
-    """
-    WITH d AS (SELECT DISTINCT c_custkey AS v FROM customer
-               EXCEPT SELECT DISTINCT o_custkey AS v FROM orders)
-    SELECT row_number() OVER (ORDER BY v) - 1 AS i0, v FROM d
-    """,
-)
 def q_setdiff1d(spark, sf):
     """sorted difference == Spark EXCEPT (left anti join): customers
     with no orders."""
@@ -1349,22 +934,6 @@ def q_setdiff1d(spark, sf):
     return SO.setdiff1d(a, b).df
 
 
-@query(
-    "moment3_central",
-    f"""
-    SELECT i0, round((1.0 * n * pow(-mu, 3) + 3.0 * s1 * pow(-mu, 2)
-                      + 3.0 * s2 * pow(-mu, 1) + 1.0 * s3 * pow(-mu, 0)) / n,
-                     6) + 0.0 AS v
-    FROM (
-      SELECT {FLAG_IDX} AS i0,
-             CAST(count(*) AS DOUBLE) AS n,
-             SUM(l_quantity) AS s1,
-             SUM(l_quantity * l_quantity) AS s2,
-             SUM(l_quantity * l_quantity * l_quantity) AS s3,
-             SUM(l_quantity) / count(*) AS mu
-      FROM lineitem GROUP BY 1) t
-    """,
-)
 def q_moment3(spark, sf):
     """3rd central moment via one-pass binomial expansion over raw
     power sums (reference moment_chunk/combine merge,
@@ -1374,12 +943,6 @@ def q_moment3(spark, sf):
     return R.moment(m, 3, axis=1).round(6).df
 
 
-@query(
-    "map_blocks_affine",
-    f"""
-    SELECT i0, i1, CAST(v * 2 + 1 AS DOUBLE) AS v FROM ({NM_SQL}) t
-    """,
-)
 def q_map_blocks(spark, sf):
     """map_blocks kernel (b*2+1) over 8x8 blocks: pack/kernel/unpack in
     one applyInPandas stage (reference _map_blocks.py:21); absent cells
@@ -1390,13 +953,6 @@ def q_map_blocks(spark, sf):
     return B.map_blocks(lambda b: b * 2.0 + 1.0, m, (8, 8)).df
 
 
-@query(
-    "apply_along_axis_rowscale",
-    f"""
-    SELECT i0, i1, round(CAST(v AS DOUBLE) / max(v) OVER (PARTITION BY i0), 6) AS v
-    FROM ({NM_SQL}) t
-    """,
-)
 def q_apply_along_axis(spark, sf):
     """row-rescale by the row max through the 1-D kernel surface
     (reference routines/_apply.py:16): groupBy rows + vector-output
@@ -1408,27 +964,6 @@ def q_apply_along_axis(spark, sf):
     return out.round(6).df.filter(F.col("v").isNotNull())
 
 
-@query(
-    "gufunc_row_dot",
-    f"""
-    SELECT i0, CAST(SUM(v * v) AS DOUBLE) AS v FROM ({NM_SQL}) t GROUP BY i0
-    """,
-)
-def q_gufunc_row_dot(spark, sf):
-    """apply_gufunc('(i),(i)->()') row inner products: loop dims
-    distributed, core dim in-kernel (reference _gufunc.py:154)."""
-    from .core import blocks as B
-
-    m = _nation_month_matrix(spark, sf)
-    return B.apply_gufunc(lambda x, y: np.nansum(x * y), "(i),(i)->()", m, m).df
-
-
-@query(
-    "tsqr_q_orthonormal",
-    """
-    SELECT CAST(unnest(range(12)) AS BIGINT) AS i0, CAST(1.0 AS DOUBLE) AS v
-    """,
-)
 def q_tsqr_orthonormal(spark, sf):
     """TSQR factor check: every column of Q has unit norm to 1e-6
     (reference linalg/_qr.py:38; the oracle is the mathematical
@@ -1441,18 +976,6 @@ def q_tsqr_orthonormal(spark, sf):
     return d
 
 
-@query(
-    "lstsq_regression",
-    """
-    SELECT CAST(0 AS BIGINT) AS i0,
-           round(regr_intercept(l_extendedprice, l_quantity), 6) AS v
-    FROM lineitem
-    UNION ALL
-    SELECT CAST(1 AS BIGINT) AS i0,
-           round(regr_slope(l_extendedprice, l_quantity), 6) AS v
-    FROM lineitem
-    """,
-)
 def q_lstsq(spark, sf):
     """distributed least squares via TSQR (reference linalg/_solve.py
     lstsq): fit price ~ quantity; the oracle is DuckDB's native
@@ -1475,10 +998,6 @@ def q_lstsq(spark, sf):
     )
 
 
-@query(
-    "cholesky_reconstruct",
-    "SELECT CAST(0.0 AS DOUBLE) AS v",
-)
 def q_cholesky(spark, sf):
     """Cholesky of the ridge-augmented Gram matrix; the oracle is the
     reconstruction invariant max|L L^T - A| / max|A| == 0 to 1e-6
@@ -1497,10 +1016,6 @@ def q_cholesky(spark, sf):
     return (err / scale).round(6).df
 
 
-@query(
-    "solve_residual",
-    "SELECT CAST(0.0 AS DOUBLE) AS v",
-)
 def q_solve(spark, sf):
     """solve(A, b) on the ridge-augmented Gram system; oracle = the
     relative residual invariant max|Ax - b| / max|b| == 0 to 1e-6
@@ -1665,16 +1180,6 @@ def q_fft(spark, sf):
     )
 
 
-@query(
-    "map_overlap_smooth",
-    f"""
-    WITH mo AS (SELECT i1 AS i, CAST(SUM(v) AS DOUBLE) AS v FROM ({NM_SQL}) t GROUP BY i1)
-    SELECT i AS i0,
-           round((coalesce(lag(v) OVER w, v) + v
-                  + coalesce(lead(v) OVER w, v)) / 3.0, 6) AS v
-    FROM mo WINDOW w AS (ORDER BY i)
-    """,
-)
 def q_map_overlap(spark, sf):
     """3-point smoothing through the halo-exchange kernel path
     (reference map_overlap, _overlap.py:1041): depth-1 halo, nearest
@@ -1703,13 +1208,6 @@ def q_approx_percentile(spark, sf):
     return R.percentile_approx(m, 0.95, axis=1).df
 
 
-@query(
-    "random_permutation_check",
-    """
-    SELECT CAST(1000 AS BIGINT) AS n_rows, CAST(1000 AS BIGINT) AS n_distinct,
-           CAST(0 AS BIGINT) AS min_v, CAST(999 AS BIGINT) AS max_v
-    """,
-)
 def q_random_permutation(spark, sf):
     """random permutation validity invariant: 1000 rows, 1000 distinct
     values spanning exactly 0..999 (reference ``permutation``,
@@ -1855,30 +1353,6 @@ def _embs(spark, sf):
     return read_table(spark, sf, "embeddings")
 
 
-@query(
-    "text_stats",
-    f"""
-    SELECT doc_id,
-           CAST(length(text) AS BIGINT) AS n_chars,
-           CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
-           round(CAST(list_sum(list_transform({_TOKS}, t -> length(t)))
-                 AS DOUBLE) / len({_TOKS}), 6) AS avg_token_len,
-           round(CAST(len(list_distinct({_TOKS})) AS DOUBLE) / len({_TOKS}), 6)
-             AS distinct_ratio,
-           round(CAST(len(list_filter({_TOKS},
-                 t -> t IN ('a', 'the', 'and', 'of'))) AS DOUBLE)
-                 / len({_TOKS}), 6) AS stopword_ratio
-    FROM documents
-    """,
-)
-def q_text_stats(spark, sf):
-    """token counting + quality-feature extraction (pipeline scope);
-    pure JVM projections, zero shuffle."""
-    from .functions import text as T
-
-    return T.token_stats(_docs(spark, sf))
-
-
 _BPE_SQL = "len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]'))"
 
 
@@ -1965,62 +1439,6 @@ def q_dedup_substring_spans(spark, sf):
         f"{T.polyhash_sql('text')} AS d", "CAST(-1 AS BIGINT) AS e",
     )
     return k0.unionByName(k1)
-
-
-@query(
-    "tokenize_chunks",
-    f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
-    ch AS (SELECT doc_id, tk,
-                  unnest(range(0, 1 + CAST(ceil(greatest(len(tk) - 16, 0) / 8.0)
-                                           AS INT))) AS ci
-           FROM tk WHERE len(tk) > 0)
-    SELECT doc_id, CAST(ci AS BIGINT) AS chunk_id,
-           CAST(len(list_slice(tk, ci * 8 + 1, ci * 8 + 16)) AS BIGINT)
-             AS n_tokens,
-           array_to_string(list_slice(tk, ci * 8 + 1, ci * 8 + 16), ' ')
-             AS chunk_text
-    FROM ch
-    """,
-)
-def q_tokenize_chunks(spark, sf):
-    """fixed-window token chunking with overlapping stride (window 16,
-    stride 8 -- the LLM context-window preparation step); in-row index
-    arithmetic + slices, zero shuffle (functions/tokenize.py)."""
-    from .functions import tokenize as TK
-
-    return TK.chunk_tokens(_docs(spark, sf), window=16, stride=8)
-
-
-@query(
-    "pack_sequences",
-    f"""
-    WITH RECURSIVE d AS (
-      SELECT doc_id, doc_id % 8 AS g, CAST(len({_TOKS}) AS BIGINT) AS n,
-             row_number() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS rn
-      FROM documents),
-    r AS (
-      SELECT g, rn, doc_id, n, CAST(0 AS BIGINT) AS bin, n AS fill
-      FROM d WHERE rn = 1
-      UNION ALL
-      SELECT d.g, d.rn, d.doc_id, d.n,
-             CASE WHEN r.fill > 0 AND r.fill + d.n > 128
-                  THEN r.bin + 1 ELSE r.bin END,
-             CASE WHEN r.fill > 0 AND r.fill + d.n > 128
-                  THEN d.n ELSE r.fill + d.n END
-      FROM r JOIN d ON d.g = r.g AND d.rn = r.rn + 1)
-    SELECT doc_id, CAST(g AS BIGINT) AS group_id, n AS n_tokens,
-           bin AS bin_id
-    FROM r
-    """,
-)
-def q_pack_sequences(spark, sf):
-    """greedy next-fit sequence packing into 128-token training bins,
-    partition-local per doc_id%8 group (Arrow-batched applyInPandas;
-    the oracle replays the sequential fold as a recursive CTE)."""
-    from .functions import tokenize as TK
-
-    return TK.pack_sequences(_docs(spark, sf), budget=128, n_groups=8)
 
 
 @query(
@@ -2163,61 +1581,17 @@ def q_tokenize_suite(spark, sf):
     )
 
 
-@query(
-    "text_quality",
-    f"""
-    SELECT doc_id,
-           round(greatest(0.0, least(1.0,
-             least(CAST(len({_TOKS}) AS DOUBLE) / 100.0, 1.0) * 0.4
-             + CAST(len(list_distinct({_TOKS})) AS DOUBLE) / len({_TOKS}) * 0.6
-             - CAST(len(list_filter({_TOKS}, t -> t IN ('a', 'the', 'and', 'of')))
-                    AS DOUBLE) / len({_TOKS}) * 0.5)), 6) AS quality
-    FROM documents
-    """,
-)
 def q_text_quality(spark, sf):
     from .functions import text as T
 
     return T.quality_score(_docs(spark, sf))
 
 
-@query(
-    "text_lang_id",
-    f"""
-    WITH s AS (
-      SELECT doc_id,
-             len(list_filter({_TOKS}, t -> t IN ('der','die','und','das'))) AS s_de,
-             len(list_filter({_TOKS}, t -> t IN ('the','a','of','and'))) AS s_en,
-             len(list_filter({_TOKS}, t -> t IN ('el','la','y','los'))) AS s_es,
-             len(list_filter({_TOKS}, t -> t IN ('le','la','et','les'))) AS s_fr,
-             len(list_filter({_TOKS}, t -> t IN ('de','shi','he','zai'))) AS s_zh
-      FROM documents)
-    SELECT doc_id,
-           CASE WHEN coalesce(greatest(s_de, s_en, s_es, s_fr, s_zh), 0) = 0 THEN 'und'
-                WHEN s_de = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'de'
-                WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                ELSE 'zh' END AS pred_lang
-    FROM s
-    """,
-)
 def q_lang_id(spark, sf):
     """marker-token language-ID heuristic, alphabetical tie-break."""
     from .functions import text as T
 
     return T.lang_id(_docs(spark, sf))
-
-
-@query(
-    "text_fingerprint",
-    f"SELECT doc_id, {_POLY.format(s='text')} AS fp FROM documents",
-)
-def q_fingerprint(spark, sf):
-    """polynomial rolling-hash document fingerprint."""
-    from .functions import text as T
-
-    return T.fingerprint(_docs(spark, sf))
 
 
 @query(
@@ -2248,21 +1622,6 @@ def q_minhash_sigs(spark, sf):
     return D.minhash_signatures(sh, 16)
 
 
-@query(
-    "dedup_minhash_pairs",
-    f"""
-    WITH sigs AS ({_SIGS_SQL}),
-    bh AS (SELECT doc_id, sig_id AS band,
-                  (17 * 1000003 + sig % 1000000007) % 1000000007 AS bh
-           FROM sigs
-           QUALIFY count(*) OVER (PARTITION BY band, bh) <= 10000)
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(count(*) AS BIGINT) AS n_bands
-    FROM bh a JOIN bh b ON a.band = b.band AND a.bh = b.bh
-                       AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-    """,
-)
 def q_minhash_pairs(spark, sf):
     """LSH banding (1 row/band): candidate pairs sharing any bucket --
     the join that replaces the N^2 pair scan."""
@@ -2273,72 +1632,6 @@ def q_minhash_pairs(spark, sf):
     return D.lsh_candidate_pairs(sigs, rows_per_band=1)
 
 
-@query(
-    "dedup_jaccard_verify",
-    f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    sigs AS ({_SIGS_SQL}),
-    bh AS (SELECT doc_id, sig_id AS band,
-                  (17 * 1000003 + sig % 1000000007) % 1000000007 AS bh
-           FROM sigs
-           QUALIFY count(*) OVER (PARTITION BY band, bh) <= 10000),
-    pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM bh a JOIN bh b ON a.band = b.band AND a.bh = b.bh
-                                 AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (SELECT p.doc_a, p.doc_b, count(*) AS n_inter
-              FROM pairs p
-              JOIN sh sa ON sa.doc_id = p.doc_a
-              JOIN sh sb ON sb.doc_id = p.doc_b AND sb.sh = sa.sh
-              GROUP BY 1, 2)
-    SELECT p.doc_a, p.doc_b,
-           round(CAST(coalesce(i.n_inter, 0) AS DOUBLE)
-                 / (ca.n + cb.n - coalesce(i.n_inter, 0)), 6) AS jaccard
-    FROM pairs p
-    LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-    JOIN counts ca ON ca.doc_id = p.doc_a
-    JOIN counts cb ON cb.doc_id = p.doc_b
-    """,
-)
-def q_jaccard_verify(spark, sf):
-    """exact n-gram Jaccard on the LSH candidates (verify stage).
-    Shingles and candidate pairs fan out to multiple consumers ->
-    persist both (SURVEY.md section 4.4 persist-at-fan-out)."""
-    from .functions import dedup as D
-
-    docs = _docs(spark, sf)
-    sh = D.shingle_hashes(docs).persist()
-    sigs = D.minhash_signatures(sh, 16)
-    pairs = D.lsh_candidate_pairs(sigs, rows_per_band=1).drop("n_bands").persist()
-    return D.jaccard_on_pairs(sh, pairs)
-
-
-@query(
-    "dedup_simhash",
-    f"""
-    WITH tw AS (SELECT doc_id, t, count(*) AS w FROM (
-                  SELECT doc_id, unnest({_TOKS}) AS t FROM documents)
-                GROUP BY doc_id, t),
-    th AS (SELECT doc_id, {_POLY.format(s='t')} AS h, w FROM tw),
-    per_bit AS (SELECT doc_id, b.b,
-                       SUM(w * (2 * (CAST(floor(h / pow(2, b.b)) AS BIGINT) % 2) - 1)) AS s
-                FROM th CROSS JOIN (SELECT unnest(range(16)) AS b) b
-                GROUP BY doc_id, b.b)
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN s > 0 THEN CAST(pow(2, b) AS BIGINT) ELSE 0 END)
-                AS BIGINT) AS simhash
-    FROM per_bit GROUP BY doc_id
-    """,
-)
-def q_simhash(spark, sf):
-    """SimHash fingerprint: count-weighted bit majority of token
-    hashes."""
-    from .functions import dedup as D
-
-    return D.simhash(_docs(spark, sf))
-
-
 _EX_SQL = """
     SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
            CAST(unnest(embedding) AS DOUBLE) AS e
@@ -2346,29 +1639,6 @@ _EX_SQL = """
 """
 
 
-@query(
-    "simsearch_topk",
-    f"""
-    WITH ex AS ({_EX_SQL}),
-    q AS (SELECT vec_id AS qid, pos, e AS qe FROM ex WHERE vec_id IN (0, 1, 2)),
-    dots AS (SELECT q.qid, ex.vec_id, SUM(ex.e * q.qe) AS dot
-             FROM ex JOIN q USING (pos) GROUP BY 1, 2),
-    norms AS (SELECT vec_id, sqrt(SUM(e * e)) AS nrm FROM ex GROUP BY 1),
-    cos AS (SELECT d.qid, d.vec_id,
-                   round(d.dot / (n1.nrm * n2.nrm), 6) + 0.0 AS c
-            FROM dots d
-            JOIN norms n1 ON n1.vec_id = d.vec_id
-            JOIN norms n2 ON n2.vec_id = d.qid
-            WHERE d.vec_id != d.qid
-              AND n1.nrm * n2.nrm <> 0)
-    SELECT qid, CAST(rnk - 1 AS BIGINT) AS rank, vec_id, c AS cos
-    FROM (SELECT qid, vec_id, c,
-                 row_number() OVER (PARTITION BY qid
-                                    ORDER BY c DESC, vec_id ASC) AS rnk
-          FROM cos) t
-    WHERE rnk <= 5
-    """,
-)
 def q_simsearch(spark, sf):
     """brute-force cosine top-k (ANN correctness baseline)."""
     from .functions import similarity as SIM
@@ -2376,14 +1646,6 @@ def q_simsearch(spark, sf):
     return SIM.cosine_topk(_embs(spark, sf), [0, 1, 2], k=5)
 
 
-@query(
-    "sort_values_rank",
-    """
-    SELECT row_number() OVER (ORDER BY o_totalprice, o_orderkey) - 1 AS i0,
-           o_totalprice AS v
-    FROM orders WHERE o_orderkey < 2000
-    """,
-)
 def q_sort(spark, sf):
     """first-class total sort (SURVEY section 2.8): value-ranked array
     via the scalable range-partitioned rank, stable ties on the
@@ -2395,14 +1657,6 @@ def q_sort(spark, sf):
     return sorting.sort(x).df
 
 
-@query(
-    "argsort_indices",
-    """
-    SELECT row_number() OVER (ORDER BY o_totalprice, o_orderkey) - 1 AS i0,
-           o_orderkey AS v
-    FROM orders WHERE o_orderkey < 2000
-    """,
-)
 def q_argsort(spark, sf):
     from .operators import sorting
 
@@ -2411,13 +1665,6 @@ def q_argsort(spark, sf):
     return sorting.argsort(x).df
 
 
-@query(
-    "rollup_nation_month",
-    f"""
-    SELECT i0, i1, CAST(SUM(v) AS BIGINT) AS v FROM ({NM_SQL}) t
-    GROUP BY ROLLUP (i0, i1)
-    """,
-)
 def q_rollup(spark, sf):
     """ROLLUP over both array axes in one pass (SURVEY section 2.5:
     reduce over every axis-subset; Spark partial-aggregates all
@@ -2539,15 +1786,6 @@ def _events(spark, sf):
     return read_table(spark, sf, "events")
 
 
-@query(
-    "events_tumbling",
-    """
-    SELECT (epoch_us(ts) // 600000000) * 600 AS win, event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(cast(round(value * 100) as bigint)) AS BIGINT) AS value_cents
-    FROM events GROUP BY 1, 2
-    """,
-)
 def q_events_tumbling(spark, sf):
     """10-minute tumbling windows per event_type: one partial/final
     hash agg, no extra exchange (streaming analogue:
@@ -2555,59 +1793,6 @@ def q_events_tumbling(spark, sf):
     from .streaming import events as EV
 
     return EV.tumbling_agg(_events(spark, sf), 600)
-
-
-@query(
-    "events_sliding",
-    """
-    WITH s AS (
-      SELECT unnest(generate_series(
-               greatest(((epoch_us(ts) - 900000000) // 300000000) * 300000000
-                        + 300000000, 0),
-               (epoch_us(ts) // 300000000) * 300000000,
-               300000000)) AS ws
-      FROM events)
-    SELECT ws // 1000000 AS win, CAST(count(*) AS BIGINT) AS n
-    FROM s GROUP BY 1
-    """,
-)
-def q_events_sliding(spark, sf):
-    """15-minute windows sliding every 5: explode the window-start
-    sequence per event (generator, no join) + one agg."""
-    from .streaming import events as EV
-
-    return EV.sliding_agg(_events(spark, sf), 900, 300)
-
-
-@query(
-    "events_sessionize",
-    """
-    WITH d AS (
-      SELECT user_id, event_id, epoch_us(ts) AS tu,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)),
-    s AS (
-      SELECT user_id, tu,
-             SUM(new_sess) OVER (PARTITION BY user_id ORDER BY tu, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM d)
-    SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(min(tu) // 1000000 AS BIGINT) AS start_s,
-           CAST(max(tu) // 1000000 AS BIGINT) AS end_s
-    FROM s GROUP BY 1, 2
-    """,
-)
-def q_events_sessionize(spark, sf):
-    """30-minute-gap sessionization, gaps-and-islands per user (fully
-    parallel across users; streaming analogue: session_window in
-    stream_session_counts)."""
-    from .streaming import events as EV
-
-    return EV.sessionize(_events(spark, sf), 1800)
 
 
 _IVF_ASSIGN_SQL = f"""
@@ -2626,95 +1811,6 @@ _IVF_ASSIGN_SQL = f"""
       FROM cos) t
     WHERE r = 1
 """
-
-
-@query("embed_ivf_assign", _IVF_ASSIGN_SQL)
-def q_ivf_assign(spark, sf):
-    """IVF coarse quantization: nearest-centroid assignment with a
-    broadcast codebook (deterministic stand-in codebook = first 4
-    vectors)."""
-    from .functions import similarity as SIM
-
-    return SIM.ivf_assign(_embs(spark, sf), n_cells=4)
-
-
-@query(
-    "simsearch_ivf_topk",
-    f"""
-    WITH ex AS ({_EX_SQL}),
-    c AS (SELECT vec_id AS cell, pos, e AS ce FROM ex WHERE vec_id < 4),
-    cn AS (SELECT cell, sqrt(SUM(ce * ce)) AS cnrm FROM c GROUP BY 1),
-    vn AS (SELECT vec_id, sqrt(SUM(e * e)) AS nrm FROM ex GROUP BY 1),
-    assign AS ({_IVF_ASSIGN_SQL}),
-    q AS (SELECT vec_id AS qid, pos, e AS qe FROM ex WHERE vec_id IN (0, 1, 2)),
-    qn AS (SELECT qid, sqrt(SUM(qe * qe)) AS qnrm FROM q GROUP BY 1),
-    cd AS (SELECT q.qid, c.cell, SUM(q.qe * c.ce) AS dot
-           FROM q JOIN c USING (pos) GROUP BY 1, 2),
-    probes AS (SELECT qid, cell FROM (
-        SELECT cd.qid, cd.cell,
-               row_number() OVER (PARTITION BY cd.qid
-                 ORDER BY round(cd.dot / (cn.cnrm * qn.qnrm), 6) DESC,
-                          cd.cell ASC) AS r
-        FROM cd JOIN cn USING (cell) JOIN qn USING (qid)) t WHERE r <= 2),
-    cand AS (SELECT p.qid, a.vec_id FROM assign a JOIN probes p ON a.cell = p.cell),
-    dots AS (SELECT ca.qid, ca.vec_id, SUM(ex.e * q.qe) AS dot
-             FROM cand ca
-             JOIN ex ON ex.vec_id = ca.vec_id
-             JOIN q ON q.qid = ca.qid AND q.pos = ex.pos
-             GROUP BY 1, 2),
-    cos AS (SELECT d.qid, d.vec_id,
-                   round(d.dot / (vn.nrm * qn.qnrm), 6) + 0.0 AS cs
-            FROM dots d JOIN vn ON vn.vec_id = d.vec_id
-            JOIN qn ON qn.qid = d.qid
-            WHERE d.vec_id != d.qid
-              AND vn.nrm * qn.qnrm <> 0)
-    SELECT qid, CAST(rnk - 1 AS BIGINT) AS rank, vec_id, cs AS cos
-    FROM (SELECT qid, vec_id, cs,
-                 row_number() OVER (PARTITION BY qid
-                                    ORDER BY cs DESC, vec_id ASC) AS rnk
-          FROM cos) t
-    WHERE rnk <= 5
-    """,
-)
-def q_ivf_topk(spark, sf):
-    """IVF-probed ANN top-k (the scale path: candidates come from the
-    2 nearest cells only, ~n_probe/n_cells of the corpus)."""
-    from .functions import similarity as SIM
-
-    return SIM.ivf_topk(_embs(spark, sf), [0, 1, 2], k=5, n_cells=4, n_probe=2)
-
-
-@query(
-    "dedup_embed_cosine",
-    f"""
-    WITH ex AS ({_EX_SQL}),
-    dots8 AS (SELECT vec_id, p.p,
-                     SUM(e * CAST((p.p * 37 + (pos - 1) * 17) % 19 - 9 AS DOUBLE)) AS d
-              FROM ex CROSS JOIN (SELECT unnest(range(8)) AS p) p
-              GROUP BY vec_id, p.p),
-    bk AS (SELECT vec_id,
-                  CAST(SUM(CASE WHEN d > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END)
-                       AS BIGINT) AS bucket
-           FROM dots8 GROUP BY vec_id),
-    exb AS (SELECT ex.vec_id, bk.bucket, ex.pos, ex.e FROM ex JOIN bk USING (vec_id)),
-    pd AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.e * b.e) AS dot
-           FROM exb a JOIN exb b ON a.bucket = b.bucket AND a.pos = b.pos
-                                AND a.vec_id < b.vec_id
-           GROUP BY 1, 2),
-    nr AS (SELECT vec_id, sqrt(SUM(e * e)) AS nrm FROM ex GROUP BY 1)
-    SELECT vec_a, vec_b, round(pd.dot / (na.nrm * nb.nrm), 6) AS cos
-    FROM pd JOIN nr na ON na.vec_id = pd.vec_a
-            JOIN nr nb ON nb.vec_id = pd.vec_b
-    WHERE round(pd.dot / (na.nrm * nb.nrm), 6) >= 0.2
-    """,
-)
-def q_embed_cosine_pairs(spark, sf):
-    """embedding-cosine near-duplicate pairs, LSH-bucketed candidate
-    generation + exact cosine verify (the pair space shrinks to
-    per-bucket blocks)."""
-    from .functions import similarity as SIM
-
-    return SIM.cosine_pairs_bucketed(_embs(spark, sf), n_planes=8, min_cos=0.2)
 
 
 @query(
@@ -2845,33 +1941,6 @@ _CHARS_SQL = """
 """
 
 
-@query(
-    "media_metadata",
-    """
-    SELECT doc_id,
-           CAST(length(text) AS BIGINT) AS n_bytes,
-           CAST(ascii(substr(text, 1, 1)) AS BIGINT) AS head_byte,
-           CAST(ascii(substr(text, length(text), 1)) AS BIGINT) AS tail_byte
-    FROM documents
-    """,
-)
-def q_media_metadata(spark, sf):
-    """typed metadata over an opaque binary payload -- pure JVM
-    projections (size + magic-byte sniff positions)."""
-    from .functions import multimodal as MM
-
-    d = MM.attach_bytes(_docs(spark, sf))
-    return MM.media_metadata(d).drop("content_hash")
-
-
-@query(
-    "media_byte_histogram",
-    f"""
-    SELECT doc_id, CAST(ascii(c) // 16 AS BIGINT) AS bin,
-           CAST(count(*) AS BIGINT) AS n
-    FROM ({_CHARS_SQL}) t GROUP BY 1, 2
-    """,
-)
 def q_media_byte_hist(spark, sf):
     """decode-free media feature: per-item byte-value histogram in an
     Arrow-batched mapInPandas kernel (zero shuffles)."""
@@ -2881,79 +1950,12 @@ def q_media_byte_hist(spark, sf):
     return MM.byte_histogram(d, bins=16)
 
 
-@query(
-    "media_fake_decode",
-    f"""
-    WITH b AS (SELECT doc_id, CAST(ascii(c) AS DOUBLE) AS a FROM ({_CHARS_SQL}) t)
-    SELECT doc_id,
-           round(avg(a), 6) AS mean_px,
-           round(sqrt(avg(a * a) - avg(a) * avg(a)), 6) AS std_px,
-           CAST(count(*) AS BIGINT) AS n_px
-    FROM b GROUP BY 1
-    """,
-)
-def q_media_fake_decode(spark, sf):
-    """stubbed decode + feature extraction: deterministic fake features
-    (mean/std/size) with the real batch shape of a model-feature UDF."""
-    from .functions import multimodal as MM
-
-    d = MM.attach_bytes(_docs(spark, sf))
-    return MM.fake_decode_features(d)
-
-
-@query(
-    "media_frame_sample",
-    """
-    SELECT doc_id, CAST(fid AS BIGINT) AS frame_id,
-           CAST(least(64, L - fid * 64) AS BIGINT) AS frame_len
-    FROM (SELECT doc_id, length(text) AS L,
-                 unnest(generate_series(0,
-                   CAST(ceil(length(text) / 64.0) AS BIGINT) - 1, 4)) AS fid
-          FROM documents) t
-    """,
-)
-def q_media_frames(spark, sf):
-    """'video' frame sampling: fixed-size frames, every 4th kept --
-    executor-side explosion, one map stage."""
-    from .functions import multimodal as MM
-
-    d = MM.attach_bytes(_docs(spark, sf))
-    frames = MM.frame_sample(d, frame_bytes=64, stride=4)
-    return frames.select(
-        "doc_id", "frame_id", F.length("frame").cast("long").alias("frame_len")
-    )
-
-
-@query(
-    "embed_lsh_bucket",
-    f"""
-    WITH ex AS ({_EX_SQL}),
-    dots AS (SELECT vec_id, p.p,
-                    SUM(e * CAST((p.p * 37 + (pos - 1) * 17) % 19 - 9 AS DOUBLE)) AS d
-             FROM ex CROSS JOIN (SELECT unnest(range(8)) AS p) p
-             GROUP BY vec_id, p.p)
-    SELECT vec_id,
-           CAST(SUM(CASE WHEN d > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END)
-                AS BIGINT) AS bucket
-    FROM dots GROUP BY vec_id
-    """,
-)
-def q_lsh_bucket(spark, sf):
-    """sign-bit LSH bucketing with integer hyperplanes (ANN scale
-    path; note DuckDB pos is 1-based, hence pos-1 in the oracle)."""
-    from .functions import similarity as SIM
-
-    return SIM.lsh_sign_bucket(_embs(spark, sf), 8)
-
-
 # ===========================================================================
-# MERGED SUITES (round 2): same-grain queries join/union into one registry
-# entry so EVERY SURVEY section-2 family plus the full LLM-pipeline scope
-# fits in the driver's correctness window (round-1 VERDICT item 1: only the
-# first 50 registry entries got CORRECTNESS rows).  Each suite runs through
-# the same engine operators as the standalone forms it absorbs (the
-# standalone functions remain the building blocks); the oracle is the
-# equivalent join/union of the standalone oracles.
+# MERGED SUITES: same-grain queries join/union into one registry entry so
+# every SURVEY section-2 family plus the LLM-pipeline scope fits in the
+# driver's 50-entry correctness window.  Each suite runs through the same
+# engine operators as the plain ``q_*`` building blocks above; its oracle
+# re-derives every part in DuckDB SQL.
 # ===========================================================================
 
 
@@ -5112,103 +4114,8 @@ def q_uint64_exact_suite(spark, sf):
     return total.crossJoin(mx).crossJoin(doubled)
 
 
-# ===========================================================================
-# FINAL REGISTRY ORDER.  The driver verifies queries in insertion order and
-# round 1 showed a 50-entry window, so the first 50 entries below cover ONE
-# representative of EVERY SURVEY section-2 family plus the whole
-# LLM-pipeline / streaming / TPC-H scope (VERDICT round 1, item 1).  Names
-# not listed here (the absorbed standalone forms) remain importable as
-# building blocks but leave the registry.
-# ===========================================================================
-
-_FINAL_ORDER = [
-    # elemwise / projection tier
-    "elemwise_suite",
-    "complex_square_polar",
-    # slicing / indexing
-    "slice_basic",
-    "gather_points",
-    "boolean_mask",
-    "setitem_masked",
-    "compress_axis",
-    "isin_semi",
-    # reductions
-    "reduce_per_order",
-    "reduce_stats_by_flag",
-    "scalar_suite",
-    "reduce_any_all",
-    "quantiles_multi",
-    "topk_per_group",
-    "histograms_suite",
-    "unique_counts",
-    # windows / cumulative (daily_windows_suite kinds 1-2 absorb the
-    # former push_ffill / coarsen_weekly rows -- same oracles, union'd)
-    "daily_windows_suite",
-    "sliding_rows_2d",
-    "cumprod_log_trick",
-    "window_1d_scalable",
-    "overlap_gradient_smooth",
-    # manipulation / creation
-    "manip_1d_suite",
-    "manip_2d_suite",
-    "pad_modes",
-    # linalg / contraction
-    "matmul_gram",
-    "linalg_row_suite",
-    "outer_product",
-    "tsqr_lstsq",
-    "svd_singular_values",
-    "linalg_invariants",
-    "fft_monthly",
-    # sort / set ops
-    "sort_argsort",
-    "setops_suite",
-    # UDF surface
-    "map_blocks_suite",
-    "gufunc_matmul",
-    "custom_reduction_suite",
-    # TPC-H trio
-    "tpch_q1_pricing_summary",
-    "tpch_q6_forecast_revenue",
-    "tpch_q3_shipping_priority",
-    # event-time windows
-    "events_windows_suite",
-    # LLM-pipeline scope
-    "text_suite",
-    "dedup_exact_groups",
-    "dedup_lsh_pairs_verify",
-    "dedup_substring_spans",
-    "tokenize_suite",
-    "similarity_suite",
-    "embed_assign_bucket",
-    "pipeline_clean_corpus",
-    "media_features",
-    "media_bytes_frames",
-    # ---- entries past the 50-slot window (weaker/rows-only checks;
-    # minhash_sigs values are fully hash-verified IN-WINDOW by
-    # dedup_lsh_pairs_verify kind 2 (per-doc position-weighted
-    # signature checksums) and the svd singular VALUES now DIRECTLY by
-    # the in-window svd_singular_values (closed-form symmetric-3x3
-    # eigenvalue oracle; round-10 ask 8 rotation) on top of
-    # tsqr_lstsq kind 3's Gram-power moment pinning; the standalone
-    # forms stay here for API users; the standalone tokenize_chunks /
-    # pack_sequences forms were absorbed into in-window
-    # tokenize_suite and left the registry.  digitize_searchsorted
-    # rotated OUT of the window for the svd slot (round-10 ask 8): it
-    # keeps its full oracle -- test_oracle.py still hash-checks it
-    # every run -- and its operators stay pinned by the elemwise and
-    # searchsorted fuzz suites ----
-    "digitize_searchsorted",
-    "uint64_exact_suite",
-    "dedup_minhash_sigs",
-    "svd_singular_values_rows",
-    "approx_percentile_rows",
-    "random_choice_counts_rows",
-    "random_seeded_hist_rows",
-    # round-12 surface tail: vector-valued draws, full mathematical-
-    # invariant oracle, hash-checked every run by test_oracle.py
-    "random_vector_draws_check",
-]
-
+_unregistered = [n for n in _FINAL_ORDER if n not in QUERIES]
+if _unregistered:
+    raise RuntimeError(f"_FINAL_ORDER names without a @query builder: {_unregistered}")
 QUERIES = {n: QUERIES[n] for n in _FINAL_ORDER}
 ORACLES = {n: ORACLES[n] for n in _FINAL_ORDER if n in ORACLES}

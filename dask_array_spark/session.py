@@ -115,7 +115,8 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
 
 
 # Fan-out caches the package persisted (the scalable scans' sorted
-# copy, the LSH band and k-gram position tables), tracked so a
+# copy and the functions tier's fan-out tables, listed in the persist
+# policy note of functions/__init__.py), tracked so a
 # long-lived service has an explicit cleanup path.  Keyed per
 # SparkSession and guarded by a lock: a process hosting several
 # sessions -- or several threads driving pipelines on one session --
@@ -137,9 +138,9 @@ def release_caches(
     blocking: bool = False, spark: SparkSession | None = None
 ) -> int:
     """Unpersist every fan-out cache the package created (the sorted
-    axis copy behind a scalable ``cumsum``/``push``, the persisted
-    band / k-gram position tables behind ``lsh_candidate_pairs`` and
-    ``duplicated_spans``) -- for one session when ``spark`` is given,
+    axis copy behind a scalable ``cumsum``/``push`` and the dedup,
+    text and similarity fan-out tables that returned plans read) --
+    for one session when ``spark`` is given,
     else for all sessions this process created caches on.
 
     A long-lived service processing distinct batches calls this

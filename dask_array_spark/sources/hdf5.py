@@ -51,6 +51,7 @@ from .ingest import (
     _cells_schema,
     _chunk_cells,
     _fill_chunks,
+    _grid_minus,
     _value_kind,
     from_numpy,
 )
@@ -640,9 +641,10 @@ def _materialize_fill(spark, arr, info, table, shape, chunks, dtype) -> Array:
     """h5py's default fill is 0 (not NaN): unwritten chunks of a
     chunked dataset must read as the fill value, so emit fill cells
     (``_fill_chunks``, the zarr readers' emitter) for the grid
-    positions absent from the chunk index.  The missing set is a
-    driver-side set difference, unlike zarr's distributed anti-join:
-    the driver already holds the chunk table from the B-tree walk."""
+    positions absent from the chunk index.  The missing set is the
+    distributed grid anti-join the zarr readers use (``_grid_minus``)
+    against the B-tree's present coordinates; the driver never
+    enumerates the grid."""
     fill_bytes = info.get("fill")
     fill = np.zeros(1, dtype=dtype)[0]  # h5py default fill = 0
     if fill_bytes is not None and len(fill_bytes) == dtype.itemsize:
@@ -651,17 +653,14 @@ def _materialize_fill(spark, arr, info, table, shape, chunks, dtype) -> Array:
         # value-exact int contract for fill cells
         fill = np.frombuffer(fill_bytes, dtype=dtype)[0]
     ndim = len(shape)
-    grid = [math.ceil(shape[k] / chunks[k]) for k in range(ndim)]
     present = {tuple(int(row[2 + k]) // chunks[k] for k in range(ndim))
                for row in table}
-    missing = [c for c in np.ndindex(*grid) if tuple(c) not in present]
-    if not missing:
+    if len(present) == math.prod(-(-shape[k] // chunks[k]) for k in range(ndim)):
         return arr
-    mdf = local_frame(
-        spark,
-        [tuple(int(x) for x in c) for c in missing],
-        ", ".join(f"c{k} long" for k in range(ndim)),
-    ).repartition(min(len(missing), 64))
+    present_df = local_frame(
+        spark, list(present), ", ".join(f"c{k} long" for k in range(ndim))
+    )
+    mdf = _grid_minus(spark, present_df, shape, chunks)
     return Array(
         arr.df.unionByName(_fill_chunks(mdf, shape, chunks, fill, dtype)), shape
     )

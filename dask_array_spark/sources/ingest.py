@@ -234,7 +234,6 @@ def _missing_chunks_df(
     is a rounding error next to the byte decode -- and AQE broadcasts
     the smaller side."""
     ccols = [f"c{k}" for k in range(len(shape))]
-    grid = _chunk_grid(spark, shape, chunks)
 
     def parse_paths(it):
         for pdf in it:
@@ -247,7 +246,15 @@ def _missing_chunks_df(
     present = files.select("path").mapInPandas(
         parse_paths, schema=", ".join(f"{c} long" for c in ccols)
     )
-    return grid.join(present, on=ccols, how="left_anti")
+    return _grid_minus(spark, present, shape, chunks)
+
+
+def _grid_minus(spark: SparkSession, present: DataFrame, shape, chunks) -> DataFrame:
+    """``_chunk_grid`` coordinates absent from ``present``
+    (c0..c{ndim-1} long): the missing-chunk anti-join of the zarr and
+    HDF5 readers."""
+    ccols = [f"c{k}" for k in range(len(shape))]
+    return _chunk_grid(spark, shape, chunks).join(present, on=ccols, how="left_anti")
 
 
 def _struct_col_to_complex(col: "pd.Series") -> np.ndarray:

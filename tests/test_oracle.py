@@ -83,3 +83,16 @@ def test_query_matches_oracle(name, spark, sf_dir, ddb):
     co = _canon([tuple(r) for r in oracle_rows], oracle_cols)
     mismatches = [(a, b) for a, b in zip(ce, co) if a != b]
     assert not mismatches, f"{name}: {len(mismatches)} mismatched rows; first: {mismatches[:3]}"
+
+
+def test_registry_is_exactly_the_final_order():
+    from dask_array_spark import queries as Q
+
+    assert len(Q.QUERIES) == 58
+    assert list(Q.QUERIES) == Q._FINAL_ORDER
+    assert set(Q.ORACLES) <= set(Q.QUERIES)
+    assert list(Q.ORACLES) == [n for n in Q._FINAL_ORDER if n in Q.ORACLES]
+    with pytest.raises(ValueError):
+        Q.query("not_in_final_order", "SELECT 1")
+    with pytest.raises(ValueError):
+        Q.query("matmul_gram")

@@ -520,3 +520,39 @@ def test_duplicate_clusters_nonconvergence_warns(spark):
     with pytest.warns(RuntimeWarning, match="did not converge"):
         rows = duplicate_clusters(chain, max_iters=1).collect()
     assert len(rows) == 13  # labels returned even when unconverged
+
+
+def test_release_caches_frees_text_and_similarity_fanouts(spark):
+    """The fan-out caches that the returned plans of the LM scoring,
+    perplexity bucketing, TF-IDF and embedding dedup builders read are
+    tracked, so ``release_caches()`` brings the session's
+    persistent-RDD count back to where it started."""
+    from dask_array_spark.functions import similarity as SIM
+    from dask_array_spark.functions import text as T
+    from dask_array_spark.session import release_caches
+
+    release_caches(blocking=True, spark=spark)
+    sc = spark.sparkContext._jsc.sc()
+    start = sc.getPersistentRDDs().size()
+    docs = spark.createDataFrame(
+        [(i, f"the cat sat on the mat {i % 3} again and again") for i in range(12)],
+        "doc_id long, text string",
+    )
+    emb = spark.createDataFrame(
+        [(i, [float(i % 4), 1.0, float(i % 3), 0.5]) for i in range(16)],
+        "vec_id long, embedding array<float>",
+    )
+    lm = T.bigram_lm_scores(docs)
+    outs = [
+        lm,
+        T.bigram_lm_scores(docs, ref=docs.limit(6)),
+        T.perplexity_buckets(lm),
+        T.tfidf_keywords(docs),
+        SIM.semantic_dedup(emb, 2, 0.99),
+        SIM.cosine_pairs_bucketed(emb, 4),
+    ]
+    for out in outs:
+        out.count()
+    assert sc.getPersistentRDDs().size() > start
+    release_caches(blocking=True, spark=spark)
+    assert sc.getPersistentRDDs().size() == start

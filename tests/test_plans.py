@@ -623,3 +623,19 @@ def test_tiledb_tile_grid_is_a_range(spark, tmp_path):
     plan = _plan(from_tiledb(spark, uri, _tiledb=FAKE).df)
     assert "Range" in plan, plan
     assert "ExistingRDD" not in plan, plan
+
+
+def test_hdf5_missing_chunk_grid_is_a_range(spark, tmp_path):
+    """The fill branch of a chunked ``from_hdf5`` read with an unwritten
+    chunk finds the missing chunks by anti-joining a ``spark.range``
+    chunk grid, not a driver-enumerated frame of grid coordinates."""
+    import numpy as np
+
+    from dask_array_spark.sources import from_hdf5
+    from tests.test_hdf5 import _foreign_chunked_file
+
+    fn = str(tmp_path / "skipped.h5")
+    _foreign_chunked_file(fn, np.arange(12, dtype="<f8"), chunk=4, skip_chunks={1})
+    plan = _plan(from_hdf5(spark, fn, "dset").df)
+    assert "Range" in plan, plan
+    assert "ExistingRDD" not in plan, plan
